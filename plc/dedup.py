@@ -210,7 +210,10 @@ def minhash_bands(df: DataFrame, key_col: str, tokens_col: str = "tokens",
             f"key turns the LSH join into an all-pairs product)")
     rows = num_hashes // bands
     params = hash_params(num_hashes, seed)
-    schema = "k string, band int, bkey bigint"
+    # keys keep their own type, so pair order (key_a < key_b) and the
+    # min-key winner follow the key's native ordering
+    schema = f"k {df.schema[key_col].dataType.simpleString()}, " \
+        f"band int, bkey bigint"
 
     def run(batches):
         for batch in batches:
@@ -234,7 +237,7 @@ def minhash_bands(df: DataFrame, key_col: str, tokens_col: str = "tokens",
                     acc = (acc * 1_000_003
                            + sig[:, b * rows + r] % BAND_MOD) % BAND_MOD
                 bkeys[:, b] = acc
-            keys = batch.column(key_col).cast(pa.string())
+            keys = batch.column(key_col)
             idx = pa.array(np.repeat(np.arange(nrows), bands))
             yield pa.RecordBatch.from_arrays([
                 keys.take(idx),
@@ -254,7 +257,8 @@ def shingle_sets(df: DataFrame, key_col: str, tokens_col: str = "tokens",
     from plc.util import ensure_shipped
 
     ensure_shipped(df.sparkSession)
-    schema = "k string, sh array<bigint>"
+    schema = f"k {df.schema[key_col].dataType.simpleString()}, " \
+        f"sh array<bigint>"
 
     def run(batches):
         for batch in batches:
@@ -274,8 +278,7 @@ def shingle_sets(df: DataFrame, key_col: str, tokens_col: str = "tokens",
             arr = pa.LargeListArray.from_arrays(pa.array(offs),
                                                 pa.array(ush))
             yield pa.RecordBatch.from_arrays(
-                [batch.column(key_col).cast(pa.string()),
-                 arr.cast(pa.list_(pa.int64()))],
+                [batch.column(key_col), arr.cast(pa.list_(pa.int64()))],
                 names=["k", "sh"])
 
     return df.select(key_col, tokens_col).mapInArrow(run, schema)
@@ -639,9 +642,9 @@ def dedup_minhash(df: DataFrame, key_col: str, tokens_col: str = "tokens",
         # jobs instead of ~3 shuffle joins per propagation round. The cap
         # bounds driver memory (~100 B/edge); past it, the distributed
         # loop below takes over.
-        parent: dict[str, str] = {}
+        parent: dict = {}
 
-        def find(x: str) -> str:
+        def find(x):
             r = x
             while parent.get(r, r) != r:
                 r = parent[r]
@@ -658,7 +661,7 @@ def dedup_minhash(df: DataFrame, key_col: str, tokens_col: str = "tokens",
         losers = [k for k in parent if find(k) != k]
         spark = base.sparkSession
         losers_df = spark.createDataFrame([(k,) for k in losers],
-                                          f"{key_col} string")
+                                          base.select(key_col).schema)
         return base.join(F.broadcast(losers_df), key_col, "left_anti")
     edges = verified.unionByName(
         verified.select(F.col("key_b").alias("key_a"),

@@ -41,6 +41,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
 from plc.chunk import EncodeConfig, column_stats, pack_chunk, unpack_chunk
+from plc.datasource import (_PLAN_THREADS, _PlanFS, _committed_data_files,
+                            _load_plan, _part_dirs, _read_manifest)
 
 ENC_SCHEMA_DDL = (
     "part_id int, chunk_idx int, n_rows bigint, n_tokens bigint, "
@@ -111,8 +113,7 @@ class PipelineConfig:
 # --------------------------------------------------------------------------
 
 
-def _plan_path(dst: str) -> str:
-    return os.path.join(dst, "_manifest", "plan.json")
+_PLAN_REL = posixpath.join("_manifest", "plan.json")
 
 
 def _manifest_path(dst: str) -> str:
@@ -173,12 +174,6 @@ def build_plan(spark: SparkSession, df: DataFrame, cfg: PipelineConfig) -> dict:
         "total_rows": total,
         "schema": stored.schema.jsonValue(),
     }
-
-
-def _load_plan(spark: SparkSession, dst: str) -> dict:
-    from plc import fsio
-
-    return json.loads(fsio.read_text(spark, _plan_path(dst)))
 
 
 # --------------------------------------------------------------------------
@@ -449,23 +444,22 @@ def _prepare_state(spark: SparkSession, df: DataFrame, dst: str,
     """Shared encode lifecycle head: fresh-run guard (refuses ANY prior
     encode state — a crash between data write and manifest commit leaves
     part dirs/plan with no manifest), plan load-or-build, committed set."""
-    from plc import fsio
-
-    manifest_exists = fsio.nonempty_dir(spark, _manifest_path(dst), ".parquet")
-    prior_state = (manifest_exists or fsio.exists(spark, _plan_path(dst))
-                   or fsio.nonempty_dir(spark, _data_path(dst)))
+    pfs = _PlanFS(dst)
+    manifest = _read_manifest(pfs, columns=["part_id"])
+    prior_state = (manifest is not None or pfs.exists(_PLAN_REL)
+                   or bool(pfs.listdir("data")))
     if prior_state and not resume:
         if mode == "overwrite":
-            fsio.delete(spark, dst)
-            manifest_exists = False
+            pfs.fs.delete_dir(pfs.root)
+            manifest = None
         else:
             raise FileExistsError(
                 f"{dst} already has encode state (manifest, plan, or data); "
                 f"pass resume=True or mode='overwrite'")
-    fsio.mkdirs(spark, os.path.join(dst, "_manifest"))
+    pfs.fs.create_dir(pfs.join("_manifest"), recursive=True)
 
-    if resume and fsio.exists(spark, _plan_path(dst)):
-        plan = _load_plan(spark, dst)
+    if resume and pfs.exists(_PLAN_REL):
+        plan = _load_plan(pfs)
         if plan.get("writer") == "format":
             # a format-written store commits every part in one job, so
             # resume's pending-predicate reduces to lit(False): it would
@@ -481,13 +475,12 @@ def _prepare_state(spark: SparkSession, df: DataFrame, dst: str,
                 f"mode('overwrite')")
     else:
         plan = build_plan(spark, df, cfg)
-        fsio.write_text(spark, _plan_path(dst), json.dumps(plan))
+        pfs.write_atomic(_PLAN_REL,
+                         lambda f: f.write(json.dumps(plan).encode("utf-8")))
 
     committed: set[int] = set()
-    if resume and manifest_exists:
-        committed = {r[0] for r in
-                     spark.read.parquet(_manifest_path(dst))
-                     .select("part_id").distinct().collect()}
+    if resume and manifest is not None:
+        committed = set(manifest.column("part_id").to_pylist())
     return plan, committed
 
 
@@ -521,7 +514,7 @@ def encode(spark: SparkSession, df: DataFrame, dst: str,
     total_parts = plan["n_parts"] + plan["straggler_parts"]
     pending_parts = total_parts - len(committed)
     if pending_parts <= 0:
-        return _report(spark, dst, plan, newly_encoded=0)
+        return _report(dst, plan, newly_encoded=0)
 
     # _sbucket travels into the encoder in both modes: the mapInArrow workers
     # read it for straggler routing (no Python-side hashing) and drop it
@@ -564,8 +557,7 @@ def _write_and_commit(spark: SparkSession, enc: DataFrame, dst: str,
     manifest append (the commit point), then the run report."""
     import time
 
-    from plc import fsio
-
+    pfs = _PlanFS(dst)
     # pre-clean: part dirs written by a crashed earlier attempt but never
     # committed must be deleted before the write — dynamic partition
     # overwrite only rewrites parts that receive new data, so the manifest
@@ -574,16 +566,9 @@ def _write_and_commit(spark: SparkSession, enc: DataFrame, dst: str,
     # crashed format write leaves orphan dirs whose task-partition ids can
     # exceed this plan's part count, and those would otherwise be silently
     # adopted as committed data by the rollup (ADVICE r5)
-    if fsio.nonempty_dir(spark, _data_path(dst)):
-        for name in fsio.listdir(spark, _data_path(dst)):
-            if not name.startswith("part_id="):
-                continue
-            try:
-                pid = int(name.split("=", 1)[1])
-            except ValueError:
-                pid = -1  # foreign dir name: treat as uncommitted, drop it
-            if pid not in committed:
-                fsio.delete(spark, os.path.join(_data_path(dst), name))
+    for pid, rel in _part_dirs(pfs):
+        if pid not in committed:
+            pfs.fs.delete_dir(pfs.join(rel))
 
     t0 = time.perf_counter()
     # 64 MB row groups (~4 full chunks): the format reader slices files
@@ -596,29 +581,11 @@ def _write_and_commit(spark: SparkSession, enc: DataFrame, dst: str,
         .option("compression", "uncompressed").parquet(_data_path(dst)))
     data_path_sec = time.perf_counter() - t0
 
-    # manifest (commit point — written after the data, per part).
-    # Explicit schema: an empty input writes zero part directories, which
-    # would otherwise fail parquet schema inference. The roll-up is driver
-    # pyarrow over the metadata columns of the freshly written part files
-    # (thread-pooled, payload column never read) when the store is small
-    # enough to enumerate driver-side — zero Spark jobs; bigger stores
-    # (or exotic filesystems pyarrow can't resolve) fall back to the ONE
-    # Spark roll-up job. Zero-markers, the manifest write, and (on a
-    # fresh encode) the report totals are driver arithmetic either way.
-    man_rows = _rollup_driver(dst, committed)
-    if man_rows is None:
-        written = _read_enc(spark, dst)
-        man_rows = (written.groupBy("part_id")
-                    .agg(F.count("*").alias("n_chunks"),
-                         F.sum("n_rows").alias("n_rows"),
-                         F.sum("n_tokens").alias("n_tokens"),
-                         F.sum("raw_bytes").alias("raw_bytes"),
-                         F.sum("enc_bytes").alias("enc_bytes"),
-                         F.min("min_doc_id").alias("min_doc_id"),
-                         F.max("max_doc_id").alias("max_doc_id"))
-                    .collect())
-        man_rows = [tuple(r) for r in man_rows
-                    if r["part_id"] not in committed]
+    # manifest (commit point — written after the data, per part): a
+    # driver pyarrow roll-up over the metadata columns of the freshly
+    # written part files (thread-pooled, payload column never read —
+    # zero Spark jobs), plus zero-markers and the report totals.
+    man_rows = _rollup_driver(pfs, committed)
     # zero-row commit markers for planned parts that produced no data (e.g.
     # straggler parts with no rows over τ) — without them resume would
     # re-run those parts forever instead of reaching a true no-op
@@ -626,24 +593,10 @@ def _write_and_commit(spark: SparkSession, enc: DataFrame, dst: str,
     man_rows += [(i, 0, 0, 0, 0, 0, None, None)
                  for i in range(total_parts)
                  if i not in present and i not in committed]
-    if not _write_manifest_driver(dst, man_rows, committed):
-        man = spark.createDataFrame(
-            man_rows,
-            "part_id int, n_chunks bigint, n_rows bigint, n_tokens bigint, "
-            "raw_bytes bigint, enc_bytes bigint, min_doc_id string, "
-            "max_doc_id string")
-        if committed:
-            # resuming a store whose manifest carries the format writer's
-            # `file` column: append with the same schema (file=NULL — the
-            # pipeline sink's parts read by dir, Spark's commit protocol
-            # already excludes orphans there)
-            existing = spark.read.parquet(_manifest_path(dst))
-            if "file" in existing.columns:
-                man = man.withColumn("file", F.lit(None).cast("string"))
-        man.write.mode("append").parquet(_manifest_path(dst))
+    _write_manifest_driver(pfs, man_rows, committed)
     if committed:
         # resume: totals span prior manifests too — read them back
-        rep = _report(spark, dst, plan, newly_encoded=pending_parts)
+        rep = _report(dst, plan, newly_encoded=pending_parts)
     else:
         raw = sum(r[4] for r in man_rows)
         enc_b = sum(r[5] for r in man_rows)
@@ -660,12 +613,6 @@ def _write_and_commit(spark: SparkSession, enc: DataFrame, dst: str,
     return rep
 
 
-# driver-side rollup/manifest fast path: at most this many freshly
-# written part files are enumerated and footer-read driver-side (32-way
-# thread pool, same shape as the format planner); past the cap the ONE
-# Spark roll-up job takes over — the cap bounds driver wall, not memory
-# (the rows read are O(chunks-metadata), payload never touched)
-_DRIVER_ROLLUP_MAX_FILES = 4096
 _MAN_PA_FIELDS = [("part_id", "int32"), ("n_chunks", "int64"),
                   ("n_rows", "int64"), ("n_tokens", "int64"),
                   ("raw_bytes", "int64"), ("enc_bytes", "int64"),
@@ -674,119 +621,85 @@ _ROLLUP_COLS = ["n_rows", "n_tokens", "raw_bytes", "enc_bytes",
                 "min_doc_id", "max_doc_id"]
 
 
-def _rollup_driver(dst: str, committed: set[int]) -> "list[tuple] | None":
+def _rollup_driver(pfs: _PlanFS, committed: set[int]) -> list[tuple]:
     """Per-part manifest roll-up computed driver-side with pyarrow over
-    the metadata columns of the freshly written part files (the payload
-    column is never read — parquet is columnar). Returns None when the
-    path doesn't resolve through pyarrow.fs or the file count exceeds
-    the driver cap, in which case the caller runs the Spark roll-up job.
-    Exactly mirrors the Spark job: all files of every non-committed
-    ``part_id=`` dir, aggregated per part."""
+    the metadata columns of every file in each non-committed
+    ``part_id=`` dir (the payload column is never read — parquet is
+    columnar), aggregated per part."""
     from concurrent.futures import ThreadPoolExecutor
 
-    try:
-        from plc.datasource import _PlanFS
-
-        pfs = _PlanFS(dst)
-        if not pfs.exists("data"):
-            return []
-        pdirs = []
-        for st in pfs.listdir("data"):
-            name = posixpath.basename(st.path)
-            if not name.startswith("part_id="):
-                continue
-            try:
-                pid = int(name.split("=", 1)[1])
-            except ValueError:
-                continue
-            if pid not in committed:
-                pdirs.append((pid, posixpath.join("data", name)))
-        files: list[tuple[int, str]] = []
-        with ThreadPoolExecutor(max_workers=32) as pool:
-            for (pid, _), infos in zip(
-                    pdirs, pool.map(lambda t: pfs.listdir(t[1]), pdirs)):
-                files.extend((pid, st.path) for st in infos
-                             if st.path.endswith(".parquet"))
-            if len(files) > _DRIVER_ROLLUP_MAX_FILES:
-                return None
-
-            def read_one(t):
-                pid, fp = t
-                tbl = pfs.read_parquet(fp, _ROLLUP_COLS)
-                return pid, tbl
-
-            agg: dict[int, list] = {}
-            for pid, tbl in pool.map(read_one, files):
-                cols = {c: tbl.column(c).to_pylist() for c in _ROLLUP_COLS}
-                a = agg.setdefault(pid, [0, 0, 0, 0, 0, None, None])
-                a[0] += tbl.num_rows
-                a[1] += sum(cols["n_rows"])
-                a[2] += sum(cols["n_tokens"])
-                a[3] += sum(cols["raw_bytes"])
-                a[4] += sum(cols["enc_bytes"])
-                mns = [v for v in cols["min_doc_id"] if v is not None]
-                mxs = [v for v in cols["max_doc_id"] if v is not None]
-                if mns:
-                    a[5] = min(mns) if a[5] is None else min(a[5], *mns)
-                if mxs:
-                    a[6] = max(mxs) if a[6] is None else max(a[6], *mxs)
-        return [(pid, *agg[pid]) for pid in sorted(agg)]
-    except Exception:
-        return None
+    pdirs = [(pid, rel) for pid, rel in _part_dirs(pfs)
+             if pid not in committed]
+    agg: dict[int, list] = {}
+    with ThreadPoolExecutor(max_workers=_PLAN_THREADS) as pool:
+        files = [(pid, st.path) for (pid, _), infos in zip(
+                     pdirs, pool.map(lambda t: pfs.listdir(t[1]), pdirs))
+                 for st in infos if st.path.endswith(".parquet")]
+        tables = pool.map(lambda t: pfs.read_parquet(t[1], _ROLLUP_COLS),
+                          files)
+        for (pid, _), tbl in zip(files, tables):
+            cols = {c: tbl.column(c).to_pylist() for c in _ROLLUP_COLS}
+            a = agg.setdefault(pid, [0, 0, 0, 0, 0, None, None])
+            a[0] += tbl.num_rows
+            a[1] += sum(cols["n_rows"])
+            a[2] += sum(cols["n_tokens"])
+            a[3] += sum(cols["raw_bytes"])
+            a[4] += sum(cols["enc_bytes"])
+            mns = [v for v in cols["min_doc_id"] if v is not None]
+            mxs = [v for v in cols["max_doc_id"] if v is not None]
+            if mns:
+                a[5] = min(mns) if a[5] is None else min(a[5], *mns)
+            if mxs:
+                a[6] = max(mxs) if a[6] is None else max(a[6], *mxs)
+    return [(pid, *agg[pid]) for pid in sorted(agg)]
 
 
-def _write_manifest_driver(dst: str, man_rows: list, committed: set[int]
-                           ) -> bool:
+def _write_manifest_driver(pfs: _PlanFS, man_rows: list,
+                           committed: set[int]) -> None:
     """Append one manifest parquet file driver-side with pyarrow (no
-    Spark job) — the same rows/schema the Spark write produced, under a
-    unique name so mode-append semantics hold. Returns False on any
-    resolution/IO failure (caller falls back to the Spark write)."""
+    Spark job) under a unique name, so append semantics hold. It is
+    written under a temp name and moved into place, so a failed write
+    never leaves a truncated ``*.parquet`` under ``_manifest/parts``."""
     import uuid
 
     import pyarrow.parquet as _pq
 
-    try:
-        from plc.datasource import _PlanFS
-
-        pfs = _PlanFS(dst)
-        with_file = False
-        if committed:
-            # resuming a store whose manifest carries the format writer's
-            # `file` column: append with the same schema (file=NULL)
-            for st in pfs.listdir(posixpath.join("_manifest", "parts")):
-                if st.path.endswith(".parquet"):
-                    sch = _pq.read_schema(st.path, filesystem=pfs.fs)
-                    with_file = "file" in sch.names
-                    break
-        fields = _MAN_PA_FIELDS + ([("file", "string")] if with_file else [])
-        cols = list(zip(*man_rows)) if man_rows else [[] for _ in
-                                                      _MAN_PA_FIELDS]
-        if with_file:
-            cols = list(cols) + [[None] * len(man_rows)]
-        tbl = pa.table({name: pa.array(list(vals), getattr(pa, t)())
-                        for (name, t), vals in zip(fields, cols)})
-        pfs.fs.create_dir(pfs.join("_manifest", "parts"), recursive=True)
-        out = pfs.join("_manifest", "parts",
-                       f"manifest-{uuid.uuid4().hex[:12]}.parquet")
-        with pfs.fs.open_output_stream(out) as f:
-            _pq.write_table(tbl, f)
-        return True
-    except Exception:
-        return False
+    # resuming a store whose manifest carries the format writer's
+    # `file` column: append with the same schema (file=NULL)
+    with_file = bool(committed) and "file" in _read_manifest(pfs).column_names
+    fields = _MAN_PA_FIELDS + ([("file", "string")] if with_file else [])
+    cols = list(zip(*man_rows)) if man_rows else [[] for _ in _MAN_PA_FIELDS]
+    if with_file:
+        cols = list(cols) + [[None] * len(man_rows)]
+    tbl = pa.table({name: pa.array(list(vals), getattr(pa, t)())
+                    for (name, t), vals in zip(fields, cols)})
+    pfs.write_atomic(
+        posixpath.join("_manifest", "parts",
+                       f"manifest-{uuid.uuid4().hex[:12]}.parquet"),
+        lambda f: _pq.write_table(tbl, f))
 
 
-def _report(spark: SparkSession, dst: str, plan: dict, newly_encoded: int) -> dict:
-    man = spark.read.parquet(_manifest_path(dst))
-    agg = man.agg(F.count("*").alias("parts"), F.sum("n_rows").alias("rows"),
-                  F.sum("n_tokens").alias("tokens"),
-                  F.sum("raw_bytes").alias("raw_bytes"),
-                  F.sum("enc_bytes").alias("enc_bytes")).collect()[0]
-    raw = agg["raw_bytes"] or 0
-    enc_b = agg["enc_bytes"] or 1
+def _manifest_totals(dst: str) -> dict:
+    """Manifest row count (``parts``) and column sums, read driver-side
+    with pyarrow — the manifest is O(parts) rows; no Spark job."""
+    import pyarrow.compute as pc
+
+    cols = ["n_rows", "n_tokens", "raw_bytes", "enc_bytes"]
+    man = _read_manifest(_PlanFS(dst), columns=cols)
+    if man is None:
+        raise FileNotFoundError(f"{dst} has no committed manifest")
+    return {"parts": man.num_rows,
+            **{c: int(pc.sum(man.column(c)).as_py() or 0) for c in cols}}
+
+
+def _report(dst: str, plan: dict, newly_encoded: int) -> dict:
+    tot = _manifest_totals(dst)
+    raw = tot["raw_bytes"]
+    enc_b = tot["enc_bytes"] or 1
     return {
         "n_parts": plan["n_parts"] + plan["straggler_parts"],
-        "committed_parts": agg["parts"], "newly_encoded": newly_encoded,
-        "rows": agg["rows"], "tokens": agg["tokens"],
+        "committed_parts": tot["parts"], "newly_encoded": newly_encoded,
+        "rows": tot["n_rows"], "tokens": tot["n_tokens"],
         "raw_bytes": raw, "enc_bytes": enc_b,
         "ratio": raw / enc_b if enc_b else 0.0,
     }
@@ -863,7 +776,7 @@ def encode_direct(spark: SparkSession, src_path: str, dst: str,
     total_parts = plan["n_parts"]
     pending_parts = total_parts - len(committed)
     if pending_parts <= 0:
-        return _report(spark, dst, plan, newly_encoded=0)
+        return _report(dst, plan, newly_encoded=0)
 
     # committed doc_id ranges (for rg pruning + exact row filtering)
     bounds = plan["bounds"]
@@ -916,7 +829,7 @@ def encode_direct(spark: SparkSession, src_path: str, dst: str,
         for i in range(0, len(keep), run_len):
             tasks.append((f, keep[i : i + run_len]))
     if not tasks:
-        return _report(spark, dst, plan, newly_encoded=0)
+        return _report(dst, plan, newly_encoded=0)
 
     # one Spark partition per task, WITHOUT a shuffle: a repartition() here
     # is a tiny exchange that AQE coalesces into a single partition
@@ -980,102 +893,24 @@ def encode_direct(spark: SparkSession, src_path: str, dst: str,
 # --------------------------------------------------------------------------
 
 
-# path-pinned committed reads: at or below this many committed paths the
-# enc scan lists them explicitly (driver pyarrow manifest read, zero
-# Spark jobs, no semi-join); above it the broadcast semi-join plan takes
-# over — the cap bounds plan size, not correctness
-_COMMITTED_PATHS_MAX = 4096
-
-
-def _committed_enc_paths(spark: SparkSession, dst: str) -> "DataFrame | None":
-    """Fast path for :func:`_committed_enc`: read the manifest driver-side
-    (pyarrow, O(parts)) and open EXACTLY the committed part dirs — or,
-    for format-written stores whose manifest names the winning file per
-    part, exactly those files (a zombie attempt's orphan is then never
-    even opened, strictly stronger than the name-filter join). Returns
-    None when the store needs the Spark-side plan (unresolvable path,
-    too many paths)."""
-    try:
-        from plc.datasource import _PlanFS, _committed_entries
-
-        pfs = _PlanFS(dst)
-        entries = _committed_entries(pfs, "")
-        if not entries:
-            return spark.createDataFrame([], ENC_SCHEMA_DDL)
-        paths = []
-        for pid in sorted(entries):
-            names = entries[pid]
-            pdir = os.path.join(_data_path(dst), f"part_id={pid}")
-            if names is None:
-                paths.append(pdir)  # glob semantics: every file is data
-            else:
-                paths.extend(os.path.join(pdir, f) for f in sorted(names))
-        if len(paths) > _COMMITTED_PATHS_MAX:
-            return None
-        return (spark.read.option("basePath", _data_path(dst))
-                .parquet(*paths))
-    except Exception:
-        return None
-
-
 def _committed_enc(spark: SparkSession, dst: str) -> DataFrame:
-    """Encoded-chunk table restricted to committed data. Preferred shape:
-    a path-pinned scan of exactly the committed dirs/files
-    (:func:`_committed_enc_paths` — no manifest Spark job, no join).
-    Fallback: manifest part_id semi-join, plus — for format-written
-    stores, whose manifest NAMES the winning data file per part — a
-    file-name filter so an orphan left in a part dir by a
-    zombie/speculative task attempt is invisible (the format writer
-    writes task files directly into part dirs on any pyarrow.fs target;
-    the manifest is the commit point). Parts with a NULL file
-    (pipeline-sink commits, where Spark's own commit protocol already
-    guarantees no orphans) keep reading every file in their dir. The
-    name list is O(committed parts), same scale as the semi-join side."""
-    fast = _committed_enc_paths(spark, dst)
-    if fast is not None:
-        return fast
-    man = spark.read.parquet(_manifest_path(dst))
-    enc = _read_enc(spark, dst)
-    if "file" in man.columns:
-        # ONE broadcast left-semi join carries both the committed-part
-        # check and the file-name check: a (part_id, file) row names the
-        # winning file, file=NULL means "any file in this part dir"
-        # (pipeline-sink commits, where Spark's commit protocol already
-        # excludes orphans). The previous shape collected the manifest
-        # and built a literal isin() — O(parts) py4j-marshalled literals
-        # at plan time, the same ~0.5 ms/key pathology the doc_ids path
-        # fixed (ADVICE r5); the join ships the same rows JVM-side with
-        # zero driver wall. input_file_name() only resolves on a
-        # single-source plan, so the name column is computed on the scan
-        # side before the join.
-        keys = (man.select(F.col("part_id").alias("_mpid"),
-                           F.col("file").alias("_mfname")))
-        enc = (enc.withColumn("_fname",
-                              F.element_at(F.split(F.input_file_name(),
-                                                   "/"), -1))
-               .join(F.broadcast(keys),
-                     (F.col("part_id") == F.col("_mpid")) &
-                     (F.col("_mfname").isNull() |
-                      (F.col("_mfname") == F.col("_fname"))),
-                     "left_semi")
-               .drop("_fname"))
-        return enc
-    return enc.join(F.broadcast(man.select("part_id")), "part_id",
-                    "left_semi")
+    """Encoded-chunk table restricted to committed data: a scan pinned to
+    exactly the files :func:`plc.datasource._committed_data_files`
+    resolves from the manifest — the same resolver the ``plc`` format
+    reader plans from, so no manifest Spark job and no join. Manifest-
+    named files (format writes) are opened alone, so an orphan from a
+    zombie/speculative attempt is never read; pipeline-sink parts read
+    every file in their (existing) part dir. An empty frame when nothing
+    is committed."""
+    from concurrent.futures import ThreadPoolExecutor
 
-
-def _read_enc(spark: SparkSession, dst: str) -> DataFrame:
-    """Read the encoded-chunk table; explicit schema when the data dir has
-    no part directories yet (empty input / nothing committed), where
-    parquet schema inference would fail."""
-    from plc import fsio
-
-    path = _data_path(dst)
-    if not fsio.nonempty_dir(spark, path):
-        return spark.read.schema(ENC_SCHEMA_DDL).parquet(path) \
-            if fsio.exists(spark, path) else \
-            spark.createDataFrame([], ENC_SCHEMA_DDL)
-    return spark.read.parquet(path)
+    pfs = _PlanFS(dst)
+    with ThreadPoolExecutor(max_workers=_PLAN_THREADS) as pool:
+        files = _committed_data_files(pfs, [""], pool)
+    if not files:
+        return spark.createDataFrame([], ENC_SCHEMA_DDL)
+    return (spark.read.option("basePath", pfs.uri(pfs.join("data")))
+            .parquet(*map(pfs.uri, files)))
 
 
 def _normalize_ranges(spec) -> list[tuple]:
@@ -1119,7 +954,7 @@ def select_chunks(spark: SparkSession, dst: str, *,
                   doc_ids: list[str] | None = None
                   ) -> tuple[DataFrame, dict]:
     """Chunk-selection head shared by :func:`decode` and storage-pruning
-    tests: committed-part semi-join + doc_id bounds + per-chunk stats
+    tests: committed-file scan + doc_id bounds + per-chunk stats
     pruning. Returns (pruned enc-chunk DataFrame, plan). Counting rows of
     the result shows exactly how many chunks a decode would touch.
 
@@ -1129,7 +964,7 @@ def select_chunks(spark: SparkSession, dst: str, *,
     least one key falls in its [min_doc_id, max_doc_id] AND passes its
     bloom — evaluated as ONE broadcast semi-join carrying driver-computed
     (h1, h2) per key, so a 10k-key fetch is still a single pruned scan."""
-    plan = _load_plan(spark, dst)
+    plan = _load_plan(dst)
     schema = StructType.fromJson(plan["schema"])
     known = {f.name for f in schema.fields}
     filters = dict(filters or {})
@@ -1381,7 +1216,8 @@ def decode(spark: SparkSession, dst: str, *, doc_id_min: str | None = None,
            filters: dict | None = None,
            doc_ids: list[str] | None = None) -> DataFrame:
     """Read encoded chunks back as the original table. Only committed parts
-    are read (manifest semi-join); doc_id bounds prune chunks via the
+    are read (a scan pinned to the manifest's committed files); doc_id
+    bounds prune chunks via the
     min/max manifest columns (plain filter → parquet row-group skipping);
     ``columns`` prunes at the storage level — unrequested column frames are
     skipped by length inside the chunk, never decoded.
@@ -1518,9 +1354,10 @@ def _sampled_part_ranges(spark: SparkSession, dst: str, fraction: float,
     parts, and different seeds rotate coverage across runs."""
     import hashlib
 
-    rows = (spark.read.parquet(_manifest_path(dst))
-            .select("part_id", "min_doc_id", "max_doc_id")
-            .filter(F.col("min_doc_id").isNotNull()).collect())
+    man = _read_manifest(_PlanFS(dst),
+                         columns=["part_id", "min_doc_id", "max_doc_id"])
+    rows = [] if man is None else [r for r in man.to_pylist()
+                                   if r["min_doc_id"] is not None]
     if not rows:
         raise ValueError(f"{dst} has no committed non-empty parts to "
                          f"sample")
@@ -1588,11 +1425,8 @@ def verify(spark: SparkSession, src: DataFrame, dst: str,
         pred = F.crc32(F.col("doc_id").cast("binary")) < thresh
         src, dec = src.filter(pred), dec.filter(pred)
     cols = [c for c in src.columns if c in dec.columns]
-    base = _manifest_sums_driver(dst)
-    if base is None:
-        man = spark.read.parquet(_manifest_path(dst))
-        sums = man.agg(F.sum("raw_bytes"), F.sum("enc_bytes")).collect()[0]
-        base = {"raw_bytes": sums[0], "enc_bytes": sums[1]}
+    tot = _manifest_totals(dst)
+    base = {c: tot[c] for c in ("raw_bytes", "enc_bytes")}
     if method == "checksum":
         def _sig(df):
             # decimal(38,0) accumulation: n * 2^63 fits to ~10^18 rows
@@ -1626,32 +1460,6 @@ def verify(spark: SparkSession, src: DataFrame, dst: str,
     _guard_vacuous(sample, sample_parts, n_s, n_d)
     return {**base, "mismatches": bad, "rows_source": n_s,
             "rows_decoded": n_d, "method": "join"}
-
-
-def _manifest_sums_driver(dst: str) -> "dict | None":
-    """raw/enc byte totals straight from the manifest parquet files
-    (driver pyarrow — the manifest is O(parts) rows; no Spark job).
-    None on any resolution failure → caller runs the Spark aggregate."""
-    try:
-        import pyarrow.compute as pc
-
-        from plc.datasource import _PlanFS
-
-        pfs = _PlanFS(dst)
-        raw = enc_b = 0
-        seen = False
-        for st in pfs.listdir(posixpath.join("_manifest", "parts")):
-            if not st.path.endswith(".parquet"):
-                continue
-            tbl = pfs.read_parquet(st.path, ["raw_bytes", "enc_bytes"])
-            raw += int(pc.sum(tbl.column("raw_bytes")).as_py() or 0)
-            enc_b += int(pc.sum(tbl.column("enc_bytes")).as_py() or 0)
-            seen = True
-        if not seen:
-            return None
-        return {"raw_bytes": raw, "enc_bytes": enc_b}
-    except Exception:
-        return None
 
 
 def _guard_vacuous(sample, sample_parts, n_src: int, n_dec: int) -> None:

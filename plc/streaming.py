@@ -22,8 +22,11 @@ that resumable too).
 
 from __future__ import annotations
 
+import posixpath
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from plc.datasource import _MARKER_REL, _PlanFS, _committed_batch_ids
 from plc.pipeline import PipelineConfig, encode
 
 
@@ -35,8 +38,6 @@ def encode_stream(stream_df: DataFrame, dst: str, checkpoint: str,
     cfg = cfg or PipelineConfig(num_partitions=4, straggler_parts=0)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        from plc import fsio
-
         spark = batch_df.sparkSession
         bdst = f"{dst}/batch={batch_id}"
         try:
@@ -53,7 +54,7 @@ def encode_stream(stream_df: DataFrame, dst: str, checkpoint: str,
         # batch and then miss the resumed remainder — the marker is the
         # atomic full-batch signal decode_stream and the plc streaming
         # source wait for.
-        fsio.write_text(spark, f"{bdst}/_manifest/_STREAM_COMMITTED", "1")
+        _PlanFS(bdst).write_atomic(_MARKER_REL, lambda f: f.write(b"1"))
 
     writer = (stream_df.writeStream.foreachBatch(handle)
               .option("checkpointLocation", checkpoint))
@@ -70,24 +71,9 @@ def committed_batches(spark: SparkSession, dst: str) -> list[tuple[int, str]]:
     would silently skip the resumed parts. Works on both stream-sink
     layouts (foreachBatch :func:`encode_stream` and
     ``df.writeStream.format("plc")`` — same directory contract)."""
-    from plc import fsio
-
-    fs, root = fsio._fs_path(spark, dst)
-    if not fs.exists(root):
-        return []
-    out = []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if not name.startswith("batch="):
-            continue
-        try:
-            bid = int(name.split("=", 1)[1])
-        except ValueError:
-            continue  # foreign batch= name: not ours, skip (ADVICE r6)
-        b = st.getPath().toString()
-        if fsio.exists(spark, f"{b}/_manifest/_STREAM_COMMITTED"):
-            out.append((bid, b))
-    return sorted(out)
+    root = dst.rstrip("/")
+    return [(bid, f"{root}/batch={bid}")
+            for bid in _committed_batch_ids(_PlanFS(dst))]
 
 
 def decode_stream(spark: SparkSession, dst: str) -> DataFrame:
@@ -283,15 +269,14 @@ def expire_stream_batches(spark: SparkSession, dst: str,
     re-lists them; expiring ids at or beyond a live stream's offset
     would lose data — expire only what was compacted. Returns the ids
     actually removed."""
-    from plc import fsio
-
+    pfs = _PlanFS(dst)
     removed = []
     for bid in batch_ids:
-        b = f"{dst}/batch={int(bid)}"
-        marker = f"{b}/_manifest/_STREAM_COMMITTED"
-        if not fsio.exists(spark, marker):
+        rel = f"batch={int(bid)}"
+        marker = posixpath.join(rel, _MARKER_REL)
+        if not pfs.exists(marker):
             continue
-        fsio.delete(spark, marker)  # the atomic visibility flip
-        fsio.delete(spark, b)
+        pfs.fs.delete_file(pfs.join(marker))  # the atomic visibility flip
+        pfs.fs.delete_dir(pfs.join(rel))
         removed.append(int(bid))
     return removed

@@ -996,15 +996,13 @@ def test_gc_stream_root_drops_aged_uncommitted_batch(spark):
         srcp = os.path.join(os.path.dirname(root), "in.parquet")
         D.synth_tokens_parquet(srcp, 300, regime="zipf", seed=3)
         df = spark.read.parquet(srcp)
-        from plc import fsio
-
         for bid in (0, 1):
             bdst = f"{root}/batch={bid}"
             encode(spark, df, bdst,
                    PipelineConfig(num_partitions=2, straggler_parts=0),
                    mode="overwrite")
-            fsio.write_text(spark, f"{bdst}/_manifest/_STREAM_COMMITTED",
-                            "1")
+            with open(f"{bdst}/_manifest/_STREAM_COMMITTED", "w") as f:
+                f.write("1")
         # crashed batch: data but no marker
         crashed = f"{root}/batch=2"
         encode(spark, df, crashed,

@@ -61,6 +61,22 @@ def test_dedup_minhash_end_to_end(spark):
     assert all(k.startswith("doc-") for k in kept)
 
 
+def test_dedup_minhash_bigint_key(spark):
+    """The union-find losers frame carries the key column's real type: a
+    bigint key dedups exactly like the string-keyed corpus."""
+    # doc-i → i, ndup-i → 1000 + i, xdup-i → 2000 + i
+    offset = (F.when(F.col("doc_id").startswith("doc-"), 0)
+              .when(F.col("doc_id").startswith("ndup-"), 1000)
+              .otherwise(2000))
+    key = offset + F.substring("doc_id", -4, 4).cast("int")
+    df = _docs_with_dups(spark).select(key.cast("bigint").alias("key"),
+                                       "tokens")
+    out = dedup_minhash(df, "key", "tokens", num_hashes=16, bands=8,
+                        threshold=0.7)
+    assert dict(out.dtypes)["key"] == "bigint"
+    assert {r[0] for r in out.select("key").collect()} == set(range(60))
+
+
 def test_empty_and_short_docs_are_safe(spark):
     df = spark.createDataFrame(
         [("a", []), ("b", [1]), ("c", [1, 2]), ("d", [1, 2, 3])],

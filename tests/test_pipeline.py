@@ -133,7 +133,7 @@ def test_skew_splitting_assigns_straggler_parts(spark, tmp_path):
     try:
         cfg = PipelineConfig(num_partitions=4, straggler_parts=3)
         encode(spark, df, dst, cfg, mode="overwrite")
-        plan = _load_plan(spark, dst)
+        plan = _load_plan(dst)
         man = spark.read.parquet(_manifest_path(dst))
         straggler_rows = man.filter(f"part_id >= {plan['n_parts']}") \
             .agg({"n_rows": "sum"}).collect()[0][0]
@@ -769,7 +769,7 @@ def test_batch_lookup_part_bucketed_equi_join(spark):
            PipelineConfig(num_partitions=4, straggler_parts=2,
                           skew_quantile=0.9, max_chunk_values=5_000),
            mode="overwrite")
-    plan = _load_plan(spark, dst)
+    plan = _load_plan(dst)
     tau = plan["tau"]
     stragglers = [r["doc_id"] for r in
                   df.filter(F.col("n_tok") > tau).limit(3).collect()]

@@ -56,9 +56,10 @@ def test_decode_bounds_push_into_parquet_scan(spark, enc_dir):
     # chunk-pruning predicates on manifest min/max must reach the scan
     assert "PushedFilters" in p, p
     assert "max_doc_id" in p and "min_doc_id" in p, p
-    # committed-parts semi-join stays broadcast (no shuffle of the data side)
-    assert "BroadcastHashJoin" in p or "BroadcastNestedLoopJoin" in p, p
-    assert "SortMergeJoin" not in p, p
+    # committed parts are resolved driver-side into the scan's file list:
+    # no join against the manifest, and no shuffle of the data side
+    assert "Join" not in p, p
+    assert "Exchange" not in p, p
 
 
 def test_manifest_rollup_reads_pruned_schema(spark, enc_dir):

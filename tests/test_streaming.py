@@ -418,7 +418,7 @@ def test_format_reader_batch_ids_option(spark):
     ids and plain stores are rejected."""
     import tempfile as tf
 
-    from plc import data as D, fsio
+    from plc import data as D
     from plc.datasource import register
     from plc.pipeline import PipelineConfig, encode
 
@@ -433,7 +433,8 @@ def test_format_reader_batch_ids_option(spark):
         encode(spark, df, bdst,
                PipelineConfig(num_partitions=2, straggler_parts=0),
                mode="overwrite")
-        fsio.write_text(spark, f"{bdst}/_manifest/_STREAM_COMMITTED", "1")
+        with open(f"{bdst}/_manifest/_STREAM_COMMITTED", "w") as f:
+            f.write("1")
     all_rows = spark.read.format("plc").load(root).count()
     assert all_rows == 900
     sub = (spark.read.format("plc").option("batch_ids", "0,2").load(root))
