@@ -689,7 +689,7 @@ def _point_lookup(spark, sf):
     """K24 + storage path end-to-end: encode the tokens view into the
     engine's store, then decode exactly one doc_id back out through
     bloom + min/max chunk pruning (plc/pipeline.py select_chunks /
-    _bloom_probe_expr). An absent probe (present range, bloom-excluded)
+    plc/datasource.py ChunkPlanner). An absent probe (present range, bloom-excluded)
     must touch zero rows — folded in as n_miss. The oracle recomputes the
     same row straight from the documents table, so the store's point-read
     path is DuckDB-checked end-to-end."""
@@ -712,8 +712,8 @@ def _point_lookup(spark, sf):
 def _batch_lookup(spark, sf):
     """Batch point lookup (IN-list, VERDICT r3 #3): encode the tokens view,
     then fetch a scattered key set (doc_id % 97 == 5 — reproducible in
-    SQL) in ONE pruned scan via decode(doc_ids=...): chunk selection is a
-    broadcast (key, bloom-hash) semi-join, not one decode per key. The
+    SQL) in ONE pruned scan via decode(doc_ids=...): the driver-side
+    chunk planner range- and bloom-tests the keys, not one decode per key. The
     same keys shifted out of existence must prune EVERY chunk (asserted —
     bloom + range), and their decode returns zero rows (n_miss)."""
     from plc.pipeline import PipelineConfig, decode, encode, select_chunks

@@ -920,9 +920,8 @@ _STAT_PREFIX = 64  # string min/max stored as parquet-style bounded prefixes
 # doc_id bloom filter (parquet row-group-bloom analogue): point lookups can
 # prune chunks whose min/max range overlaps the probe but which provably do
 # not contain it. Double hashing from two byte-polynomial hashes; 31-bit
-# h1/h2 keep every (h1 + i*h2) sum far from int64 overflow on both numpy
-# and the JVM. The hash only has to agree between this module's builder
-# and probes (the JVM probe receives driver-computed h1/h2 literals), so a
+# h1/h2 keep every (h1 + i*h2) sum far from int64 overflow. The hash only
+# has to agree between _bloom_build and bloom_probe (both numpy), so a
 # vectorizable polynomial beats per-value md5 on the encode hot path.
 _BLOOM_K = 7
 _BLOOM_MIN_BITS = 1 << 13
@@ -1002,14 +1001,18 @@ def _bloom_build(col: pa.Array, bits_per_key: int = 10) -> dict | None:
             "bloom_m": m, "bloom_k": _BLOOM_K, "bloom_v": _BLOOM_V}
 
 
-def bloom_might_contain(st: dict, value: str,
-                        raw_bits: "bytes | None" = None) -> bool:
-    """Pure-Python probe of a column_stats bloom entry; missing or
-    foreign-parameter blooms always pass (pruning stays a superset).
-    ``raw_bits`` supplies the bloom payload for new-layout stores, where
-    the bits live in the dedicated enc-table ``bloom`` column and the
-    stats dict carries only bloom_m/bloom_k/bloom_v; omitted, the
-    pre-split embedded b64 payload is used."""
+def bloom_probe(st: dict, h1: np.ndarray, h2: np.ndarray,
+                raw_bits: "bytes | None" = None) -> np.ndarray:
+    """Vectorized probe of a column_stats bloom entry for many keys at
+    once: ``h1``/``h2`` are the keys' hashes from
+    :func:`_bloom_hash_arrays` (hashed once by the caller, not per chunk);
+    returns a per-key mask that is False where the bloom proves the key
+    absent. Missing or foreign-parameter blooms pass every key (pruning
+    stays a superset). ``raw_bits`` supplies the bloom payload for
+    new-layout stores, where the bits live in the dedicated enc-table
+    ``bloom`` column and the stats dict carries only
+    bloom_m/bloom_k/bloom_v; omitted, the pre-split embedded b64 payload
+    is used."""
     import base64
 
     b64, m, k = st.get("bloom"), st.get("bloom_m"), st.get("bloom_k")
@@ -1017,14 +1020,19 @@ def bloom_might_contain(st: dict, value: str,
         raw_bits = base64.b64decode(b64)
     if not raw_bits or not m or k != _BLOOM_K \
             or st.get("bloom_v") != _BLOOM_V:
-        return True
+        return np.ones(len(h1), dtype=bool)
     bits = np.frombuffer(raw_bits, dtype=np.uint8)
+    pos = (h1[:, None] + np.arange(_BLOOM_K, dtype=np.int64) * h2[:, None]) \
+        & (m - 1)
+    return ((bits[pos >> 3] >> (pos & 7)) & 1).all(axis=1)
+
+
+def bloom_might_contain(st: dict, value: str,
+                        raw_bits: "bytes | None" = None) -> bool:
+    """Single-key :func:`bloom_probe`."""
     h1, h2 = _bloom_hashes(value)
-    for i in range(_BLOOM_K):
-        pos = (h1 + i * h2) & (m - 1)
-        if not (bits[pos >> 3] >> (pos & 7)) & 1:
-            return False
-    return True
+    return bool(bloom_probe(st, np.array([h1], np.int64),
+                            np.array([h2], np.int64), raw_bits)[0])
 
 
 def _truncate_min(s: str) -> str:

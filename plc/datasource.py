@@ -11,12 +11,14 @@ and Catalyst drives the storage layer exactly like a built-in format:
 - **column pruning**: the reader receives Spark's pruned schema; chunk
   frames for unrequested columns are skipped by length, never decoded;
 - **filter pushdown**: :meth:`PLCReader.pushFilters` translates range/
-  equality predicates into per-chunk stat pruning (same semantics as
-  :func:`plc.pipeline.select_chunks` — doc_id bounds, typed weight-column
-  stats, stats-JSON min/max incl. temporal columns with the ±26 h tz
-  slack). Every filter is also returned as unsupported, so Spark
-  re-applies the exact predicate on the decoded rows — pruning is a
-  conservative superset and can never change results;
+  equality predicates into per-chunk stat pruning by :class:`ChunkPlanner`
+  — the one chunk-survival implementation, which
+  :func:`plc.pipeline.select_chunks` (hence ``decode``) plans with too:
+  doc_id bounds, typed weight-column stats, stats-JSON min/max incl.
+  temporal columns with the ±26 h tz slack, and the doc_id bloom. Every
+  filter is also returned as unsupported, so Spark re-applies the exact
+  predicate on the decoded rows — pruning is a conservative superset and
+  can never change results;
 - **committed-parts isolation**: uncommitted part directories (a crashed
   encode) are invisible, like :func:`plc.pipeline.decode`;
 - **partitioning**: one Spark input partition per encoded parquet file
@@ -34,10 +36,10 @@ alike — a plain path, a ``file:`` URI, or any URI pyarrow resolves
 partition descriptors so executors open files through the identical
 abstraction. Per-file metadata reads fan out on a thread pool (pyarrow
 releases the GIL on I/O), and the planner reads only the cheap typed
-min/max columns — the stats JSON (which carries up-to-256 KB blooms per
-chunk) is fetched lazily, per file, only when a chunk survives range
-pruning AND a pushed filter actually needs a stats/bloom test. Reads yield Arrow RecordBatches — the whole path is
-vectorized end to end.
+min/max columns — the stats JSON and the bloom column (up to 256 KB per
+chunk) are fetched lazily, per file, only when a chunk survives range
+pruning AND a predicate actually needs a stats/bloom test. Reads yield
+Arrow RecordBatches — the whole path is vectorized end to end.
 """
 
 from __future__ import annotations
@@ -49,6 +51,7 @@ import posixpath
 import pyarrow.parquet as pq
 
 from dataclasses import dataclass
+from typing import NamedTuple
 
 from pyspark.sql.datasource import (DataSource, DataSourceArrowWriter,
                                     DataSourceReader,
@@ -152,6 +155,11 @@ class _PlanFS:
     def read_parquet(self, full_path: str, columns: list[str]):
         return pq.read_table(full_path, columns=columns,
                              filesystem=self.fs)
+
+    def num_rows(self, full_path: str) -> int:
+        """Row count of a parquet file, from its footer alone."""
+        with self.fs.open_input_file(full_path) as f:
+            return pq.ParquetFile(f).metadata.num_rows
 
     def write_atomic(self, rel: str, write) -> None:
         """Write ``rel`` through ``write(stream)`` under a dot-prefixed
@@ -339,6 +347,252 @@ def _committed_data_files(pfs: _PlanFS, roots: list[str],
     return files
 
 
+# temporal chunk-stat pruning: values are "multiply a raw stat in this
+# unit by X to get microseconds"; bounds are padded by ±26 h so ANY tz
+# interpretation of a naive bound keeps pruning a superset (the exact
+# row-level filter settles the boundary chunks)
+TEMPORAL_UNIT_TO_US = {"s": 1e6, "ms": 1e3, "us": 1.0, "ns": 1e-3,
+                       "d": 86400.0 * 1e6}
+TEMPORAL_TZ_SLACK_US = 26 * 3600 * 1_000_000
+_TEMPORAL_TYPES = ("timestamp", "timestamp_ntz", "date")
+
+
+def _temporal_us(v) -> float:
+    """Naive epoch microseconds of a filter bound (str / datetime.datetime
+    / datetime.date) for chunk-stat comparison. Interpreted as wall-clock;
+    the planner pads ±26 h so tz ambiguity can never over-prune."""
+    import datetime as _dt
+
+    if isinstance(v, str):
+        v = _dt.datetime.fromisoformat(v)
+    if isinstance(v, _dt.datetime):
+        if v.tzinfo is None:
+            v = v.replace(tzinfo=_dt.timezone.utc)
+        return v.timestamp() * 1e6
+    if isinstance(v, _dt.date):
+        return _dt.datetime(v.year, v.month, v.day,
+                            tzinfo=_dt.timezone.utc).timestamp() * 1e6
+    raise TypeError(f"temporal filter bound must be str/datetime/date, "
+                    f"got {type(v).__name__}")
+
+
+def _normalize_ranges(spec) -> list[tuple]:
+    """A filter value is one inclusive (lo, hi) pair — tuple or 2-element
+    list of scalars/None — or a list of pairs (multi-range = OR of
+    ranges, e.g. IVF probing scattered cells in one scan). Returns a
+    non-empty list of (lo, hi) tuples."""
+    if isinstance(spec, list):
+        if not spec:
+            raise ValueError("empty range list in filters")
+        if all(not isinstance(x, (list, tuple)) for x in spec):
+            # scalar elements: the JSON-decoded single-range form [lo, hi]
+            if len(spec) == 2:
+                return [tuple(spec)]
+            raise ValueError(
+                f"filter value {spec!r} is neither a (lo, hi) pair nor a "
+                f"list of (lo, hi) pairs")
+        return [tuple(r) for r in spec]
+    return [tuple(spec)]
+
+
+def _meets(mn, mx, ranges) -> bool:
+    """True when any inclusive (lo, hi) range meets a chunk's [mn, mx].
+    A missing stat or bound (None), or a bound of a type the stat cannot
+    be compared with, keeps the chunk: pruning is a superset."""
+    try:
+        return any((lo is None or mx is None or mx >= lo)
+                   and (hi is None or mn is None or mn <= hi)
+                   for lo, hi in ranges)
+    except TypeError:
+        return True
+
+
+class FileChunks(NamedTuple):
+    """The planner's verdict on one committed file. ``rows`` are the
+    surviving chunks' row indices in the file, ``chunk_idx`` their
+    chunk_idx values and ``n_chunks`` the file's chunk count; all three
+    are None when no predicate needed the file opened (every chunk
+    survives)."""
+
+    file: str
+    rows: "list[int] | None" = None
+    chunk_idx: "list[int] | None" = None
+    n_chunks: "int | None" = None
+
+    @property
+    def partial(self) -> bool:
+        return self.rows is not None and len(self.rows) < self.n_chunks
+
+
+class ChunkPlanner:
+    """Driver-side chunk pruning: the one chunk-survival implementation,
+    shared by the ``plc`` format reader and
+    :func:`plc.pipeline.select_chunks`. Predicates, all ANDed:
+
+    - :meth:`tighten`: one inclusive range per column, narrowed by every
+      call (pushed comparisons, ``decode``'s doc_id bounds and
+      single-range filters);
+    - :meth:`add_ranges`: an OR of inclusive ranges (multi-range filters);
+    - :meth:`probe`: doc_id keys — a chunk survives iff some key lies in
+      its [min_doc_id, max_doc_id] and passes its bloom; a doc_id range
+      tightened to one point probes that key;
+    - ``notnull_cols`` / ``isnull_cols``: per-column null-count pruning.
+
+    doc_id and the weight column prune on the typed min/max columns;
+    every other column on the per-chunk stats JSON (temporal columns in
+    epoch µs, padded by :data:`TEMPORAL_TZ_SLACK_US`). The stats JSON and
+    the bloom column are read only for files with a chunk that survives
+    the typed test, and only when a predicate needs them. Probe keys are
+    sorted and hashed once; each chunk bisects to the keys inside its
+    doc_id range and bloom-tests only those, so planning costs
+    O(chunks·log k + overlapping pairs). With no predicate no data file
+    is opened."""
+
+    def __init__(self, plan: dict):
+        full = StructType.fromJson(plan["schema"])
+        self.col_types = {f.name: f.dataType.simpleString() for f in full}
+        wcol = plan.get("weight_col", "n_tok")
+        # columns with typed per-chunk (min, max) columns in the enc table
+        self._typed = {"doc_id": ("min_doc_id", "max_doc_id")}
+        if wcol != "_w":
+            self._typed[wcol] = ("min_w", "max_w")
+        self.bounds: dict[str, list] = {}  # col -> [lo, hi] (inclusive)
+        self.multi: list[tuple[str, list[tuple]]] = []  # OR-of-ranges
+        self.notnull_cols: set[str] = set()
+        self.isnull_cols: set[str] = set()
+        self.probe_keys: "list[str] | None" = None  # doc_id IN keys
+
+    def tighten(self, col: str, lo=None, hi=None) -> None:
+        b = self.bounds.setdefault(col, [None, None])
+        if lo is not None and (b[0] is None or lo > b[0]):
+            b[0] = lo
+        if hi is not None and (b[1] is None or hi < b[1]):
+            b[1] = hi
+
+    def add_ranges(self, col: str, ranges: list[tuple]) -> None:
+        self.multi.append((col, ranges))
+
+    def probe(self, keys: list[str]) -> None:
+        self.probe_keys = keys
+
+    def _prepare(self) -> bool:
+        """Compile the predicates; False when there is nothing to prune."""
+        import pyarrow as pa
+
+        from plc.chunk import _bloom_hash_arrays
+
+        cons = [(c, [tuple(b)]) for c, b in self.bounds.items()
+                if b != [None, None]] + self.multi
+        self._typed_cons = [(self._typed[c], r) for c, r in cons
+                            if c in self._typed]
+        self._stats_cons = []
+        for c, r in cons:
+            if c in self._typed:
+                continue
+            temporal = self.col_types.get(c) in _TEMPORAL_TYPES
+            if temporal:
+                slack = TEMPORAL_TZ_SLACK_US
+                r = [(None if lo is None else _temporal_us(lo) - slack,
+                      None if hi is None else _temporal_us(hi) + slack)
+                     for lo, hi in r]
+            self._stats_cons.append((c, r, temporal))
+        keys = self.probe_keys
+        lo, hi = self.bounds.get("doc_id", (None, None))
+        if keys is None and lo is not None and lo == hi:
+            keys = [lo]
+        self._keys = None if keys is None else sorted(set(keys))
+        if self._keys:
+            self._h1, self._h2 = _bloom_hash_arrays(
+                pa.array(self._keys, pa.string()))
+        # IsNotNull deliberately does NOT trigger the stats fetch:
+        # Catalyst infers isnotnull() next to every comparison, so it
+        # would put the stats slow path on essentially every filtered
+        # scan. It still prunes when stats are read for another reason.
+        # IsNull is an explicit user predicate and genuinely selective.
+        self._needs_stats = bool(self._stats_cons or self.isnull_cols
+                                 or self._keys is not None)
+        return bool(cons or self._needs_stats)
+
+    def _key_span(self, m: dict) -> tuple[int, int]:
+        """[a, b): the sorted probe keys inside the chunk's doc_id range."""
+        import bisect
+
+        mn, mx = m["min_doc_id"], m["max_doc_id"]
+        a = 0 if mn is None else bisect.bisect_left(self._keys, mn)
+        b = len(self._keys) if mx is None else \
+            bisect.bisect_right(self._keys, mx)
+        return a, b
+
+    def _survives_typed(self, m: dict) -> bool:
+        if not all(_meets(m[cmin], m[cmax], r)
+                   for (cmin, cmax), r in self._typed_cons):
+            return False
+        if self._keys is not None:
+            a, b = self._key_span(m)
+            return a < b
+        return True
+
+    def _survives_stats(self, stats: dict, m: dict,
+                        bloom_bits: "bytes | None") -> bool:
+        if self._keys is not None:
+            from plc.chunk import bloom_probe
+
+            a, b = self._key_span(m)
+            if not bloom_probe(stats.get("doc_id", {}), self._h1[a:b],
+                               self._h2[a:b], bloom_bits).any():
+                return False
+        for col, ranges, temporal in self._stats_cons:
+            st = stats.get(col, {})
+            smin, smax = st.get("min"), st.get("max")
+            if temporal:
+                fac = TEMPORAL_UNIT_TO_US.get(st.get("unit"), 1.0)
+                smin = None if smin is None else smin * fac
+                smax = None if smax is None else smax * fac
+            if not _meets(smin, smax, ranges):
+                return False
+        for col in self.notnull_cols:
+            nn = stats.get(col, {}).get("nulls")
+            if nn is not None and m["n_rows"] is not None \
+                    and nn >= m["n_rows"]:
+                return False  # chunk is entirely NULL in this column
+        for col in self.isnull_cols:
+            if stats.get(col, {}).get("nulls") == 0:
+                return False  # chunk has no NULLs to match
+        return True
+
+    def _plan_file(self, pfs: _PlanFS, fpath: str) -> FileChunks:
+        meta = pfs.read_parquet(fpath, _RANGE_COLS).to_pylist()
+        keep = [i for i, m in enumerate(meta) if self._survives_typed(m)]
+        if keep and self._needs_stats:
+            # new-layout stores keep the bloom bits in their own column
+            # (fetched only when a doc_id probe needs them); pre-split
+            # stores embed them in the stats JSON, which bloom_probe
+            # falls back to when no raw bits are passed
+            cols = ["stats"]
+            if self._keys and "bloom" in pq.read_schema(
+                    fpath, filesystem=pfs.fs).names:
+                cols.append("bloom")
+            tbl = pfs.read_parquet(fpath, cols)
+            stats = tbl.column("stats")
+            blooms = tbl.column("bloom") if "bloom" in cols else None
+            keep = [i for i in keep
+                    if self._survives_stats(
+                        json.loads(stats[i].as_py()), meta[i],
+                        blooms[i].as_py() if blooms is not None else None)]
+        return FileChunks(fpath, keep, [meta[i]["chunk_idx"] for i in keep],
+                          len(meta))
+
+    def plan(self, pfs: _PlanFS, files: list[str],
+             pool) -> list[FileChunks]:
+        """The committed ``files`` that keep at least one chunk, with
+        their surviving chunks; per-file metadata reads fan out on
+        ``pool`` (pyarrow releases the GIL on I/O)."""
+        if not self._prepare():
+            return [FileChunks(f) for f in files]
+        return [fc for fc in pool.map(lambda f: self._plan_file(pfs, f),
+                                      files) if fc.rows]
+
+
 class PLCDataSource(DataSource):
     """Readable data source over a plc encode destination directory."""
 
@@ -426,8 +680,8 @@ class PLCReader(DataSourceReader):
     null = open bound): chunks intersecting NO range are pruned at
     planning, and the surviving rows are filtered EXACTLY in the reader
     (pyarrow mask), so the option is a semantic pre-filter, not a hint.
-    Temporal columns are refused (their unit/tz slack logic lives in
-    decode(); JSON has no typed literal to carry them safely)."""
+    Temporal columns are refused: the row mask needs typed bounds, and
+    JSON has no typed literal to carry them (use decode(filters=...))."""
 
     def __init__(self, path: str, schema: StructType,
                  filters_opt: "str | None" = None,
@@ -448,17 +702,10 @@ class PLCReader(DataSourceReader):
                     f"stream root {path}: {rel} has a different plan "
                     f"schema/weight_col than {self.roots[0] or 'the root'};"
                     f" refusing to union divergent batch stores")
-        full = StructType.fromJson(self.plan["schema"])
-        self.col_types = {f.name: f.dataType.simpleString() for f in full}
-        self.wcol = self.plan.get("weight_col", "n_tok")
-        self.bounds: dict[str, list] = {}  # col -> [lo, hi] (inclusive)
-        self.doc_in: list[str] | None = None  # doc_id IN (...) probe keys
-        self.notnull_cols: set[str] = set()  # IsNotNull pushdowns
-        self.isnull_cols: set[str] = set()   # IsNull pushdowns
+        self.planner = ChunkPlanner(self.plan)
+        self.col_types = self.planner.col_types
         self.opt_ranges: dict[str, list[tuple]] = {}
         if filters_opt:
-            from plc.pipeline import _normalize_ranges
-
             spec = (json.loads(filters_opt)
                     if isinstance(filters_opt, str) else filters_opt)
             for col, ranges in spec.items():
@@ -466,23 +713,17 @@ class PLCReader(DataSourceReader):
                     raise ValueError(
                         f"filters option: unknown column {col!r}; "
                         f"stored schema has {sorted(self.col_types)}")
-                if self.col_types[col] in ("timestamp", "timestamp_ntz",
-                                           "date"):
+                if self.col_types[col] in _TEMPORAL_TYPES:
                     raise ValueError(
                         f"filters option: temporal column {col!r} is not "
                         f"supported here — use plc.decode(filters=...)")
                 self.opt_ranges[col] = _normalize_ranges(ranges)
+                self.planner.add_ranges(col, self.opt_ranges[col])
 
     # -- filter pushdown ---------------------------------------------------
 
-    def _tighten(self, col: str, lo=None, hi=None) -> None:
-        b = self.bounds.setdefault(col, [None, None])
-        if lo is not None and (b[0] is None or lo > b[0]):
-            b[0] = lo
-        if hi is not None and (b[1] is None or hi < b[1]):
-            b[1] = hi
-
     def pushFilters(self, filters):
+        p = self.planner
         for f in filters:
             if isinstance(f, (GreaterThan, GreaterThanOrEqual, LessThan,
                               LessThanOrEqual, EqualTo)) \
@@ -492,11 +733,11 @@ class PLCReader(DataSourceReader):
                 # strict bounds relax to inclusive — pruning stays a
                 # superset; Spark re-applies the exact predicate anyway
                 if isinstance(f, (GreaterThan, GreaterThanOrEqual)):
-                    self._tighten(col, lo=v)
+                    p.tighten(col, lo=v)
                 elif isinstance(f, (LessThan, LessThanOrEqual)):
-                    self._tighten(col, hi=v)
+                    p.tighten(col, hi=v)
                 else:
-                    self._tighten(col, lo=v, hi=v)
+                    p.tighten(col, lo=v, hi=v)
             elif isinstance(f, StringStartsWith) and len(f.attribute) == 1 \
                     and f.attribute[0] in self.col_types and f.value:
                 # prefix predicate (startswith / LIKE 'p%'): every match
@@ -505,9 +746,8 @@ class PLCReader(DataSourceReader):
                 # truncated bounds, both safe against an inclusive range).
                 # Directly serves the cell-prefixed IVF store layout
                 # (doc_id = "c<cell>-<id>").
-                lo = f.value
-                hi = _prefix_upper(f.value)
-                self._tighten(f.attribute[0], lo=lo, hi=hi)
+                p.tighten(f.attribute[0], lo=f.value,
+                          hi=_prefix_upper(f.value))
             elif isinstance(f, In) and len(f.attribute) == 1 \
                     and f.attribute[0] in self.col_types and f.value:
                 vals = [v for v in f.value if v is not None]
@@ -516,191 +756,42 @@ class PLCReader(DataSourceReader):
                     # doc_id additionally bloom-probes every key (batch
                     # point lookup — a chunk survives if ANY key might be
                     # present)
-                    self._tighten(f.attribute[0], lo=min(vals),
-                                  hi=max(vals))
+                    p.tighten(f.attribute[0], lo=min(vals), hi=max(vals))
                     if f.attribute[0] == "doc_id":
-                        self.doc_in = [str(v) for v in vals]
+                        p.probe([str(v) for v in vals])
             elif isinstance(f, IsNotNull) and len(f.attribute) == 1 \
                     and f.attribute[0] in self.col_types:
                 # stats carry per-column null counts: an all-null chunk
                 # (nulls == n_rows) is prunable
-                self.notnull_cols.add(f.attribute[0])
+                p.notnull_cols.add(f.attribute[0])
             elif isinstance(f, IsNull) and len(f.attribute) == 1 \
                     and f.attribute[0] in self.col_types:
                 # dual: a null-free chunk (nulls == 0) can't match
-                self.isnull_cols.add(f.attribute[0])
+                p.isnull_cols.add(f.attribute[0])
             yield f  # everything is "unsupported": Spark re-filters exactly
 
     # -- planning ----------------------------------------------------------
 
-    def _doc_probes(self) -> list[str]:
-        """doc_id keys needing a per-chunk bloom test (exact probe via
-        lo==hi bounds, or a pushed IN list)."""
-        lo, hi = self.bounds.get("doc_id", (None, None))
-        if self.doc_in is not None:
-            return self.doc_in
-        if lo is not None and lo == hi:
-            return [lo]
-        return []
-
-    def _needs_stats(self) -> bool:
-        """True when pruning must read the per-chunk stats JSON: bounds on
-        a column with no typed min/max column, or a doc_id bloom probe."""
-        # IsNotNull deliberately NOT here: Catalyst infers isnotnull()
-        # next to every comparison, so letting it trigger the stats
-        # fetch would put the 256KB-bloom slow path on essentially every
-        # filtered scan (the VERDICT r3 #2 regression). It still prunes
-        # opportunistically in _survives_stats when stats are loaded for
-        # another reason. IsNull is an explicit user predicate and
-        # genuinely selective (null-free stores prune to nothing) — it
-        # stays a trigger.
-        if self._doc_probes() or self.isnull_cols:
-            return True
-        return any(col != "doc_id" and not (col == self.wcol
-                                            and self.wcol != "_w")
-                   for col in list(self.bounds) + list(self.opt_ranges))
-
-    def _survives_range(self, meta: dict) -> bool:
-        """Typed min/max pruning only (no stats JSON): doc_id bounds and
-        the weight column's min_w/max_w."""
-        for col, (lo, hi) in self.bounds.items():
-            if col == "doc_id":
-                if lo is not None and meta["max_doc_id"] is not None \
-                        and meta["max_doc_id"] < lo:
-                    return False
-                if hi is not None and meta["min_doc_id"] is not None \
-                        and meta["min_doc_id"] > hi:
-                    return False
-            elif col == self.wcol and self.wcol != "_w":
-                if lo is not None and meta["max_w"] is not None \
-                        and meta["max_w"] < lo:
-                    return False
-                if hi is not None and meta["min_w"] is not None \
-                        and meta["min_w"] > hi:
-                    return False
-        # option multi-ranges on typed columns: survive iff ANY range
-        # intersects the chunk's [min, max]
-        for col, ranges in self.opt_ranges.items():
-            if col == "doc_id":
-                mn, mx = meta["min_doc_id"], meta["max_doc_id"]
-            elif col == self.wcol and self.wcol != "_w":
-                mn, mx = meta["min_w"], meta["max_w"]
-            else:
-                continue  # settled by the stats pass
-            if not any((lo is None or mx is None or mx >= lo) and
-                       (hi is None or mn is None or mn <= hi)
-                       for lo, hi in ranges):
-                return False
-        return True
-
-    def _survives_stats(self, stats: dict, meta: dict,
-                        bloom_bits: "bytes | None" = None) -> bool:
-        """Stats-JSON pruning for range-surviving chunks: generic/temporal
-        min-max plus the doc_id bloom probe(s). ``bloom_bits`` carries the
-        new-layout dedicated-column bloom payload (None for pre-split
-        stores, where the bits are embedded in the stats JSON)."""
-        probes = self._doc_probes()
-        if probes:
-            from plc.chunk import bloom_might_contain
-
-            st = stats.get("doc_id", {})
-            mn, mx = meta["min_doc_id"], meta["max_doc_id"]
-            if not any(
-                    (mn is None or v >= mn) and (mx is None or v <= mx)
-                    and bloom_might_contain(st, v, bloom_bits)
-                    for v in probes):
-                return False
-        for col, (lo, hi) in self.bounds.items():
-            if col == "doc_id" or (col == self.wcol and self.wcol != "_w"):
-                continue  # already settled by _survives_range
-            st = stats.get(col, {})
-            smin, smax = st.get("min"), st.get("max")
-            if smin is None and smax is None:
-                continue  # no stat recorded → keep
-            dt = self.col_types.get(col, "")
-            if dt in ("timestamp", "timestamp_ntz", "date"):
-                # constants shared with pipeline.select_chunks — one
-                # source of truth for the pruning semantics
-                from plc.pipeline import (TEMPORAL_TZ_SLACK_US,
-                                          TEMPORAL_UNIT_TO_US, _temporal_us)
-
-                fac = TEMPORAL_UNIT_TO_US.get(st.get("unit"), 1.0)
-                if lo is not None and smax is not None \
-                        and smax * fac < _temporal_us(lo) - TEMPORAL_TZ_SLACK_US:
-                    return False
-                if hi is not None and smin is not None \
-                        and smin * fac > _temporal_us(hi) + TEMPORAL_TZ_SLACK_US:
-                    return False
-                continue
-            if lo is not None and smax is not None and smax < lo:
-                return False
-            if hi is not None and smin is not None and smin > hi:
-                return False
-        for col in self.notnull_cols:
-            nn = stats.get(col, {}).get("nulls")
-            if nn is not None and meta.get("n_rows") is not None \
-                    and nn >= meta["n_rows"]:
-                return False  # chunk is entirely NULL in this column
-        for col in self.isnull_cols:
-            if stats.get(col, {}).get("nulls") == 0:
-                return False  # chunk has no NULLs to match
-        for col, ranges in self.opt_ranges.items():
-            if col == "doc_id" or (col == self.wcol and self.wcol != "_w"):
-                continue  # settled by _survives_range
-            st = stats.get(col, {})
-            smin, smax = st.get("min"), st.get("max")
-            if smin is None and smax is None:
-                continue  # no stat recorded → keep
-            if not any((lo is None or smax is None or smax >= lo) and
-                       (hi is None or smin is None or smin <= hi)
-                       for lo, hi in ranges):
-                return False
-        return True
-
-    def _plan_file(self, fpath: str) -> "list[PLCChunkPartition]":
-        """Prune one encoded file's chunks: read ONLY the typed range
-        columns first; fetch the stats JSON (which carries the blooms)
-        iff some chunk survives ranges and a pushed filter needs it.
-        Surviving chunks are sliced into partitions of ≤ _CHUNKS_PER_PART
-        so scan parallelism tracks data volume, not file count."""
-        meta = self.pfs.read_parquet(fpath, _RANGE_COLS)
-        rows = [{c: meta.column(c)[i].as_py() for c in _RANGE_COLS}
-                for i in range(meta.num_rows)]
-        keep = [i for i, m in enumerate(rows) if self._survives_range(m)]
-        if keep and self._needs_stats():
-            # new-layout stores keep the bloom bits in their own column
-            # (fetched only when a doc_id probe needs them — the stats
-            # JSON itself is a few hundred bytes); pre-split stores embed
-            # them in the stats JSON, which bloom_might_contain falls
-            # back to when no raw bits are passed
-            cols = ["stats"]
-            if self._doc_probes() and "bloom" in pq.read_schema(
-                    fpath, filesystem=self.pfs.fs).names:
-                cols.append("bloom")
-            tbl = self.pfs.read_parquet(fpath, cols)
-            stats = tbl.column("stats")
-            blooms = tbl.column("bloom") if "bloom" in cols else None
-            keep = [i for i in keep
-                    if self._survives_stats(
-                        json.loads(stats[i].as_py()), rows[i],
-                        blooms[i].as_py() if blooms is not None else None)]
-        return [PLCChunkPartition(self.pfs, fpath,
-                                  keep[i : i + _CHUNKS_PER_PART],
-                                  self.opt_ranges or None)
-                for i in range(0, len(keep), _CHUNKS_PER_PART)]
-
     def partitions(self):
         # listing + per-file metadata reads fan out on a thread pool
         # (pyarrow releases the GIL on I/O): at 10^5 part files a serial
-        # footer walk puts minutes of driver wall before the first task
+        # footer walk puts minutes of driver wall before the first task.
+        # Surviving chunks are sliced into partitions of ≤ _CHUNKS_PER_PART
+        # so scan parallelism tracks data volume, not file count; a file
+        # the planner did not open is sized from its parquet footer
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=_PLAN_THREADS) as pool:
             files = _committed_data_files(self.pfs, self.roots, pool)
-            out: list[PLCChunkPartition] = []
-            for plist in pool.map(self._plan_file, files):
-                out.extend(plist)
-        return out
+            kept = self.planner.plan(self.pfs, files, pool)
+            rows = list(pool.map(
+                lambda fc: fc.rows if fc.rows is not None
+                else list(range(self.pfs.num_rows(fc.file))), kept))
+        return [PLCChunkPartition(self.pfs, fc.file,
+                                  r[i : i + _CHUNKS_PER_PART],
+                                  self.opt_ranges or None)
+                for fc, r in zip(kept, rows)
+                for i in range(0, len(r), _CHUNKS_PER_PART)]
 
     # -- execution (one task per encoded file) ------------------------------
 
@@ -766,8 +857,7 @@ class PLCChunksReader(DataSourceReader):
         if not file_cols:
             # part_id-only or zero-column (count of chunks) projection:
             # row count straight from the parquet footer, no column reads
-            with partition.pfs.fs.open_input_file(partition.file) as f:
-                n = pq.ParquetFile(f).metadata.num_rows
+            n = partition.pfs.num_rows(partition.file)
             if not names:
                 yield pa.RecordBatch.from_struct_array(
                     pa.array([{}] * n, pa.struct([])))

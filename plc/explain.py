@@ -1,6 +1,7 @@
 """Emit the formatted physical plans of the pipeline's key DataFrames
 (judge-facing evidence that the declarative layer produces the intended
-plans — single range exchange, pushed filters, pruned read schemas).
+plans — single range exchange, driver-pruned scan file lists, pruned read
+schemas).
 
 Usage: python -m plc.explain [out.md]   (default BENCH/PLANS.md)
 """
@@ -54,12 +55,12 @@ def main(out_path: str = "BENCH/PLANS.md") -> None:
          "tree → sort → MapInArrow; r7 — no RangePartitioner sampling "
          "pass)",
          fmt(enc_df)),
-        ("E2 decode with doc_id bounds (PushedFilters on manifest min/max, "
-         "broadcast committed-parts semi-join)",
+        ("E2 decode with doc_id bounds (chunks pruned on the driver; the "
+         "scan lists only the committed files that keep a chunk)",
          fmt(decode(spark, dst, doc_id_min="doc-000000000100",
                     doc_id_max="doc-000000000199"))),
         ("E2 decode with n_tok stats filter (typed min_w/max_w chunk "
-         "pruning pushed into the parquet scan)",
+         "pruning in the driver-side planner)",
          fmt(decode(spark, dst, filters={"n_tok": (200, None)}))),
         ("Manifest roll-up (payload-pruned ReadSchema, partial aggregation)",
          fmt(spark.read.parquet(_data_path(dst)).groupBy("part_id")
@@ -79,23 +80,21 @@ def main(out_path: str = "BENCH/PLANS.md") -> None:
 
     probe = "doc-000000000123"
     sections.append((
-        "Point lookup chunk selection (committed-parts broadcast semi-join "
-        "+ min/max range + bloom bit-test, all JVM expressions over the "
-        "stats JSON)",
+        "Point lookup chunk selection (driver-side ChunkPlanner: min/max "
+        "range + bloom probe in pyarrow; the scan lists only the files "
+        "that keep a chunk, with a file-exact chunk_idx residual when a "
+        "file keeps only some of its chunks)",
         fmt(select_chunks(spark, dst, filters={"doc_id": (probe, probe)})[0])))
     keys = [f"doc-{i:012d}" for i in (3, 57, 123, 999)]
     sections.append((
-        "Batch point lookup (doc_id IN-list): ONE broadcast semi-join "
-        "against the (key, bloom-h1, bloom-h2, candidate-part) table — "
-        "an EQUI-join on part_id (each key maps to its range part + "
-        "crc32 straggler part via the encoder's own routing arithmetic, "
-        "r6) with range overlap + bloom bit-test as the residual, so "
-        "condition evals are O(overlapping pairs) at any chunk/key "
-        "count; N keys = one pruned scan, never N decodes",
+        "Batch point lookup (doc_id IN-list): the planner sorts and "
+        "hashes the keys once, bisects each chunk's doc_id range and "
+        "bloom-tests only the keys inside it — no join; N keys = one "
+        "pruned scan, never N decodes",
         fmt(select_chunks(spark, dst, doc_ids=keys)[0])))
     sections.append((
-        "Multi-range chunk selection (OR of (lo,hi) ranges in one scan — "
-        "e.g. IVF probing scattered cells)",
+        "Multi-range chunk selection (OR of (lo,hi) ranges pruned by the "
+        "planner, one scan — e.g. IVF probing scattered cells)",
         fmt(select_chunks(spark, dst,
                           filters={"n_tok": [(0, 10), (200, None)]})[0])))
     big_keys = [f"doc-{i:012d}" for i in range(2000)]

@@ -391,50 +391,207 @@ def test_format_stream_read(spark):
         shutil.rmtree(work, ignore_errors=True)
 
 
-def test_pruning_equivalence_with_select_chunks(spark):
-    """Review fix companion: the DataSource's Python chunk-survival
-    predicate and pipeline.select_chunks' Column expressions must prune
-    IDENTICAL chunk sets for the same bounds (doc_id range, weight range,
-    and a temporal range) — shared constants, cross-checked here."""
+@pytest.fixture(scope="module")
+def prune_stores(spark):
+    """One source table (doc_id with absent odd ids between the stored
+    even ones, n_tok weight, a nullable string column, a UTC timestamp)
+    encoded three ways: the pipeline, the format writer, and a
+    ``shuffle="none"`` encode of round-robin input — every part dir of
+    that one holds two task files whose chunk_idx both start at 0."""
     import datetime
 
-    from plc.datasource import PLCReader, _load_plan
-    from plc.pipeline import select_chunks
-    from pyspark.sql.datasource import (GreaterThanOrEqual,
-                                        LessThanOrEqual)
-    from pyspark.sql.types import StructType
+    import numpy as np
+    import pyarrow as pa
 
-    ev = (spark.read.parquet("/root/testdata/sf0.01/events.parquet")
-          .withColumn("doc_id", F.format_string("ev-%012d", "event_id")))
-    mn = ev.agg(F.min("ts")).collect()[0][0]
-    dst = tempfile.mkdtemp(prefix="plc_eq_")
-    try:
-        encode(spark, ev, dst,
-               PipelineConfig(num_partitions=6, straggler_parts=0,
-                              max_chunk_values=1500), mode="overwrite")
-        lo = (mn + datetime.timedelta(days=8)).isoformat(sep=" ")
-        hi = (mn + datetime.timedelta(days=16)).isoformat(sep=" ")
-        cases = [
-            ({"ts": (lo, hi)},
-             [GreaterThanOrEqual(("ts",), lo), LessThanOrEqual(("ts",), hi)]),
-            ({"value": (0.0, 0.4)},
-             [GreaterThanOrEqual(("value",), 0.0),
-              LessThanOrEqual(("value",), 0.4)]),
-            ({"doc_id": ("ev-000000000100", "ev-000000000700")},
-             [GreaterThanOrEqual(("doc_id",), "ev-000000000100"),
-              LessThanOrEqual(("doc_id",), "ev-000000000700")]),
-        ]
-        schema = StructType.fromJson(_load_plan(dst)["schema"])
-        for filt, pushed in cases:
-            n_pipeline = select_chunks(spark, dst, filters=filt)[0].count()
-            r = PLCReader(dst, schema)
-            list(r.pushFilters(pushed))
-            n_ds = sum(len(p.rows) if p.rows is not None else
-                       pq.read_table(p.file, columns=["chunk_idx"]).num_rows
-                       for p in r.partitions())
-            assert n_ds == n_pipeline, (filt, n_ds, n_pipeline)
-    finally:
-        shutil.rmtree(dst, ignore_errors=True)
+    from plc.datasource import register
+
+    rng = np.random.default_rng(5)
+    n = 3000
+    n_tok = rng.integers(1, 50, n)
+    t0 = datetime.datetime(2024, 3, 1, tzinfo=datetime.timezone.utc)
+    tbl = pa.table({
+        "doc_id": [f"d{2 * i:06d}" for i in range(n)],
+        "tokens": pa.array([list(range(k)) for k in n_tok],
+                           pa.list_(pa.int32())),
+        "n_tok": pa.array(n_tok, pa.int32()),
+        "source": pa.array([None if i % 11 == 0 else
+                            ("web", "book", "code")[i * 7 % 3]
+                            for i in range(n)], pa.string()),
+        "ts": pa.array([t0 + datetime.timedelta(minutes=17 * i)
+                        for i in range(n)], pa.timestamp("us", tz="UTC")),
+    })
+    work = tempfile.mkdtemp(prefix="plc_prune_")
+    pq.write_table(tbl, work + "/src.parquet")
+    df = spark.read.parquet(work + "/src.parquet")
+    register(spark)
+    stores = {"pipeline": work + "/pipe", "format": work + "/fmt",
+              "none": work + "/none"}
+    encode(spark, df, stores["pipeline"],
+           PipelineConfig(num_partitions=4, straggler_parts=0,
+                          max_chunk_values=2000), mode="overwrite")
+    (df.repartition(3).write.format("plc")
+     .option("max_chunk_values", "2000").mode("overwrite")
+     .save(stores["format"]))
+    encode(spark, df.repartition(2), stores["none"],
+           PipelineConfig(num_partitions=3, straggler_parts=0,
+                          shuffle="none", max_chunk_values=2000),
+           mode="overwrite")
+    yield tbl, stores
+    shutil.rmtree(work, ignore_errors=True)
+
+
+def _store_chunks(dst: str) -> dict:
+    """(part_id, file name, chunk_idx) → the chunk's doc_ids, for every
+    committed chunk of a store, decoded with pyarrow."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from plc.chunk import unpack_chunk
+    from plc.datasource import _PlanFS, _committed_data_files
+
+    pfs = _PlanFS(dst)
+    with ThreadPoolExecutor(4) as pool:
+        files = _committed_data_files(pfs, [""], pool)
+    out = {}
+    for f in files:
+        pid = int(os.path.basename(os.path.dirname(f)).split("=")[1])
+        t = pq.read_table(f, columns=["chunk_idx", "payload"])
+        for ci, blob in zip(t.column("chunk_idx").to_pylist(),
+                            t.column("payload").to_pylist()):
+            key = (pid, os.path.basename(f), ci)
+            assert key not in out, f"chunk {key} is not file-unique"
+            out[key] = set(unpack_chunk(blob, columns=["doc_id"])
+                           .column("doc_id").to_pylist())
+    return out
+
+
+def _expected_mask(tbl, doc_id_min=None, doc_id_max=None, filters=None,
+                   doc_ids=None):
+    """The rows a decode with these arguments must return, as a pyarrow
+    mask over the source table (NULLs never match a range)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    m = pa.array([True] * tbl.num_rows)
+    if doc_id_min is not None:
+        m = pc.and_(m, pc.greater_equal(tbl["doc_id"], doc_id_min))
+    if doc_id_max is not None:
+        m = pc.and_(m, pc.less_equal(tbl["doc_id"], doc_id_max))
+    if doc_ids is not None:
+        m = pc.and_(m, pc.is_in(tbl["doc_id"], pa.array(doc_ids)))
+    for col, spec in (filters or {}).items():
+        ranges = spec if isinstance(spec, list) else [spec]
+        cm = pa.array([False] * tbl.num_rows)
+        for lo, hi in ranges:
+            rm = pa.array([True] * tbl.num_rows)
+            if lo is not None:
+                rm = pc.and_(rm, pc.greater_equal(tbl[col], lo))
+            if hi is not None:
+                rm = pc.and_(rm, pc.less_equal(tbl[col], hi))
+            cm = pc.or_(cm, pc.fill_null(rm, False))
+        m = pc.and_(m, cm)
+    return m
+
+
+def test_planner_no_false_negatives(spark, prune_stores):
+    """Every chunk holding a matching row survives select_chunks, and
+    decode returns exactly the pyarrow-filtered rows — for point, range,
+    IN-list (with absent keys), weight, string, temporal and multi-range
+    predicates on a pipeline store, a format store and a shuffle="none"
+    store whose part dirs hold files with overlapping chunk_idx."""
+    import datetime
+
+    from plc.pipeline import decode, select_chunks
+
+    tbl, stores = prune_stores
+    ids = tbl["doc_id"].to_pylist()
+    absent = [f"d{2 * i + 1:06d}" for i in (10, 700, 2999)]
+    utc = datetime.timezone.utc
+    preds = [
+        {"filters": {"doc_id": (ids[1234], ids[1234])}},
+        {"filters": {"doc_id": (absent[1], absent[1])}},
+        {"doc_id_min": ids[500], "doc_id_max": ids[900]},
+        {"doc_ids": ids[::97] + absent},
+        {"doc_ids": absent},
+        {"filters": {"n_tok": (10, 12)}},
+        {"filters": {"source": ("book", "book")}},
+        {"filters": {"ts": (datetime.datetime(2024, 3, 10, tzinfo=utc),
+                            datetime.datetime(2024, 3, 12, tzinfo=utc))}},
+        {"filters": {"n_tok": [(1, 2), (48, None)],
+                     "doc_id": [(ids[100], ids[300]),
+                                (ids[2000], None)]}},
+    ]
+    for name, dst in stores.items():
+        chunks = _store_chunks(dst)
+        if name == "none":
+            by_file = {}
+            for pid, fname, ci in chunks:
+                by_file.setdefault(pid, {}).setdefault(fname, set()).add(ci)
+            assert any(len(fs) > 1 and set.intersection(*fs.values())
+                       for fs in by_file.values()), \
+                "fixture lost its overlapping chunk_idx files"
+        for kw in preds:
+            want = tbl.filter(_expected_mask(tbl, **kw))
+            want_ids = set(want["doc_id"].to_pylist())
+            enc, _ = select_chunks(spark, dst, **kw)
+            kept = set() if enc.isEmpty() else {
+                (r[0], r[1], r[2]) for r in enc.select(
+                    "part_id", "_metadata.file_name", "chunk_idx").collect()}
+            assert kept <= set(chunks), (name, kw)
+            missed = [k for k, d in chunks.items()
+                      if d & want_ids and k not in kept]
+            assert not missed, (name, kw, missed)
+            if kw.get("doc_ids") == absent or \
+                    kw.get("filters", {}).get("doc_id") == (absent[1],) * 2:
+                assert len(kept) <= 2, (name, kw, len(kept))  # bloom FPs
+            got = sorted((r["doc_id"], r["n_tok"]) for r in
+                         decode(spark, dst, columns=["doc_id", "n_tok"],
+                                **kw).collect())
+            assert got == sorted(zip(want["doc_id"].to_pylist(),
+                                     want["n_tok"].to_pylist())), (name, kw)
+        # the predicates prune: a point lookup keeps one chunk
+        one = select_chunks(spark, dst, **preds[0])[0].count()
+        assert one == 1 < len(chunks), (name, one, len(chunks))
+
+
+def test_planner_probe_scale_matches_brute_force(prune_stores):
+    """A 10k-key doc_ids lookup (stored and absent keys) on a many-chunk
+    store keeps exactly the chunks a brute-force per-(key, chunk) range +
+    bloom_might_contain loop keeps."""
+    import json
+    from concurrent.futures import ThreadPoolExecutor
+
+    from plc.chunk import bloom_might_contain
+    from plc.datasource import (ChunkPlanner, _PlanFS, _committed_data_files,
+                                _load_plan)
+
+    tbl, stores = prune_stores
+    dst = stores["pipeline"]
+    ids = tbl["doc_id"].to_pylist()
+    # stored keys from the first fifth of the id range, absent keys
+    # inside the last half, the rest beyond every chunk; unsorted
+    keys = (ids[:600] + [f"d{2 * i + 1:06d}" for i in range(1500, 3000)]
+            + [f"e{i:06d}" for i in range(7900)])[::-1]
+    assert len(keys) == 10_000
+    pfs = _PlanFS(dst)
+    planner = ChunkPlanner(_load_plan(pfs))
+    planner.probe(keys)
+    with ThreadPoolExecutor(4) as pool:
+        files = _committed_data_files(pfs, [""], pool)
+        got = {(fc.file, r) for fc in planner.plan(pfs, files, pool)
+               for r in fc.rows}
+    want, n_chunks = set(), 0
+    for f in files:
+        t = pq.read_table(f, columns=["min_doc_id", "max_doc_id", "stats",
+                                      "bloom"]).to_pylist()
+        n_chunks += len(t)
+        for i, c in enumerate(t):
+            st = json.loads(c["stats"]).get("doc_id", {})
+            if any(c["min_doc_id"] <= k <= c["max_doc_id"]
+                   and bloom_might_contain(st, k, c["bloom"])
+                   for k in keys):
+                want.add((f, i))
+    assert got == want
+    assert 0 < len(want) < n_chunks, (len(want), n_chunks)
 
 
 def test_stream_root_batch_read_and_marker_gating(spark):
@@ -561,7 +718,7 @@ def test_bloom_point_lookup_prunes_inside_range(spark, store):
     INSIDE a chunk's [min_doc_id, max_doc_id] range but is absent from the
     store must prune every chunk (range stats alone cannot), while a real
     doc_id still decodes to exactly its row — on both the pipeline
-    (select_chunks JVM expression) and the DataSource (Python probe)."""
+    (select_chunks) and the DataSource (pushed EqualTo)."""
     from plc.datasource import PLCReader, _load_plan
     from plc.pipeline import decode, select_chunks
     from pyspark.sql.datasource import EqualTo

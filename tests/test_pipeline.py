@@ -509,8 +509,8 @@ def test_cli_lookup_point_query(spark, monkeypatch, capsys):
 
 def test_batch_lookup_and_multirange_filters(spark):
     """decode(doc_ids=[...]) fetches N scattered keys in one pruned scan:
-    absent keys (inside chunk ranges) prune every chunk via the broadcast
-    bloom semi-join; present keys return exactly their rows. Multi-range
+    absent keys (inside chunk ranges) prune every chunk via the planner's
+    bloom probe; present keys return exactly their rows. Multi-range
     filters ({col: [(lo,hi),...]}) OR ranges in one scan and match the
     equivalent row filter."""
     import tempfile
@@ -744,18 +744,26 @@ def test_orphan_part_dirs_not_adopted_on_resume(spark, src_df):
         _shutil.rmtree(dst, ignore_errors=True)
 
 
-def test_batch_lookup_part_bucketed_equi_join(spark):
-    """VERDICT r5 'what's wrong' #3 (r6): on a pipeline-encoded store the
-    batch-lookup pruning join is an EQUI-join on part_id (each probe key
-    maps to its range part + its crc32 straggler part via the encoder's
-    own routing arithmetic) — the physical plan shows BroadcastHashJoin,
-    not BroadcastNestedLoopJoin, and rows stay exact including keys that
-    were straggler-routed."""
+def _scan_files(df) -> set:
+    """Local paths of the files a DataFrame's scan lists."""
+    return {f.replace("file://", "").replace("file:", "")
+            for f in df.inputFiles()}
+
+
+def test_batch_lookup_scan_pinned_to_planner_files(spark):
+    """Batch-lookup chunk pruning runs in the driver-side planner: the
+    select_chunks plan has no join, its scan lists exactly the files the
+    planner keeps (a strict subset of the committed ones), and rows stay
+    exact — including straggler-routed keys on a pipeline store and keys
+    on a format-written store."""
     import tempfile
+    from concurrent.futures import ThreadPoolExecutor
 
     from plc import data as D
     from pyspark.sql import functions as F
 
+    from plc.datasource import (ChunkPlanner, _PlanFS, _committed_data_files,
+                                register)
     from plc.pipeline import (PipelineConfig, _load_plan, decode, encode,
                               select_chunks)
 
@@ -769,8 +777,7 @@ def test_batch_lookup_part_bucketed_equi_join(spark):
            PipelineConfig(num_partitions=4, straggler_parts=2,
                           skew_quantile=0.9, max_chunk_values=5_000),
            mode="overwrite")
-    plan = _load_plan(dst)
-    tau = plan["tau"]
+    tau = _load_plan(dst)["tau"]
     stragglers = [r["doc_id"] for r in
                   df.filter(F.col("n_tok") > tau).limit(3).collect()]
     normals = [r["doc_id"] for r in
@@ -778,30 +785,30 @@ def test_batch_lookup_part_bucketed_equi_join(spark):
     assert stragglers, "fixture produced no straggler rows"
     keys = stragglers + normals + [d + "-absent" for d in normals[:2]]
 
-    pruned, _ = select_chunks(spark, dst, doc_ids=keys)
-    p = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in p, p
-    assert "BroadcastNestedLoopJoin" not in p, p
-
-    got = sorted(r["doc_id"] for r in
-                 decode(spark, dst, doc_ids=keys)
-                 .select("doc_id").collect())
-    assert got == sorted(stragglers + normals)
-
-    # format-written stores (no bounds) keep the nested-loop fallback and
-    # stay exact
-    from plc.datasource import register
-
     register(spark)
     fdst = work + "/fmt"
-    df.repartition(3).write.format("plc").mode("overwrite").save(fdst)
-    pruned_f, _ = select_chunks(spark, fdst, doc_ids=keys)
-    pf = pruned_f._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" in pf, pf
-    got_f = sorted(r["doc_id"] for r in
-                   decode(spark, fdst, doc_ids=keys)
-                   .select("doc_id").collect())
-    assert got_f == sorted(stragglers + normals)
+    (df.repartitionByRange(3, "doc_id").write.format("plc")
+     .mode("overwrite").save(fdst))
+    for d in (dst, fdst):
+        pfs = _PlanFS(d)
+        planner = ChunkPlanner(_load_plan(pfs))
+        planner.probe(keys)
+        with ThreadPoolExecutor(4) as pool:
+            committed = set(_committed_data_files(pfs, [""], pool))
+            kept = {fc.file for fc in planner.plan(pfs, sorted(committed),
+                                                   pool)}
+        pruned, _ = select_chunks(spark, d, doc_ids=keys)
+        p = pruned._jdf.queryExecution().executedPlan().toString()
+        assert "Join" not in p, p
+        assert _scan_files(pruned) == kept <= committed, (d, kept)
+        one, _ = select_chunks(spark, d, doc_ids=normals[:1])
+        assert 1 == len(_scan_files(one)) < len(committed), d
+        out = decode(spark, d, doc_ids=keys).select("doc_id")
+        assert "Join" not in out._jdf.queryExecution().executedPlan() \
+            .toString()
+        assert sorted(r["doc_id"] for r in out.collect()) \
+            == sorted(stragglers + normals)
+    shutil.rmtree(work, ignore_errors=True)
 
 
 def test_bloom_split_layout_and_legacy_fallback(spark):
