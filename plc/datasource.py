@@ -65,9 +65,10 @@ from pyspark.sql.types import StringType, StructType
 
 # planner fast path: typed per-chunk columns, no stats JSON (see _PlanFS).
 # n_rows rides along for the IsNotNull all-null-chunk test (stats carry
-# null counts; a chunk is prunable when nulls == n_rows)
+# null counts; a chunk is prunable when nulls == n_rows); enc_bytes sizes
+# the kept chunks for decode's driver-or-Spark choice
 _RANGE_COLS = ["chunk_idx", "min_doc_id", "max_doc_id", "min_w", "max_w",
-               "n_rows"]
+               "n_rows", "enc_bytes"]
 _PLAN_THREADS = 32
 # .option("view", "chunks"): the enc table minus the payload blob —
 # per-chunk metadata as a queryable DataFrame (see PLCChunksReader).
@@ -410,13 +411,14 @@ def _meets(mn, mx, ranges) -> bool:
 class FileChunks(NamedTuple):
     """The planner's verdict on one committed file. ``rows`` are the
     surviving chunks' row indices in the file, ``chunk_idx`` their
-    chunk_idx values and ``n_chunks`` the file's chunk count; all three
-    are None when no predicate needed the file opened (every chunk
-    survives)."""
+    chunk_idx values, ``enc_bytes`` their encoded sizes and ``n_chunks``
+    the file's chunk count; all four are None when no predicate needed
+    the file opened (every chunk survives)."""
 
     file: str
     rows: "list[int] | None" = None
     chunk_idx: "list[int] | None" = None
+    enc_bytes: "list[int] | None" = None
     n_chunks: "int | None" = None
 
     @property
@@ -580,7 +582,7 @@ class ChunkPlanner:
                         json.loads(stats[i].as_py()), meta[i],
                         blooms[i].as_py() if blooms is not None else None)]
         return FileChunks(fpath, keep, [meta[i]["chunk_idx"] for i in keep],
-                          len(meta))
+                          [meta[i]["enc_bytes"] for i in keep], len(meta))
 
     def plan(self, pfs: _PlanFS, files: list[str],
              pool) -> list[FileChunks]:
@@ -662,11 +664,13 @@ class PLCDataSource(DataSource):
 
 class PLCChunkPartition(InputPartition):
     def __init__(self, pfs: _PlanFS, file: str, rows: list[int] | None,
-                 filters: "dict[str, list[tuple]] | None" = None):
+                 filters: "dict[str, list[tuple]] | None" = None,
+                 keys: "list[str] | None" = None):
         self.pfs = pfs    # pickles as the original path/URI, re-resolves
         self.file = file  # full path within pfs.fs
         self.rows = rows  # chunk row indices surviving pruning; None = all
-        self.filters = filters  # option-supplied multi-ranges, row-exact
+        self.filters = filters  # multi-ranges per column, row-exact
+        self.keys = keys  # doc_id keys, row-exact (decode's doc_ids)
 
 
 class PLCReader(DataSourceReader):
@@ -909,10 +913,12 @@ def _read_selected(pfs: _PlanFS, file: str, columns: list[str],
         return tbl, local
 
 
-def _ranges_mask(rb, flt: dict):
-    """AND over columns of (OR over that column's (lo, hi) ranges) as a
-    pyarrow boolean mask; NULL values compare to null → dropped by
-    filter, matching decode()'s range semantics."""
+def _row_mask(rb, flt: dict, keys):
+    """AND over columns of (OR over that column's (lo, hi) ranges), AND
+    doc_id in ``keys`` (a pyarrow array, or None for no key filter), as a
+    pyarrow boolean mask; None when nothing filters. NULL values compare
+    to null and are dropped by the filter, matching Spark's semantics;
+    strings compare byte-wise in both."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -932,24 +938,41 @@ def _ranges_mask(rb, flt: dict):
                 rm = pa.array(np.ones(len(arr), dtype=bool))
             cm = rm if cm is None else pc.or_kleene(cm, rm)
         mask = cm if mask is None else pc.and_kleene(mask, cm)
+    if keys is not None:
+        km = pc.is_in(rb.column("doc_id"), value_set=keys)
+        mask = km if mask is None else pc.and_kleene(mask, km)
     return mask
+
+
+def _unpack_rows(payload, names: list[str], flt: dict, keys):
+    """The one chunk decoder: unpack ``names`` from one chunk payload and
+    keep only the rows :func:`_row_mask` passes. Filter columns are
+    decoded even when not in ``names``; callers ``select(names)``. Runs
+    inside the format reader's tasks, inside ``decode``'s
+    ``mapInArrow`` and on the driver for small ``decode`` reads."""
+    from plc.chunk import unpack_chunk
+
+    need = list(flt) + (["doc_id"] if keys is not None else [])
+    rb = unpack_chunk(payload, columns=list(dict.fromkeys(names + need)))
+    mask = _row_mask(rb, flt, keys)
+    return rb if mask is None else rb.filter(mask)
 
 
 def _read_chunk_partition(partition: PLCChunkPartition | None,
                           schema: StructType):
-    """Executor-side decode of one chunk-file partition (shared by the
-    batch and stream readers). ``partition.filters`` (the option-supplied
-    multi-ranges) are applied row-exactly here — Spark never saw them, so
-    the reader owns their semantics."""
+    """Decode one chunk-file partition (the batch and stream readers'
+    tasks, and ``decode``'s driver path). ``partition.filters`` and
+    ``partition.keys`` are applied row-exactly here — Spark never sees
+    them, so the reader owns their semantics."""
     import pyarrow as pa
-
-    from plc.chunk import unpack_chunk
 
     if partition is None:  # Spark probes an empty partition list once
         return
-    flt = getattr(partition, "filters", None) or {}
+    flt = partition.filters or {}
+    keys = None if partition.keys is None else pa.array(partition.keys,
+                                                        pa.string())
     names = [f.name for f in schema.fields]
-    if not names and not flt:
+    if not names and not flt and keys is None:
         # zero-column projection (SELECT count(*)): row counts come
         # from the chunk metadata, no frame is ever decoded
         tbl, local = _read_selected(partition.pfs, partition.file,
@@ -960,17 +983,12 @@ def _read_chunk_partition(partition: PLCChunkPartition | None,
             yield pa.RecordBatch.from_struct_array(
                 pa.array([{}] * rows[i], pa.struct([])))
         return
-    # range columns must be decoded even when not projected
-    dec_names = list(dict.fromkeys(names + [c for c in flt
-                                            if c not in names]))
     tbl, local = _read_selected(partition.pfs, partition.file,
                                 ["payload"], partition.rows)
     payloads = tbl.column("payload")
     idxs = range(len(payloads)) if local is None else local
     for i in idxs:
-        rb = unpack_chunk(payloads[i].as_buffer(), columns=dec_names)
-        if flt:
-            rb = rb.filter(_ranges_mask(rb, flt))
+        rb = _unpack_rows(payloads[i].as_buffer(), names, flt, keys)
         if not names:  # count(*) under option filters
             yield pa.RecordBatch.from_struct_array(
                 pa.array([{}] * rb.num_rows, pa.struct([])))

@@ -16,6 +16,7 @@ from plc import data as D
 
 def main(out_path: str = "BENCH/PLANS.md") -> None:
     from pyspark.sql import SparkSession, functions as F
+    from plc import pipeline
     from plc.pipeline import (PipelineConfig, build_plan, decode, encode,
                               _data_path, _make_encoder, _pid_expr,
                               _sbucket_col, ENC_SCHEMA_DDL)
@@ -56,11 +57,14 @@ def main(out_path: str = "BENCH/PLANS.md") -> None:
          "pass)",
          fmt(enc_df)),
         ("E2 decode with doc_id bounds (chunks pruned on the driver; the "
-         "scan lists only the committed files that keep a chunk)",
+         "kept chunks are under _DRIVER_DECODE_MAX_BYTES, so they are "
+         "unpacked on the driver with the doc_id row filter inside the "
+         "decoder: a LocalRelation, no Spark job to collect it)",
          fmt(decode(spark, dst, doc_id_min="doc-000000000100",
                     doc_id_max="doc-000000000199"))),
         ("E2 decode with n_tok stats filter (typed min_w/max_w chunk "
-         "pruning in the driver-side planner)",
+         "pruning in the driver-side planner; the exact n_tok row filter "
+         "is a Spark filter, folded into the local relation)",
          fmt(decode(spark, dst, filters={"n_tok": (200, None)}))),
         ("Manifest roll-up (payload-pruned ReadSchema, partial aggregation)",
          fmt(spark.read.parquet(_data_path(dst)).groupBy("part_id")
@@ -97,12 +101,21 @@ def main(out_path: str = "BENCH/PLANS.md") -> None:
         "planner, one scan — e.g. IVF probing scattered cells)",
         fmt(select_chunks(spark, dst,
                           filters={"n_tok": [(0, 10), (200, None)]})[0])))
+    # the remaining decodes show the Spark path, which kept chunks above
+    # the driver-decode cap take
+    pipeline._DRIVER_DECODE_MAX_BYTES = 0
+    sections.append((
+        "E2 decode with doc_id bounds, Spark path: MapInArrow over a scan "
+        "of only the committed files that keep a chunk; the doc_id row "
+        "filter runs inside the decoder, so no Filter sits above it",
+        fmt(decode(spark, dst, doc_id_min="doc-000000000100",
+                   doc_id_max="doc-000000000199"))))
     big_keys = [f"doc-{i:012d}" for i in range(2000)]
     sections.append((
-        "Large-key batch lookup row filter (> _DOC_IDS_ISIN_MAX keys): "
-        "the decoded-side IN-list switches to a broadcast LEFT SEMI join "
-        "— plan size and py4j plan-build time stay O(1) in the key "
-        "count (r5)",
+        "Large-key batch lookup row filter, Spark path (2000 keys): the "
+        "keys live in the decoder (pyarrow is_in right after each chunk "
+        "is unpacked), so the plan holds no join and no key literal — "
+        "its size and py4j build time do not grow with the key count",
         fmt(decode(spark, dst, doc_ids=big_keys,
                    columns=["doc_id", "n_tok"]))))
     # encode_direct: no Exchange anywhere — descriptors parallelized with

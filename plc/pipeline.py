@@ -24,7 +24,8 @@ Scale notes (designed for ~100 TB / 1000 executors, tested on local[32]):
   stages, so the salt is explicit;
 - decode prunes chunks on the driver (plc.datasource.ChunkPlanner: typed
   min/max, stats JSON, doc_id bloom) and pins the Spark scan to the files
-  that keep a chunk; no custom Catalyst rule needed.
+  that keep a chunk, or unpacks a small kept set on the driver with no
+  Spark job; no custom Catalyst rule needed.
 """
 
 from __future__ import annotations
@@ -41,10 +42,12 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
-from plc.chunk import EncodeConfig, column_stats, pack_chunk, unpack_chunk
-from plc.datasource import (_PLAN_THREADS, ChunkPlanner, _PlanFS,
-                            _committed_data_files, _load_plan,
-                            _normalize_ranges, _part_dirs, _read_manifest)
+from plc.chunk import EncodeConfig, column_stats, pack_chunk
+from plc.datasource import (_PLAN_THREADS, ChunkPlanner, PLCChunkPartition,
+                            _PlanFS, _committed_data_files, _load_plan,
+                            _normalize_ranges, _part_dirs,
+                            _read_chunk_partition, _read_manifest,
+                            _unpack_rows)
 
 ENC_SCHEMA_DDL = (
     "part_id int, chunk_idx int, n_rows bigint, n_tokens bigint, "
@@ -52,14 +55,14 @@ ENC_SCHEMA_DDL = (
     "min_w bigint, max_w bigint, stats string, codecs string, bloom binary, "
     "payload binary"
 )
-# decode(doc_ids=...) row filter: literal IN-list up to this many keys
-# (Catalyst InSet — plan-readable for small probes), broadcast semi-join
-# beyond. Originally a 100k plan-tree-size guard (VERDICT r4 #7); r5
-# measurement moved it to 64 — building an isin() Column marshals every
-# literal through py4j (~0.5 ms/key, 1.1 s of pure driver wall at 2k
-# keys) while the semi-join's createDataFrame ships the keys via Arrow
-# in ~flat time (2062-key probe: 2.49 s → 1.21 s end-to-end)
-_DOC_IDS_ISIN_MAX = 64
+# decode() unpacks its kept chunks on the driver (no Spark job) when they
+# are predicate-selected and their encoded sizes sum to at most this;
+# larger reads run the same decoder in mapInArrow tasks. Measured on a
+# 4-core host (local[4]): reading every row of the kept chunks, the
+# driver path ties Spark at ~1.1-1.9 MB and loses 34% at 6 MB; point
+# reads still win at 6 MB (448 vs 627 ms). The cap sits below the
+# every-row crossover
+_DRIVER_DECODE_MAX_BYTES = 1 << 20
 
 _ENC_ARROW_SCHEMA = pa.schema([
     ("part_id", pa.int32()), ("chunk_idx", pa.int32()), ("n_rows", pa.int64()),
@@ -904,41 +907,35 @@ def _ranges_cond(ranges: list[tuple], lo_cond, hi_cond):
     return reduce(lambda a, b: a | b, conds)
 
 
-def select_chunks(spark: SparkSession, dst: str, *,
-                  doc_id_min: str | None = None,
-                  doc_id_max: str | None = None,
-                  filters: dict | None = None,
-                  doc_ids: list[str] | None = None
-                  ) -> tuple[DataFrame, dict]:
-    """Chunk-selection head shared by :func:`decode`, :func:`verify`,
-    :func:`codec_report` and storage-pruning tests. Returns (enc-chunk
-    DataFrame, plan) with one row per surviving chunk, so counting its
-    rows shows exactly how many chunks a decode would touch.
+def _doc_id_ranges(doc_id_min, doc_id_max, filters: dict) -> list[tuple]:
+    """The doc_id row predicate as one OR of inclusive string ranges:
+    ``filters["doc_id"]`` (popped) clipped to [doc_id_min, doc_id_max].
+    Stored doc_ids are strings, so bounds are normalized with ``str()``
+    here, at the API boundary; [] when doc_id is unconstrained."""
+    def s(v):
+        return None if v is None else str(v)
 
-    Pruning runs on the driver in :class:`plc.datasource.ChunkPlanner`
-    (the ``plc`` format reader's planner): doc_id bounds, per-chunk
-    stats for ``filters`` and the doc_id bloom for point and batch
-    lookups. The Spark scan is then pinned to the committed files that
-    keep a chunk, read with the explicit enc schema (no inference); a
-    file that keeps only some of its chunks gets a file-exact residual
-    filter on (part_id, file name, chunk_idx). With no predicate no data
-    file is opened: the scan is the committed file list.
+    def clip(a, b, pick):
+        return b if a is None else a if b is None else pick(a, b)
 
-    ``filters`` values are inclusive ``(lo, hi)`` tuples or LISTS of them
-    (multi-range: a chunk survives if ANY range intersects its stats).
-    ``doc_ids`` is the batch point lookup: a chunk survives only if at
-    least one key falls in its [min_doc_id, max_doc_id] AND passes its
-    bloom."""
+    lo, hi = s(doc_id_min), s(doc_id_max)
+    ranges = [(clip(s(a), lo, max), clip(s(b), hi, min)) for a, b in
+              _normalize_ranges(filters.pop("doc_id", (None, None)))]
+    return [] if ranges == [(None, None)] else ranges
+
+
+def _plan_chunks(dst: str, filters: dict,
+                 doc_ids) -> tuple[_PlanFS, dict, list]:
+    """Run :class:`plc.datasource.ChunkPlanner` over the committed files:
+    (fs, plan, the files that keep a chunk). ``doc_ids`` are strings."""
     from concurrent.futures import ThreadPoolExecutor
 
     pfs = _PlanFS(dst)
     plan = _load_plan(pfs)
     planner = ChunkPlanner(plan)
-    filters = dict(filters or {})
     unknown_f = [c for c in filters if c not in planner.col_types]
     if unknown_f:
         raise ValueError(f"unknown filter columns {unknown_f}")
-    planner.tighten("doc_id", doc_id_min, doc_id_max)
     for col, spec in filters.items():
         ranges = _normalize_ranges(spec)
         if len(ranges) == 1:
@@ -946,13 +943,20 @@ def select_chunks(spark: SparkSession, dst: str, *,
         else:
             planner.add_ranges(col, ranges)
     if doc_ids is not None:
-        # normalize ONCE at the API boundary: stored doc_ids are strings
-        planner.probe([str(k) for k in doc_ids])
+        planner.probe(doc_ids)
     with ThreadPoolExecutor(max_workers=_PLAN_THREADS) as pool:
         kept = planner.plan(pfs, _committed_data_files(pfs, [""], pool),
                             pool)
+    return pfs, plan, kept
+
+
+def _scan_chunks(spark: SparkSession, pfs: _PlanFS, kept: list) -> DataFrame:
+    """Spark scan of exactly the planner's kept chunks (enc schema)."""
     if not kept:
-        return spark.createDataFrame([], ENC_SCHEMA_DDL), plan
+        # an Arrow-built frame is a LocalRelation: collecting it runs no
+        # job (an empty list would go through parallelize)
+        return spark.createDataFrame(_ENC_ARROW_SCHEMA.empty_table(),
+                                     ENC_SCHEMA_DDL)
     enc = (spark.read.schema(ENC_SCHEMA_DDL)
            .option("basePath", pfs.uri(pfs.join("data")))
            .parquet(*(pfs.uri(fc.file) for fc in kept)))
@@ -970,7 +974,42 @@ def select_chunks(spark: SparkSession, dst: str, *,
         ckey = f"concat_ws('#', {fkey}, cast(chunk_idx as string))"
         enc = enc.filter(~_sql_in(fkey, partial) | _sql_in(
             ckey, [f"{f}#{c}" for f, cs in partial.items() for c in cs]))
-    return enc, plan
+    return enc
+
+
+def select_chunks(spark: SparkSession, dst: str, *,
+                  doc_id_min: str | None = None,
+                  doc_id_max: str | None = None,
+                  filters: dict | None = None,
+                  doc_ids: list[str] | None = None
+                  ) -> tuple[DataFrame, dict]:
+    """Chunk-selection head shared by :func:`verify`, :func:`codec_report`
+    and storage-pruning tests (:func:`decode` plans the same way).
+    Returns (enc-chunk DataFrame, plan) with one row per surviving chunk,
+    so counting its rows shows exactly how many chunks a decode would
+    touch.
+
+    Pruning runs on the driver in :class:`plc.datasource.ChunkPlanner`
+    (the ``plc`` format reader's planner): doc_id bounds, per-chunk
+    stats for ``filters`` and the doc_id bloom for point and batch
+    lookups. The Spark scan is then pinned to the committed files that
+    keep a chunk, read with the explicit enc schema (no inference); a
+    file that keeps only some of its chunks gets a file-exact residual
+    filter on (part_id, file name, chunk_idx). With no predicate no data
+    file is opened: the scan is the committed file list. When no chunk
+    survives the result is an empty local frame (no Spark job).
+
+    ``filters`` values are inclusive ``(lo, hi)`` tuples or LISTS of them
+    (multi-range: a chunk survives if ANY range intersects its stats).
+    ``doc_ids`` is the batch point lookup: a chunk survives only if at
+    least one key falls in its [min_doc_id, max_doc_id] AND passes its
+    bloom. doc_id bounds and keys are compared as strings."""
+    filters = dict(filters or {})
+    doc = _doc_id_ranges(doc_id_min, doc_id_max, filters)
+    pfs, plan, kept = _plan_chunks(
+        dst, {**filters, "doc_id": doc} if doc else filters,
+        None if doc_ids is None else [str(k) for k in doc_ids])
+    return _scan_chunks(spark, pfs, kept), plan
 
 
 def _sql_in(expr: str, values) -> Column:
@@ -982,16 +1021,38 @@ def _sql_in(expr: str, values) -> Column:
     return F.expr(f"{expr} IN ({lits})")
 
 
+def _decode_on_driver(spark: SparkSession, pfs: _PlanFS, kept: list,
+                      schema: StructType, flt: dict,
+                      keys: "list[str] | None") -> DataFrame:
+    """Unpack the kept chunks here with the format reader's loop (one
+    partition per kept file) and return them as a local frame: Spark
+    runs no job to collect it, and folds filters and projections over
+    it into the same local relation."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    # one Arrow schema for every batch (Spark's own types for this schema,
+    # TimestampType as UTC instants), so the batches concatenate and
+    # createDataFrame never reads a tz-naive timestamp as session-zone
+    # wall time
+    target = to_arrow_schema(schema)
+    tables = [pa.Table.from_batches([rb]).cast(target)
+              for fc in kept
+              for rb in _read_chunk_partition(
+                  PLCChunkPartition(pfs, fc.file, fc.rows, flt, keys), schema)]
+    return spark.createDataFrame(
+        pa.concat_tables(tables) if tables else target.empty_table(), schema)
+
+
 def decode(spark: SparkSession, dst: str, *, doc_id_min: str | None = None,
            doc_id_max: str | None = None,
            columns: list[str] | None = None,
            filters: dict | None = None,
            doc_ids: list[str] | None = None) -> DataFrame:
     """Read encoded chunks back as the original table. Only committed parts
-    are read, and :func:`select_chunks` prunes chunks on the driver
-    before the scan: the Spark scan lists only the files that keep a
-    chunk. ``columns`` prunes at the storage level — unrequested column
-    frames are skipped by length inside the chunk, never decoded.
+    are read, and the chunk planner (:func:`select_chunks`) prunes chunks
+    on the driver before anything is decoded. ``columns`` prunes at the
+    storage level — unrequested column frames are skipped by length
+    inside the chunk, never decoded.
 
     ``filters``: {column: (lo, hi)} inclusive range predicates — or a LIST
     of (lo, hi) tuples per column for multi-range selection (one scan for
@@ -1003,62 +1064,57 @@ def decode(spark: SparkSession, dst: str, *, doc_id_min: str | None = None,
 
     ``doc_ids``: batch point lookup — fetch exactly these keys in ONE
     pass: chunk pruning by key range and bloom in the planner, then an
-    exact IN row filter."""
+    exact row filter.
+
+    The doc_id row filter (bounds, ``doc_ids`` and ``filters["doc_id"]``,
+    compared as strings) runs inside the decoder right after each chunk
+    is unpacked, so only matching rows reach Spark. Other ``filters``
+    columns are exact Spark filters on the decoded rows, with Spark's
+    literal coercion (e.g. string bounds on a timestamp column).
+
+    One decoder, two places: when a predicate selected the chunks and
+    their ``enc_bytes`` sum to at most ``_DRIVER_DECODE_MAX_BYTES``, they
+    are unpacked on the driver into a local frame, and collecting it
+    (filtered or projected) runs no Spark job. Those chunks are READ
+    WHEN ``decode`` IS CALLED, not when the frame is collected — the
+    snapshot the pinned file list already fixes. Every other read (every
+    read without a predicate) is a ``mapInArrow`` over a scan of the
+    kept files."""
     from plc.util import ensure_shipped
 
     ensure_shipped(spark)
     filters = dict(filters or {})
-    if doc_ids is not None:
-        doc_ids = [str(k) for k in doc_ids]  # see select_chunks
-    enc, plan = select_chunks(spark, dst, doc_id_min=doc_id_min,
-                              doc_id_max=doc_id_max, filters=filters,
-                              doc_ids=doc_ids)
+    doc = _doc_id_ranges(doc_id_min, doc_id_max, filters)
+    flt = {"doc_id": doc} if doc else {}  # row-exact inside the decoder
+    keys = None if doc_ids is None else sorted({str(k) for k in doc_ids})
+    pfs, plan, kept = _plan_chunks(dst, {**filters, **flt}, keys)
     schema = StructType.fromJson(plan["schema"])
     known = {f.name for f in schema.fields}
-
-    bounded = (doc_id_min is not None or doc_id_max is not None
-               or doc_ids is not None)
     if columns is not None:
         unknown = [c for c in columns if c not in known]
         if unknown:
             raise ValueError(f"unknown columns {unknown}; "
                              f"stored schema has {sorted(known)}")
-        # row-level bound/range filtering needs its columns decoded even
-        # when the caller did not request them; dropped after the filter
-        decode_cols = list(dict.fromkeys(
-            (["doc_id"] if bounded else []) + list(filters) + list(columns)))
+        # Spark-side range filters need their columns decoded even when
+        # the caller did not request them; dropped after the filter
+        decode_cols = set(filters) | set(columns)
         schema = StructType(
             [f for f in schema.fields if f.name in decode_cols])
     names = [f.name for f in schema.fields]
 
-    def decode_batches(batches):
-        for batch in batches:
-            payloads = batch.column("payload")
-            for i in range(batch.num_rows):
-                rb = unpack_chunk(payloads[i].as_buffer(), columns=names)
-                yield rb.select(names)
+    if all(fc.rows is not None for fc in kept) and sum(
+            sum(fc.enc_bytes) for fc in kept) <= _DRIVER_DECODE_MAX_BYTES:
+        out = _decode_on_driver(spark, pfs, kept, schema, flt, keys)
+    else:
+        def decode_batches(batches):
+            vs = None if keys is None else pa.array(keys, pa.string())
+            for batch in batches:
+                for p in batch.column("payload"):
+                    yield _unpack_rows(p.as_buffer(), names, flt,
+                                       vs).select(names)
 
-    out = enc.select("payload").mapInArrow(decode_batches, schema)
-    if doc_id_min is not None:
-        out = out.filter(F.col("doc_id") >= doc_id_min)
-    if doc_id_max is not None:
-        out = out.filter(F.col("doc_id") <= doc_id_max)
-    if doc_ids is not None:
-        uniq = list(set(doc_ids))
-        if len(uniq) <= _DOC_IDS_ISIN_MAX:
-            # Catalyst folds a literal IN-list this size into an InSet
-            out = out.filter(F.col("doc_id").isin(uniq))
-        else:
-            # beyond the threshold a literal list costs py4j marshalling
-            # per key at plan time (and would eventually bloat the plan
-            # tree) — route the row filter through a broadcast semi-join
-            # instead; createDataFrame ships the keys via Arrow (~ms per
-            # 10k keys), negligible next to the py4j literal cost.
-            cols = out.columns
-            kdf = spark.createDataFrame([(k,) for k in uniq],
-                                        "doc_id string")
-            out = out.join(F.broadcast(kdf), "doc_id", "left_semi") \
-                     .select(*cols)
+        out = (_scan_chunks(spark, pfs, kept).select("payload")
+               .mapInArrow(decode_batches, schema))
     for col, spec in filters.items():
         out = out.filter(_ranges_cond(
             _normalize_ranges(spec),

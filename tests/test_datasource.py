@@ -6,6 +6,7 @@ import glob
 import os
 import shutil
 import tempfile
+import time
 
 import pyarrow.parquet as pq
 
@@ -492,21 +493,16 @@ def _expected_mask(tbl, doc_id_min=None, doc_id_max=None, filters=None,
     return m
 
 
-def test_planner_no_false_negatives(spark, prune_stores):
-    """Every chunk holding a matching row survives select_chunks, and
-    decode returns exactly the pyarrow-filtered rows — for point, range,
-    IN-list (with absent keys), weight, string, temporal and multi-range
-    predicates on a pipeline store, a format store and a shuffle="none"
-    store whose part dirs hold files with overlapping chunk_idx."""
+def _prune_preds(tbl) -> tuple[list, list]:
+    """(absent keys, the decode predicate matrix) over ``prune_stores``:
+    doc_id point / absent point / range, ``doc_ids`` with absent keys,
+    weight, string, UTC temporal and multi-range predicates."""
     import datetime
 
-    from plc.pipeline import decode, select_chunks
-
-    tbl, stores = prune_stores
     ids = tbl["doc_id"].to_pylist()
     absent = [f"d{2 * i + 1:06d}" for i in (10, 700, 2999)]
     utc = datetime.timezone.utc
-    preds = [
+    return absent, [
         {"filters": {"doc_id": (ids[1234], ids[1234])}},
         {"filters": {"doc_id": (absent[1], absent[1])}},
         {"doc_id_min": ids[500], "doc_id_max": ids[900]},
@@ -520,6 +516,18 @@ def test_planner_no_false_negatives(spark, prune_stores):
                      "doc_id": [(ids[100], ids[300]),
                                 (ids[2000], None)]}},
     ]
+
+
+def test_planner_no_false_negatives(spark, prune_stores):
+    """Every chunk holding a matching row survives select_chunks, and
+    decode returns exactly the pyarrow-filtered rows — for point, range,
+    IN-list (with absent keys), weight, string, temporal and multi-range
+    predicates on a pipeline store, a format store and a shuffle="none"
+    store whose part dirs hold files with overlapping chunk_idx."""
+    from plc.pipeline import decode, select_chunks
+
+    tbl, stores = prune_stores
+    absent, preds = _prune_preds(tbl)
     for name, dst in stores.items():
         chunks = _store_chunks(dst)
         if name == "none":
@@ -551,6 +559,126 @@ def test_planner_no_false_negatives(spark, prune_stores):
         # the predicates prune: a point lookup keeps one chunk
         one = select_chunks(spark, dst, **preds[0])[0].count()
         assert one == 1 < len(chunks), (name, one, len(chunks))
+
+
+def _both_paths(spark, monkeypatch, dst: str, **kw) -> list:
+    """Decode with the driver cap forced to 0 (Spark ``mapInArrow``) and
+    to ∞ (driver); assert identical schema, column order and rows and
+    return the rows."""
+    from plc import pipeline as P
+
+    got = []
+    for cap in (0, float("inf")):
+        monkeypatch.setattr(P, "_DRIVER_DECODE_MAX_BYTES", cap)
+        df = P.decode(spark, dst, **kw)
+        got.append((df.schema, df.columns,
+                    sorted(df.collect(), key=lambda r: r["doc_id"])))
+    assert got[0][0] == got[1][0], (kw, got[0][0], got[1][0])
+    assert got[0][1] == got[1][1], (kw, got[0][1], got[1][1])
+    assert got[0][2] == got[1][2], kw
+    return got[0][2]
+
+
+def test_driver_and_spark_decode_agree(spark, prune_stores, monkeypatch):
+    """The driver path and the Spark path run the same decoder: identical
+    rows, schema and column order over the property test's predicate
+    matrix (also with ``columns=``), string bounds on a timestamp column
+    (Spark's coercion, in a non-UTC session time zone too), and a
+    map-typed store."""
+    tbl, stores = prune_stores
+    ids = tbl["doc_id"].to_pylist()
+    _, preds = _prune_preds(tbl)
+    ts_str = {"filters": {"ts": ("2024-03-10 00:00:00",
+                                 "2024-03-12 06:30:00")}}
+    preds += [ts_str,
+              {"doc_id_min": ids[10], "doc_ids": ids[:40:3],
+               "filters": {"doc_id": [(ids[5], ids[30]), (ids[35], None)]}}]
+    for name, dst in stores.items():
+        for kw in preds:
+            _both_paths(spark, monkeypatch, dst, **kw)
+            _both_paths(spark, monkeypatch, dst, **kw,
+                        columns=["n_tok", "doc_id"])
+    # a non-UTC session zone: string bounds coerce in that zone and the
+    # driver path's Arrow frame must not localize the stored timestamps
+    src = spark.read.parquet(
+        os.path.join(os.path.dirname(stores["pipeline"]), "src.parquet"))
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        lo, hi = ts_str["filters"]["ts"]
+        want = sorted((r["doc_id"], r["ts"]) for r in src.filter(
+            (F.col("ts") >= lo) & (F.col("ts") <= hi)).collect())
+        for dst in stores.values():
+            rows = _both_paths(spark, monkeypatch, dst, **ts_str)
+            assert [(r["doc_id"], r["ts"]) for r in rows] == want
+            rows = _both_paths(spark, monkeypatch, dst,
+                               doc_ids=ids[::150])
+            assert len(rows) == len(ids[::150])
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+    # the map-typed store of test_integration_store, in several chunks
+    df = spark.range(300).select(
+        F.format_string("doc-%08d", "id").alias("doc_id"),
+        F.create_map(F.lit("a"), F.col("id").cast("int"),
+                     F.lit("b"), (F.col("id") * 2).cast("int")).alias("attrs"),
+        F.when(F.col("id") % 7 == 0, F.lit(None)).otherwise(
+            F.create_map(F.lit("x"), F.lit(1.5))).alias("sparse"))
+    dst = tempfile.mkdtemp(prefix="plc_map_paths_")
+    try:
+        encode(spark, df, dst, PipelineConfig(num_partitions=2,
+                                              straggler_parts=0,
+                                              max_chunk_values=40),
+               mode="overwrite")
+        for kw in ({"filters": {"doc_id": ("doc-00000007",) * 2}},
+                   {"doc_id_min": "doc-00000100",
+                    "doc_id_max": "doc-00000180"},
+                   {"doc_ids": [f"doc-{i:08d}" for i in range(0, 300, 9)],
+                    "columns": ["sparse", "doc_id"]}):
+            assert _both_paths(spark, monkeypatch, dst, **kw), kw
+    finally:
+        shutil.rmtree(dst, ignore_errors=True)
+
+
+def test_bounded_lookups_run_no_spark_job(spark, prune_stores,
+                                          monkeypatch):
+    """Small predicate-bounded decodes are unpacked on the driver:
+    collecting a point hit, a bloom-pruned miss, a 48-key and a 100-key
+    doc_ids lookup starts no Spark job. A decode with no predicate still
+    scans parquet in Spark."""
+    from plc import pipeline as P
+
+    tbl, stores = prune_stores
+    dst = stores["pipeline"]
+    ids = tbl["doc_id"].to_pylist()
+    miss = next(k for k in (f"d{2 * i + 1:06d}" for i in range(100, 3000, 7))
+                if P.select_chunks(spark, dst,
+                                   filters={"doc_id": (k, k)})[0].isEmpty())
+    calls = {"hit": ({"filters": {"doc_id": (ids[1234], ids[1234])}}, 1),
+             "miss": ({"filters": {"doc_id": (miss, miss)}}, 0),
+             "keys48": ({"doc_ids": ids[::61][:48]}, 48),
+             "keys100": ({"doc_ids": ids[::29][:100] + [miss]}, 100)}
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        for name, (kw, n) in calls.items():
+            sc.setJobGroup(f"plc-zero-{name}", name)
+            assert len(P.decode(spark, dst, **kw).collect()) == n, name
+        # control: the Spark path's job must show up; the listener bus is
+        # FIFO, so once it has, every earlier job would have too
+        monkeypatch.setattr(P, "_DRIVER_DECODE_MAX_BYTES", 0)
+        sc.setJobGroup("plc-zero-control", "control")
+        P.decode(spark, dst, **calls["hit"][0]).collect()
+        deadline = time.time() + 60
+        while not tracker.getJobIdsForGroup("plc-zero-control"):
+            assert time.time() < deadline, "control job never registered"
+            time.sleep(0.1)
+        for name in calls:
+            assert tracker.getJobIdsForGroup(f"plc-zero-{name}") == [], name
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    plan = P.decode(spark, dst)._jdf.queryExecution().executedPlan()
+    assert "FileScan parquet" in plan.toString()
 
 
 def test_planner_probe_scale_matches_brute_force(prune_stores):

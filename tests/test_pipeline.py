@@ -604,16 +604,16 @@ def test_batch_lookup_accepts_int_keys(spark):
     assert got == ["3", "7", "99"]
 
 
-def test_batch_lookup_huge_key_set_routes_through_semi_join(spark):
-    """Above _DOC_IDS_ISIN_MAX keys the decode row filter must switch
-    from a literal IN-list (which would bloat the plan tree) to a
-    broadcast semi-join (VERDICT r4 #7) — same rows, same schema."""
-    import tempfile
-
+def test_batch_lookup_huge_key_set_filters_in_decoder(spark, monkeypatch,
+                                                      tmp_path):
+    """A large doc_ids key set is filtered inside the decoder on both the
+    driver and the Spark path: no join and no key literal in the plan
+    (its size and py4j build time do not grow with the key count),
+    exact rows, and the caller's column order."""
     from plc import data as D
     from plc import pipeline as P
 
-    work = tempfile.mkdtemp(prefix="plc_hugekeys_")
+    work = str(tmp_path)
     src_p = work + "/tokens.parquet"
     D.synth_tokens_parquet(src_p, 300, regime="zipf", seed=13)
     df = spark.read.parquet(src_p)
@@ -622,19 +622,17 @@ def test_batch_lookup_huge_key_set_routes_through_semi_join(spark):
              P.PipelineConfig(num_partitions=2, straggler_parts=0),
              mode="overwrite")
     present = [r[0] for r in df.select("doc_id").limit(50).collect()]
-    # enough absent keys to cross the (64-key, r5) guard with margin —
-    # the switch itself is what's under test, not a size record
     keys = present + [f"doc-absent-{i:07d}" for i in range(1_500)]
-    assert len(set(keys)) > P._DOC_IDS_ISIN_MAX
-    out = P.decode(spark, dst, doc_ids=keys, columns=["doc_id", "n_tok"])
-    # the row filter is a (broadcastable) semi-join, not a 100k-literal
-    # IN-list baked into the plan tree
-    lp = out._jdf.queryExecution().analyzed().toString()
-    assert "LeftSemi" in lp
-    assert "doc-absent-0050000" not in lp
-    got = sorted(r["doc_id"] for r in out.select("doc_id").collect())
-    assert got == sorted(present)
-    assert out.columns == ["doc_id", "n_tok"]
+    for cap in (0, float("inf")):
+        monkeypatch.setattr(P, "_DRIVER_DECODE_MAX_BYTES", cap)
+        out = P.decode(spark, dst, doc_ids=keys, columns=["doc_id", "n_tok"])
+        lp = out._jdf.queryExecution().analyzed().toString()
+        assert "Join" not in lp, (cap, lp)
+        assert "doc-absent-0000050" not in lp, cap
+        assert present[0] not in lp, cap
+        got = sorted(r["doc_id"] for r in out.select("doc_id").collect())
+        assert got == sorted(present), cap
+        assert out.columns == ["doc_id", "n_tok"], cap
 
 
 def test_sampled_verify_and_codec_report(spark):

@@ -48,13 +48,17 @@ def test_encode_plan_has_exactly_one_shuffle(spark, enc_dir):
     assert "PythonMapInArrow" in p or "MapInArrow" in p, p
 
 
-def test_decode_bounds_push_into_parquet_scan(spark, enc_dir):
-    """doc_id bounds prune chunks on the driver: the decode scan lists a
-    strict subset of the committed files, with no join against the
-    manifest and no shuffle of the data side."""
+def test_decode_bounds_push_into_parquet_scan(spark, enc_dir, monkeypatch):
+    """doc_id bounds prune chunks on the driver: on the Spark path (cap
+    forced to 0) the decode scan lists a strict subset of the committed
+    files, with no join against the manifest and no shuffle of the data
+    side."""
     import glob
     import os
 
+    from plc import pipeline as P
+
+    monkeypatch.setattr(P, "_DRIVER_DECODE_MAX_BYTES", 0)
     _, dst = enc_dir
     out = decode(spark, dst, doc_id_min="doc-000000000100",
                  doc_id_max="doc-000000000199")
@@ -66,6 +70,28 @@ def test_decode_bounds_push_into_parquet_scan(spark, enc_dir):
     assert scanned and scanned < committed, (scanned, committed)
     assert "Join" not in p, p
     assert "Exchange" not in p, p
+
+
+def test_small_bounded_decode_is_local_relation(spark, enc_dir,
+                                                monkeypatch):
+    """The same bounded decode under the default cap is unpacked on the
+    driver: its optimized plan is a LocalRelation (no scan, no Spark
+    job to collect it) and it returns what the Spark path returns."""
+    from plc import pipeline as P
+
+    _, dst = enc_dir
+    out = decode(spark, dst, doc_id_min="doc-000000000100",
+                 doc_id_max="doc-000000000199")
+    op = out._jdf.queryExecution().optimizedPlan().toString()
+    assert op.lstrip().startswith("LocalRelation"), op
+    p = _physical(out)
+    assert "LocalTableScan" in p and "FileScan" not in p, p
+    assert "MapInArrow" not in p, p
+    monkeypatch.setattr(P, "_DRIVER_DECODE_MAX_BYTES", 0)
+    want = decode(spark, dst, doc_id_min="doc-000000000100",
+                  doc_id_max="doc-000000000199")
+    assert "MapInArrow" in _physical(want)
+    assert sorted(out.collect()) == sorted(want.collect())
 
 
 def test_manifest_rollup_reads_pruned_schema(spark, enc_dir):
