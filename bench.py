@@ -128,27 +128,6 @@ def _bench_encode_warm(master: str, src_path: str, n_parts: int,
         spark.stop()
 
 
-def _bench_encode_direct(master: str, src_path: str, n_parts: int,
-                         raw_bytes: int) -> dict:
-    from plc.pipeline import PipelineConfig, encode_direct
-
-    spark = _session(master)
-    try:
-        spark.read.parquet(src_path).count()  # warm page cache
-        dst = tempfile.mkdtemp(prefix="plc_bench_dir_")
-        t0 = time.perf_counter()
-        report = encode_direct(spark, src_path, dst,
-                               PipelineConfig(num_partitions=n_parts),
-                               mode="overwrite")
-        wall = time.perf_counter() - t0
-        shutil.rmtree(dst, ignore_errors=True)
-        return {"wall_sec": round(wall, 3),
-                "data_path_sec": report["data_path_sec"],
-                "enc_bytes": report["enc_bytes"]}
-    finally:
-        spark.stop()
-
-
 def _pyarrow_baseline(src_path: str) -> dict:
     """parquet-cpp zstd+dict on the same rows (single-threaded C++) —
     the stand-in for the reference library (BASELINE.md)."""
@@ -194,10 +173,6 @@ def main() -> None:
                        shuffle="none")
     timings["encode_noshuffle"] = ns["wall_sec"]
     timings["encode_noshuffle_data_path"] = ns["data_path_sec"]
-    # tertiary: direct mode (executor-side pyarrow scan, no JVM scan/IPC)
-    dr = _bench_encode_direct(f"local[{CPUS}]", src_path, n_parts, raw_bytes)
-    timings["encode_direct"] = dr["wall_sec"]
-    timings["encode_direct_data_path"] = dr["data_path_sec"]
     # steady-state: second encode on a warm session — the per-worker
     # fork/import and JVM codegen are one-time costs a long-lived cluster
     # never pays per job

@@ -11,23 +11,22 @@ the encoding — zero per-row Python. See SURVEY.md for the blueprint.
 __version__ = "0.1.0"
 
 
+# public names, imported lazily from the module that defines them
+_EXPORTS = {
+    "plc.pipeline": ("encode", "decode", "verify", "build_plan",
+                     "PipelineConfig"),
+    "plc.chunk": ("EncodeConfig",),
+    "plc.streaming": ("decode_stream", "compact_stream",
+                      "expire_stream_batches", "committed_batches"),
+    "plc.datasource": ("register", "store_agg", "gc"),  # format + store ops
+}
+__all__ = [name for names in _EXPORTS.values() for name in names]
+
+
 def __getattr__(name):  # lazy: keep kernel imports pyspark-free
-    if name in ("encode", "encode_direct", "decode", "verify", "build_plan",
-                "PipelineConfig"):
-        from plc import pipeline
+    for module, names in _EXPORTS.items():
+        if name in names:
+            import importlib
 
-        return getattr(pipeline, name)
-    if name == "EncodeConfig":
-        from plc.chunk import EncodeConfig
-
-        return EncodeConfig
-    if name in ("encode_stream", "decode_stream", "compact_stream",
-                "expire_stream_batches", "committed_batches"):
-        from plc import streaming
-
-        return getattr(streaming, name)
-    if name in ("register", "store_agg", "gc"):  # plc format + store ops
-        from plc import datasource
-
-        return getattr(datasource, name)
+            return getattr(importlib.import_module(module), name)
     raise AttributeError(name)

@@ -49,9 +49,6 @@ def main(argv=None) -> int:
     p_enc.add_argument("--overwrite", action="store_true")
     p_enc.add_argument("--no-zstd", action="store_true")
     p_enc.add_argument("--zstd-level", type=int, default=3)
-    p_enc.add_argument("--direct", action="store_true",
-                       help="executor-side pyarrow scan (clustered parquet "
-                            "input; no JVM scan/IPC)")
     p_enc.add_argument("--no-shuffle", action="store_true",
                        help="input already clustered by doc_id: skip the "
                             "range exchange")
@@ -112,8 +109,8 @@ def main(argv=None) -> int:
     spark = _spark(args)
     try:
         from plc.chunk import EncodeConfig
-        from plc.pipeline import (PipelineConfig, decode, encode,
-                                  encode_direct, metrics, verify)
+        from plc.pipeline import (PipelineConfig, decode, encode, metrics,
+                                  verify)
         from plc.sources import read_tokens
 
         if args.cmd == "encode":
@@ -124,23 +121,9 @@ def main(argv=None) -> int:
                 codec=EncodeConfig(use_zstd=not args.no_zstd,
                                    zstd_level=args.zstd_level))
             mode = "overwrite" if args.overwrite else "error"
-            if args.direct:
-                dropped = []
-                if args.straggler_parts:
-                    dropped.append("--straggler-parts (direct mode has no "
-                                   "salt routing)")
-                if args.format not in ("auto", "parquet"):
-                    dropped.append("--format (direct mode reads parquet "
-                                   "files only)")
-                if dropped:
-                    print("warning: --direct ignores "
-                          + "; ".join(dropped), file=sys.stderr)
-                rep = encode_direct(spark, args.src, args.dst, cfg,
-                                    resume=args.resume, mode=mode)
-            else:
-                df = read_tokens(spark, args.src, args.format)
-                rep = encode(spark, df, args.dst, cfg, resume=args.resume,
-                             mode=mode)
+            df = read_tokens(spark, args.src, args.format)
+            rep = encode(spark, df, args.dst, cfg, resume=args.resume,
+                         mode=mode)
             print(json.dumps(rep))
         elif args.cmd == "decode":
             cols = args.columns.split(",") if args.columns else None

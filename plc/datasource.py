@@ -213,9 +213,10 @@ _MARKER_REL = posixpath.join("_manifest", "_STREAM_COMMITTED")
 
 
 def _committed_batch_ids(pfs: _PlanFS) -> list[int]:
-    """Batch ids under a stream root whose ATOMIC commit marker exists —
-    a partial per-part manifest (crash mid-commit, resumed later) must
-    never be consumed, or the resumed remainder would be skipped forever."""
+    """Batch ids under a stream root whose ATOMIC commit marker exists.
+    The sink writes the marker last; a batch whose commit stopped before
+    it is committed again by the query's replay (fresh file names, the
+    earlier attempt's files swept), so it must not be consumed early."""
     out = []
     for st in pfs.listdir():
         name = posixpath.basename(st.path)
@@ -624,8 +625,8 @@ class PLCDataSource(DataSource):
         pfs = _PlanFS(self._path())
         if pfs.exists(posixpath.join("_manifest", "plan.json")):
             return StructType.fromJson(_load_plan(pfs)["schema"])
-        # streaming root (plc.streaming.encode_stream output): batch=<id>
-        # sub-stores, each a complete encode — schema from the first one
+        # stream root (writeStream.format("plc") output): batch=<id>
+        # sub-stores, each a complete store — schema from the first one
         for bid in _committed_batch_ids(pfs):
             rel = f"batch={bid}"
             if pfs.exists(posixpath.join(rel, "_manifest", "plan.json")):
@@ -696,7 +697,7 @@ class PLCReader(DataSourceReader):
         self.plan = _load_plan(self.pfs, self.roots[0])
         # a stream root whose batches diverge in schema or weight column
         # would be silently mispruned/misread under roots[0]'s plan —
-        # reject it instead (batches come from one encode_stream config,
+        # reject it instead (batches come from one stream query's schema,
         # so divergence means a corrupted or hand-mixed root)
         for rel in self.roots[1:]:
             p = _load_plan(self.pfs, rel)
@@ -997,10 +998,10 @@ def _read_chunk_partition(partition: PLCChunkPartition | None,
 
 
 class PLCStreamReader(DataSourceStreamReader):
-    """``spark.readStream.format("plc")`` over a
-    :func:`plc.streaming.encode_stream` output root: every newly COMMITTED
-    ``batch=<id>`` sub-store (manifest present — in-flight/crashed batches
-    stay invisible) becomes input of the next micro-batch, decoded
+    """``spark.readStream.format("plc")`` over a stream root written by
+    ``df.writeStream.format("plc")``: every newly COMMITTED ``batch=<id>``
+    sub-store (commit marker present — in-flight/crashed batches stay
+    invisible) becomes input of the next micro-batch, decoded
     executor-side through the same chunk partitions as the batch reader.
     Offsets are the max committed batch id, so restart/replay is exact."""
 
@@ -1049,7 +1050,37 @@ class PLCCommit(WriterCommitMessage):
     max_doc_id: str | None
 
 
-class PLCWriter(DataSourceArrowWriter):
+class _StoreWriter:
+    """Setup shared by the batch and stream sinks: the doc_id schema
+    check, the chunk cap, the weight column and the job id."""
+
+    def __init__(self, path: str, schema: StructType, max_chunk_values):
+        import uuid
+
+        if "doc_id" not in schema.fieldNames():
+            raise ValueError("plc stores require a doc_id column "
+                             "(chunk pruning + lineage identity)")
+        if not isinstance(schema["doc_id"].dataType, StringType):
+            # fail at planning time with the contract spelled out — a
+            # bigint doc_id otherwise dies executor-side deep in flush()
+            # with an opaque ArrowTypeError from the manifest min/max cast
+            raise ValueError(
+                f"plc stores require doc_id to be a string column (got "
+                f"{schema['doc_id'].dataType.simpleString()}); cast it "
+                f"first, e.g. df.withColumn('doc_id', "
+                f"col('doc_id').cast('string'))")
+        self.path = path
+        self.pfs = _PlanFS(path)
+        self.schema = schema
+        self.max_vals = int(max_chunk_values or (1 << 22))
+        self.wcol = "n_tok" if "n_tok" in schema.fieldNames() else "_w"
+        # job id baked into every task file name: abort() can then sweep
+        # exactly this job's files, and a name can never collide with a
+        # previous write's leftovers
+        self.jobid = uuid.uuid4().hex[:12]
+
+
+class PLCWriter(_StoreWriter, DataSourceArrowWriter):
     """``df.write.format("plc").mode("overwrite").save(dst)`` — the fully
     declarative encode: each Spark task packs its partition into codec
     chunks (one logical part per task partition) and the driver commits
@@ -1074,29 +1105,7 @@ class PLCWriter(DataSourceArrowWriter):
 
     def __init__(self, path: str, schema: StructType, overwrite: bool,
                  max_chunk_values):
-        import uuid
-
-        if "doc_id" not in schema.fieldNames():
-            raise ValueError("plc stores require a doc_id column "
-                             "(chunk pruning + lineage identity)")
-        if not isinstance(schema["doc_id"].dataType, StringType):
-            # fail at planning time with the contract spelled out — a
-            # bigint doc_id otherwise dies executor-side deep in flush()
-            # with an opaque ArrowTypeError from the manifest min/max cast
-            raise ValueError(
-                f"plc stores require doc_id to be a string column (got "
-                f"{schema['doc_id'].dataType.simpleString()}); cast it "
-                f"first, e.g. df.withColumn('doc_id', "
-                f"col('doc_id').cast('string'))")
-        self.path = path
-        self.pfs = _PlanFS(path)
-        self.schema = schema
-        self.max_vals = int(max_chunk_values or (1 << 22))
-        self.wcol = "n_tok" if "n_tok" in schema.fieldNames() else "_w"
-        # job id baked into every task file name: abort() can then sweep
-        # exactly this job's files, and a name can never collide with a
-        # previous overwrite's leftovers
-        self.jobid = uuid.uuid4().hex[:12]
+        super().__init__(path, schema, max_chunk_values)
         # Overwriting an existing store destroys NOTHING at planning
         # time (VERDICT r5): the new job's files have unique names, so
         # they are written ALONGSIDE the old store, which stays fully
@@ -1319,14 +1328,13 @@ def _commit_store(pfs: _PlanFS, rel: str, msgs: list, wcol: str,
         pass
 
 
-class PLCStreamWriter(DataSourceStreamArrowWriter):
+class PLCStreamWriter(_StoreWriter, DataSourceStreamArrowWriter):
     """``df.writeStream.format("plc").option("checkpointLocation", ...)
-    .start(dst)`` — the declarative counterpart of
-    :func:`plc.streaming.encode_stream`, producing the SAME layout: each
-    microbatch becomes a ``batch=<id>/`` sub-store (plan + file-naming
-    manifest + atomic ``_STREAM_COMMITTED`` marker), so decode_stream,
+    .start(dst)`` — the stream sink: each microbatch becomes a
+    ``batch=<id>/`` sub-store (plan + file-naming manifest + atomic
+    ``_STREAM_COMMITTED`` marker), which decode_stream,
     ``spark.readStream.format("plc")`` and the batch reader's stream-root
-    union all consume it unchanged.
+    union all consume.
 
     Tasks learn their microbatch id from the ``streaming.sql.batchId``
     task-local property (set by Spark's MicroBatchExecution on every sink
@@ -1336,24 +1344,6 @@ class PLCStreamWriter(DataSourceStreamArrowWriter):
     replayed after a crash rewrites its sub-store (new file names, same
     content), commit re-sweeps and re-names files, and readers gate on
     the marker, so partial batches are never visible."""
-
-    def __init__(self, path: str, schema: StructType, max_chunk_values):
-        if "doc_id" not in schema.fieldNames():
-            raise ValueError("plc stores require a doc_id column "
-                             "(chunk pruning + lineage identity)")
-        if not isinstance(schema["doc_id"].dataType, StringType):
-            raise ValueError(
-                f"plc stores require doc_id to be a string column (got "
-                f"{schema['doc_id'].dataType.simpleString()}); cast it "
-                f"first")
-        self.path = path
-        self.pfs = _PlanFS(path)
-        self.schema = schema
-        self.max_vals = int(max_chunk_values or (1 << 22))
-        self.wcol = "n_tok" if "n_tok" in schema.fieldNames() else "_w"
-        import uuid
-
-        self.jobid = uuid.uuid4().hex[:12]
 
     def write(self, iterator):
         from pyspark import TaskContext
@@ -1410,8 +1400,7 @@ class PLCStreamWriter(DataSourceStreamArrowWriter):
                         pass
             return
         _commit_store(self.pfs, rel, msgs, self.wcol, self.schema)
-        # the atomic full-batch signal every reader gates on (same
-        # contract as plc.streaming.encode_stream)
+        # the atomic full-batch signal every reader gates on
         self.pfs.write_atomic(marker, lambda f: f.write(b"1"))
 
     def abort(self, messages, batchId: int) -> None:

@@ -8,27 +8,26 @@ Usage: python -m plc.explain [out.md]   (default BENCH/PLANS.md)
 
 from __future__ import annotations
 
+import os
+import shutil
 import sys
 import tempfile
 
 from plc import data as D
 
 
-def main(out_path: str = "BENCH/PLANS.md") -> None:
-    from pyspark.sql import SparkSession, functions as F
+def _sections(spark, src_dir: str, dst: str) -> list[tuple[str, str]]:
+    """(title, formatted plan) pairs over a 2000-row source written to
+    ``src_dir`` and its store encoded at ``dst``."""
+    from pyspark.sql import functions as F
     from plc import pipeline
     from plc.pipeline import (PipelineConfig, build_plan, decode, encode,
                               _data_path, _make_encoder, _pid_expr,
                               _sbucket_col, ENC_SCHEMA_DDL)
 
-    spark = (SparkSession.builder.master("local[4]")
-             .config("spark.sql.shuffle.partitions", "4")
-             .config("spark.ui.enabled", "false").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
-    src = tempfile.mkdtemp() + "/tok.parquet"
+    src = os.path.join(src_dir, "tok.parquet")
     D.synth_tokens_parquet(src, 2000, regime="zipf", seed=42)
     df = spark.read.parquet(src)
-    dst = tempfile.mkdtemp(prefix="plc_explain_")
     cfg = PipelineConfig(num_partitions=4, straggler_parts=2)
     encode(spark, df, dst, cfg, mode="overwrite")
 
@@ -118,22 +117,29 @@ def main(out_path: str = "BENCH/PLANS.md") -> None:
         "its size and py4j build time do not grow with the key count",
         fmt(decode(spark, dst, doc_ids=big_keys,
                    columns=["doc_id", "n_tok"]))))
-    # encode_direct: no Exchange anywhere — descriptors parallelized with
-    # explicit slices, data read by pyarrow inside the workers
-    from plc.pipeline import encode_direct  # noqa: F401 (documented below)
-    sections.append((
-        "E1-direct (descriptor scan → MapInArrow[pyarrow read + encode]; "
-        "no JVM scan, no token IPC, no Exchange)",
-        "See plc/pipeline.py encode_direct — the plan is "
-        "Scan ExistingRDD[file, groups] → MapInArrow → WriteFiles; "
-        "descriptors are parallelized with explicit numSlices so AQE "
-        "cannot coalesce the fan-out."))
+    return sections
+
+
+def main(out_path: str = "BENCH/PLANS.md") -> None:
+    from pyspark.sql import SparkSession
+
+    spark = (SparkSession.builder.master("local[4]")
+             .config("spark.sql.shuffle.partitions", "4")
+             .config("spark.ui.enabled", "false").getOrCreate())
+    spark.sparkContext.setLogLevel("ERROR")
+    src_dir = tempfile.mkdtemp(prefix="plc_explain_src_")
+    dst = tempfile.mkdtemp(prefix="plc_explain_")
+    try:
+        sections = _sections(spark, src_dir, dst)
+    finally:
+        shutil.rmtree(src_dir, ignore_errors=True)
+        shutil.rmtree(dst, ignore_errors=True)
+        spark.stop()
     with open(out_path, "w") as f:
         f.write("# Physical plans (generated by `python -m plc.explain`)\n")
         for title, body in sections:
             f.write(f"\n## {title}\n\n```\n{body}\n```\n")
     print(f"wrote {out_path}")
-    spark.stop()
 
 
 if __name__ == "__main__":

@@ -249,11 +249,10 @@ def _make_encoder(plan: dict, cfg: PipelineConfig):
             # straggler routing comes in as the JVM-computed _sbucket column
             # (1+crc32(doc_id)%k for rows over τ, 0 otherwise) — vectorized,
             # and bit-identical to the bucket the shuffle/resume side used
-            if "_sbucket" in batch.schema.names:
-                sb = batch.column("_sbucket").to_numpy(zero_copy_only=False) \
-                    .astype(np.int64)
-                part = np.where(sb > 0, n_parts + sb - 1, part)
-                batch = batch.drop_columns(["_sbucket"])
+            sb = batch.column("_sbucket").to_numpy(zero_copy_only=False) \
+                .astype(np.int64)
+            part = np.where(sb > 0, n_parts + sb - 1, part)
+            batch = batch.drop_columns(["_sbucket"])
             # group rows by part id (sorted within partition → contiguous)
             order = np.argsort(part, kind="stable")
             if not np.array_equal(order, np.arange(order.size)):
@@ -440,9 +439,9 @@ def _pending_predicate(plan: dict, committed: set[int]):
 def _prepare_state(spark: SparkSession, df: DataFrame, dst: str,
                    cfg: PipelineConfig, resume: bool, mode: str
                    ) -> tuple[dict, set[int]]:
-    """Shared encode lifecycle head: fresh-run guard (refuses ANY prior
-    encode state — a crash between data write and manifest commit leaves
-    part dirs/plan with no manifest), plan load-or-build, committed set."""
+    """Head of :func:`encode`: fresh-run guard (refuses ANY prior encode
+    state — a crash between data write and manifest commit leaves part
+    dirs/plan with no manifest), plan load-or-build, committed set."""
     pfs = _PlanFS(dst)
     manifest = _read_manifest(pfs, columns=["part_id"])
     prior_state = (manifest is not None or pfs.exists(_PLAN_REL)
@@ -545,15 +544,15 @@ def encode(spark: SparkSession, df: DataFrame, dst: str,
             shuffled = shuffled.sortWithinPartitions("_sbucket", "doc_id")
 
     enc = shuffled.mapInArrow(_make_encoder(plan, cfg), ENC_SCHEMA_DDL)
-    return _write_and_commit(spark, enc, dst, plan, committed, total_parts,
+    return _write_and_commit(enc, dst, plan, committed, total_parts,
                              pending_parts)
 
 
-def _write_and_commit(spark: SparkSession, enc: DataFrame, dst: str,
-                      plan: dict, committed: set[int], total_parts: int,
+def _write_and_commit(enc: DataFrame, dst: str, plan: dict,
+                      committed: set[int], total_parts: int,
                       pending_parts: int) -> dict:
-    """Shared sink: dynamic-partition-overwrite data write, then the
-    manifest append (the commit point), then the run report."""
+    """Tail of :func:`encode`: dynamic-partition-overwrite data write,
+    then the manifest append (the commit point), then the run report."""
     import time
 
     pfs = _PlanFS(dst)
@@ -702,189 +701,6 @@ def _report(dst: str, plan: dict, newly_encoded: int) -> dict:
         "raw_bytes": raw, "enc_bytes": enc_b,
         "ratio": raw / enc_b if enc_b else 0.0,
     }
-
-
-def encode_direct(spark: SparkSession, src_path: str, dst: str,
-                  cfg: PipelineConfig | None = None, *, resume: bool = False,
-                  mode: str = "error") -> dict:
-    """E1-direct: maximum-throughput encode for doc_id-clustered parquet
-    inputs. Executors open the source row groups with pyarrow INSIDE
-    mapInArrow — no JVM parquet scan and no Arrow IPC of the token data;
-    the only Spark-side rows are tiny row-group descriptors. Same plan,
-    encoder, sink, manifests, and resume semantics as
-    ``encode(shuffle="none")``.
-
-    Row-group scheduling: committed parts are pruned at row-group
-    granularity via the parquet doc_id column statistics, and an exact
-    row-level filter inside the worker drops any committed-part rows a
-    surviving row group still carries (a committed part must never be
-    partially rewritten). Straggler salting is disabled — clustered inputs
-    keep parts contiguous and the chunk token cap bounds memory.
-
-    The source must be parquet reachable from executors (POSIX here;
-    cluster URIs would thread a pyarrow filesystem through)."""
-    import dataclasses
-
-    import pyarrow.parquet as pq
-
-    cfg = dataclasses.replace(cfg or PipelineConfig(), straggler_parts=0,
-                              shuffle="none")
-    from plc.util import ensure_shipped
-
-    ensure_shipped(spark)
-    # enumerate source files FIRST: an empty/wrong src_path must fail
-    # before _prepare_state writes any plan/manifest state to dst
-    import glob
-
-    files = sorted(glob.glob(os.path.join(src_path, "*.parquet"))) or \
-        ([src_path] if src_path.endswith(".parquet") else
-         sorted(glob.glob(os.path.join(src_path, "**", "*.parquet"),
-                          recursive=True)))
-    if not files:
-        raise FileNotFoundError(f"no parquet files under {src_path}")
-    pdf = spark.read.parquet(src_path)  # planning only (column-pruned scan)
-    if "n_tok" not in pdf.columns:
-        if "tokens" in pdf.columns:
-            pdf = pdf.withColumn("n_tok", F.when(F.col("tokens").isNull(), 0)
-                                 .otherwise(F.size("tokens")).cast("int"))
-        else:
-            pdf = pdf.withColumn("_w", F.lit(1))  # generic table unit weight
-    # hive-partitioned layouts materialize partition columns OUTSIDE the
-    # files; the direct scanner reads physical files only, so it would
-    # silently pack chunks missing those columns and the store would be
-    # undecodable — refuse BEFORE _prepare_state writes any plan/manifest
-    # state to dst (same invariant as the empty-source check above)
-    table_cols = set(pdf.columns) - {"_w"}
-    file_cols = set(pq.ParquetFile(files[0]).schema_arrow.names)
-    missing = table_cols - file_cols - {"n_tok"}  # n_tok derives from tokens
-    if missing:
-        raise ValueError(
-            f"columns {sorted(missing)} exist in the table schema but not "
-            f"in the parquet files (hive-partitioned layout?); "
-            f"encode_direct reads physical files only — use encode() for "
-            f"partitioned sources")
-    plan, committed = _prepare_state(spark, pdf, dst, cfg, resume, mode)
-    if plan.get("straggler_parts", 0) > 0:
-        # a prior encode() run used salted straggler parts; the direct
-        # scanner has no salt routing, so resuming it here would strand or
-        # duplicate straggler rows — resume with encode() instead
-        raise ValueError(
-            f"{dst} was planned with straggler_parts="
-            f"{plan['straggler_parts']}; encode_direct cannot resume a "
-            f"salted encode — use encode(..., resume=True)")
-    total_parts = plan["n_parts"]
-    pending_parts = total_parts - len(committed)
-    if pending_parts <= 0:
-        return _report(dst, plan, newly_encoded=0)
-
-    # committed doc_id ranges (for rg pruning + exact row filtering)
-    bounds = plan["bounds"]
-
-    def part_range(i):
-        lo = bounds[i - 1] if i > 0 else None
-        hi = bounds[i] if i < total_parts - 1 else None
-        return lo, hi
-
-    committed_ranges = [part_range(i) for i in sorted(committed)]
-
-    barr = np.array(bounds, dtype=str)
-
-    def fully_committed(mn, mx):
-        if mn is None or mx is None:
-            return False
-        # every part intersecting [mn, mx] is committed ⇔ rg skippable
-        lo_part = int(np.searchsorted(barr, mn, side="right"))
-        hi_part = int(np.searchsorted(barr, mx, side="right"))
-        return all(p in committed for p in range(lo_part, hi_part + 1))
-
-    # row-group enumeration: footer metadata reads fan out on a thread
-    # pool (pyarrow releases the GIL on I/O) — serial per-file opens put
-    # minutes of driver wall before any work at ~10^5-file scale
-    # (VERDICT r2 #4); at even larger scale this becomes a tiny Spark job
-    from concurrent.futures import ThreadPoolExecutor
-
-    def plan_file(f: str) -> tuple[str, list[int]]:
-        md = pq.ParquetFile(f).metadata
-        names = [md.schema.column(i).name for i in range(md.num_columns)]
-        doc_col = names.index("doc_id")
-        keep: list[int] = []
-        for g in range(md.num_row_groups):
-            st = md.row_group(g).column(doc_col).statistics
-            if (committed and st is not None and st.has_min_max
-                    and fully_committed(st.min, st.max)):
-                continue
-            keep.append(g)
-        return f, keep
-
-    with ThreadPoolExecutor(max_workers=min(32, len(files))) as pool:
-        per_file = list(pool.map(plan_file, files))  # preserves file order
-    total_groups = sum(len(keep) for _, keep in per_file)
-    # contiguous row-group runs per task, sized so task count ≈ 2× cores
-    # (longer runs amortize chunk/codec tables; too long starves cores)
-    par = spark.sparkContext.defaultParallelism
-    run_len = max(1, total_groups // max(2 * par, 1))
-    tasks: list[tuple[str, list[int]]] = []
-    for f, keep in per_file:
-        for i in range(0, len(keep), run_len):
-            tasks.append((f, keep[i : i + run_len]))
-    if not tasks:
-        return _report(dst, plan, newly_encoded=0)
-
-    # one Spark partition per task, WITHOUT a shuffle: a repartition() here
-    # is a tiny exchange that AQE coalesces into a single partition
-    # (advisory-size logic sees a few KB of descriptors), serializing the
-    # whole encode; parallelize with explicit slices is AQE-proof
-    rdd = spark.sparkContext.parallelize(tasks, numSlices=len(tasks))
-    desc = spark.createDataFrame(rdd, "file string, groups array<int>")
-    enc_fn = _make_encoder(plan, cfg)
-    col_names = [f["name"] for f in plan["schema"]["fields"]]
-    wcol = plan.get("weight_col", "n_tok")
-    cranges = committed_ranges
-
-    def direct_batches(desc_batches):
-        import pyarrow.compute as pc
-        import pyarrow.parquet as _pq
-
-        def gen():
-            for db in desc_batches:
-                for f, gs in zip(db.column("file").to_pylist(),
-                                 db.column("groups").to_pylist()):
-                    pf = _pq.ParquetFile(f)
-                    read_cols = [c for c in col_names
-                                 if c in pf.schema_arrow.names]
-                    for rb in pf.iter_batches(row_groups=list(gs),
-                                              batch_size=32768,
-                                              columns=read_cols):
-                        if wcol not in rb.schema.names:
-                            if "tokens" in rb.schema.names:
-                                lens = pc.coalesce(
-                                    pc.list_value_length(
-                                        rb.column("tokens")),
-                                    pa.scalar(0, pa.int32()))
-                            else:  # generic table: unit weight
-                                lens = pa.array(
-                                    np.ones(len(rb), dtype=np.int32))
-                            rb = rb.append_column(wcol, lens)
-                        if cranges:
-                            docs = rb.column("doc_id") \
-                                .to_numpy(zero_copy_only=False).astype(str)
-                            drop = np.zeros(len(rb), dtype=bool)
-                            for lo, hi in cranges:
-                                m = np.ones(len(rb), dtype=bool)
-                                if lo is not None:
-                                    m &= docs >= lo
-                                if hi is not None:
-                                    m &= docs < hi
-                                drop |= m
-                            if drop.any():
-                                rb = rb.filter(pa.array(~drop))
-                        if len(rb):
-                            yield rb
-        yield from enc_fn(gen())
-
-    enc = desc.mapInArrow(direct_batches, ENC_SCHEMA_DDL)
-    return _write_and_commit(spark, enc, dst, plan, committed, total_parts,
-                             pending_parts)
 
 
 # --------------------------------------------------------------------------

@@ -1,23 +1,25 @@
-"""Structured Streaming surface: continuous encode ingest + windowed stats.
+"""Structured Streaming surface: stream-root reads and lifecycle, plus
+windowed stats and cross-microbatch dedup.
 
-- :func:`encode_stream` — ``writeStream.foreachBatch`` ingest: every
-  microbatch runs the full batch encoder (range partition → mapInArrow
-  codecs → manifest commit) into a batch-scoped directory
-  ``dst/batch=<id>/``. Replayed batches (failure between sink write and
-  checkpoint commit) hit the engine's own crash-recovery guard and resume
-  idempotently, so the sink is exactly-once without any extra state.
+Stream ingest is ``df.writeStream.format("plc")`` (the sink in
+:mod:`plc.datasource`): every microbatch lands as a batch-scoped store
+``dst/batch=<id>/`` with its own plan, file-naming manifest and an atomic
+``_STREAM_COMMITTED`` marker written last. This module reads and
+maintains such stream roots:
+
+- :func:`committed_batches` — the marker-gated ``batch=<id>`` stores.
 - :func:`decode_stream` — one ``plc``-format scan over the committed
-  batch directories (each carries its own plan + manifest).
+  batch directories.
+- :func:`compact_stream` / :func:`expire_stream_batches` — re-encode
+  several batch dirs into one store, then drop exactly those batches.
 - :func:`windowed_token_stats` — watermarked tumbling-window aggregation
   over a streaming source (late rows beyond the watermark are dropped by
   Spark's state store; the query is a plain groupBy(window) so the same
   code runs batch or streaming).
 
-Scale notes: each microbatch is an independent encode (one shuffle, its own
-manifest), so stream throughput scales exactly like batch encode; the
-number of batch directories is bounded by trigger cadence, and compaction
-is a batch re-encode of several batch dirs into one (the manifests make
-that resumable too).
+Scale notes: the number of batch directories is bounded by trigger
+cadence, and compaction is a batch re-encode of several batch dirs into
+one (the manifests make that resumable too).
 """
 
 from __future__ import annotations
@@ -30,55 +32,22 @@ from plc.datasource import _MARKER_REL, _PlanFS, _committed_batch_ids
 from plc.pipeline import PipelineConfig, encode
 
 
-def encode_stream(stream_df: DataFrame, dst: str, checkpoint: str,
-                  cfg: PipelineConfig | None = None, *,
-                  available_now: bool = True):
-    """Start a streaming encode into ``dst`` (one sub-encode per
-    microbatch). Returns the StreamingQuery; callers await/stop it."""
-    cfg = cfg or PipelineConfig(num_partitions=4, straggler_parts=0)
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        bdst = f"{dst}/batch={batch_id}"
-        try:
-            encode(spark, batch_df, bdst, cfg, mode="error")
-        except FileExistsError:
-            # replayed microbatch after a crash: the fresh-run guard fired;
-            # resume finishes exactly the uncommitted parts (idempotent)
-            encode(spark, batch_df, bdst, cfg, resume=True)
-        # batch-level commit marker, written only after EVERY part of this
-        # batch is manifest-committed. The per-part manifest is a
-        # non-atomic multi-file append (a crash mid-commit leaves a
-        # partial manifest that resume finishes later), so readers that
-        # gate on "any manifest file exists" could consume a partial
-        # batch and then miss the resumed remainder — the marker is the
-        # atomic full-batch signal decode_stream and the plc streaming
-        # source wait for.
-        _PlanFS(bdst).write_atomic(_MARKER_REL, lambda f: f.write(b"1"))
-
-    writer = (stream_df.writeStream.foreachBatch(handle)
-              .option("checkpointLocation", checkpoint))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def committed_batches(spark: SparkSession, dst: str) -> list[tuple[int, str]]:
     """(batch_id, path) of every COMMITTED ``batch=<id>`` sub-store under
     a stream root, sorted by id. Gates on the atomic batch marker, not
-    "some manifest file exists": a crash mid-manifest-commit leaves a
-    PARTIAL manifest that a later replay resumes — consuming it early
-    would silently skip the resumed parts. Works on both stream-sink
-    layouts (foreachBatch :func:`encode_stream` and
-    ``df.writeStream.format("plc")`` — same directory contract)."""
+    "some manifest file exists": the sink writes the marker after the
+    batch's manifest, and a batch whose commit failed before its marker
+    is committed again by the query's replay (fresh file names, the
+    failed attempt's files swept) — consuming it early could open files
+    that replay deletes."""
     root = dst.rstrip("/")
     return [(bid, f"{root}/batch={bid}")
             for bid in _committed_batch_ids(_PlanFS(dst))]
 
 
 def decode_stream(spark: SparkSession, dst: str) -> DataFrame:
-    """Read everything committed by :func:`encode_stream` or the format
-    stream sink. ONE format-reader scan — the reader folds the
+    """Read everything the ``writeStream.format("plc")`` sink committed
+    under ``dst``. ONE format-reader scan — the reader folds the
     committed-batch union into its partition list, so the plan is O(1)
     analyzer work instead of the previous N-way ``unionByName`` of
     per-batch decodes (O(N) per downstream query at thousands of
@@ -221,7 +190,7 @@ def stateful_dedup_stream(stream_df: DataFrame, *, n_buckets: int = 64,
 def compact_stream(spark: SparkSession, dst: str, out_dst: str,
                    cfg: PipelineConfig | None = None, *,
                    mode: str = "error") -> dict:
-    """Compact the per-microbatch encodes under ``dst`` into ONE encode at
+    """Compact the per-microbatch stores under ``dst`` into ONE encode at
     ``out_dst`` (decode → re-encode; resumable like any encode). Run it
     periodically so reader-side batch-dir counts stay bounded.
 
@@ -230,8 +199,7 @@ def compact_stream(spark: SparkSession, dst: str, out_dst: str,
     :func:`expire_stream_batches` to reclaim those dirs: a batch
     committed while the compaction ran is in neither the output nor the
     expiry set, so the compact→expire cycle is race-free against a live
-    stream. Consumes both sink layouts (foreachBatch and
-    ``df.writeStream.format("plc")``)."""
+    stream."""
     batches = committed_batches(spark, dst)
     if not batches:
         raise FileNotFoundError(f"no committed stream batches under {dst}")

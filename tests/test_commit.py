@@ -211,3 +211,114 @@ def test_unsupported_uri_scheme_raises_value_error(spark):
         _PlanFS("nosuchfs://bucket/store")
     with pytest.raises(ValueError, match="nosuchfs://"):
         decode(spark, "nosuchfs://bucket/store")
+
+
+@pytest.mark.parametrize("abort_runs", [True, False],
+                         ids=["abort", "crash"])
+def test_stream_marker_fault_hides_batch_and_replay_commits_once(
+        spark, tmp_path, abort_runs):
+    """The stream sink's last commit step under a fault: the batch's
+    manifest is committed, then its ``_STREAM_COMMITTED`` marker write
+    fails — with Spark's abort() running afterwards, or skipped as in a
+    driver crash. The batch stays invisible to ``committed_batches``,
+    the batch reader and ``readStream``; re-running the query on the same
+    checkpoint commits it exactly once; ``gc`` then removes no file that
+    a committed manifest names."""
+    from plc.datasource import (_MARKER_REL, PLCDataSource, PLCStreamWriter,
+                                gc)
+    from plc.streaming import committed_batches
+
+    class MarkerFaultWriter(PLCStreamWriter):
+        def commit(self, messages, batchId):
+            write_atomic = self.pfs.write_atomic
+
+            def broken(rel, write):
+                if rel.endswith(_MARKER_REL):
+                    raise OSError("injected fault at the commit marker")
+                write_atomic(rel, write)
+
+            self.pfs.write_atomic = broken
+            super().commit(messages, batchId)
+
+        def abort(self, messages, batchId):
+            if abort_runs:
+                super().abort(messages, batchId)
+
+    class MarkerFaultSource(PLCDataSource):
+        @classmethod
+        def name(cls):
+            return "plc_marker_fault"
+
+        def streamWriter(self, schema, overwrite):
+            return MarkerFaultWriter(self._path(), schema,
+                                     self.options.get("max_chunk_values"))
+
+    register(spark)
+    spark.dataSource.register(MarkerFaultSource)
+    src, dst, ckpt = (str(tmp_path / d) for d in ("in", "store", "ckpt"))
+    os.makedirs(src)
+    schema = "doc_id string, tokens array<int>, n_tok int, source string"
+
+    def run(fmt):
+        q = (spark.readStream.schema(schema).parquet(src)
+             .writeStream.format(fmt).option("checkpointLocation", ckpt)
+             .trigger(availableNow=True).start(dst))
+        try:
+            q.awaitTermination(300)
+        finally:
+            q.stop()
+
+    def stream_count():
+        q = (spark.readStream.format("plc").load(dst).groupBy().count()
+             .writeStream.outputMode("complete").format("memory")
+             .queryName("plc_marker_fault_rs").trigger(availableNow=True)
+             .start())
+        q.awaitTermination(300)
+        return spark.sql("select * from plc_marker_fault_rs") \
+            .collect()[0]["count"]
+
+    D.synth_tokens_parquet(os.path.join(src, "f0.parquet"), 200, seed=1)
+    run("plc")
+    first = spark.read.parquet(src).count()
+    assert committed_batches(spark, dst) == [(0, f"{dst}/batch=0")]
+
+    D.synth_tokens_parquet(os.path.join(src, "f1.parquet"), 150, seed=2)
+    with pytest.raises(Exception, match="injected fault at the commit"):
+        run("plc_marker_fault")
+    manifest = os.path.join(dst, "batch=1", "_manifest", "parts",
+                            "manifest-0.parquet")
+    # abort() drops the unmarked batch dir; after a crash the committed
+    # manifest is still there, without its marker
+    assert os.path.exists(manifest) is not abort_runs
+    assert not os.path.exists(os.path.join(dst, "batch=1", _MARKER_REL))
+    assert committed_batches(spark, dst) == [(0, f"{dst}/batch=0")]
+    assert spark.read.format("plc").load(dst).count() == first
+    assert stream_count() == first
+
+    run("plc")
+    src_rows = sorted(tuple(r) for r in spark.read.parquet(src)
+                      .select("doc_id", "n_tok").collect())
+    got = sorted(tuple(r) for r in spark.read.format("plc").load(dst)
+                 .select("doc_id", "n_tok").collect())
+    assert got == src_rows and len(got) == 350
+    assert [b for b, _ in committed_batches(spark, dst)] == [0, 1]
+
+    def named_files():
+        out = set()
+        for bid in (0, 1):
+            rel = f"batch={bid}"
+            man = _read_manifest(_PlanFS(dst), rel)
+            for pid, f in zip(man.column("part_id").to_pylist(),
+                              man.column("file").to_pylist()):
+                if f:
+                    out.add(os.path.join(dst, rel, "data",
+                                         f"part_id={pid}", f))
+        return out
+
+    named = named_files()
+    assert named and all(os.path.exists(f) for f in named)
+    rep = gc(dst, grace_sec=0)
+    assert not named & set(rep["removed"])
+    assert all(os.path.exists(f) for f in named)
+    assert named_files() == named
+    assert spark.read.format("plc").load(dst).count() == 350

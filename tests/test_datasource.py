@@ -355,12 +355,11 @@ def test_format_write_requires_doc_id(spark, store):
 
 
 def test_format_stream_read(spark):
-    """spark.readStream.format('plc') tails an encode_stream output root:
-    committed batch stores feed micro-batches (executor-side decode), and
-    the aggregate matches the batch ground truth."""
+    """spark.readStream.format('plc') tails a writeStream.format('plc')
+    root: committed batch stores feed micro-batches (executor-side
+    decode), and the aggregate matches the batch ground truth."""
     import __spark_entry__ as E
     from plc.datasource import register
-    from plc.streaming import encode_stream
 
     register(spark)
     work = tempfile.mkdtemp(prefix="plc_ds_stream_")
@@ -373,9 +372,9 @@ def test_format_stream_read(spark):
         stream = (spark.readStream.schema(tv.schema)
                   .option("maxFilesPerTrigger", "1")
                   .parquet(src_dir + "/*"))
-        q = encode_stream(stream, dst, os.path.join(work, "ckpt"),
-                          PipelineConfig(num_partitions=2,
-                                         straggler_parts=0))
+        q = (stream.writeStream.format("plc")
+             .option("checkpointLocation", os.path.join(work, "ckpt"))
+             .trigger(availableNow=True).start(dst))
         q.awaitTermination(180)
         sq = (spark.readStream.format("plc").load(dst)
               .groupBy("source").agg(F.count("*").alias("n"))
@@ -728,7 +727,7 @@ def test_stream_root_batch_read_and_marker_gating(spark):
     (crash mid-commit) is invisible to both readers."""
     import __spark_entry__ as E
     from plc.datasource import register
-    from plc.streaming import decode_stream, encode_stream
+    from plc.streaming import decode_stream
 
     register(spark)
     work = tempfile.mkdtemp(prefix="plc_ds_root_")
@@ -740,9 +739,9 @@ def test_stream_root_batch_read_and_marker_gating(spark):
         tv.write.parquet(os.path.join(src_dir, "f1"))
         stream = (spark.readStream.schema(tv.schema)
                   .parquet(src_dir + "/*"))
-        q = encode_stream(stream, dst, os.path.join(work, "ckpt"),
-                          PipelineConfig(num_partitions=2,
-                                         straggler_parts=0))
+        q = (stream.writeStream.format("plc")
+             .option("checkpointLocation", os.path.join(work, "ckpt"))
+             .trigger(availableNow=True).start(dst))
         q.awaitTermination(180)
         # batch read over the root
         df = spark.read.format("plc").load(dst)
@@ -779,16 +778,29 @@ def test_format_reads_file_uri(spark, store):
 
 def test_format_write_bad_doc_id_type_fails_at_planning(spark):
     """A non-string doc_id fails at planning time with the cast hint
-    (not an executor ArrowTypeError)."""
+    (not an executor ArrowTypeError), in the batch writer and the stream
+    sink alike."""
     from plc.datasource import register
 
     register(spark)
     df = spark.range(10).select(F.col("id").alias("doc_id"),
                                 F.lit("a").alias("source"))
+    want = (r"doc_id to be a string column \(got bigint\); cast it first, "
+            r"e\.g\. df\.withColumn\('doc_id'")
     dst = tempfile.mkdtemp(prefix="plc_ds_badtype_")
     try:
-        with pytest.raises(Exception, match="doc_id to be a string"):
+        with pytest.raises(Exception, match=want):
             df.write.format("plc").mode("overwrite").save(dst + "/store")
+        df.write.parquet(dst + "/in")
+        stream = spark.readStream.schema(df.schema).parquet(dst + "/in")
+        with pytest.raises(Exception, match=want):
+            q = (stream.writeStream.format("plc")
+                 .option("checkpointLocation", dst + "/ckpt")
+                 .trigger(availableNow=True).start(dst + "/sstore"))
+            try:
+                q.awaitTermination(180)
+            finally:
+                q.stop()
     finally:
         shutil.rmtree(dst, ignore_errors=True)
 

@@ -361,21 +361,17 @@ def test_stats_pruning_skips_chunks(spark):
         shutil.rmtree(dst, ignore_errors=True)
 
 
-def test_encode_direct_roundtrip_and_resume(spark, src_df, tmp_path_factory):
-    """encode_direct: executor-side pyarrow scan (no JVM scan/IPC) must
-    produce a bit-identical store, prune committed row groups on resume via
-    parquet doc_id stats, and never partially rewrite a committed part."""
-    from plc.pipeline import encode_direct
-
-    src = str(tmp_path_factory.mktemp("direct") / "tok.parquet")
-    D.synth_tokens_parquet(src, 2000, regime="zipf", seed=42)
-    df = spark.read.parquet(src)
+def test_encode_noshuffle_roundtrip_and_resume(spark, src_df):
+    """encode(shuffle="none") of a parquet source — the one encoder for
+    doc_id-clustered inputs — is exact, resumes after a partial manifest
+    (salted straggler parts included) without rewriting a committed part,
+    and a second resume encodes nothing."""
     dst = _dst()
     try:
-        cfg = PipelineConfig(num_partitions=6)
-        rep = encode_direct(spark, src, dst, cfg, mode="overwrite")
+        cfg = PipelineConfig(num_partitions=6, shuffle="none")
+        rep = encode(spark, src_df, dst, cfg, mode="overwrite")
         assert rep["rows"] == 2000
-        assert verify(spark, df, dst)["mismatches"] == 0
+        assert verify(spark, src_df, dst)["mismatches"] == 0
 
         # crash simulation: keep only even-part manifest rows, resume
         man = spark.read.parquet(_manifest_path(dst))
@@ -384,14 +380,14 @@ def test_encode_direct_roundtrip_and_resume(spark, src_df, tmp_path_factory):
         keep.write.mode("overwrite").parquet(tmp_man)
         shutil.rmtree(_manifest_path(dst))
         shutil.move(tmp_man, _manifest_path(dst))
-        encode_direct(spark, src, dst, cfg, resume=True)
-        res = verify(spark, df, dst)
+        encode(spark, src_df, dst, cfg, resume=True)
+        res = verify(spark, src_df, dst)
         assert res["mismatches"] == 0 and res["rows_decoded"] == 2000
         man2 = spark.read.parquet(_manifest_path(dst))
         ids = [r[0] for r in man2.select("part_id").collect()]
         assert len(ids) == len(set(ids))
         # a second no-op resume schedules nothing
-        rep3 = encode_direct(spark, src, dst, cfg, resume=True)
+        rep3 = encode(spark, src_df, dst, cfg, resume=True)
         assert rep3["newly_encoded"] == 0
     finally:
         shutil.rmtree(dst, ignore_errors=True)
@@ -427,30 +423,13 @@ def test_metrics_rollup_reads_manifest(spark, src_df):
         shutil.rmtree(dst, ignore_errors=True)
 
 
-def test_encode_direct_empty_source_fails_before_state(spark, tmp_path):
-    """ADVICE r2: a wrong/empty src_path raises FileNotFoundError BEFORE
-    any plan/manifest state is written to dst."""
-    import os
-
-    from plc.pipeline import encode_direct
-
-    src = str(tmp_path / "nothing_here")
-    os.makedirs(src)
-    dst = str(tmp_path / "out")
-    with pytest.raises(FileNotFoundError, match="no parquet files"):
-        encode_direct(spark, src, dst, PipelineConfig(num_partitions=2))
-    assert not os.path.exists(dst), "state written despite failed planning"
-
-
-def test_encode_direct_many_files(spark, tmp_path):
-    """VERDICT r2 #6: planning fans footer reads out on a thread pool;
-    200 small files plan + encode correctly (order preserved, resume
-    pruning unaffected)."""
+def test_encode_noshuffle_many_files(spark, tmp_path):
+    """A source of 200 small parquet files encodes exactly through
+    encode(shuffle="none") — every file's rows land in their range part
+    even though the parts span many input splits."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
-
-    from plc.pipeline import encode_direct, verify
 
     src = str(tmp_path / "many")
     os.makedirs(src)
@@ -469,9 +448,11 @@ def test_encode_direct_many_files(spark, tmp_path):
         })
         pq.write_table(tbl, os.path.join(src, f"part-{i:05d}.parquet"))
     dst = str(tmp_path / "enc")
-    rep = encode_direct(spark, src, dst, PipelineConfig(num_partitions=4))
+    df = spark.read.parquet(src)
+    rep = encode(spark, df, dst,
+                 PipelineConfig(num_partitions=4, shuffle="none"))
     assert rep["rows"] == 1000
-    res = verify(spark, spark.read.parquet(src), dst)
+    res = verify(spark, df, dst)
     assert res["mismatches"] == 0, res
 
 

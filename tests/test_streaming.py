@@ -1,5 +1,6 @@
-"""Structured Streaming tests: microbatch encode ingest (exactly-once via
-the engine's manifests), streamed decode, and watermarked window aggs."""
+"""Structured Streaming tests: the ``writeStream.format("plc")`` sink
+(exactly-once via per-batch manifests and commit markers), stream-root
+reads and lifecycle, and watermarked window aggs."""
 
 import os
 import shutil
@@ -10,7 +11,7 @@ from pyspark.sql import functions as F
 
 from plc import data as D
 from plc.pipeline import PipelineConfig
-from plc.streaming import decode_stream, encode_stream, windowed_token_stats
+from plc.streaming import decode_stream, windowed_token_stats
 
 SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
 
@@ -21,6 +22,18 @@ def _mkfiles(src_dir, n_files=2, rows=400, seed0=0):
         D.synth_tokens_parquet(p, rows, regime="zipf", seed=seed0 + i)
 
 
+def _sink(spark, stream, dst, ckpt):
+    """Run the plc stream sink over everything available, then stop."""
+    from plc.datasource import register
+
+    register(spark)
+    q = (stream.writeStream.format("plc")
+         .option("checkpointLocation", ckpt)
+         .trigger(availableNow=True).start(dst))
+    q.awaitTermination(300)
+    q.stop()
+
+
 def test_stream_encode_decode_roundtrip(spark):
     src = tempfile.mkdtemp(prefix="plc_ssrc_")
     dst = tempfile.mkdtemp(prefix="plc_sdst_")
@@ -29,11 +42,7 @@ def test_stream_encode_decode_roundtrip(spark):
         _mkfiles(src, n_files=2)
         stream = (spark.readStream.schema(SCHEMA)
                   .option("maxFilesPerTrigger", "1").parquet(src))
-        q = encode_stream(stream, dst, ckpt,
-                          PipelineConfig(num_partitions=3,
-                                         straggler_parts=0))
-        q.awaitTermination(120)
-        q.stop()
+        _sink(spark, stream, dst, ckpt)
         out = decode_stream(spark, dst)
         assert out.count() == 800
         batch = spark.read.parquet(src)
@@ -42,18 +51,12 @@ def test_stream_encode_decode_roundtrip(spark):
 
         # incremental: two more files, same checkpoint → only new rows added
         _mkfiles(src, n_files=2, seed0=10)
-        q2 = encode_stream(stream, dst, ckpt,
-                           PipelineConfig(num_partitions=3,
-                                          straggler_parts=0))
-        q2.awaitTermination(120)
-        q2.stop()
+        _sink(spark, stream, dst, ckpt)
         assert decode_stream(spark, dst).count() == 1600
 
         # exactly-once: re-running with the same checkpoint and no new
         # input must not duplicate anything
-        q3 = encode_stream(stream, dst, ckpt)
-        q3.awaitTermination(60)
-        q3.stop()
+        _sink(spark, stream, dst, ckpt)
         assert decode_stream(spark, dst).count() == 1600
     finally:
         for d in (src, dst, ckpt):
@@ -96,10 +99,9 @@ def test_decode_stream_ignores_uncommitted_batch(spark):
     try:
         _mkfiles(src, n_files=1)
         stream = spark.readStream.schema(SCHEMA).parquet(src)
-        q = encode_stream(stream, dst, ckpt)
-        q.awaitTermination(120)
-        q.stop()
+        _sink(spark, stream, dst, ckpt)
         n = decode_stream(spark, dst).count()
+        assert n == 400
         # fake an in-flight batch dir (data written, manifest not committed)
         os.makedirs(os.path.join(dst, "batch=999", "data", "part_id=0"))
         assert decode_stream(spark, dst).count() == n
@@ -166,11 +168,7 @@ def test_compact_stream(spark):
         _mkfiles(src, n_files=2)
         stream = (spark.readStream.schema(SCHEMA)
                   .option("maxFilesPerTrigger", "1").parquet(src))
-        q = encode_stream(stream, dst, ckpt,
-                          PipelineConfig(num_partitions=2,
-                                         straggler_parts=0))
-        q.awaitTermination(120)
-        q.stop()
+        _sink(spark, stream, dst, ckpt)
         rep = compact_stream(spark, dst, out)
         assert rep["rows"] == 800
         assert verify(spark, decode_stream(spark, dst), out,
@@ -227,8 +225,7 @@ def test_bloom_state_is_fixed_size():
 def test_format_stream_sink_writes_committed_batch_stores(spark):
     """df.writeStream.format("plc") — the declarative stream sink: each
     microbatch lands as a batch=<id>/ sub-store with a file-naming
-    manifest and the atomic _STREAM_COMMITTED marker (encode_stream's
-    exact layout), written straight through pyarrow.fs via the
+    manifest and the atomic _STREAM_COMMITTED marker, written straight through pyarrow.fs via the
     streaming.sql.batchId task property (no renames). The batch reader,
     decode_stream and readStream all consume it unchanged."""
     import glob as g
@@ -257,7 +254,7 @@ def test_format_stream_sink_writes_committed_batch_stores(spark):
         total = 4 * 200
         # batch read over the stream root (manifest-named files only)
         assert spark.read.format("plc").load(dst).count() == total
-        # decode_stream (the foreachBatch-era reader) sees the same store
+        # decode_stream sees the same store
         assert decode_stream(spark, dst).count() == total
         # readStream over the sink's own output
         out = (spark.readStream.format("plc").load(dst)
