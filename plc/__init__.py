@@ -10,6 +10,10 @@ the encoding — zero per-row Python. See SURVEY.md for the blueprint.
 
 __version__ = "0.1.0"
 
+from plc.util import _cache_zip_directories
+
+_cache_zip_directories()  # a no-op outside a reused Spark Python worker
+
 
 # public names, imported lazily from the module that defines them
 _EXPORTS = {

@@ -59,6 +59,10 @@ def hash_params(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
 def exact_dedup(df: DataFrame, content_col: str, key_col: str) -> DataFrame:
     """Keep exactly one row (min key) per distinct content value.
 
+    Assumes ``key_col`` is unique, as a document id is: when two rows of
+    one content group share the minimum key, ``min_by`` keeps either of
+    them, so which row survives is not deterministic.
+
     Plan: md5 the content, ``min_by(struct(*), key)`` over a groupBy on
     the hash — ONE shuffle carrying each row once, map-side partial agg,
     no join back (the previous shape shuffled the key set for the groupBy

@@ -58,11 +58,14 @@ ENC_SCHEMA_DDL = (
 # decode() unpacks its kept chunks on the driver (no Spark job) when they
 # are predicate-selected and their encoded sizes sum to at most this;
 # larger reads run the same decoder in mapInArrow tasks. Measured on a
-# 4-core host (local[4]): reading every row of the kept chunks, the
-# driver path ties Spark at ~1.1-1.9 MB and loses 34% at 6 MB; point
-# reads still win at 6 MB (448 vs 627 ms). The cap sits below the
-# every-row crossover
-_DRIVER_DECODE_MAX_BYTES = 1 << 20
+# 4-core host (local[4], ~95 KB chunks, decode().collect() p50, driver vs
+# Spark ms), with reused Python workers no longer re-reading their zips
+# per task: every row of 1 / 4 / 8 / 10 / 12 / 16 / 64 kept chunks
+# 107/236, 348/397, 821-973/888-987, 918/899, 981-1121/877-986,
+# 1342/1163, 5091/3684; one row per kept chunk 55/224 (1), 61/202 (4),
+# 113/247 (16), 369/356 (64). The every-row crossover is ~0.8-0.9 MB;
+# the cap sits at it
+_DRIVER_DECODE_MAX_BYTES = 768 << 10
 
 _ENC_ARROW_SCHEMA = pa.schema([
     ("part_id", pa.int32()), ("chunk_idx", pa.int32()), ("n_rows", pa.int64()),
@@ -373,10 +376,12 @@ def _pid_expr(plan: dict):
     (:func:`_slot_tags`): ``repartition(total_parts, _pid)`` then yields
     exactly one part per task — same task count as the range exchange,
     none of its sampling pass, no hash-collision stragglers, and no
-    empty partitions multiplying per-task Python/IPC setup (the 4x
-    fan-out this replaces measured ~45 ms of Arrow reader init per task
-    plus worker import storms). None when the plan has no usable bounds
-    or too many for an expression tree."""
+    empty partitions multiplying per-task Python worker setup (the 4x
+    fan-out this replaces paid it on every empty task; most of it was
+    pyspark re-reading each zip on the worker's path before every task,
+    which ``plc.util._cache_zip_directories`` now skips in reused
+    workers). None when the plan has no usable bounds or too many for an
+    expression tree."""
     bounds = plan["bounds"]
     if not bounds or len(bounds) > _PID_EXPR_MAX_BOUNDS:
         return None

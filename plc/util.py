@@ -5,10 +5,16 @@ On a real cluster the job is launched ``spark-submit --py-files plc.zip``
 :func:`ensure_shipped` builds that zip on the fly and registers it with
 ``SparkContext.addPyFile`` so executor Python workers can unpickle the
 mapInArrow closures. Idempotent per SparkContext.
+
+Importing plc inside a Spark Python worker also installs
+:func:`_cache_zip_directories`, which stops a reused worker from
+re-reading every zip on its ``sys.path`` before each task.
 """
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -28,11 +34,70 @@ def ensure_shipped(spark) -> None:
         # to re-zip from inside the archive would raise NotADirectoryError
         _shipped.add(app_id)
         return
-    zpath = os.path.join(tempfile.gettempdir(), f"plc-pyfiles-{os.getpid()}.zip")
-    if not os.path.exists(zpath):
-        with zipfile.ZipFile(zpath, "w") as z:
-            for fn in sorted(os.listdir(pkg_dir)):
-                if fn.endswith(".py"):
-                    z.write(os.path.join(pkg_dir, fn), arcname=f"plc/{fn}")
-    sc.addPyFile(zpath)
+    sc.addPyFile(_pyfiles_zip(pkg_dir))
     _shipped.add(app_id)
+
+
+def _pyfiles_zip(pkg_dir: str) -> str:
+    """Zip the package's ``.py`` files into the temp dir, named by a hash
+    of their names and bytes, so a zip left by another build (or by an
+    earlier process with the same pid) is never shipped. Written under a
+    temp name and moved into place, so a reader never sees half a zip."""
+    srcs = sorted(fn for fn in os.listdir(pkg_dir) if fn.endswith(".py"))
+    h = hashlib.sha256()
+    for fn in srcs:
+        with open(os.path.join(pkg_dir, fn), "rb") as f:
+            data = f.read()
+        h.update(b"%s\0%d\0%s" % (fn.encode(), len(data), data))
+    zpath = os.path.join(tempfile.gettempdir(),
+                         f"plc-pyfiles-{h.hexdigest()[:16]}.zip")
+    if not os.path.exists(zpath):
+        fd, tmp = tempfile.mkstemp(suffix=".zip", prefix=".plc-pyfiles-")
+        try:
+            with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w") as z:
+                for fn in srcs:
+                    z.write(os.path.join(pkg_dir, fn), arcname=f"plc/{fn}")
+            os.replace(tmp, zpath)
+        except BaseException:
+            os.unlink(tmp)
+            raise
+    return zpath
+
+
+def _cache_zip_directories() -> None:
+    """In a reused Spark Python worker, re-read a zip archive's directory
+    only when the archive changed.
+
+    Before every task pyspark's ``setup_spark_files`` calls
+    ``importlib.invalidate_caches()``; on CPython 3.11 that makes each of
+    the worker's zipimporters (one per package dir imported from a zip:
+    17 in a pyspark 4.1 worker) re-parse its whole archive directory,
+    ~200 ms CPU per task whatever its size. The wrapper re-reads only
+    when the archive's ``(st_mtime_ns, st_size)`` differs from what that
+    importer last read, or when it cannot be stat'ed. Installed only
+    inside a worker and only where the stdlib method re-reads eagerly; a
+    second call does nothing.
+    """
+    import zipimport
+
+    if not ("PYTHON_WORKER_FACTORY_SECRET" in os.environ
+            and "SPARK_REUSE_WORKER" in os.environ):
+        return
+    stdlib = zipimport.zipimporter.invalidate_caches
+    code = getattr(stdlib, "__code__", None)
+    if hasattr(stdlib, "__wrapped__") or code is None \
+            or "_read_directory" not in code.co_names:
+        return  # installed already, or this stdlib re-reads lazily
+
+    @functools.wraps(stdlib)
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            return stdlib(self)
+        stamp = (st.st_mtime_ns, st.st_size)
+        if getattr(self, "_plc_stamp", None) != stamp:
+            stdlib(self)
+            self._plc_stamp = stamp
+
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
