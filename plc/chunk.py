@@ -974,12 +974,11 @@ def _bloom_hash_arrays(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
 
 
 def _bloom_build(col: pa.Array, bits_per_key: int = 10) -> dict | None:
-    """{"bloom": b64, "bloom_m": bits, "bloom_k": k} over the non-null
-    values of ``col``; m is a power of two in [2^13, 2^21] (pow2 keeps the
-    modulo a mask; the cap bounds stats-JSON growth on huge chunks — FP
-    rate degrades gracefully instead of the filter exploding)."""
-    import base64
-
+    """{"bloom": bits, "bloom_m": m, "bloom_k": k, "bloom_v": v} over the
+    non-null values of ``col``, ``bits`` the raw little-endian bit array;
+    m is a power of two in [2^13, 2^21] (pow2 keeps the modulo a mask;
+    the cap bounds the per-chunk bloom size on huge chunks — FP rate
+    degrades gracefully instead of the filter exploding)."""
     if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
     col = col.drop_null()
@@ -997,8 +996,8 @@ def _bloom_build(col: pa.Array, bits_per_key: int = 10) -> dict | None:
     bits = np.zeros(m, dtype=bool)
     bits[pos.ravel()] = True
     packed = np.packbits(bits, bitorder="little")
-    return {"bloom": base64.b64encode(packed.tobytes()).decode("ascii"),
-            "bloom_m": m, "bloom_k": _BLOOM_K, "bloom_v": _BLOOM_V}
+    return {"bloom": packed.tobytes(), "bloom_m": m, "bloom_k": _BLOOM_K,
+            "bloom_v": _BLOOM_V}
 
 
 def bloom_probe(st: dict, h1: np.ndarray, h2: np.ndarray,
@@ -1007,17 +1006,11 @@ def bloom_probe(st: dict, h1: np.ndarray, h2: np.ndarray,
     once: ``h1``/``h2`` are the keys' hashes from
     :func:`_bloom_hash_arrays` (hashed once by the caller, not per chunk);
     returns a per-key mask that is False where the bloom proves the key
-    absent. Missing or foreign-parameter blooms pass every key (pruning
-    stays a superset). ``raw_bits`` supplies the bloom payload for
-    new-layout stores, where the bits live in the dedicated enc-table
-    ``bloom`` column and the stats dict carries only
-    bloom_m/bloom_k/bloom_v; omitted, the pre-split embedded b64 payload
-    is used."""
-    import base64
-
-    b64, m, k = st.get("bloom"), st.get("bloom_m"), st.get("bloom_k")
-    if raw_bits is None and b64:
-        raw_bits = base64.b64decode(b64)
+    absent. ``raw_bits`` are the bloom's bits (the enc table's ``bloom``
+    column); ``st`` carries only bloom_m/bloom_k/bloom_v. Missing bits
+    or foreign-parameter blooms pass every key (pruning stays a
+    superset)."""
+    m, k = st.get("bloom_m"), st.get("bloom_k")
     if not raw_bits or not m or k != _BLOOM_K \
             or st.get("bloom_v") != _BLOOM_V:
         return np.ones(len(h1), dtype=bool)
@@ -1068,7 +1061,9 @@ def column_stats(batch: pa.RecordBatch, *,
     The key column (named ``doc_id``, per the engine's input contract)
     additionally gets a bloom filter so equality probes prune chunks whose
     min/max range overlaps but which provably lack the value (set
-    ``bloom_bits_per_key=0`` to disable)."""
+    ``bloom_bits_per_key=0`` to disable); its raw bits sit under
+    ``bloom`` until :func:`plc.pipeline.split_bloom_stats` moves them to
+    their own enc column."""
     import pyarrow.compute as pc
 
     out = {}

@@ -19,8 +19,10 @@ and Catalyst drives the storage layer exactly like a built-in format:
   filter is also returned as unsupported, so Spark re-applies the exact
   predicate on the decoded rows — pruning is a conservative superset and
   can never change results;
-- **committed-parts isolation**: uncommitted part directories (a crashed
-  encode) are invisible, like :func:`plc.pipeline.decode`;
+- **committed-files isolation**: every writer names its data files in
+  the store's manifest, one row per file, and the reader opens exactly
+  those — an uncommitted part directory (a crashed encode) or a stray
+  file in a committed one is invisible, like :func:`plc.pipeline.decode`;
 - **partitioning**: one Spark input partition per encoded parquet file
   (chunk-pruned row selections travel in the partition descriptor), so a
   1000-executor cluster fans out across part files with zero driver state
@@ -48,6 +50,7 @@ import json
 import os
 import posixpath
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 
 from dataclasses import dataclass
@@ -231,45 +234,63 @@ def _committed_batch_ids(pfs: _PlanFS) -> list[int]:
     return sorted(out)
 
 
+# the parts manifest, the store's commit point, in one schema for every
+# writer: one row per committed data file, named in ``file``; a part that
+# got no rows has one zero-row marker row with ``file`` null
+_MANIFEST_SCHEMA = pa.schema([
+    ("part_id", pa.int32()), ("n_chunks", pa.int64()),
+    ("n_rows", pa.int64()), ("n_tokens", pa.int64()),
+    ("raw_bytes", pa.int64()), ("enc_bytes", pa.int64()),
+    ("min_doc_id", pa.string()), ("max_doc_id", pa.string()),
+    ("file", pa.string())])
+
+
+def _manifest_table(msgs: list) -> "pa.Table":
+    """Manifest rows (:class:`PLCCommit` records) as a manifest table."""
+    return pa.table({f.name: pa.array([getattr(m, f.name) for m in msgs],
+                                      f.type)
+                     for f in _MANIFEST_SCHEMA})
+
+
 def _read_manifest(pfs: _PlanFS, rel: str = "",
                    columns: "list[str] | None" = None) -> "pa.Table | None":
-    """Every manifest row under ``rel`` as one table, or None when no
-    manifest file exists. Rows from files that predate the ``file``
-    column read it as null."""
-    import pyarrow as pa
+    """Every manifest row under ``rel`` as one table (only ``columns``,
+    when given), or None when no manifest file exists. A manifest without
+    the ``file`` column was written before every writer named its data
+    files; it cannot say which files are committed, so it raises a
+    ``ValueError`` asking to re-encode the store."""
+    tables = []
+    for st in pfs.listdir(posixpath.join(rel, "_manifest", "parts")):
+        if not st.path.endswith(".parquet"):
+            continue
+        tbl = pfs.read_parquet(st.path, None)
+        if "file" not in tbl.column_names:
+            raise ValueError(
+                f"plc: {posixpath.join(pfs.orig, rel)} has a manifest "
+                f"without the `file` column "
+                f"({posixpath.basename(st.path)}): it was written before "
+                f"every writer named its data files, so its committed "
+                f"files are unknown; re-encode the store "
+                f"(mode='overwrite')")
+        tables.append(tbl if columns is None else tbl.select(columns))
+    return pa.concat_tables(tables) if tables else None
 
-    tables = [pfs.read_parquet(st.path, columns)
-              for st in pfs.listdir(posixpath.join(rel, "_manifest", "parts"))
-              if st.path.endswith(".parquet")]
-    if not tables:
-        return None
-    return pa.concat_tables(tables, promote_options="default")
 
-
-def _committed_entries(pfs: _PlanFS, rel: str) -> "dict[int, set[str] | None]":
-    """Committed part_id → the set of data file names the manifest lists
-    for it, or None when the manifest predates the ``file`` column (or
-    the part was committed by the pipeline sink, which delegates orphan
-    safety to Spark's own commit protocol) — None means "read whatever
-    is in the part dir". Named entries are the commit point for
-    format-written stores: a zombie/speculative attempt's file lands in
-    the part dir but is never named here, so readers must open ONLY the
-    named files."""
-    out: dict[int, set[str] | None] = {}
-    tbl = _read_manifest(pfs, rel)
+def _committed_entries(pfs: _PlanFS, rel: str) -> "dict[int, set[str]]":
+    """Committed part_id → the names of the data files the manifest
+    lists for it (empty for a part committed by a zero-row marker only).
+    The named files are the commit point: a zombie or speculative
+    attempt's file, or any stray file, can sit in a part dir but is
+    never named here, so readers open ONLY the named files."""
+    out: dict[int, set[str]] = {}
+    tbl = _read_manifest(pfs, rel, ["part_id", "file"])
     if tbl is None:
         return out
-    pids = tbl.column("part_id").to_pylist()
-    fnames = (tbl.column("file").to_pylist()
-              if "file" in tbl.column_names else [None] * len(pids))
-    for pid, fn in zip(pids, fnames):
-        if fn is None:
-            # unknown file set for this part: glob semantics, unless
-            # another row already named files for it
-            out.setdefault(pid, None)
-        else:
-            cur = out.get(pid)
-            out[pid] = {fn} if cur is None else cur | {fn}
+    for pid, fn in zip(tbl.column("part_id").to_pylist(),
+                       tbl.column("file").to_pylist()):
+        names = out.setdefault(pid, set())
+        if fn is not None:
+            names.add(fn)
     return out
 
 
@@ -323,29 +344,15 @@ def _part_dirs(pfs: _PlanFS, rel: str = "") -> list[tuple[int, str]]:
 def _committed_data_files(pfs: _PlanFS, roots: list[str],
                           pool) -> list[str]:
     """Full paths of every COMMITTED encoded parquet file under the given
-    roots. Manifest-NAMED files are the commit point: open exactly those
-    (no dir listing — an orphan from a zombie or losing speculative
-    attempt in the same dir is invisible, and planning skips one listdir
-    round-trip per part). None entries (pre-file-column manifests,
-    pipeline-sink parts) keep the glob semantics."""
-    committed = {rel: c for rel, c in zip(
-        roots, pool.map(lambda r: _committed_entries(pfs, r), roots))}
+    roots: exactly the files the manifests name, with no dir listing (an
+    orphan from a zombie or losing speculative attempt in the same dir
+    is invisible, and planning costs no listdir round-trip per part)."""
     files: list[str] = []
-    for rel in roots:
-        data_rel = posixpath.join(rel, "data")
-        glob_pids = set()
-        for pid, names in committed[rel].items():
-            if names is None:
-                glob_pids.add(pid)
-            else:
-                files.extend(posixpath.join(
-                    pfs.join(data_rel, f"part_id={pid}"), f)
-                    for f in sorted(names))
-        pdirs = [prel for pid, prel in _part_dirs(pfs, rel)
-                 if pid in glob_pids] if glob_pids else []
-        for infos in pool.map(pfs.listdir, sorted(pdirs)):
-            files.extend(sorted(st.path for st in infos
-                                if st.path.endswith(".parquet")))
+    for rel, entries in zip(roots, pool.map(
+            lambda r: _committed_entries(pfs, r), roots)):
+        for pid, names in entries.items():
+            pdir = pfs.join(rel, "data", f"part_id={pid}")
+            files.extend(posixpath.join(pdir, f) for f in sorted(names))
     return files
 
 
@@ -480,8 +487,6 @@ class ChunkPlanner:
 
     def _prepare(self) -> bool:
         """Compile the predicates; False when there is nothing to prune."""
-        import pyarrow as pa
-
         from plc.chunk import _bloom_hash_arrays
 
         cons = [(c, [tuple(b)]) for c, b in self.bounds.items()
@@ -567,10 +572,9 @@ class ChunkPlanner:
         meta = pfs.read_parquet(fpath, _RANGE_COLS).to_pylist()
         keep = [i for i, m in enumerate(meta) if self._survives_typed(m)]
         if keep and self._needs_stats:
-            # new-layout stores keep the bloom bits in their own column
-            # (fetched only when a doc_id probe needs them); pre-split
-            # stores embed them in the stats JSON, which bloom_probe
-            # falls back to when no raw bits are passed
+            # the bloom bits live in their own column, fetched only when
+            # a doc_id probe needs them; a store without that column is
+            # not bloom-pruned
             cols = ["stats"]
             if self._keys and "bloom" in pq.read_schema(
                     fpath, filesystem=pfs.fs).names:
@@ -853,8 +857,6 @@ class PLCChunksReader(DataSourceReader):
         return out
 
     def read(self, partition: PLCChunksPartition):
-        import pyarrow as pa
-
         if partition is None:  # Spark probes an empty partition list once
             return
         names = [f.name for f in self.schema.fields]
@@ -921,7 +923,6 @@ def _row_mask(rb, flt: dict, keys):
     to null and are dropped by the filter, matching Spark's semantics;
     strings compare byte-wise in both."""
     import numpy as np
-    import pyarrow as pa
     import pyarrow.compute as pc
 
     mask = None
@@ -965,8 +966,6 @@ def _read_chunk_partition(partition: PLCChunkPartition | None,
     tasks, and ``decode``'s driver path). ``partition.filters`` and
     ``partition.keys`` are applied row-exactly here — Spark never sees
     them, so the reader owns their semantics."""
-    import pyarrow as pa
-
     if partition is None:  # Spark probes an empty partition list once
         return
     flt = partition.filters or {}
@@ -1175,7 +1174,6 @@ def _encode_task_partition(pfs: _PlanFS, rel: str, pid: int, jobid: str,
     than a rename-based promotion, with zero copies."""
     import uuid as _uuid
 
-    import pyarrow as pa
     import pyarrow.compute as pc
 
     from plc.chunk import EncodeConfig, column_stats, pack_chunk
@@ -1270,8 +1268,6 @@ def _commit_store(pfs: _PlanFS, rel: str, msgs: list, wcol: str,
        generation's files + losing/duplicate attempts) best-effort —
        readers ignore unnamed files regardless, this only reclaims
        bytes, and a crash mid-sweep leaves a valid store + orphans."""
-    import pyarrow as pa
-
     plan = {
         "n_parts": (max((m.part_id for m in msgs), default=0) + 1),
         "bounds": [], "tau": 2**31 - 1, "weight_col": wcol,
@@ -1283,19 +1279,9 @@ def _commit_store(pfs: _PlanFS, rel: str, msgs: list, wcol: str,
         # fail loudly instead of silently encoding zero rows (ADVICE r5)
         "writer": "format",
     }
-    man = pa.table({
-        "part_id": pa.array([m.part_id for m in msgs], pa.int32()),
-        "n_chunks": pa.array([m.n_chunks for m in msgs], pa.int64()),
-        "n_rows": pa.array([m.n_rows for m in msgs], pa.int64()),
-        "n_tokens": pa.array([m.n_tokens for m in msgs], pa.int64()),
-        "raw_bytes": pa.array([m.raw_bytes for m in msgs], pa.int64()),
-        "enc_bytes": pa.array([m.enc_bytes for m in msgs], pa.int64()),
-        "min_doc_id": pa.array([m.min_doc_id for m in msgs], pa.string()),
-        "max_doc_id": pa.array([m.max_doc_id for m in msgs], pa.string()),
-        # the commit point: readers open exactly these files and
-        # nothing else in the part dirs
-        "file": pa.array([m.file for m in msgs], pa.string()),
-    })
+    # the commit point: readers open exactly the named files and
+    # nothing else in the part dirs
+    man = _manifest_table(msgs)
     parts_rel = posixpath.join(rel, "_manifest", "parts")
     stale = [st.path for st in pfs.listdir(parts_rel)
              if st.path.endswith(".parquet")
@@ -1429,19 +1415,19 @@ class PLCStreamWriter(_StoreWriter, DataSourceStreamArrowWriter):
 
 def gc(dst: str, *, grace_sec: float = 86400.0) -> dict:
     """Reclaim invisible orphan bytes under a store or stream root:
-    data-dir files in manifest-NAMED part dirs that no committed manifest
-    names (zombie/speculative attempts that finished AFTER commit's
-    best-effort sweep — correctness is unaffected, readers never open
-    them, but their bytes were previously permanent: VERDICT r5 missing
-    #4), plus uncommitted ``batch=<id>`` dirs of a stream root (crashed
-    batches a replay never resumed). Pure ``pyarrow.fs`` — works on any
-    URI the readers accept, no Spark session needed.
+    data-dir files that no committed manifest names (zombie/speculative
+    attempts that finished AFTER commit's best-effort sweep, stray
+    copies — correctness is unaffected, readers never open them, but
+    their bytes were previously permanent: VERDICT r5 missing #4), plus
+    uncommitted ``batch=<id>`` dirs of a stream root (crashed batches a
+    replay never resumed). Every named file stays, and so does its
+    Hadoop checksum sidecar (``.<name>.crc``, which Spark's local writer
+    puts next to each file). Pure ``pyarrow.fs`` — works on any URI the
+    readers accept, no Spark session needed.
 
     ``grace_sec`` protects in-flight work: only files older than the
     grace period go (a write job in progress has young files; default
-    24 h). Part dirs with glob semantics (pipeline-sink commits, where
-    every file in the dir IS data) are never touched. Returns
-    ``{"removed": [paths], "kept_young": n}``."""
+    24 h). Returns ``{"removed": [paths], "kept_young": n}``."""
     import time
 
     pfs = _PlanFS(dst)
@@ -1458,13 +1444,10 @@ def gc(dst: str, *, grace_sec: float = 86400.0) -> dict:
         committed = _committed_entries(pfs, rel)
         for pid, prel in _part_dirs(pfs, rel):
             names = committed.get(pid, set())
-            if names is None:
-                continue  # glob part: every file is data — never touch
-            files = pfs.listdir(prel)
+            live_names = names | {f".{n}.crc" for n in names}
             live = 0
-            for fi in files:
-                base = posixpath.basename(fi.path)
-                if base in names:
+            for fi in pfs.listdir(prel):
+                if posixpath.basename(fi.path) in live_names:
                     live += 1
                     continue
                 if _old(fi):

@@ -22,8 +22,8 @@ def _sections(spark, src_dir: str, dst: str) -> list[tuple[str, str]]:
     from pyspark.sql import functions as F
     from plc import pipeline
     from plc.pipeline import (PipelineConfig, build_plan, decode, encode,
-                              _data_path, _make_encoder, _pid_expr,
-                              _sbucket_col, ENC_SCHEMA_DDL)
+                              _data_path, _encoder_input, _make_encoder,
+                              ENC_SCHEMA_DDL)
 
     src = os.path.join(src_dir, "tok.parquet")
     D.synth_tokens_parquet(src, 2000, regime="zipf", seed=42)
@@ -37,23 +37,15 @@ def _sections(spark, src_dir: str, dst: str) -> list[tuple[str, str]]:
             .fromString("formatted"))
 
     plan = build_plan(spark, df, cfg)
-    base = df.withColumn("_sbucket", _sbucket_col(plan))
-    pid = _pid_expr(plan)
-    total_parts = plan["n_parts"] + plan["straggler_parts"]
-    if pid is not None:
-        shuffled = (base.withColumn("_pid", pid)
-                    .repartition(total_parts, "_pid").drop("_pid"))
-    else:
-        shuffled = base.repartitionByRange(total_parts, "_sbucket",
-                                           "doc_id")
-    enc_df = (shuffled.sortWithinPartitions("_sbucket", "doc_id")
-              .mapInArrow(_make_encoder(plan, cfg), ENC_SCHEMA_DDL))
+    enc_df = _encoder_input(df, plan, cfg).mapInArrow(
+        _make_encoder(plan, cfg), ENC_SCHEMA_DDL)
     from plc.dedup import candidate_pairs
 
     sections = [
-        ("E1 encode (scan → ONE hash exchange on the plan-bounds pid "
-         "tree → sort → MapInArrow; r7 — no RangePartitioner sampling "
-         "pass)",
+        ("E1 encode (scan → ONE exchange that sends each row to the "
+         "reduce partition its plan-bounds part id names "
+         "(repartitionById) → sort → MapInArrow; no RangePartitioner "
+         "sampling pass)",
          fmt(enc_df)),
         ("E2 decode with doc_id bounds (chunks pruned on the driver; the "
          "kept chunks are under _DRIVER_DECODE_MAX_BYTES, so they are "

@@ -2,23 +2,24 @@
 
 Spark-first layering per BASELINE.json north_rule:
 - *planning* is DataFrame-declarative: stats pre-pass (sampled quantiles),
-  explicit range partitioning by ``doc_id`` via ``repartitionByRange``,
-  salt-based skew splitting for long-token-array stragglers;
+  explicit placement of each ``doc_id`` range part in its own reduce
+  partition (``repartitionById`` on the plan's bounds), salt-based skew
+  splitting for long-token-array stragglers;
 - *encoding* is Arrow-vectorized: one ``mapInArrow`` stage running the
   chunk/codec kernels (plc.chunk) on whole RecordBatches — zero per-row
   Python in the hot path;
-- *operational state* is per-partition lineage manifests written after the
-  data (commit-last), so interrupted runs resume from the last committed
-  partition via an anti-join (P6) and re-encodes are idempotent
-  (dynamic partition overwrite of ``part_id=`` directories).
+- *operational state* is a lineage manifest naming every data file,
+  written after the data (commit-last), so interrupted runs resume from
+  the last committed partition via an anti-join (P6) and re-encodes are
+  idempotent (dynamic partition overwrite of ``part_id=`` directories).
 
 Scale notes (designed for ~100 TB / 1000 executors, tested on local[32]):
-- one shuffle total (the range repartition); everything after is map-side;
+- one shuffle total (the placement exchange); everything after is map-side;
 - partition count: aim for ~256-512 MB of raw tokens per logical part —
   pass ``num_partitions`` explicitly or let the sampled row count choose;
-- the range shuffle uses Spark's RangePartitioner (JVM, sampled bounds);
-  our own persisted bounds give *deterministic* resume identity, and are
-  applied vectorized (np.searchsorted) inside the encoder, not per row;
+- the exchange routes rows by our own persisted bounds (*deterministic*
+  resume identity) as a JVM comparison tree, and the encoder applies the
+  same bounds vectorized (np.searchsorted), not per row;
 - skewed rows (n_tok > τ = q0.999) get dedicated straggler partitions,
   salted by crc32(doc_id) — AQE skew handling does not cover mapInArrow
   stages, so the salt is explicit;
@@ -44,10 +45,10 @@ from pyspark.sql.types import StructType
 
 from plc.chunk import EncodeConfig, column_stats, pack_chunk
 from plc.datasource import (_PLAN_THREADS, ChunkPlanner, PLCChunkPartition,
-                            _PlanFS, _committed_data_files, _load_plan,
-                            _normalize_ranges, _part_dirs,
-                            _read_chunk_partition, _read_manifest,
-                            _unpack_rows)
+                            PLCCommit, _PlanFS, _committed_data_files,
+                            _load_plan, _manifest_table, _normalize_ranges,
+                            _part_dirs, _read_chunk_partition,
+                            _read_manifest, _unpack_rows)
 
 ENC_SCHEMA_DDL = (
     "part_id int, chunk_idx int, n_rows bigint, n_tokens bigint, "
@@ -78,19 +79,14 @@ _ENC_ARROW_SCHEMA = pa.schema([
 
 
 def split_bloom_stats(stats: dict) -> "bytes | None":
-    """Pop the doc_id bloom PAYLOAD out of a fresh ``column_stats`` dict
-    (in place) and return the raw bits for the dedicated ``bloom`` enc
-    column. The tiny ``bloom_m``/``bloom_k``/``bloom_v`` parameters stay
-    in the stats JSON; the bits (up to ~256 KB b64 per chunk) move out so
-    every stats-JSON consumer — null-count queries, generic min/max chunk
-    pruning, the chunks metadata view — stops parsing hundreds of KB it
-    never needs (the r6 verdict's terabytes-at-10^7-chunks finding)."""
-    import base64
-
-    dstat = stats.get("doc_id")
-    if dstat and "bloom" in dstat:
-        return base64.b64decode(dstat.pop("bloom"))
-    return None
+    """Pop the doc_id bloom bits out of a fresh ``column_stats`` dict
+    (in place) and return them for the dedicated ``bloom`` enc column.
+    The tiny ``bloom_m``/``bloom_k``/``bloom_v`` parameters stay in the
+    stats JSON; the bits (up to 256 KB per chunk) stay out of it, so
+    every stats-JSON consumer — null-count queries, generic min/max
+    chunk pruning, the chunks metadata view — never parses them (the r6
+    verdict's terabytes-at-10^7-chunks finding)."""
+    return (stats.get("doc_id") or {}).pop("bloom", None)
 
 
 @dataclass
@@ -322,90 +318,58 @@ def _sbucket_col(plan: dict):
 _PID_EXPR_MAX_BOUNDS = 128
 
 
-def _murmur3_int32(x: int, seed: int = 42) -> int:
-    """Spark's ``Murmur3Hash`` of one IntegerType value (= ``F.hash``
-    with the default seed) in pure Python — lets the driver precompute,
-    for each part, a TAG integer whose hash lands in its own shuffle
-    slot, so ``repartition(P, tag)`` places exactly one part per reduce
-    partition with no collisions and no extra partitions. Pinned against
-    ``F.hash`` in tests; a mismatch would only cost placement balance,
-    never correctness (the encoder labels rows by its own routing)."""
-    m = 0xFFFFFFFF
-
-    def rotl(v, r):
-        return ((v << r) | (v >> (32 - r))) & m
-
-    k1 = (x & m) * 0xcc9e2d51 & m
-    k1 = rotl(k1, 15) * 0x1b873593 & m
-    h1 = (seed & m) ^ k1
-    h1 = (rotl(h1, 13) * 5 + 0xe6546b64) & m
-    h1 ^= 4  # length in bytes
-    h1 ^= h1 >> 16
-    h1 = h1 * 0x85ebca6b & m
-    h1 ^= h1 >> 13
-    h1 = h1 * 0xc2b2ae35 & m
-    h1 ^= h1 >> 16
-    return h1 - (1 << 32) if h1 >= (1 << 31) else h1  # signed int32
-
-
-def _slot_tags(n: int) -> list[int]:
-    """tags[p] = smallest unused non-negative int whose
-    ``pmod(murmur3, n)`` equals a still-empty slot, assigned in tag
-    order — a perfect part→shuffle-slot placement in expected O(n log n)
-    tries."""
-    tags: list[int | None] = [None] * n
-    left, t = n, 0
-    while left:
-        s = _murmur3_int32(t) % n  # python % = pmod for positive n
-        if tags[s] is None:
-            tags[s] = t
-            left -= 1
-        t += 1
-    # tags currently indexed by SLOT; invert to part-index order —
-    # part p may use any slot, so just hand out slots in order
-    return [tags[p] for p in range(n)]
-
-
 def _pid_expr(plan: dict):
-    """Shuffle-placement Column replicating the encoder's routing
-    arithmetic (``np.searchsorted(bounds, doc_id, side="right")``,
-    stragglers to ``n_parts + _sbucket - 1``) as a binary-search WHEN
-    tree — O(log P) string comparisons per row, built once at plan time.
-    The tree's leaves emit per-part TAG integers chosen so Spark's
-    Murmur3 hash maps each part to its own reduce partition
-    (:func:`_slot_tags`): ``repartition(total_parts, _pid)`` then yields
-    exactly one part per task — same task count as the range exchange,
-    none of its sampling pass, no hash-collision stragglers, and no
-    empty partitions multiplying per-task Python worker setup (the 4x
-    fan-out this replaces paid it on every empty task; most of it was
-    pyspark re-reading each zip on the worker's path before every task,
-    which ``plc.util._cache_zip_directories`` now skips in reused
-    workers). None when the plan has no usable bounds or too many for an
-    expression tree."""
+    """The encoder's part id as a Column: its routing arithmetic
+    (``np.searchsorted(bounds, doc_id, side="right")``, stragglers to
+    ``n_parts + _sbucket - 1``) as a binary-search WHEN tree — O(log P)
+    string comparisons per row, built once at plan time. None when the
+    plan has no usable bounds or too many for an expression tree."""
     bounds = plan["bounds"]
     if not bounds or len(bounds) > _PID_EXPR_MAX_BOUNDS:
         return None
-    total = plan["n_parts"] + plan["straggler_parts"]
-    tags = _slot_tags(total)
+    n_parts = plan["n_parts"]
 
     def tree(lo: int, hi: int):
         # parts lo..hi; part index m holds rows with #{b <= doc} == m,
         # so part <= mid  <=>  doc < bounds[mid]
         if lo == hi:
-            return F.lit(tags[lo])
+            return F.lit(lo)
         mid = (lo + hi) // 2
         return F.when(F.col("doc_id") < F.lit(bounds[mid]),
                       tree(lo, mid)).otherwise(tree(mid + 1, hi))
 
-    rng = tree(0, plan["n_parts"] - 1).cast("int")
+    pid = tree(0, n_parts - 1)
     if plan["straggler_parts"] > 0:
-        strag = F.lit(tags[plan["n_parts"]])
-        for j in range(1, plan["straggler_parts"]):
-            strag = F.when(F.col("_sbucket") == j + 1,
-                           F.lit(tags[plan["n_parts"] + j])).otherwise(strag)
-        return F.when(F.col("_sbucket") > 0, strag).otherwise(rng) \
-            .cast("int")
-    return rng
+        pid = F.when(F.col("_sbucket") > 0,
+                     F.col("_sbucket") + (n_parts - 1)).otherwise(pid)
+    return pid.cast("int")
+
+
+def _encoder_input(df: DataFrame, plan: dict,
+                   cfg: PipelineConfig) -> DataFrame:
+    """``df`` with its ``_sbucket`` routing column, placed for the
+    encoder: with ``shuffle="range"`` each part lands in its own reduce
+    partition. ``repartitionById`` on :func:`_pid_expr` sends part *p*
+    to partition *p* in ONE pass over the input; ``repartitionByRange``
+    would first run Spark's RangePartitioner sampling job, a SECOND full
+    evaluation of the child (scan + tokenize for derived inputs), so it
+    is only the fallback for plans with no usable bounds or more than
+    ``_PID_EXPR_MAX_BOUNDS``. The encoder labels rows by its own
+    searchsorted arithmetic whichever reducer they land on, so placement
+    is a clustering hint and can never affect correctness."""
+    # _sbucket travels into the encoder in both modes: the mapInArrow
+    # workers read it for straggler routing (no Python-side hashing)
+    # and drop it
+    df = df.withColumn("_sbucket", _sbucket_col(plan))
+    if cfg.shuffle == "none":
+        return df  # input layout already clusters doc_id; no exchange
+    total_parts = plan["n_parts"] + plan["straggler_parts"]
+    pid = _pid_expr(plan)
+    placed = (df.repartitionById(total_parts, pid) if pid is not None
+              else df.repartitionByRange(total_parts, "_sbucket", "doc_id"))
+    if cfg.sort_within:
+        placed = placed.sortWithinPartitions("_sbucket", "doc_id")
+    return placed
 
 
 def _pending_predicate(plan: dict, committed: set[int]):
@@ -448,13 +412,17 @@ def _prepare_state(spark: SparkSession, df: DataFrame, dst: str,
     state — a crash between data write and manifest commit leaves part
     dirs/plan with no manifest), plan load-or-build, committed set."""
     pfs = _PlanFS(dst)
-    manifest = _read_manifest(pfs, columns=["part_id"])
-    prior_state = (manifest is not None or pfs.exists(_PLAN_REL)
+    # only a resume reads the manifest: overwriting must work on a store
+    # whose manifest no longer reads
+    has_manifest = any(
+        st.path.endswith(".parquet")
+        for st in pfs.listdir(posixpath.join("_manifest", "parts")))
+    prior_state = (has_manifest or pfs.exists(_PLAN_REL)
                    or bool(pfs.listdir("data")))
     if prior_state and not resume:
         if mode == "overwrite":
             pfs.fs.delete_dir(pfs.root)
-            manifest = None
+            has_manifest = False
         else:
             raise FileExistsError(
                 f"{dst} already has encode state (manifest, plan, or data); "
@@ -482,8 +450,9 @@ def _prepare_state(spark: SparkSession, df: DataFrame, dst: str,
                          lambda f: f.write(json.dumps(plan).encode("utf-8")))
 
     committed: set[int] = set()
-    if resume and manifest is not None:
-        committed = set(manifest.column("part_id").to_pylist())
+    if resume and has_manifest:
+        committed = set(_read_manifest(pfs, columns=["part_id"])
+                        .column("part_id").to_pylist())
     return plan, committed
 
 
@@ -519,36 +488,8 @@ def encode(spark: SparkSession, df: DataFrame, dst: str,
     if pending_parts <= 0:
         return _report(dst, plan, newly_encoded=0)
 
-    # _sbucket travels into the encoder in both modes: the mapInArrow workers
-    # read it for straggler routing (no Python-side hashing) and drop it
-    df = df.withColumn("_sbucket", _sbucket_col(plan))
-    if cfg.shuffle == "none":
-        shuffled = df  # input layout already clusters doc_id; no exchange
-    else:
-        pid = _pid_expr(plan)
-        if pid is not None:
-            # ONE pass over the input: the plan's own bounds route each
-            # row to its part via a log2(P)-deep comparison tree whose
-            # leaves are murmur-perfect slot tags (one part per reduce
-            # partition — see _pid_expr), and the exchange hashes that
-            # tag. repartitionByRange would instead run Spark's
-            # RangePartitioner sampling job — a SECOND full evaluation
-            # of the child (scan + tokenize for derived inputs) before
-            # the real shuffle. The encoder labels rows by the same
-            # searchsorted arithmetic regardless of which reducer they
-            # land on, so placement is purely a clustering hint and can
-            # never affect correctness.
-            shuffled = (df.withColumn("_pid", pid)
-                        .repartition(total_parts, "_pid").drop("_pid"))
-        else:
-            # no usable bounds (single part) or too many for an
-            # expression tree: Spark's sampled range exchange
-            shuffled = df.repartitionByRange(total_parts, "_sbucket",
-                                             "doc_id")
-        if cfg.sort_within:
-            shuffled = shuffled.sortWithinPartitions("_sbucket", "doc_id")
-
-    enc = shuffled.mapInArrow(_make_encoder(plan, cfg), ENC_SCHEMA_DDL)
+    enc = _encoder_input(df, plan, cfg).mapInArrow(
+        _make_encoder(plan, cfg), ENC_SCHEMA_DDL)
     return _write_and_commit(enc, dst, plan, committed, total_parts,
                              pending_parts)
 
@@ -584,81 +525,56 @@ def _write_and_commit(enc: DataFrame, dst: str, plan: dict,
         .option("compression", "uncompressed").parquet(_data_path(dst)))
     data_path_sec = time.perf_counter() - t0
 
-    # manifest (commit point — written after the data, per part): a
-    # driver pyarrow roll-up over the metadata columns of the freshly
-    # written part files (thread-pooled, payload column never read —
-    # zero Spark jobs), plus zero-markers and the report totals.
-    man_rows = _rollup_driver(pfs, committed)
+    # manifest (commit point — written after the data): one row per
+    # freshly written data file, rolled up driver-side with pyarrow over
+    # the file's metadata columns (thread-pooled, payload column never
+    # read — zero Spark jobs)
+    man = _rollup_driver(pfs, committed)
     # zero-row commit markers for planned parts that produced no data (e.g.
     # straggler parts with no rows over τ) — without them resume would
     # re-run those parts forever instead of reaching a true no-op
-    present = {r[0] for r in man_rows}
-    man_rows += [(i, 0, 0, 0, 0, 0, None, None)
-                 for i in range(total_parts)
-                 if i not in present and i not in committed]
-    _write_manifest_driver(pfs, man_rows, committed)
-    if committed:
-        # resume: totals span prior manifests too — read them back
-        rep = _report(dst, plan, newly_encoded=pending_parts)
-    else:
-        raw = sum(r[4] for r in man_rows)
-        enc_b = sum(r[5] for r in man_rows)
-        rep = {
-            "n_parts": plan["n_parts"] + plan["straggler_parts"],
-            "committed_parts": len(man_rows),
-            "newly_encoded": pending_parts,
-            "rows": sum(r[2] for r in man_rows),
-            "tokens": sum(r[3] for r in man_rows),
-            "raw_bytes": raw, "enc_bytes": enc_b,
-            "ratio": raw / enc_b if enc_b else 0.0,
-        }
+    present = {m.part_id for m in man}
+    man += [PLCCommit(i, None, 0, 0, 0, 0, 0, None, None)
+            for i in range(total_parts)
+            if i not in present and i not in committed]
+    _write_manifest_driver(pfs, man)
+    rep = _report(dst, plan, newly_encoded=pending_parts)
     rep["data_path_sec"] = round(data_path_sec, 3)  # scan+shuffle+encode+write
     return rep
 
 
-_MAN_PA_FIELDS = [("part_id", "int32"), ("n_chunks", "int64"),
-                  ("n_rows", "int64"), ("n_tokens", "int64"),
-                  ("raw_bytes", "int64"), ("enc_bytes", "int64"),
-                  ("min_doc_id", "string"), ("max_doc_id", "string")]
-_ROLLUP_COLS = ["n_rows", "n_tokens", "raw_bytes", "enc_bytes",
-                "min_doc_id", "max_doc_id"]
+_ROLLUP_SUMS = ["n_rows", "n_tokens", "raw_bytes", "enc_bytes"]
 
 
-def _rollup_driver(pfs: _PlanFS, committed: set[int]) -> list[tuple]:
-    """Per-part manifest roll-up computed driver-side with pyarrow over
-    the metadata columns of every file in each non-committed
-    ``part_id=`` dir (the payload column is never read — parquet is
-    columnar), aggregated per part."""
+def _rollup_driver(pfs: _PlanFS, committed: set[int]) -> list:
+    """One manifest row (:class:`PLCCommit`) per data file in each
+    non-committed ``part_id=`` dir, naming the file, computed driver-side
+    with pyarrow over the file's metadata columns (the payload column is
+    never read — parquet is columnar)."""
     from concurrent.futures import ThreadPoolExecutor
+
+    import pyarrow.compute as pc
 
     pdirs = [(pid, rel) for pid, rel in _part_dirs(pfs)
              if pid not in committed]
-    agg: dict[int, list] = {}
     with ThreadPoolExecutor(max_workers=_PLAN_THREADS) as pool:
         files = [(pid, st.path) for (pid, _), infos in zip(
                      pdirs, pool.map(lambda t: pfs.listdir(t[1]), pdirs))
                  for st in infos if st.path.endswith(".parquet")]
-        tables = pool.map(lambda t: pfs.read_parquet(t[1], _ROLLUP_COLS),
-                          files)
-        for (pid, _), tbl in zip(files, tables):
-            cols = {c: tbl.column(c).to_pylist() for c in _ROLLUP_COLS}
-            a = agg.setdefault(pid, [0, 0, 0, 0, 0, None, None])
-            a[0] += tbl.num_rows
-            a[1] += sum(cols["n_rows"])
-            a[2] += sum(cols["n_tokens"])
-            a[3] += sum(cols["raw_bytes"])
-            a[4] += sum(cols["enc_bytes"])
-            mns = [v for v in cols["min_doc_id"] if v is not None]
-            mxs = [v for v in cols["max_doc_id"] if v is not None]
-            if mns:
-                a[5] = min(mns) if a[5] is None else min(a[5], *mns)
-            if mxs:
-                a[6] = max(mxs) if a[6] is None else max(a[6], *mxs)
-    return [(pid, *agg[pid]) for pid in sorted(agg)]
+        tables = pool.map(
+            lambda t: pfs.read_parquet(
+                t[1], _ROLLUP_SUMS + ["min_doc_id", "max_doc_id"]), files)
+        man = [PLCCommit(
+                   pid, posixpath.basename(path), tbl.num_rows,
+                   *(int(pc.sum(tbl.column(c)).as_py() or 0)
+                     for c in _ROLLUP_SUMS),
+                   pc.min(tbl.column("min_doc_id")).as_py(),
+                   pc.max(tbl.column("max_doc_id")).as_py())
+               for (pid, path), tbl in zip(files, tables)]
+    return sorted(man, key=lambda m: (m.part_id, m.file))
 
 
-def _write_manifest_driver(pfs: _PlanFS, man_rows: list,
-                           committed: set[int]) -> None:
+def _write_manifest_driver(pfs: _PlanFS, man: list) -> None:
     """Append one manifest parquet file driver-side with pyarrow (no
     Spark job) under a unique name, so append semantics hold. It is
     written under a temp name and moved into place, so a failed write
@@ -667,15 +583,7 @@ def _write_manifest_driver(pfs: _PlanFS, man_rows: list,
 
     import pyarrow.parquet as _pq
 
-    # resuming a store whose manifest carries the format writer's
-    # `file` column: append with the same schema (file=NULL)
-    with_file = bool(committed) and "file" in _read_manifest(pfs).column_names
-    fields = _MAN_PA_FIELDS + ([("file", "string")] if with_file else [])
-    cols = list(zip(*man_rows)) if man_rows else [[] for _ in _MAN_PA_FIELDS]
-    if with_file:
-        cols = list(cols) + [[None] * len(man_rows)]
-    tbl = pa.table({name: pa.array(list(vals), getattr(pa, t)())
-                    for (name, t), vals in zip(fields, cols)})
+    tbl = _manifest_table(man)
     pfs.write_atomic(
         posixpath.join("_manifest", "parts",
                        f"manifest-{uuid.uuid4().hex[:12]}.parquet"),
@@ -683,22 +591,22 @@ def _write_manifest_driver(pfs: _PlanFS, man_rows: list,
 
 
 def _manifest_totals(dst: str) -> dict:
-    """Manifest row count (``parts``) and column sums, read driver-side
-    with pyarrow — the manifest is O(parts) rows; no Spark job."""
+    """Committed part count (``parts``: distinct part ids — a part can
+    have several data files) and column sums, read driver-side with
+    pyarrow — the manifest is O(files) rows; no Spark job."""
     import pyarrow.compute as pc
 
-    cols = ["n_rows", "n_tokens", "raw_bytes", "enc_bytes"]
-    man = _read_manifest(_PlanFS(dst), columns=cols)
+    man = _read_manifest(_PlanFS(dst), columns=["part_id", *_ROLLUP_SUMS])
     if man is None:
         raise FileNotFoundError(f"{dst} has no committed manifest")
-    return {"parts": man.num_rows,
-            **{c: int(pc.sum(man.column(c)).as_py() or 0) for c in cols}}
+    return {"parts": pc.count_distinct(man.column("part_id")).as_py(),
+            **{c: int(pc.sum(man.column(c)).as_py() or 0)
+               for c in _ROLLUP_SUMS}}
 
 
 def _report(dst: str, plan: dict, newly_encoded: int) -> dict:
     tot = _manifest_totals(dst)
-    raw = tot["raw_bytes"]
-    enc_b = tot["enc_bytes"] or 1
+    raw, enc_b = tot["raw_bytes"], tot["enc_bytes"]
     return {
         "n_parts": plan["n_parts"] + plan["straggler_parts"],
         "committed_parts": tot["parts"], "newly_encoded": newly_encoded,
@@ -947,9 +855,11 @@ def decode(spark: SparkSession, dst: str, *, doc_id_min: str | None = None,
 
 
 def metrics(spark: SparkSession, dst: str) -> DataFrame:
-    """Per-partition lineage/compression metrics (P5 read side): one row
-    per committed part with chunk counts, row/token totals, raw vs encoded
-    bytes and the resulting ratio — the operational dashboard query."""
+    """Lineage/compression metrics (P5 read side): the manifest as is,
+    one row per committed data file (plus a zero-row marker per empty
+    part) with its part id, file name, chunk count, row/token totals,
+    raw vs encoded bytes and the resulting ratio — the operational
+    dashboard query."""
     man = spark.read.parquet(_manifest_path(dst))
     return (man.withColumn(
         "ratio", F.when(F.col("enc_bytes") > 0,
@@ -993,24 +903,30 @@ def codec_report(spark: SparkSession, dst: str) -> DataFrame:
 def _sampled_part_ranges(spark: SparkSession, dst: str, fraction: float,
                          seed: int) -> list[tuple]:
     """Deterministic part-range sample for :func:`verify`: pick
-    ``fraction`` of the committed parts by md5(seed, part_id) order and
-    return their ACTUAL (min_doc_id, max_doc_id) ranges from the
-    manifest — works for any store (the format writer commits
-    ``bounds=[]``, so plan bounds are not assumed), includes straggler
-    parts, and different seeds rotate coverage across runs."""
+    ``fraction`` of the committed non-empty parts by md5(seed, part_id)
+    order and return their ACTUAL (min_doc_id, max_doc_id) ranges from
+    the manifest, each merged over the part's data files — works for any
+    store (the format writer commits ``bounds=[]``, so plan bounds are
+    not assumed), includes straggler parts, and different seeds rotate
+    coverage across runs."""
     import hashlib
 
     man = _read_manifest(_PlanFS(dst),
                          columns=["part_id", "min_doc_id", "max_doc_id"])
-    rows = [] if man is None else [r for r in man.to_pylist()
-                                   if r["min_doc_id"] is not None]
-    if not rows:
+    ranges: dict[int, tuple] = {}
+    for r in ([] if man is None else man.to_pylist()):
+        if r["min_doc_id"] is not None:
+            lo, hi = ranges.get(r["part_id"],
+                                (r["min_doc_id"], r["max_doc_id"]))
+            ranges[r["part_id"]] = (min(lo, r["min_doc_id"]),
+                                    max(hi, r["max_doc_id"]))
+    if not ranges:
         raise ValueError(f"{dst} has no committed non-empty parts to "
                          f"sample")
-    order = sorted(rows, key=lambda r: hashlib.md5(
-        f"verify:{seed}:{r['part_id']}".encode()).hexdigest())
-    k = max(1, round(fraction * len(rows)))
-    return [(r["min_doc_id"], r["max_doc_id"]) for r in order[:k]]
+    order = sorted(ranges, key=lambda pid: hashlib.md5(
+        f"verify:{seed}:{pid}".encode()).hexdigest())
+    k = max(1, round(fraction * len(ranges)))
+    return [ranges[pid] for pid in order[:k]]
 
 
 def verify(spark: SparkSession, src: DataFrame, dst: str,

@@ -389,15 +389,19 @@ def test_doc_id_bloom_stats():
         names=["doc_id", "x"])
     st = column_stats(batch)["doc_id"]
     assert st["bloom_m"] >= 8 * 5000
-    assert all(bloom_might_contain(st, v) for v in ids[::37])
-    fp = sum(bloom_might_contain(st, f"zzz-{i}") for i in range(2000)) / 2000
+    bits = st["bloom"]
+    assert isinstance(bits, bytes) and len(bits) * 8 == st["bloom_m"]
+    assert all(bloom_might_contain(st, v, bits) for v in ids[::37])
+    fp = sum(bloom_might_contain(st, f"zzz-{i}", bits)
+             for i in range(2000)) / 2000
     assert fp < 0.02
     assert "bloom" not in column_stats(batch)["x"]  # key column only
 
     nb = pa.RecordBatch.from_arrays(
         [pa.array([None, "a", None], pa.string())], names=["doc_id"])
     st2 = column_stats(nb)["doc_id"]
-    assert bloom_might_contain(st2, "a") and not bloom_might_contain(st2, "b")
+    assert bloom_might_contain(st2, "a", st2["bloom"])
+    assert not bloom_might_contain(st2, "b", st2["bloom"])
     empty = pa.RecordBatch.from_arrays([pa.array([], pa.string())],
                                        names=["doc_id"])
     st3 = column_stats(empty)["doc_id"]
@@ -415,11 +419,13 @@ def test_bloom_version_gate():
 
     st = _bloom_build(pa.array(["alpha", "beta"]))
     assert st["bloom_v"] == _BLOOM_V
-    assert not bloom_might_contain(st, "gamma")  # current version: prunes
+    bits = st["bloom"]
+    assert not bloom_might_contain(st, "gamma", bits)  # current: prunes
     stale = {**st, "bloom_v": _BLOOM_V - 1}
-    assert bloom_might_contain(stale, "gamma")   # foreign version: survives
+    assert bloom_might_contain(stale, "gamma", bits)  # foreign: survives
     legacy = {k: v for k, v in st.items() if k != "bloom_v"}
-    assert bloom_might_contain(legacy, "gamma")  # pre-versioning: survives
+    assert bloom_might_contain(legacy, "gamma", bits)  # unversioned
+    assert bloom_might_contain(st, "gamma")  # no bits: survives
 
 
 def test_var_array_large_offset_fallback(monkeypatch):

@@ -1,7 +1,9 @@
 """Commit-protocol and metadata-path tests: manifests become visible
-atomically (fault injection into the manifest write), every reader
-resolves committed files the same way (no semi-join fallback, also for
-stores with empty parts), read errors surface instead of being
+atomically (fault injection into the manifest write and the data
+write), every reader resolves committed files the same way — from the
+manifest's named files alone, with no part-dir listing — also for stores
+with empty parts, multi-file parts and stray files, a manifest that
+names no files is refused, read errors surface instead of being
 swallowed, and unsupported URIs fail with a clear error."""
 
 import glob
@@ -322,3 +324,223 @@ def test_stream_marker_fault_hides_batch_and_replay_commits_once(
     assert all(os.path.exists(f) for f in named)
     assert named_files() == named
     assert spark.read.format("plc").load(dst).count() == 350
+
+
+def _part_ids_on_disk(dst):
+    return {int(d.split("=", 1)[1])
+            for d in os.listdir(os.path.join(dst, "data"))
+            if d.startswith("part_id=")}
+
+
+def _data_files(dst):
+    """Every file under the data dir, checksum sidecars included."""
+    return {os.path.join(dp, f)
+            for dp, _, fs in os.walk(os.path.join(dst, "data")) for f in fs}
+
+
+def test_pipeline_data_write_fault_keeps_old_state_and_resume_converges(
+        spark, src_df, monkeypatch):
+    """The pipeline's Spark write job fails part-way (the encoder raises
+    in one part) while resuming a store with two committed parts:
+    decode, format("plc") and verify see exactly the committed parts,
+    gc leaves no uncommitted part dir behind, and encode(resume=True)
+    then reaches the clean run's bytes and rows."""
+    import plc
+    from plc import pipeline
+
+    cfg = PipelineConfig(num_partitions=4, straggler_parts=0)
+    work = tempfile.mkdtemp(prefix="plc_datafault_")
+    clean, dst = work + "/clean", work + "/store"
+    try:
+        clean_rep = encode(spark, src_df, clean, cfg)
+        want = _rows(spark, clean)
+        # old state: parts 0-1 committed, parts 2-3 never were
+        encode(spark, src_df, dst, cfg)
+        man = _read_manifest(_PlanFS(dst))
+        for f in _visible_manifests(dst):
+            os.remove(f)
+        pq.write_table(man.filter(pc.less(man.column("part_id"), 2)),
+                       os.path.join(dst, "_manifest", "parts",
+                                    "manifest-partial.parquet"))
+        old = _rows(spark, dst)
+        assert 0 < len(old) < len(want)
+
+        real = pipeline._make_encoder
+
+        def failing(plan, cfg):
+            inner = real(plan, cfg)
+
+            def encode_batches(batches):
+                for out in inner(batches):
+                    if 3 in out.column("part_id").to_pylist():
+                        raise RuntimeError("injected encoder fault")
+                    yield out
+
+            return encode_batches
+
+        with monkeypatch.context() as m:
+            m.setattr(pipeline, "_make_encoder", failing)
+            with pytest.raises(Exception, match="injected encoder fault"):
+                encode(spark, src_df, dst, cfg, resume=True)
+        assert [os.path.basename(f) for f in _visible_manifests(dst)] == \
+            ["manifest-partial.parquet"]
+        assert _rows(spark, dst) == old
+        register(spark)
+        assert spark.read.format("plc").load(dst).count() == len(old)
+        res = verify(spark, src_df, dst, sample_parts=1.0)
+        assert res["mismatches"] == 0 and res["rows_decoded"] == len(old)
+        plc.gc(dst, grace_sec=0)
+        assert _part_ids_on_disk(dst) <= {0, 1}
+        assert _rows(spark, dst) == old
+
+        rep = encode(spark, src_df, dst, cfg, resume=True)
+        assert rep["enc_bytes"] == clean_rep["enc_bytes"]
+        assert rep["rows"] == clean_rep["rows"]
+        assert _rows(spark, dst) == want
+        plc.gc(dst, grace_sec=0)
+        assert _part_ids_on_disk(dst) == {0, 1, 2, 3}
+        assert _rows(spark, dst) == want
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def test_stray_file_in_committed_pipeline_part_is_invisible_and_gc_reclaims_it(
+        spark, src_df):
+    """An aged stray ``part-zombie.parquet`` (a copy of a real data file,
+    so reading it would add rows) in a committed pipeline part dir is
+    invisible to decode, format("plc"), store_agg and checksum verify;
+    gc removes it and nothing else — every named file and its Hadoop
+    checksum sidecar survive, and a plain Spark read still passes."""
+    import time
+
+    import plc
+    from plc.datasource import store_agg
+
+    dst = tempfile.mkdtemp(prefix="plc_stray_")
+    try:
+        encode(spark, src_df, dst,
+               PipelineConfig(num_partitions=4, straggler_parts=0),
+               mode="overwrite")
+        want = _rows(spark, dst)
+        before = _data_files(dst)
+        assert any(f.endswith(".parquet.crc") for f in before)
+        pdir = os.path.join(dst, "data", "part_id=1")
+        stray = os.path.join(pdir, "part-zombie.parquet")
+        shutil.copy(glob.glob(os.path.join(pdir, "*.parquet"))[0], stray)
+        past = time.time() - 7200
+        for f in before | {stray}:  # every file past gc's grace period
+            os.utime(f, (past, past))
+
+        assert _rows(spark, dst) == want
+        register(spark)
+        assert spark.read.format("plc").load(dst).count() == len(want)
+        assert store_agg(spark, dst).collect()[0]["n_rows"] == len(want)
+        assert verify(spark, src_df, dst)["mismatches"] == 0
+
+        rep = plc.gc(dst, grace_sec=3600)
+        assert rep["removed"] == [stray]
+        assert _data_files(dst) == before
+        n_chunks = pc.sum(_read_manifest(_PlanFS(dst))
+                          .column("n_chunks")).as_py()
+        assert spark.read.parquet(os.path.join(dst, "data")) \
+            .select("chunk_idx").count() == n_chunks
+        assert _rows(spark, dst) == want
+    finally:
+        shutil.rmtree(dst, ignore_errors=True)
+
+
+def test_manifest_without_file_column_is_refused(spark, src_df):
+    """A manifest written before every writer named its files cannot say
+    which files are committed: decode, format("plc") and
+    encode(resume=True) raise a ValueError that says to re-encode, and
+    re-encoding with mode='overwrite' works."""
+    cfg = PipelineConfig(num_partitions=2, straggler_parts=0)
+    dst = tempfile.mkdtemp(prefix="plc_oldshape_")
+    try:
+        encode(spark, src_df, dst, cfg, mode="overwrite")
+        for f in _visible_manifests(dst):
+            pq.write_table(pq.read_table(f).drop_columns(["file"]), f)
+        with pytest.raises(ValueError, match="re-encode"):
+            decode(spark, dst)
+        register(spark)
+        with pytest.raises(Exception, match="re-encode"):
+            spark.read.format("plc").load(dst).count()
+        with pytest.raises(ValueError, match="re-encode"):
+            encode(spark, src_df, dst, cfg, resume=True)
+        encode(spark, src_df, dst, cfg, mode="overwrite")
+        assert verify(spark, src_df, dst)["mismatches"] == 0
+    finally:
+        shutil.rmtree(dst, ignore_errors=True)
+
+
+def test_noshuffle_multi_file_parts_have_one_manifest_row_per_file(
+        spark, src_df):
+    """encode(shuffle="none") over three round-robin input splits writes
+    several data files per part: the manifest has one row per file,
+    naming it, committed_parts counts distinct parts, and a part-sampled
+    verify picks whole-part ranges merged over the part's files."""
+    from plc.pipeline import _sampled_part_ranges
+
+    dst = tempfile.mkdtemp(prefix="plc_multifile_")
+    try:
+        rep = encode(spark, src_df.repartition(3), dst,
+                     PipelineConfig(num_partitions=4, straggler_parts=0,
+                                    shuffle="none"), mode="overwrite")
+        man = _read_manifest(_PlanFS(dst)).to_pylist()
+        on_disk = {(int(os.path.basename(os.path.dirname(f))
+                        .split("=", 1)[1]), os.path.basename(f))
+                   for f in glob.glob(os.path.join(dst, "data", "part_id=*",
+                                                   "*.parquet"))}
+        assert {(r["part_id"], r["file"]) for r in man} == on_disk
+        assert len(man) == len(on_disk) > 4
+        assert rep["committed_parts"] == len({r["part_id"] for r in man}) \
+            == 4
+        assert rep["rows"] == 300
+
+        merged = {}
+        for r in man:
+            lo, hi = merged.get(r["part_id"],
+                                (r["min_doc_id"], r["max_doc_id"]))
+            merged[r["part_id"]] = (min(lo, r["min_doc_id"]),
+                                    max(hi, r["max_doc_id"]))
+        for seed in (0, 1):
+            ranges = _sampled_part_ranges(spark, dst, 0.5, seed)
+            assert len(ranges) == 2
+            assert set(ranges) <= set(merged.values())
+            res = verify(spark, src_df, dst, sample_parts=0.5, seed=seed)
+            assert res["mismatches"] == 0
+            assert 0 < res["rows_decoded"] < 300
+    finally:
+        shutil.rmtree(dst, ignore_errors=True)
+
+
+def test_point_lookup_planning_lists_no_part_dir(spark, src_df,
+                                                 monkeypatch):
+    """Planning a decode point lookup resolves the committed files from
+    the manifest alone: it lists no ``part_id=`` dir, on a pipeline store
+    and on a format store."""
+    work = tempfile.mkdtemp(prefix="plc_nolist_")
+    pipe, fmt = work + "/pipe", work + "/fmt"
+    try:
+        encode(spark, src_df, pipe, PipelineConfig(num_partitions=4),
+               mode="overwrite")
+        register(spark)
+        (src_df.repartitionByRange(3, "doc_id").write.format("plc")
+         .mode("overwrite").save(fmt))
+        key = src_df.orderBy("doc_id").limit(77).collect()[-1]["doc_id"]
+        seen = []
+        orig = _PlanFS.listdir
+
+        def spy(self, rel=""):
+            seen.append(rel)
+            return orig(self, rel)
+
+        monkeypatch.setattr(_PlanFS, "listdir", spy)
+        for d in (pipe, fmt):
+            seen.clear()
+            got = decode(spark, d, doc_ids=[key]).select("doc_id").collect()
+            assert [r["doc_id"] for r in got] == [key]
+            assert os.path.join("_manifest", "parts") in seen, seen
+            assert not [r for r in seen if "part_id=" in r], seen
+    finally:
+        shutil.rmtree(work, ignore_errors=True)

@@ -793,8 +793,10 @@ def test_batch_lookup_scan_pinned_to_planner_files(spark):
 def test_bloom_split_layout_and_legacy_fallback(spark):
     """r7: the doc_id bloom payload lives in its own enc-table column —
     the stats JSON every metadata query parses stays small (< 1 KB/chunk)
-    — and point/batch lookups prune identically on both the new layout
-    and a legacy store with the bloom embedded in the stats JSON."""
+    — and point/batch lookups prune on it. A legacy store with the bloom
+    embedded in the stats JSON (no bloom column) is not bloom-pruned, but
+    its lookups still return exactly the present keys and nothing for
+    absent ones."""
     import base64
     import json as _json
     import tempfile
@@ -839,7 +841,6 @@ def test_bloom_split_layout_and_legacy_fallback(spark):
                      decode(spark, d, doc_ids=keys)
                      .select("doc_id").collect())
         assert got == sorted(keys)
-        assert select_chunks(spark, d, doc_ids=absent)[0].count() <= 2
         assert decode(spark, d, doc_ids=absent).count() == 0
         probe = keys[0]
         one = decode(spark, d, filters={"doc_id": (probe, probe)})
@@ -847,9 +848,10 @@ def test_bloom_split_layout_and_legacy_fallback(spark):
             == [probe]
 
     check(dst)
+    assert select_chunks(spark, dst, doc_ids=absent)[0].count() <= 2
 
     # legacy layout: re-embed the b64 bloom into the stats JSON and drop
-    # the bloom column — readers must fall back transparently
+    # the bloom column — lookups stay exact (no bloom pruning)
     old = work + "/store_old"
     shutil.copytree(dst, old)
     for f in sorted(glob.glob(os.path.join(old, "data", "part_id=*",
@@ -874,7 +876,7 @@ def test_bloom_split_layout_and_legacy_fallback(spark):
         os.unlink(crc)  # hadoop checksum sidecars of the replaced files
     check(old)
 
-    # format reader: pushed doc_id IN probes prune on both layouts
+    # format reader: pushed doc_id IN probes are exact on both layouts
     from plc.datasource import register
 
     register(spark)
@@ -888,19 +890,30 @@ def test_bloom_split_layout_and_legacy_fallback(spark):
     shutil.rmtree(work, ignore_errors=True)
 
 
-def test_murmur_tags_match_spark_hash_and_place_uniquely(spark):
-    """The driver-side Murmur3 twin must equal F.hash (seed 42) so the
-    slot tags in _pid_expr place one part per shuffle partition; a
-    mismatch costs only placement balance, never correctness — but pin
-    it anyway."""
-    from plc.pipeline import _murmur3_int32, _slot_tags
+def test_placement_sends_each_row_to_its_part_partition(spark, tmp_path):
+    """With stragglers in the plan, the encode placement exchange puts
+    every row in the reduce partition whose index is the part id the
+    encoder gives it: searchsorted over the plan bounds for normal rows,
+    ``n_parts + _sbucket - 1`` for stragglers."""
+    import numpy as np
 
-    vals = list(range(200)) + [2**31 - 1, 12345678]
-    df = spark.createDataFrame([(v,) for v in vals], "v int")
-    got = {r["v"]: r["h"] for r in
-           df.select("v", F.hash("v").alias("h")).collect()}
-    for v in vals:
-        assert _murmur3_int32(v) == got[v], v
-    for n in (1, 2, 7, 36, 64):
-        tags = _slot_tags(n)
-        assert sorted(_murmur3_int32(t) % n for t in tags) == list(range(n))
+    from plc.pipeline import _encoder_input
+
+    p = str(tmp_path / "tokens.parquet")
+    D.synth_tokens_parquet(p, 1500, regime="zipf", seed=19)
+    df = spark.read.parquet(p)
+    cfg = PipelineConfig(num_partitions=5, straggler_parts=3,
+                         skew_quantile=0.9)
+    plan = build_plan(spark, df, cfg)
+    assert len(plan["bounds"]) == 4
+    rows = (_encoder_input(df, plan, cfg)
+            .select("doc_id", "_sbucket",
+                    F.spark_partition_id().alias("p")).collect())
+    assert len(rows) == 1500
+    docs = np.array([r["doc_id"] for r in rows], dtype=str)
+    sb = np.array([r["_sbucket"] for r in rows], dtype=np.int64)
+    want = np.searchsorted(np.array(plan["bounds"], dtype=str), docs,
+                           side="right")
+    want = np.where(sb > 0, plan["n_parts"] + sb - 1, want)
+    assert (sb > 0).any(), "fixture produced no straggler rows"
+    assert [r["p"] for r in rows] == want.tolist()

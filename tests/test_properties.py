@@ -190,11 +190,11 @@ def test_bloom_no_false_negatives(present, probe):
     st_ = _bloom_build(pa.array(present, pa.string()))
     assert st_ is not None
     for v in present:
-        assert bloom_might_contain(st_, v)
+        assert bloom_might_contain(st_, v, st_["bloom"])
     if probe not in present:
         # no assertion on the outcome (FPs allowed) — but the probe must
         # never raise on arbitrary unicode
-        bloom_might_contain(st_, probe)
+        bloom_might_contain(st_, probe, st_["bloom"])
 
 
 @settings(max_examples=200, deadline=None)
