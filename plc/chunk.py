@@ -1062,8 +1062,8 @@ def column_stats(batch: pa.RecordBatch, *,
     additionally gets a bloom filter so equality probes prune chunks whose
     min/max range overlaps but which provably lack the value (set
     ``bloom_bits_per_key=0`` to disable); its raw bits sit under
-    ``bloom`` until :func:`plc.pipeline.split_bloom_stats` moves them to
-    their own enc column."""
+    ``bloom`` until :func:`enc_row` moves them to their own enc
+    column."""
     import pyarrow.compute as pc
 
     out = {}
@@ -1128,6 +1128,55 @@ def pack_chunk(batch: pa.RecordBatch, cfg: EncodeConfig) -> tuple[bytes, dict]:
         pieces.append(frame)
         codecs[name] = CODEC_NAMES[frame[0]]
     return b"".join(pieces), codecs
+
+
+# one encoded chunk as every writer stores it (part_id is the directory)
+_ENC_ARROW_SCHEMA = pa.schema([
+    ("part_id", pa.int32()), ("chunk_idx", pa.int32()), ("n_rows", pa.int64()),
+    ("n_tokens", pa.int64()), ("raw_bytes", pa.int64()), ("enc_bytes", pa.int64()),
+    ("min_doc_id", pa.string()), ("max_doc_id", pa.string()),
+    ("min_w", pa.int64()), ("max_w", pa.int64()), ("stats", pa.string()),
+    ("codecs", pa.string()), ("bloom", pa.binary()),
+    ("payload", pa.binary()),
+])
+
+
+def enc_row(buf: list, cfg: EncodeConfig, part_id: int, chunk_idx: int,
+            n_tokens: int, wcol: str) -> pa.RecordBatch:
+    """The one chunk builder, used by every writer: the buffered batches
+    ``buf`` (rows of one part) as one :data:`_ENC_ARROW_SCHEMA` row.
+    ``n_tokens`` is the weight-column sum; raw bytes are int32 TOKEN
+    bytes for token tables (``wcol == "n_tok"``), else Arrow logical
+    bytes (``nbytes`` is slice-aware). The doc_id bloom bits (up to
+    256 KB) move out of the stats JSON into their own column, so no
+    stats-JSON reader ever parses them."""
+    import pyarrow.compute as pc
+
+    big = (buf[0] if len(buf) == 1 else
+           pa.Table.from_batches(buf).combine_chunks()
+           .to_batches(max_chunksize=1 << 31)[0])
+    blob, codecs = pack_chunk(big, cfg)
+    stats = column_stats(big)
+    bloom = (stats.get("doc_id") or {}).pop("bloom", None)
+    mm = pc.min_max(big.column("doc_id")).as_py()
+    wstat = stats.get("n_tok", {})
+    raw_b = n_tokens * 4 if wcol == "n_tok" else int(big.nbytes)
+    return pa.RecordBatch.from_arrays([
+        pa.array([part_id], pa.int32()),
+        pa.array([chunk_idx], pa.int32()),
+        pa.array([big.num_rows], pa.int64()),
+        pa.array([n_tokens], pa.int64()),
+        pa.array([raw_b], pa.int64()),
+        pa.array([len(blob)], pa.int64()),
+        pa.array([mm["min"]], pa.string()),
+        pa.array([mm["max"]], pa.string()),
+        pa.array([wstat.get("min")], pa.int64()),
+        pa.array([wstat.get("max")], pa.int64()),
+        pa.array([json.dumps(stats)], pa.string()),
+        pa.array([json.dumps(codecs)], pa.string()),
+        pa.array([bloom], pa.binary()),
+        pa.array([blob], pa.binary()),
+    ], schema=_ENC_ARROW_SCHEMA)
 
 
 def _encode_with_nulls(col: pa.Array, cfg: EncodeConfig) -> bytes:

@@ -19,11 +19,10 @@ from plc import data as D
 def _sections(spark, src_dir: str, dst: str) -> list[tuple[str, str]]:
     """(title, formatted plan) pairs over a 2000-row source written to
     ``src_dir`` and its store encoded at ``dst``."""
-    from pyspark.sql import functions as F
     from plc import pipeline
-    from plc.pipeline import (PipelineConfig, build_plan, decode, encode,
-                              _data_path, _encoder_input, _make_encoder,
-                              ENC_SCHEMA_DDL)
+    from plc.pipeline import (PipelineConfig, build_plan, codec_report,
+                              decode, encode, _encoder_input, _file_job,
+                              _make_encoder)
 
     src = os.path.join(src_dir, "tok.parquet")
     D.synth_tokens_parquet(src, 2000, regime="zipf", seed=42)
@@ -37,15 +36,17 @@ def _sections(spark, src_dir: str, dst: str) -> list[tuple[str, str]]:
             .fromString("formatted"))
 
     plan = build_plan(spark, df, cfg)
-    enc_df = _encoder_input(df, plan, cfg).mapInArrow(
-        _make_encoder(plan, cfg), ENC_SCHEMA_DDL)
+    # the job encode runs, under a placeholder job id (never executed)
+    enc_df = _file_job(_encoder_input(df, plan, cfg),
+                       _make_encoder(plan, cfg), dst)("explain")
     from plc.dedup import candidate_pairs
 
     sections = [
         ("E1 encode (scan → ONE exchange that sends each row to the "
          "reduce partition its plan-bounds part id names "
-         "(repartitionById) → sort → MapInArrow; no RangePartitioner "
-         "sampling pass)",
+         "(repartitionById) → sort → MapInArrow whose tasks encode and "
+         "write their part files, returning only one manifest row per "
+         "file; no RangePartitioner sampling pass, no parquet sink)",
          fmt(enc_df)),
         ("E2 decode with doc_id bounds (chunks pruned on the driver; the "
          "kept chunks are under _DRIVER_DECODE_MAX_BYTES, so they are "
@@ -57,9 +58,9 @@ def _sections(spark, src_dir: str, dst: str) -> list[tuple[str, str]]:
          "pruning in the driver-side planner; the exact n_tok row filter "
          "is a Spark filter, folded into the local relation)",
          fmt(decode(spark, dst, filters={"n_tok": (200, None)}))),
-        ("Manifest roll-up (payload-pruned ReadSchema, partial aggregation)",
-         fmt(spark.read.parquet(_data_path(dst)).groupBy("part_id")
-             .agg(F.sum("enc_bytes").alias("enc_bytes")))),
+        ("Codec report roll-up over the chunk metadata (payload-pruned "
+         "ReadSchema, partial aggregation before the exchange)",
+         fmt(codec_report(spark, dst))),
         ("Dedup LSH candidate pairs (Arrow band kernel → shuffle on band "
          "key → bucket-local self-join; never all-pairs)",
          fmt(candidate_pairs(df, "doc_id"))),

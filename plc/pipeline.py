@@ -8,10 +8,15 @@ Spark-first layering per BASELINE.json north_rule:
 - *encoding* is Arrow-vectorized: one ``mapInArrow`` stage running the
   chunk/codec kernels (plc.chunk) on whole RecordBatches — zero per-row
   Python in the hot path;
+- *writing* is the format writer's protocol: the encoder's tasks write
+  their part files straight into ``part_id=`` dirs (pyarrow.fs) and hand
+  the driver one manifest row per file — chunk payloads never cross back
+  to the JVM and no Spark sink runs;
 - *operational state* is a lineage manifest naming every data file,
-  written after the data (commit-last), so interrupted runs resume from
-  the last committed partition via an anti-join (P6) and re-encodes are
-  idempotent (dynamic partition overwrite of ``part_id=`` directories).
+  appended after the data (commit-last) from exactly those rows, so
+  interrupted runs resume from the last committed part (P6) and a file
+  no manifest names (a crashed attempt's) is never read and is swept at
+  the next commit.
 
 Scale notes (designed for ~100 TB / 1000 executors, tested on local[32]):
 - one shuffle total (the placement exchange); everything after is map-side;
@@ -41,14 +46,17 @@ import numpy as np
 import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import StructType
 
-from plc.chunk import EncodeConfig, column_stats, pack_chunk
-from plc.datasource import (_PLAN_THREADS, ChunkPlanner, PLCChunkPartition,
-                            PLCCommit, _PlanFS, _committed_data_files,
-                            _load_plan, _manifest_table, _normalize_ranges,
-                            _part_dirs, _read_chunk_partition,
-                            _read_manifest, _unpack_rows)
+from plc.chunk import _ENC_ARROW_SCHEMA, EncodeConfig, enc_row
+from plc.datasource import (_MANIFEST_SCHEMA, _PLAN_THREADS, _SUM_COLS,
+                            ChunkPlanner, PLCChunkPartition, PLCCommit,
+                            _PlanFS, _committed_data_files,
+                            _delete_job_files, _load_plan, _manifest_table,
+                            _normalize_ranges, _read_chunk_partition,
+                            _read_manifest, _sweep_unnamed, _unpack_rows,
+                            _write_part_files)
 
 ENC_SCHEMA_DDL = (
     "part_id int, chunk_idx int, n_rows bigint, n_tokens bigint, "
@@ -67,27 +75,6 @@ ENC_SCHEMA_DDL = (
 # 113/247 (16), 369/356 (64). The every-row crossover is ~0.8-0.9 MB;
 # the cap sits at it
 _DRIVER_DECODE_MAX_BYTES = 768 << 10
-
-_ENC_ARROW_SCHEMA = pa.schema([
-    ("part_id", pa.int32()), ("chunk_idx", pa.int32()), ("n_rows", pa.int64()),
-    ("n_tokens", pa.int64()), ("raw_bytes", pa.int64()), ("enc_bytes", pa.int64()),
-    ("min_doc_id", pa.string()), ("max_doc_id", pa.string()),
-    ("min_w", pa.int64()), ("max_w", pa.int64()), ("stats", pa.string()),
-    ("codecs", pa.string()), ("bloom", pa.binary()),
-    ("payload", pa.binary()),
-])
-
-
-def split_bloom_stats(stats: dict) -> "bytes | None":
-    """Pop the doc_id bloom bits out of a fresh ``column_stats`` dict
-    (in place) and return them for the dedicated ``bloom`` enc column.
-    The tiny ``bloom_m``/``bloom_k``/``bloom_v`` parameters stay in the
-    stats JSON; the bits (up to 256 KB per chunk) stay out of it, so
-    every stats-JSON consumer — null-count queries, generic min/max
-    chunk pruning, the chunks metadata view — never parses them (the r6
-    verdict's terabytes-at-10^7-chunks finding)."""
-    return (stats.get("doc_id") or {}).pop("bloom", None)
-
 
 @dataclass
 class PipelineConfig:
@@ -116,10 +103,6 @@ _PLAN_REL = posixpath.join("_manifest", "plan.json")
 
 def _manifest_path(dst: str) -> str:
     return os.path.join(dst, "_manifest", "parts")
-
-
-def _data_path(dst: str) -> str:
-    return os.path.join(dst, "data")
 
 
 def _weight_col(df: DataFrame) -> str:
@@ -194,45 +177,11 @@ def _make_encoder(plan: dict, cfg: PipelineConfig):
         buf_part = -1
         buf_tokens = 0
 
-        def flush():
+        def flush() -> list:
             nonlocal buf, buf_tokens, chunk_idx
-            if not buf:
-                return None
-            big = (buf[0] if len(buf) == 1 else
-                   pa.Table.from_batches(buf).combine_chunks()
-                   .to_batches(max_chunksize=1 << 31)[0])
-            blob, codecs = pack_chunk(big, codec_cfg)
-            stats = column_stats(big)
-            bloom = split_bloom_stats(stats)
-            docs = big.column("doc_id")
-            toks = buf_tokens
-            import pyarrow.compute as pc
-
-            mm = pc.min_max(docs).as_py() if big.num_rows else \
-                {"min": "", "max": ""}
-            wstat = stats.get("n_tok", {})
-            # raw bytes: the contract metric is raw TOKEN bytes (int32) for
-            # token tables; generic tables report Arrow LOGICAL bytes
-            # (nbytes is slice-aware; get_total_buffer_size would count the
-            # whole parent buffer of a zero-copy slice)
-            raw_b = toks * 4 if wcol == "n_tok" else int(big.nbytes)
-            out = pa.RecordBatch.from_arrays([
-                pa.array([buf_part], pa.int32()),
-                pa.array([chunk_idx], pa.int32()),
-                pa.array([big.num_rows], pa.int64()),
-                pa.array([toks], pa.int64()),
-                pa.array([raw_b], pa.int64()),
-                pa.array([len(blob)], pa.int64()),
-                pa.array([mm["min"]], pa.string()),
-                pa.array([mm["max"]], pa.string()),
-                pa.array([wstat.get("min")], pa.int64()),
-                pa.array([wstat.get("max")], pa.int64()),
-                pa.array([json.dumps(stats)], pa.string()),
-                pa.array([json.dumps(codecs)], pa.string()),
-                pa.array([bloom], pa.binary()),
-                pa.array([blob], pa.binary()),
-            ], schema=_ENC_ARROW_SCHEMA)
-            chunk_idx += 1
+            out = [enc_row(buf, codec_cfg, buf_part, chunk_idx, buf_tokens,
+                           wcol)] if buf else []
+            chunk_idx += len(out)
             buf, buf_tokens = [], 0
             return out
 
@@ -262,9 +211,7 @@ def _make_encoder(plan: dict, cfg: PipelineConfig):
                 lo, hi = int(lo), int(hi)
                 pid = int(part[lo])
                 if buf and pid != buf_part:
-                    out = flush()
-                    if out is not None:
-                        yield out
+                    yield from flush()
                 buf_part = pid
                 # split the group so no chunk exceeds the token cap
                 s = lo
@@ -274,20 +221,14 @@ def _make_encoder(plan: dict, cfg: PipelineConfig):
                     take = int(np.searchsorted(cum, room, side="right"))
                     take = max(take, 1 if buf_tokens == 0 else 0)
                     if take == 0:
-                        out = flush()
-                        if out is not None:
-                            yield out
+                        yield from flush()
                         continue
                     buf.append(batch.slice(s, take))
                     buf_tokens += int(cum[take - 1])
                     s += take
                     if buf_tokens >= max_vals:
-                        out = flush()
-                        if out is not None:
-                            yield out
-        out = flush()
-        if out is not None:
-            yield out
+                        yield from flush()
+        yield from flush()
 
     return encode_batches
 
@@ -463,8 +404,11 @@ def encode(spark: SparkSession, df: DataFrame, dst: str,
     into ``dst`` with per-partition lineage manifests. Returns a report.
 
     Lifecycle: plan (stats pre-pass) → range shuffle on salted doc_id →
-    mapInArrow encode → parquet sink (dynamic partition overwrite on
-    part_id → idempotent) → manifest append (the commit point).
+    mapInArrow tasks that encode and write their part files, returning
+    one manifest row per file → manifest append of those rows (the
+    commit point) → sweep of every data file the manifest does not name.
+    A failed job deletes its own files, so the committed state stays as
+    it was and ``resume=True`` picks up from it.
     """
     cfg = cfg or PipelineConfig()
     from plc.util import ensure_shipped
@@ -488,48 +432,57 @@ def encode(spark: SparkSession, df: DataFrame, dst: str,
     if pending_parts <= 0:
         return _report(dst, plan, newly_encoded=0)
 
-    enc = _encoder_input(df, plan, cfg).mapInArrow(
-        _make_encoder(plan, cfg), ENC_SCHEMA_DDL)
-    return _write_and_commit(enc, dst, plan, committed, total_parts,
+    job = _file_job(_encoder_input(df, plan, cfg), _make_encoder(plan, cfg),
+                    dst)
+    return _write_and_commit(job, dst, plan, committed, total_parts,
                              pending_parts)
 
 
-def _write_and_commit(enc: DataFrame, dst: str, plan: dict,
-                      committed: set[int], total_parts: int,
-                      pending_parts: int) -> dict:
-    """Tail of :func:`encode`: dynamic-partition-overwrite data write,
-    then the manifest append (the commit point), then the run report."""
+# the encode job's output: one manifest row per part file its tasks wrote
+_MANIFEST_STRUCT = from_arrow_schema(_MANIFEST_SCHEMA)
+
+
+def _file_job(placed: DataFrame, encoder, dst: str):
+    """``jobid -> DataFrame``: the encode job over ``placed``. Its tasks
+    run ``encoder`` and write its enc rows straight into part files whose
+    names carry ``jobid`` (:func:`plc.datasource._write_part_files`, the
+    format writer's part-file writer), so only one manifest row per file
+    crosses back to the JVM, never a chunk payload."""
+    pfs = _PlanFS(dst)
+
+    def job(jobid: str) -> DataFrame:
+        def write(batches):
+            for m in _write_part_files(pfs, "", jobid, encoder(batches)):
+                yield _manifest_table([m]).to_batches()[0]
+
+        return placed.mapInArrow(write, _MANIFEST_STRUCT)
+
+    return job
+
+
+def _write_and_commit(job, dst: str, plan: dict, committed: set[int],
+                      total_parts: int, pending_parts: int) -> dict:
+    """Tail of :func:`encode`, the format writer's commit protocol: run
+    ``job`` (:func:`_file_job`) under a fresh job id, append exactly the
+    manifest rows its tasks return plus a zero-row marker per planned
+    part that got none (the commit point), sweep every data file the
+    manifest does not name, and report. A failed job deletes its own
+    files and re-raises, leaving the committed state as it was."""
     import time
+    import uuid
 
     pfs = _PlanFS(dst)
-    # pre-clean: part dirs written by a crashed earlier attempt but never
-    # committed must be deleted before the write — dynamic partition
-    # overwrite only rewrites parts that receive new data, so the manifest
-    # rollup (which reads the data dir) would otherwise adopt stale dirs.
-    # Enumerate the ACTUAL part_id=* dirs, not range(total_parts): a
-    # crashed format write leaves orphan dirs whose task-partition ids can
-    # exceed this plan's part count, and those would otherwise be silently
-    # adopted as committed data by the rollup (ADVICE r5)
-    for pid, rel in _part_dirs(pfs):
-        if pid not in committed:
-            pfs.fs.delete_dir(pfs.join(rel))
-
+    jobid = uuid.uuid4().hex[:12]
     t0 = time.perf_counter()
-    # 64 MB row groups (~4 full chunks): the format reader slices files
-    # into few-chunk partitions and reads only the row groups holding
-    # its chunks — one giant row group would force every slice to read
-    # the whole file
-    (enc.write.partitionBy("part_id").mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")  # write-scoped, not session
-        .option("parquet.block.size", str(64 << 20))
-        .option("compression", "uncompressed").parquet(_data_path(dst)))
-    data_path_sec = time.perf_counter() - t0
+    try:
+        rows = job(jobid).collect()
+    except BaseException:
+        _delete_job_files(pfs, "", jobid)
+        raise
+    data_path_sec = time.perf_counter() - t0  # scan+shuffle+encode+write
 
-    # manifest (commit point — written after the data): one row per
-    # freshly written data file, rolled up driver-side with pyarrow over
-    # the file's metadata columns (thread-pooled, payload column never
-    # read — zero Spark jobs)
-    man = _rollup_driver(pfs, committed)
+    man = sorted((PLCCommit(**r.asDict()) for r in rows),
+                 key=lambda m: (m.part_id, m.file))
     # zero-row commit markers for planned parts that produced no data (e.g.
     # straggler parts with no rows over τ) — without them resume would
     # re-run those parts forever instead of reaching a true no-op
@@ -538,40 +491,13 @@ def _write_and_commit(enc: DataFrame, dst: str, plan: dict,
             for i in range(total_parts)
             if i not in present and i not in committed]
     _write_manifest_driver(pfs, man)
+    try:
+        _sweep_unnamed(pfs, "")
+    except OSError:
+        pass  # best-effort: readers ignore unnamed files regardless
     rep = _report(dst, plan, newly_encoded=pending_parts)
-    rep["data_path_sec"] = round(data_path_sec, 3)  # scan+shuffle+encode+write
+    rep["data_path_sec"] = round(data_path_sec, 3)
     return rep
-
-
-_ROLLUP_SUMS = ["n_rows", "n_tokens", "raw_bytes", "enc_bytes"]
-
-
-def _rollup_driver(pfs: _PlanFS, committed: set[int]) -> list:
-    """One manifest row (:class:`PLCCommit`) per data file in each
-    non-committed ``part_id=`` dir, naming the file, computed driver-side
-    with pyarrow over the file's metadata columns (the payload column is
-    never read — parquet is columnar)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    import pyarrow.compute as pc
-
-    pdirs = [(pid, rel) for pid, rel in _part_dirs(pfs)
-             if pid not in committed]
-    with ThreadPoolExecutor(max_workers=_PLAN_THREADS) as pool:
-        files = [(pid, st.path) for (pid, _), infos in zip(
-                     pdirs, pool.map(lambda t: pfs.listdir(t[1]), pdirs))
-                 for st in infos if st.path.endswith(".parquet")]
-        tables = pool.map(
-            lambda t: pfs.read_parquet(
-                t[1], _ROLLUP_SUMS + ["min_doc_id", "max_doc_id"]), files)
-        man = [PLCCommit(
-                   pid, posixpath.basename(path), tbl.num_rows,
-                   *(int(pc.sum(tbl.column(c)).as_py() or 0)
-                     for c in _ROLLUP_SUMS),
-                   pc.min(tbl.column("min_doc_id")).as_py(),
-                   pc.max(tbl.column("max_doc_id")).as_py())
-               for (pid, path), tbl in zip(files, tables)]
-    return sorted(man, key=lambda m: (m.part_id, m.file))
 
 
 def _write_manifest_driver(pfs: _PlanFS, man: list) -> None:
@@ -596,12 +522,12 @@ def _manifest_totals(dst: str) -> dict:
     pyarrow — the manifest is O(files) rows; no Spark job."""
     import pyarrow.compute as pc
 
-    man = _read_manifest(_PlanFS(dst), columns=["part_id", *_ROLLUP_SUMS])
+    man = _read_manifest(_PlanFS(dst), columns=["part_id", *_SUM_COLS])
     if man is None:
         raise FileNotFoundError(f"{dst} has no committed manifest")
     return {"parts": pc.count_distinct(man.column("part_id")).as_py(),
             **{c: int(pc.sum(man.column(c)).as_py() or 0)
-               for c in _ROLLUP_SUMS}}
+               for c in _SUM_COLS}}
 
 
 def _report(dst: str, plan: dict, newly_encoded: int) -> dict:
@@ -762,12 +688,15 @@ def _decode_on_driver(spark: SparkSession, pfs: _PlanFS, kept: list,
     # one Arrow schema for every batch (Spark's own types for this schema,
     # TimestampType as UTC instants), so the batches concatenate and
     # createDataFrame never reads a tz-naive timestamp as session-zone
-    # wall time
+    # wall time. A chunk the row filter empties is dropped: createDataFrame
+    # ships the table batch by batch, and Spark's Arrow stream reader
+    # loses every row after an empty batch (pyspark 4.1)
     target = to_arrow_schema(schema)
     tables = [pa.Table.from_batches([rb]).cast(target)
               for fc in kept
               for rb in _read_chunk_partition(
-                  PLCChunkPartition(pfs, fc.file, fc.rows, flt, keys), schema)]
+                  PLCChunkPartition(pfs, fc.file, fc.rows, flt, keys), schema)
+              if rb.num_rows]
     return spark.createDataFrame(
         pa.concat_tables(tables) if tables else target.empty_table(), schema)
 

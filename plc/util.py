@@ -16,6 +16,7 @@ from __future__ import annotations
 import functools
 import hashlib
 import os
+import sys
 import tempfile
 import zipfile
 
@@ -74,9 +75,11 @@ def _cache_zip_directories() -> None:
     17 in a pyspark 4.1 worker) re-parse its whole archive directory,
     ~200 ms CPU per task whatever its size. The wrapper re-reads only
     when the archive's ``(st_mtime_ns, st_size)`` differs from what that
-    importer last read, or when it cannot be stat'ed. Installed only
-    inside a worker and only where the stdlib method re-reads eagerly; a
-    second call does nothing.
+    importer last read, or when it cannot be stat'ed. The install stamps
+    the importers that already exist, which the current task's setup has
+    just re-read, so a new worker pays the re-read once (its first task),
+    not twice. Installed only inside a worker and only where the stdlib
+    method re-reads eagerly; a second call does nothing.
     """
     import zipimport
 
@@ -89,15 +92,23 @@ def _cache_zip_directories() -> None:
             or "_read_directory" not in code.co_names:
         return  # installed already, or this stdlib re-reads lazily
 
+    def stamp(imp):
+        try:
+            st = os.stat(imp.archive)
+        except OSError:
+            return None
+        return (st.st_mtime_ns, st.st_size)
+
     @functools.wraps(stdlib)
     def invalidate_caches(self):
-        try:
-            st = os.stat(self.archive)
-        except OSError:
-            return stdlib(self)
-        stamp = (st.st_mtime_ns, st.st_size)
-        if getattr(self, "_plc_stamp", None) != stamp:
+        now = stamp(self)
+        if now is None or getattr(self, "_plc_stamp", None) != now:
             stdlib(self)
-            self._plc_stamp = stamp
+            self._plc_stamp = now
 
     zipimport.zipimporter.invalidate_caches = invalidate_caches
+    # this task's setup has just re-read every importer that exists now
+    # (or made it since), so a new worker's next task re-reads none
+    for imp in list(sys.path_importer_cache.values()):
+        if isinstance(imp, zipimport.zipimporter):
+            imp._plc_stamp = stamp(imp)

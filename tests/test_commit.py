@@ -1,6 +1,8 @@
 """Commit-protocol and metadata-path tests: manifests become visible
-atomically (fault injection into the manifest write and the data
-write), every reader resolves committed files the same way — from the
+atomically and a failed write leaves the committed state as it was
+(fault injection into the manifest write, the encoder, the part-file
+writer after a file is closed, and gc's sweep; a zombie file landing
+after the commit), every reader resolves committed files the same way — from the
 manifest's named files alone, with no part-dir listing — also for stores
 with empty parts, multi-file parts and stray files, a manifest that
 names no files is refused, read errors surface instead of being
@@ -109,12 +111,7 @@ def test_pipeline_manifest_fault_keeps_old_state_and_resume_converges(
 
         # partial commit: keep parts 0-1 committed, the rest is data on
         # disk without a manifest row; the resumed commit then fails
-        man = _read_manifest(_PlanFS(dst))
-        for f in _visible_manifests(dst):
-            os.remove(f)
-        pq.write_table(man.filter(pc.less(man.column("part_id"), 2)),
-                       os.path.join(dst, "_manifest", "parts",
-                                    "manifest-partial.parquet"))
+        _commit_only_parts_below(dst, 2)
         old = _rows(spark, dst)
         assert 0 < len(old) < len(want)
         with monkeypatch.context() as m:
@@ -338,6 +335,60 @@ def _data_files(dst):
             for dp, _, fs in os.walk(os.path.join(dst, "data")) for f in fs}
 
 
+def _sidecar(path):
+    d, name = os.path.split(path)
+    return os.path.join(d, f".{name}.crc")
+
+
+def _plant_crc(spark, path):
+    """Rewrite ``path`` through Hadoop's checksummed local filesystem,
+    which leaves the valid ``.<name>.crc`` sidecar that Spark's parquet
+    sink wrote next to each data file of older ``encode`` stores."""
+    jvm = spark._jvm
+    with open(path, "rb") as f:
+        data = f.read()
+    fs = jvm.org.apache.hadoop.fs.FileSystem.getLocal(
+        spark._jsc.hadoopConfiguration())
+    out = fs.create(jvm.org.apache.hadoop.fs.Path(path), True)
+    out.write(bytearray(data))
+    out.close()
+    assert os.path.exists(_sidecar(path))
+
+
+def _named_files(dst):
+    man = _read_manifest(_PlanFS(dst))
+    return {os.path.join(dst, "data", f"part_id={pid}", f)
+            for pid, f in zip(man.column("part_id").to_pylist(),
+                              man.column("file").to_pylist()) if f}
+
+
+def _chunk_digests(dst):
+    """md5 of every committed chunk's payload, stats and bloom, sorted."""
+    import hashlib
+
+    def md5(v):
+        return hashlib.md5(v.encode() if isinstance(v, str)
+                           else v or b"").hexdigest()
+
+    out = []
+    for f in _named_files(dst):
+        t = pq.read_table(f, columns=["payload", "stats", "bloom"])
+        out += [tuple(md5(v) for v in r) for r in zip(
+            *(t.column(c).to_pylist() for c in t.column_names))]
+    return sorted(out)
+
+
+def _commit_only_parts_below(dst, n):
+    """Rewrite the manifest to commit only parts < n: the state of a
+    store whose later parts' data was written but never committed."""
+    man = _read_manifest(_PlanFS(dst))
+    for f in _visible_manifests(dst):
+        os.remove(f)
+    pq.write_table(man.filter(pc.less(man.column("part_id"), n)),
+                   os.path.join(dst, "_manifest", "parts",
+                                "manifest-partial.parquet"))
+
+
 def test_pipeline_data_write_fault_keeps_old_state_and_resume_converges(
         spark, src_df, monkeypatch):
     """The pipeline's Spark write job fails part-way (the encoder raises
@@ -356,12 +407,7 @@ def test_pipeline_data_write_fault_keeps_old_state_and_resume_converges(
         want = _rows(spark, clean)
         # old state: parts 0-1 committed, parts 2-3 never were
         encode(spark, src_df, dst, cfg)
-        man = _read_manifest(_PlanFS(dst))
-        for f in _visible_manifests(dst):
-            os.remove(f)
-        pq.write_table(man.filter(pc.less(man.column("part_id"), 2)),
-                       os.path.join(dst, "_manifest", "parts",
-                                    "manifest-partial.parquet"))
+        _commit_only_parts_below(dst, 2)
         old = _rows(spark, dst)
         assert 0 < len(old) < len(want)
 
@@ -422,11 +468,15 @@ def test_stray_file_in_committed_pipeline_part_is_invisible_and_gc_reclaims_it(
                PipelineConfig(num_partitions=4, straggler_parts=0),
                mode="overwrite")
         want = _rows(spark, dst)
-        before = _data_files(dst)
-        assert any(f.endswith(".parquet.crc") for f in before)
         pdir = os.path.join(dst, "data", "part_id=1")
+        named = glob.glob(os.path.join(pdir, "*.parquet"))[0]
+        # a store encoded through Spark's parquet sink has a checksum
+        # sidecar next to each data file
+        _plant_crc(spark, named)
+        before = _data_files(dst)
+        assert _sidecar(named) in before
         stray = os.path.join(pdir, "part-zombie.parquet")
-        shutil.copy(glob.glob(os.path.join(pdir, "*.parquet"))[0], stray)
+        shutil.copy(named, stray)
         past = time.time() - 7200
         for f in before | {stray}:  # every file past gc's grace period
             os.utime(f, (past, past))
@@ -544,3 +594,180 @@ def test_point_lookup_planning_lists_no_part_dir(spark, src_df,
             assert not [r for r in seen if "part_id=" in r], seen
     finally:
         shutil.rmtree(work, ignore_errors=True)
+
+
+def test_part_writer_crash_after_file_keeps_old_state_and_resume_converges(
+        spark, src_df, monkeypatch):
+    """A resumed encode's task crashes right after its part writer closed
+    part 3's file: decode, format("plc") and checksum verify see the old
+    state, no file of the failed job is left, and encode(resume=True)
+    then reaches the clean run's bytes, rows and chunks."""
+    from plc import pipeline
+
+    cfg = PipelineConfig(num_partitions=4, straggler_parts=0)
+    work = tempfile.mkdtemp(prefix="plc_writerfault_")
+    clean, dst = work + "/clean", work + "/store"
+    try:
+        clean_rep = encode(spark, src_df, clean, cfg)
+        want = _rows(spark, clean)
+        # old state: parts 0-2 committed; part 3's data is on disk from
+        # an attempt that never committed, so only part 3 is pending
+        encode(spark, src_df, dst, cfg)
+        _commit_only_parts_below(dst, 3)
+        old = _rows(spark, dst)
+        assert 0 < len(old) < len(want)
+        before = _data_files(dst)
+
+        real = pipeline._write_part_files
+
+        def failing(pfs, rel, jobid, rows):
+            for m in real(pfs, rel, jobid, rows):
+                yield m
+                if m.part_id == 3:
+                    raise RuntimeError("injected part-writer fault")
+
+        with monkeypatch.context() as m:
+            m.setattr(pipeline, "_write_part_files", failing)
+            with pytest.raises(Exception, match="injected part-writer"):
+                encode(spark, src_df, dst, cfg, resume=True)
+        assert _data_files(dst) == before  # no file of the failed job
+        assert [os.path.basename(f) for f in _visible_manifests(dst)] == \
+            ["manifest-partial.parquet"]
+        assert _rows(spark, dst) == old
+        register(spark)
+        assert spark.read.format("plc").load(dst).count() == len(old)
+        res = verify(spark, src_df, dst, sample_parts=1.0)
+        assert res["mismatches"] == 0 and res["rows_decoded"] == len(old)
+
+        rep = encode(spark, src_df, dst, cfg, resume=True)
+        assert rep["enc_bytes"] == clean_rep["enc_bytes"]
+        assert rep["rows"] == clean_rep["rows"]
+        assert _rows(spark, dst) == want
+        assert _chunk_digests(dst) == _chunk_digests(clean)
+        # the uncommitted attempt's part-3 file is swept at commit
+        assert _data_files(dst) == _named_files(dst)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def test_zombie_file_after_commit_is_invisible_and_gc_removes_only_it(
+        spark, src_df):
+    """A task attempt of another job that finishes after the commit
+    lands a file with a foreign job id in a committed part dir: every
+    reader ignores it and gc(grace_sec=0) removes it and nothing else."""
+    import plc
+    from plc.datasource import store_agg
+
+    dst = tempfile.mkdtemp(prefix="plc_zombie_")
+    try:
+        encode(spark, src_df, dst,
+               PipelineConfig(num_partitions=4, straggler_parts=0),
+               mode="overwrite")
+        want = _rows(spark, dst)
+        before = _data_files(dst)
+        assert before == _named_files(dst)
+        pdir = os.path.join(dst, "data", "part_id=1")
+        zombie = os.path.join(pdir, "part-00001-0123456789ab-ba9876543210"
+                                    ".parquet")
+        shutil.copy(glob.glob(os.path.join(pdir, "*.parquet"))[0], zombie)
+
+        assert _rows(spark, dst) == want
+        register(spark)
+        assert spark.read.format("plc").load(dst).count() == len(want)
+        assert store_agg(spark, dst).collect()[0]["n_rows"] == len(want)
+        assert verify(spark, src_df, dst)["mismatches"] == 0
+
+        assert plc.gc(dst, grace_sec=0)["removed"] == [zombie]
+        assert _data_files(dst) == before
+        assert _rows(spark, dst) == want
+    finally:
+        shutil.rmtree(dst, ignore_errors=True)
+
+
+@pytest.mark.parametrize("fault", [OSError, RuntimeError],
+                         ids=["io_error", "crash"])
+def test_gc_stopped_mid_sweep_keeps_store_and_rerun_finishes(
+        spark, src_df, monkeypatch, fault):
+    """gc's delete_file fails after k deletions — an IO error gc steps
+    over, or a crash that stops it: the store still reads exactly, and a
+    second gc removes every remaining unnamed file and the uncommitted
+    part dir."""
+    import pyarrow.fs as pafs
+
+    import plc
+
+    dst = tempfile.mkdtemp(prefix="plc_gcfault_")
+    try:
+        encode(spark, src_df, dst,
+               PipelineConfig(num_partitions=4, straggler_parts=0),
+               mode="overwrite")
+        want = _rows(spark, dst)
+        named = _data_files(dst)
+        strays = []
+        for pid in (0, 2, 3, 7):
+            pdir = os.path.join(dst, "data", f"part_id={pid}")
+            os.makedirs(pdir, exist_ok=True)
+            strays.append(os.path.join(pdir, f"part-stray-{pid}.parquet"))
+            shutil.copy(sorted(named)[0], strays[-1])
+
+        deleted = []
+
+        class FailingFS(pafs.LocalFileSystem):
+            def delete_file(self, path):
+                if len(deleted) == 2:
+                    raise fault("injected delete fault")
+                super().delete_file(path)
+                deleted.append(path)
+
+        orig = _PlanFS._resolve
+
+        def resolve(self, path):
+            orig(self, path)
+            self.fs = FailingFS()
+
+        with monkeypatch.context() as m:
+            m.setattr(_PlanFS, "_resolve", resolve)
+            if fault is OSError:
+                assert len(plc.gc(dst, grace_sec=0)["removed"]) == 2
+            else:
+                with pytest.raises(RuntimeError, match="injected delete"):
+                    plc.gc(dst, grace_sec=0)
+        assert len(deleted) == 2 and set(deleted) < set(strays)
+        assert _rows(spark, dst) == want
+        register(spark)
+        assert spark.read.format("plc").load(dst).count() == len(want)
+
+        rep = plc.gc(dst, grace_sec=0)
+        assert sorted(rep["removed"]) == sorted(set(strays) - set(deleted))
+        assert _data_files(dst) == named
+        assert _part_ids_on_disk(dst) == {0, 1, 2, 3}
+        assert _rows(spark, dst) == want
+    finally:
+        shutil.rmtree(dst, ignore_errors=True)
+
+
+def test_format_overwrite_sweeps_sidecars_and_unused_part_dirs(spark,
+                                                               src_df):
+    """A format("plc") overwrite of a 6-part store whose data files have
+    Hadoop checksum sidecars (as every store encoded through Spark's
+    parquet sink has) with a 2-part write leaves no sidecar of a
+    replaced file and no part dir the new manifest does not use."""
+    dst = tempfile.mkdtemp(prefix="plc_sidecars_")
+    try:
+        encode(spark, src_df, dst,
+               PipelineConfig(num_partitions=6, straggler_parts=0),
+               mode="overwrite")
+        for f in _named_files(dst):
+            _plant_crc(spark, f)
+        assert _part_ids_on_disk(dst) == set(range(6))
+
+        register(spark)
+        (src_df.repartitionByRange(2, "doc_id").write.format("plc")
+         .mode("overwrite").save(dst))
+        assert _part_ids_on_disk(dst) == {0, 1}
+        assert _data_files(dst) == _named_files(dst)
+        assert spark.read.format("plc").load(dst).count() == 300
+        assert _rows(spark, dst) == sorted(
+            tuple(r) for r in src_df.select("doc_id", "n_tok").collect())
+    finally:
+        shutil.rmtree(dst, ignore_errors=True)

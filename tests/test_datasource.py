@@ -638,6 +638,36 @@ def test_driver_and_spark_decode_agree(spark, prune_stores, monkeypatch):
         shutil.rmtree(dst, ignore_errors=True)
 
 
+def test_driver_decode_keeps_rows_after_an_emptied_chunk(spark,
+                                                         monkeypatch):
+    """Three kept chunks in one file, the middle one emptied by the row
+    filter: the driver path returns the rows of the chunks on both sides
+    of it, like the Spark path."""
+    from plc import pipeline as P
+
+    ids = [f"d{2 * i:06d}" for i in range(300)]
+    df = spark.createDataFrame([(k, [1], 1) for k in ids],
+                               "doc_id string, tokens array<int>, n_tok int")
+    dst = tempfile.mkdtemp(prefix="plc_emptied_")
+    try:
+        encode(spark, df, dst, PipelineConfig(num_partitions=1,
+                                              straggler_parts=0,
+                                              max_chunk_values=100),
+               mode="overwrite")
+        gap = f"d{301:06d}"  # inside the middle chunk's range, not stored
+        kw = {"filters": {"doc_id": [(ids[5], ids[5]), (gap, gap),
+                                     (ids[250], ids[250])]}}
+        enc, _ = P.select_chunks(spark, dst, **kw)
+        assert enc.count() == 3
+        out = P.decode(spark, dst, **kw)
+        assert "LocalTableScan" in \
+            out._jdf.queryExecution().executedPlan().toString()
+        rows = _both_paths(spark, monkeypatch, dst, **kw)
+        assert [r["doc_id"] for r in rows] == [ids[5], ids[250]]
+    finally:
+        shutil.rmtree(dst, ignore_errors=True)
+
+
 def test_bounded_lookups_run_no_spark_job(spark, prune_stores,
                                           monkeypatch):
     """Small predicate-bounded decodes are unpacked on the driver:

@@ -326,8 +326,6 @@ def test_stats_pruning_skips_chunks(spark):
     chunks via the typed min_w/max_w columns (parquet-pushable), a source
     predicate via the stats JSON — and the row results stay exact."""
     from pyspark.sql import functions as F
-    from plc.pipeline import _data_path
-
     rows = [(f"doc-{i:06d}", [i % 97] * (10 + i // 100), 10 + i // 100,
              "alpha" if i < 1000 else "beta") for i in range(2000)]
     df = spark.createDataFrame(
@@ -337,7 +335,7 @@ def test_stats_pruning_skips_chunks(spark):
         cfg = PipelineConfig(num_partitions=8, straggler_parts=0,
                              max_chunk_values=4096)
         encode(spark, df, dst, cfg, mode="overwrite")
-        enc = spark.read.parquet(_data_path(dst))
+        enc = spark.read.parquet(os.path.join(dst, "data"))
         total_chunks = enc.count()
         assert total_chunks >= 8
 
@@ -694,9 +692,9 @@ def test_sampled_verify_and_codec_report(spark):
 def test_orphan_part_dirs_not_adopted_on_resume(spark, src_df):
     """ADVICE r5 (medium): a crashed format write leaves orphan
     data/part_id=<pid>/ dirs with task-partition pids that can exceed a
-    later encode plan's part count; encode(resume=True) pre-clean must
-    enumerate the ACTUAL dirs (not range(total_parts)) or the manifest
-    rollup silently adopts the orphan chunks as committed data."""
+    later encode plan's part count; encode(resume=True) must not adopt
+    the orphan chunks as committed data, and its commit sweeps the
+    orphan dir away."""
     import glob as _glob
     import shutil as _shutil
 

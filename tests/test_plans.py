@@ -10,9 +10,9 @@ import tempfile
 import pytest
 
 from plc import data as D
-from plc.pipeline import (PipelineConfig, build_plan, decode, encode,
-                          _make_encoder, _sbucket_col, _manifest_path,
-                          _data_path, ENC_SCHEMA_DDL)
+from plc.pipeline import (PipelineConfig, build_plan, codec_report, decode,
+                          encode, _make_encoder, _sbucket_col, _manifest_path,
+                          ENC_SCHEMA_DDL)
 
 
 @pytest.fixture(scope="module")
@@ -95,28 +95,24 @@ def test_small_bounded_decode_is_local_relation(spark, enc_dir,
 
 
 def test_manifest_rollup_reads_pruned_schema(spark, enc_dir):
-    """Metric roll-ups over the encoded table must not read the payload
-    column (ReadSchema pruning — the reason metrics live beside the blob)."""
+    """Metric roll-ups over the chunk metadata (``codec_report``) must
+    not read the payload column (ReadSchema pruning — the reason metrics
+    live beside the blob)."""
     _, dst = enc_dir
-    from pyspark.sql import functions as F
-
-    agg = (spark.read.parquet(_data_path(dst))
-           .groupBy("part_id").agg(F.sum("enc_bytes").alias("b")))
-    p = _physical(agg)
+    p = _physical(codec_report(spark, dst))
     rs = [ln for ln in p.splitlines() if "ReadSchema" in ln]
     assert rs and all("payload" not in ln for ln in rs), p
 
 
 def test_partial_aggregation_before_shuffle(spark, enc_dir):
-    """Manifest aggregation must map-side combine (partial_sum before the
-    exchange) — the partial+final agg capability from SURVEY §2 Part B."""
+    """The ``codec_report`` roll-up must map-side combine (partial
+    aggregation before the exchange) — the partial+final agg capability
+    from SURVEY §2 Part B."""
     _, dst = enc_dir
-    from pyspark.sql import functions as F
-
-    agg = (spark.read.parquet(_data_path(dst))
-           .groupBy("part_id").agg(F.sum("n_rows").alias("r")))
-    p = _physical(agg)
-    assert "partial_sum" in p or "Partial" in p, p
+    p = _physical(codec_report(spark, dst))
+    lines = p.splitlines()
+    i = next((i for i, ln in enumerate(lines) if "partial_sum" in ln), 0)
+    assert i and "Exchange" in lines[i - 1], p  # the exchange reads it
 
 
 def test_query_surface_has_no_global_windows(spark):

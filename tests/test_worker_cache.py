@@ -34,17 +34,6 @@ def build(mods):
 build(["a"])
 sys.path.insert(0, arch)
 import zpkg.a  # noqa: E402
-import plc  # noqa: E402  (installs the cache inside a worker)
-
-method = zipimport.zipimporter.invalidate_caches
-plc.util._cache_zip_directories()  # a second install must change nothing
-out = {"wrapped": hasattr(method, "__wrapped__"),
-       "same_after_second_install":
-           zipimport.zipimporter.invalidate_caches is method,
-       "importers": sum(isinstance(i, zipimport.zipimporter)
-                        and i.archive == arch
-                        for i in sys.path_importer_cache.values())}
-importlib.invalidate_caches()  # the one re-read that records the stamps
 
 reads = [0]
 stdlib_read = zipimport._read_directory
@@ -56,17 +45,34 @@ def counting(path):
 
 
 zipimport._read_directory = counting
-for _ in range(5):
+
+
+def task_setup():  # what pyspark runs before every task: its re-reads
+    before = reads[0]
     importlib.invalidate_caches()
-out["unchanged"] = reads[0]
+    return reads[0] - before
+
+
+out = {"first_task": task_setup()}  # a new worker, before import plc
+import plc  # noqa: E402  (installs the cache inside a worker)
+
+method = zipimport.zipimporter.invalidate_caches
+plc.util._cache_zip_directories()  # a second install must change nothing
+out.update({
+    "wrapped": hasattr(method, "__wrapped__"),
+    "same_after_second_install":
+        zipimport.zipimporter.invalidate_caches is method,
+    "importers": sum(isinstance(i, zipimport.zipimporter)
+                     and i.archive == arch
+                     for i in sys.path_importer_cache.values())})
+out["second_task"] = task_setup()
+out["unchanged"] = sum(task_setup() for _ in range(5))
 build(["a", "b"])
-importlib.invalidate_caches()
-out["changed"] = reads[0] - out["unchanged"]
+out["changed"] = task_setup()
 import zpkg.b  # noqa: E402
 out["new_module"] = zpkg.b.NAME
 os.unlink(arch)
-importlib.invalidate_caches()
-out["missing"] = reads[0] - out["unchanged"] - out["changed"]
+out["missing"] = task_setup()
 out["missing_files"] = [len(i._files) for i in sys.path_importer_cache.values()
                         if isinstance(i, zipimport.zipimporter)
                         and i.archive == arch]
@@ -90,6 +96,10 @@ def test_worker_rereads_zip_only_when_changed(tmp_path):
     out = _run_script(tmp_path, WORKER_ENV)
     assert out["wrapped"] and out["same_after_second_install"]
     assert out["importers"] >= 2  # the archive root and zpkg/
+    # a new worker re-reads its zips before its first task only: the
+    # install stamps them, so its second task re-reads none
+    assert out["first_task"] == out["importers"]
+    assert out["second_task"] == 0
     assert out["unchanged"] == 0
     # a rewritten archive is re-read by each of its importers, once
     assert out["changed"] == out["importers"]
@@ -104,6 +114,7 @@ def test_worker_rereads_zip_only_when_changed(tmp_path):
 def test_cache_not_installed_outside_worker(tmp_path):
     out = _run_script(tmp_path, {})
     assert not out["wrapped"] and out["same_after_second_install"]
+    assert out["first_task"] == out["second_task"] == out["importers"]
     assert out["unchanged"] == 5 * out["importers"]  # stdlib: every call
     assert out["changed"] == out["importers"]
     assert out["new_module"] == "b"
@@ -126,7 +137,7 @@ def test_reused_spark_workers_skip_zip_rereads(spark):
         reads = getattr(zipimport, "_plc_test_reads", None)
         if reads is not None:
             return reads, False
-        # the one re-read per archive a worker pays after installing
+        # re-reads only an importer made after the install (unstamped)
         importlib.invalidate_caches()
         reads = zipimport._plc_test_reads = [0]
         stdlib_read = zipimport._read_directory
