@@ -108,10 +108,9 @@ def encode_phases() -> dict:
             t_marks["build_plan"] = time.perf_counter() - t0
             return out
 
-        def wc_t(enc, dst, plan, committed, total_parts, pending_parts):
+        def wc_t(*args):
             t0 = time.perf_counter()
-            out = orig_wc(enc, dst, plan, committed, total_parts,
-                          pending_parts)
+            out = orig_wc(*args)
             t_marks["write_and_commit"] = time.perf_counter() - t0
             return out
 

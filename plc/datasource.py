@@ -49,6 +49,7 @@ from __future__ import annotations
 import json
 import os
 import posixpath
+import re
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -205,33 +206,58 @@ def _prefix_upper(prefix: str) -> str | None:
     return p[:-1] + chr(ord(p[-1]) + 1)
 
 
-def _load_plan(pfs: "_PlanFS | str", rel: str = "") -> dict:
+_PLAN_REL = posixpath.join("_manifest", "plan.json")
+_PARTS_REL = posixpath.join("_manifest", "parts")
+
+
+def _load_plan(pfs: "_PlanFS | str") -> dict:
     if isinstance(pfs, str):
         pfs = _PlanFS(pfs)
-    return pfs.read_json(posixpath.join(rel, "_manifest", "plan.json"))
+    try:
+        return pfs.read_json(_PLAN_REL)
+    except FileNotFoundError:
+        _refuse_batch_dirs(pfs)
+        raise
 
 
-# a stream batch's atomic commit marker, relative to its batch=<id> dir
-_MARKER_REL = posixpath.join("_manifest", "_STREAM_COMMITTED")
-
-
-def _committed_batch_ids(pfs: _PlanFS) -> list[int]:
-    """Batch ids under a stream root whose ATOMIC commit marker exists.
-    The sink writes the marker last; a batch whose commit stopped before
-    it is committed again by the query's replay (fresh file names, the
-    earlier attempt's files swept), so it must not be consumed early."""
-    out = []
+def _refuse_batch_dirs(pfs: _PlanFS) -> None:
+    """Raise on a stream root of the old layout: one ``batch=<id>/``
+    sub-store per microbatch and no root plan. No reader keeps that
+    layout; the stream has to be re-run into a fresh dst."""
     for st in pfs.listdir():
         name = posixpath.basename(st.path)
-        if not name.startswith("batch="):
-            continue
-        try:
-            bid = int(name.split("=", 1)[1])
-        except ValueError:
-            continue  # foreign batch= name: not ours, skip (ADVICE r6)
-        if pfs.exists(posixpath.join(name, _MARKER_REL)):
-            out.append(bid)
-    return sorted(out)
+        if re.fullmatch(r"batch=[0-9]+", name):
+            raise ValueError(
+                f"plc: {pfs.orig} is a stream root of the old layout "
+                f"({name}/ sub-stores, no root plan), which no reader "
+                f"supports any more; re-run the stream into a fresh dst "
+                f"(writeStream.format('plc') with a new checkpoint)")
+
+
+def _batch_rel(batch_id: int) -> str:
+    """Stream batch ``batch_id``'s manifest: its commit point."""
+    return posixpath.join(_PARTS_REL, f"batch-{int(batch_id)}.parquet")
+
+
+def _batch_id(path: str) -> "int | None":
+    """The stream batch id a manifest file name carries, else None."""
+    m = re.fullmatch(r"batch-([0-9]+)\.parquet", posixpath.basename(path))
+    return int(m.group(1)) if m else None
+
+
+def _batch_ids(pfs: _PlanFS) -> list[int]:
+    """The committed stream batch ids: one manifest file each."""
+    return sorted(b for b in map(_batch_id, (st.path for st in
+                                              pfs.listdir(_PARTS_REL)))
+                  if b is not None)
+
+
+def _batch_manifest(pfs: _PlanFS, batch_id: int) -> "pa.Table | None":
+    """Stream batch ``batch_id``'s manifest, or None before it commits."""
+    try:
+        return pfs.read_parquet(pfs.join(_batch_rel(batch_id)), None)
+    except FileNotFoundError:
+        return None
 
 
 # a manifest row's counters: sums over the file's chunks
@@ -255,38 +281,54 @@ def _manifest_table(msgs: list) -> "pa.Table":
                      for f in _MANIFEST_SCHEMA})
 
 
-def _read_manifest(pfs: _PlanFS, rel: str = "",
-                   columns: "list[str] | None" = None) -> "pa.Table | None":
-    """Every manifest row under ``rel`` as one table (only ``columns``,
-    when given), or None when no manifest file exists. A manifest without
-    the ``file`` column was written before every writer named its data
-    files; it cannot say which files are committed, so it raises a
-    ``ValueError`` asking to re-encode the store."""
-    tables = []
-    for st in pfs.listdir(posixpath.join(rel, "_manifest", "parts")):
-        if not st.path.endswith(".parquet"):
-            continue
-        tbl = pfs.read_parquet(st.path, None)
+def _read_manifest(pfs: _PlanFS, columns: "list[str] | None" = None,
+                   batch_ids: "list[int] | None" = None
+                   ) -> "pa.Table | None":
+    """Every manifest row as one table (only ``columns``, when given), or
+    None when no manifest file exists. ``batch_ids`` pins the read to
+    those stream batches' manifests; an id with no manifest raises
+    ``FileNotFoundError`` rather than silently narrowing the read. A
+    manifest without the ``file`` column was written before every writer
+    named its data files; it cannot say which files are committed, so it
+    raises a ``ValueError`` asking to re-encode the store."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    files = sorted(st.path for st in pfs.listdir(_PARTS_REL)
+                   if st.path.endswith(".parquet"))
+    if batch_ids is not None:
+        named = {_batch_id(f): f for f in files}
+        missing = sorted(set(batch_ids) - set(named))
+        if missing:
+            raise FileNotFoundError(
+                f"batch_ids {missing} not committed under {pfs.orig} "
+                f"(committed: {sorted(b for b in named if b is not None)})")
+        files = [named[b] for b in batch_ids]
+
+    def read(path):
+        tbl = pfs.read_parquet(path, None)
         if "file" not in tbl.column_names:
             raise ValueError(
-                f"plc: {posixpath.join(pfs.orig, rel)} has a manifest "
-                f"without the `file` column "
-                f"({posixpath.basename(st.path)}): it was written before "
-                f"every writer named its data files, so its committed "
-                f"files are unknown; re-encode the store "
+                f"plc: {pfs.orig} has a manifest without the `file` "
+                f"column ({posixpath.basename(path)}): it was written "
+                f"before every writer named its data files, so its "
+                f"committed files are unknown; re-encode the store "
                 f"(mode='overwrite')")
-        tables.append(tbl if columns is None else tbl.select(columns))
+        return tbl if columns is None else tbl.select(columns)
+
+    # one small file per stream batch: the reads fan out (pyarrow
+    # releases the GIL on I/O)
+    with ThreadPoolExecutor(max_workers=_PLAN_THREADS) as pool:
+        tables = list(pool.map(read, files))
     return pa.concat_tables(tables) if tables else None
 
 
-def _committed_entries(pfs: _PlanFS, rel: str) -> "dict[int, set[str]]":
-    """Committed part_id → the names of the data files the manifest
-    lists for it (empty for a part committed by a zero-row marker only).
-    The named files are the commit point: a zombie or speculative
+def _named_entries(tbl: "pa.Table | None") -> "dict[int, set[str]]":
+    """Committed part_id → the names of the data files the manifest rows
+    ``tbl`` list for it (empty for a part committed by a zero-row marker
+    only). The named files are the commit point: a zombie or speculative
     attempt's file, or any stray file, can sit in a part dir but is
     never named here, so readers open ONLY the named files."""
     out: dict[int, set[str]] = {}
-    tbl = _read_manifest(pfs, rel, ["part_id", "file"])
     if tbl is None:
         return out
     for pid, fn in zip(tbl.column("part_id").to_pylist(),
@@ -297,66 +339,32 @@ def _committed_entries(pfs: _PlanFS, rel: str) -> "dict[int, set[str]]":
     return out
 
 
-def _store_roots(pfs: _PlanFS, path: str,
-                 batch_ids: "str | None" = None) -> list[str]:
-    """Sub-store roots of a destination: [""] for a plain store, the
-    committed ``batch=<id>`` dirs for a stream root. Raises when the path
-    is neither. ``batch_ids`` (the reader option: comma-separated ids)
-    PINS the batch set — the scan covers exactly those batches even if
-    more commit between planning calls, which is what a race-free
-    compact→expire cycle needs; an id that is not committed raises
-    rather than silently narrowing the scan."""
-    if pfs.exists(posixpath.join("_manifest", "plan.json")):
-        if batch_ids is not None:
-            raise ValueError(
-                f"{path} is a plain plc store; the batch_ids option "
-                f"applies to stream roots only")
-        return [""]
-    committed = _committed_batch_ids(pfs)
-    if batch_ids is not None:
-        want = sorted({int(b) for b in str(batch_ids).split(",") if b != ""})
-        missing = [b for b in want if b not in set(committed)]
-        if missing:
-            raise FileNotFoundError(
-                f"batch_ids {missing} not committed under {path} "
-                f"(committed: {committed})")
-        committed = want
-    roots = [f"batch={bid}" for bid in committed]
-    if not roots:
-        raise FileNotFoundError(
-            f"{path} is neither a plc store (_manifest/plan.json) "
-            f"nor a stream root with committed batch=<id> stores")
-    return roots
-
-
-def _part_dirs(pfs: _PlanFS, rel: str = "") -> list[tuple[int, str]]:
-    """(part_id, store-relative path) of every ``<rel>/data/part_id=*``
-    dir; a foreign ``part_id=`` name gets id -1 (never committed)."""
+def _part_dirs(pfs: _PlanFS) -> list[tuple[int, str]]:
+    """(part_id, store-relative path) of every ``data/part_id=*`` dir; a
+    foreign ``part_id=`` name gets id -1 (never committed)."""
     out = []
-    for st in pfs.listdir(posixpath.join(rel, "data")):
+    for st in pfs.listdir("data"):
         name = posixpath.basename(st.path)
         if name.startswith("part_id="):
             try:
                 pid = int(name.split("=", 1)[1])
             except ValueError:
                 pid = -1
-            out.append((pid, posixpath.join(rel, "data", name)))
+            out.append((pid, posixpath.join("data", name)))
     return out
 
 
-def _committed_data_files(pfs: _PlanFS, roots: list[str],
-                          pool) -> list[str]:
-    """Full paths of every COMMITTED encoded parquet file under the given
-    roots: exactly the files the manifests name, with no dir listing (an
-    orphan from a zombie or losing speculative attempt in the same dir
-    is invisible, and planning costs no listdir round-trip per part)."""
-    files: list[str] = []
-    for rel, entries in zip(roots, pool.map(
-            lambda r: _committed_entries(pfs, r), roots)):
-        for pid, names in entries.items():
-            pdir = pfs.join(rel, "data", f"part_id={pid}")
-            files.extend(posixpath.join(pdir, f) for f in sorted(names))
-    return files
+def _committed_data_files(pfs: _PlanFS,
+                          batch_ids: "list[int] | None" = None) -> list[str]:
+    """Full paths of every COMMITTED encoded parquet file (of the stream
+    batches ``batch_ids`` only, when given): exactly the files the
+    manifests name, with no dir listing (an orphan from a zombie or
+    losing speculative attempt in the same dir is invisible, and planning
+    costs no listdir round-trip per part)."""
+    entries = _named_entries(_read_manifest(pfs, ["part_id", "file"],
+                                            batch_ids))
+    return [pfs.join("data", f"part_id={pid}", f)
+            for pid, names in entries.items() for f in sorted(names)]
 
 
 # temporal chunk-stat pruning: values are "multiply a raw stat in this
@@ -629,18 +637,16 @@ class PLCDataSource(DataSource):
     def schema(self) -> StructType:
         if self._view() == "chunks":
             return _chunks_view_schema()
-        pfs = _PlanFS(self._path())
-        if pfs.exists(posixpath.join("_manifest", "plan.json")):
-            return StructType.fromJson(_load_plan(pfs)["schema"])
-        # stream root (writeStream.format("plc") output): batch=<id>
-        # sub-stores, each a complete store — schema from the first one
-        for bid in _committed_batch_ids(pfs):
-            rel = f"batch={bid}"
-            if pfs.exists(posixpath.join(rel, "_manifest", "plan.json")):
-                return StructType.fromJson(_load_plan(pfs, rel)["schema"])
-        raise FileNotFoundError(
-            f"{self._path()} is neither a plc store (_manifest/plan.json) "
-            f"nor a stream root with committed batch=<id> stores")
+        return StructType.fromJson(_load_plan(self._path())["schema"])
+
+    def _pinned_batches(self) -> "list[int] | None":
+        """The ``batch_ids`` option (comma-separated stream batch ids):
+        PINS a scan to exactly those batches even if more commit between
+        planning calls, which is what a race-free compact→expire cycle
+        needs."""
+        opt = self.options.get("batch_ids")
+        return None if opt is None else sorted(
+            {int(b) for b in str(opt).split(",") if b != ""})
 
     def reader(self, schema: StructType) -> "DataSourceReader":
         if self._view() == "chunks":
@@ -652,10 +658,9 @@ class PLCDataSource(DataSource):
                     "'data' view only; filter the chunks view with normal "
                     "DataFrame predicates on its metadata columns")
             return PLCChunksReader(self._path(), schema,
-                                   self.options.get("batch_ids"))
-        return PLCReader(self._path(), schema,
-                         self.options.get("filters"),
-                         self.options.get("batch_ids"))
+                                   self._pinned_batches())
+        return PLCReader(self._path(), schema, self.options.get("filters"),
+                         self._pinned_batches())
 
     def writer(self, schema: StructType, overwrite: bool) -> "PLCWriter":
         return PLCWriter(self._path(), schema, overwrite,
@@ -697,23 +702,11 @@ class PLCReader(DataSourceReader):
 
     def __init__(self, path: str, schema: StructType,
                  filters_opt: "str | None" = None,
-                 batch_ids: "str | None" = None):
+                 batch_ids: "list[int] | None" = None):
         self.schema = schema  # Spark's PRUNED projection
         self.pfs = _PlanFS(path)
-        self.roots = _store_roots(self.pfs, path, batch_ids)
-        self.plan = _load_plan(self.pfs, self.roots[0])
-        # a stream root whose batches diverge in schema or weight column
-        # would be silently mispruned/misread under roots[0]'s plan —
-        # reject it instead (batches come from one stream query's schema,
-        # so divergence means a corrupted or hand-mixed root)
-        for rel in self.roots[1:]:
-            p = _load_plan(self.pfs, rel)
-            if p["schema"] != self.plan["schema"] or \
-                    p.get("weight_col") != self.plan.get("weight_col"):
-                raise ValueError(
-                    f"stream root {path}: {rel} has a different plan "
-                    f"schema/weight_col than {self.roots[0] or 'the root'};"
-                    f" refusing to union divergent batch stores")
+        self.batch_ids = batch_ids
+        self.plan = _load_plan(self.pfs)
         self.planner = ChunkPlanner(self.plan)
         self.col_types = self.planner.col_types
         self.opt_ranges: dict[str, list[tuple]] = {}
@@ -793,8 +786,8 @@ class PLCReader(DataSourceReader):
         # the planner did not open is sized from its parquet footer
         from concurrent.futures import ThreadPoolExecutor
 
+        files = _committed_data_files(self.pfs, self.batch_ids)
         with ThreadPoolExecutor(max_workers=_PLAN_THREADS) as pool:
-            files = _committed_data_files(self.pfs, self.roots, pool)
             kept = self.planner.plan(self.pfs, files, pool)
             rows = list(pool.map(
                 lambda fc: fc.rows if fc.rows is not None
@@ -838,22 +831,19 @@ class PLCChunksReader(DataSourceReader):
     - per-column null counts ride in the ``stats`` JSON
       (``get_json_object(stats, '$.col.nulls')``) → count(col).
 
-    Works on plain stores and stream roots (union of committed batches);
-    committed-parts isolation is identical to the data view."""
+    A stream root is a store like any other (every committed batch's
+    files); committed-files isolation is identical to the data view."""
 
     def __init__(self, path: str, schema: StructType,
-                 batch_ids: "str | None" = None):
+                 batch_ids: "list[int] | None" = None):
         self.schema = schema  # Spark's PRUNED projection
         self.pfs = _PlanFS(path)
-        self.roots = _store_roots(self.pfs, path, batch_ids)
+        _load_plan(self.pfs)  # raises unless the path is a store
+        self.batch_ids = batch_ids
 
     def partitions(self):
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=_PLAN_THREADS) as pool:
-            files = _committed_data_files(self.pfs, self.roots, pool)
         out = []
-        for f in files:
+        for f in _committed_data_files(self.pfs, self.batch_ids):
             pdir = posixpath.basename(posixpath.dirname(f))
             out.append(PLCChunksPartition(
                 self.pfs, f, int(pdir.split("=")[1])))
@@ -1001,39 +991,34 @@ def _read_chunk_partition(partition: PLCChunkPartition | None,
 
 class PLCStreamReader(DataSourceStreamReader):
     """``spark.readStream.format("plc")`` over a stream root written by
-    ``df.writeStream.format("plc")``: every newly COMMITTED ``batch=<id>``
-    sub-store (commit marker present — in-flight/crashed batches stay
-    invisible) becomes input of the next micro-batch, decoded
-    executor-side through the same chunk partitions as the batch reader.
-    Offsets are the max committed batch id, so restart/replay is exact."""
+    ``df.writeStream.format("plc")``: every newly COMMITTED batch (its
+    ``_manifest/parts/batch-<id>.parquet`` present — in-flight or crashed
+    batches stay invisible) becomes input of the next micro-batch,
+    planned by one :class:`PLCReader` pinned to those batch ids and
+    decoded executor-side through the same chunk partitions. Offsets are
+    the max committed batch id, so restart/replay is exact."""
 
     def __init__(self, path: str, schema: StructType):
         self.path = path
         self.schema = schema
 
-    def _committed_ids(self) -> list[int]:
-        return _committed_batch_ids(_PlanFS(self.path))
-
     def initialOffset(self) -> dict:
         return {"last": -1}
 
     def latestOffset(self) -> dict:
-        ids = self._committed_ids()
+        ids = _batch_ids(_PlanFS(self.path))
         return {"last": ids[-1] if ids else -1}
 
     def partitions(self, start: dict, end: dict):
-        parts: list[PLCChunkPartition] = []
-        for bid in self._committed_ids():
-            if start["last"] < bid <= end["last"]:
-                bpath = posixpath.join(self.path, f"batch={bid}")
-                parts.extend(PLCReader(bpath, self.schema).partitions())
-        return parts
+        ids = [b for b in _batch_ids(_PlanFS(self.path))
+               if start["last"] < b <= end["last"]]
+        return PLCReader(self.path, self.schema, batch_ids=ids).partitions()
 
     def read(self, partition: PLCChunkPartition):
         yield from _read_chunk_partition(partition, self.schema)
 
     def commit(self, end: dict) -> None:
-        pass  # batch dirs are the durable record; nothing to release
+        pass  # batch manifests are the durable record; nothing to release
 
     def stop(self) -> None:
         pass
@@ -1131,12 +1116,12 @@ class PLCWriter(_StoreWriter, DataSourceArrowWriter):
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
-        return _encode_task_partition(self.pfs, "", pid, self.jobid,
-                                      self.wcol, self.max_vals, iterator)
+        return _encode_task_partition(self.pfs, pid, self.jobid, self.wcol,
+                                      self.max_vals, iterator)
 
     def commit(self, messages) -> None:
         msgs = [m for m in messages if m is not None]
-        _commit_store(self.pfs, "", msgs, self.wcol, self.schema)
+        _commit_store(self.pfs, msgs, self.wcol, self.schema)
 
     def abort(self, messages) -> None:
         # no new manifest was committed, so this job's files are
@@ -1149,17 +1134,16 @@ class PLCWriter(_StoreWriter, DataSourceArrowWriter):
             except OSError:
                 pass
             return
-        _delete_job_files(self.pfs, "", self.jobid)
+        _delete_job_files(self.pfs, self.jobid)
 
 
-def _encode_task_partition(pfs: _PlanFS, rel: str, pid: int, jobid: str,
-                           wcol: str, max_vals: int, iterator) -> "PLCCommit":
+def _encode_task_partition(pfs: _PlanFS, pid: int, jobid: str, wcol: str,
+                           max_vals: int, iterator) -> "PLCCommit":
     """Executor side of a format write (batch AND streaming): pack the
     task's Arrow batches into codec chunks of about ``max_vals`` weight
     (one logical part per task) and write them through
-    :func:`_write_part_files` into ONE file of
-    ``<rel>/data/part_id=<pid>/``; its manifest row, or a zero-row
-    marker when the task got no rows."""
+    :func:`_write_part_files` into ONE file of ``data/part_id=<pid>/``;
+    its manifest row, or a zero-row marker when the task got no rows."""
     import pyarrow.compute as pc
 
     from plc.chunk import EncodeConfig, enc_row
@@ -1180,15 +1164,15 @@ def _encode_task_partition(pfs: _PlanFS, rel: str, pid: int, jobid: str,
         if buf:
             yield enc_row(buf, cfg, pid, chunk_idx, wsum, wcol)
 
-    return next(_write_part_files(pfs, rel, jobid, chunks()),
+    return next(_write_part_files(pfs, jobid, chunks()),
                 PLCCommit(pid, None, 0, 0, 0, 0, 0, None, None))
 
 
-def _write_part_files(pfs: _PlanFS, rel: str, jobid: str, rows):
+def _write_part_files(pfs: _PlanFS, jobid: str, rows):
     """The one part-file writer, run in every writer's tasks: each run
     of one part in the enc rows ``rows`` (:func:`plc.chunk.enc_row`)
     goes into one new file ``part-<pid>-<jobid>-<uuid>.parquet``
-    STRAIGHT in ``<rel>/data/part_id=<pid>/`` (pyarrow.fs: object
+    STRAIGHT in ``data/part_id=<pid>/`` (pyarrow.fs: object
     stores have no atomic rename to lean on), in row groups of
     :data:`_CHUNKS_PER_PART` chunks so sliced readers touch only their
     own chunks' bytes (:func:`_read_selected`); yields one
@@ -1207,7 +1191,7 @@ def _write_part_files(pfs: _PlanFS, rel: str, jobid: str, rows):
     schema = _ENC_ARROW_SCHEMA.remove(0)  # part_id is the directory
     for pid, run in itertools.groupby(
             rows, key=lambda r: r.column("part_id")[0].as_py()):
-        pdir = pfs.join(rel, "data", f"part_id={pid}")
+        pdir = pfs.join("data", f"part_id={pid}")
         pfs.fs.create_dir(pdir, recursive=True)
         name = f"part-{pid:05d}-{jobid}-{uuid.uuid4().hex[:12]}.parquet"
         metas = []
@@ -1226,21 +1210,25 @@ def _write_part_files(pfs: _PlanFS, rel: str, jobid: str, rows):
                         pc.max(meta["max_doc_id"]).as_py())
 
 
-def _delete_job_files(pfs: _PlanFS, rel: str, jobid: str) -> None:
-    """A failed write's abort, best-effort: delete every data file under
-    ``rel`` whose name carries ``jobid``, and nothing else. A task Spark
-    is still killing may finish its file after this; that file is
-    unnamed too, so the next commit's sweep or :func:`gc` reclaims it."""
+def _delete_job_files(pfs: _PlanFS, tag: str,
+                      keep: "set[str] | frozenset" = frozenset()) -> None:
+    """A failed write's abort, and a stream batch's commit, best-effort:
+    delete every data file whose name carries ``tag`` (a job id, or a
+    stream batch's ``-b<id>-``) and is not in ``keep``, and nothing
+    else. A task Spark is still killing may finish its file after this;
+    that file is unnamed too, so a later sweep or :func:`gc` reclaims
+    it."""
     try:
-        for _, prel in _part_dirs(pfs, rel):
+        for _, prel in _part_dirs(pfs):
             for fi in pfs.listdir(prel):
-                if jobid in posixpath.basename(fi.path):
+                name = posixpath.basename(fi.path)
+                if tag in name and name not in keep:
                     pfs.fs.delete_file(fi.path)
     except OSError:
         pass
 
 
-def _commit_store(pfs: _PlanFS, rel: str, msgs: list, wcol: str,
+def _commit_store(pfs: _PlanFS, msgs: list, wcol: str,
                   schema: StructType) -> None:
     """Driver side of a format write. Order matters (VERDICT r5 —
     overwrite-in-place must never leave "neither old nor new data"):
@@ -1272,40 +1260,67 @@ def _commit_store(pfs: _PlanFS, rel: str, msgs: list, wcol: str,
     # the commit point: readers open exactly the named files and
     # nothing else in the part dirs
     man = _manifest_table(msgs)
-    parts_rel = posixpath.join(rel, "_manifest", "parts")
-    stale = [st.path for st in pfs.listdir(parts_rel)
+    stale = [st.path for st in pfs.listdir(_PARTS_REL)
              if st.path.endswith(".parquet")
              and posixpath.basename(st.path) != "manifest-0.parquet"]
-    pfs.write_atomic(posixpath.join(parts_rel, "manifest-0.parquet"),
+    pfs.write_atomic(posixpath.join(_PARTS_REL, "manifest-0.parquet"),
                      lambda f: pq.write_table(man, f))
     for path in stale:
         pfs.fs.delete_file(path)
-    pfs.write_atomic(posixpath.join(rel, "_manifest", "plan.json"),
+    pfs.write_atomic(_PLAN_REL,
                      lambda f: f.write(json.dumps(plan).encode("utf-8")))
     # reclaim every data file the new manifest does not name: the
     # replaced generation's files and sidecars, losing attempts' files
     try:
-        _sweep_unnamed(pfs, rel)
+        _sweep_unnamed(pfs, committed=_named_entries(man))
     except OSError:
         pass  # best-effort: readers ignore unnamed files regardless
 
 
 class PLCStreamWriter(_StoreWriter, DataSourceStreamArrowWriter):
     """``df.writeStream.format("plc").option("checkpointLocation", ...)
-    .start(dst)`` — the stream sink: each microbatch becomes a
-    ``batch=<id>/`` sub-store (plan + file-naming manifest + atomic
-    ``_STREAM_COMMITTED`` marker), which decode_stream,
-    ``spark.readStream.format("plc")`` and the batch reader's stream-root
-    union all consume.
+    .start(dst)`` — the stream sink. ``dst`` is one store: the first
+    commit writes its ``_manifest/plan.json`` (marked ``"writer":
+    "stream"``), each microbatch's tasks write their part files into its
+    ``data/part_id=<pid>/`` and batch N commits by atomically writing
+    ``_manifest/parts/batch-<N>.parquet``, which names them. Every reader
+    of a store (the format reader, ``decode``, ``verify``, ``store_agg``,
+    ``spark.readStream.format("plc")``) reads it unchanged.
 
     Tasks learn their microbatch id from the ``streaming.sql.batchId``
     task-local property (set by Spark's MicroBatchExecution on every sink
-    job) and write straight into the batch sub-store through pyarrow.fs —
-    URI-capable and rename-free like the batch writer. Exactly-once: the
-    marker is written only after commit() persists the manifest; a batch
-    replayed after a crash rewrites its sub-store (new file names, same
-    content), commit re-sweeps and re-names files, and readers gate on
-    the marker, so partial batches are never visible."""
+    job) and tag their file names with it (``part-<pid>-b<N>-<jobid>-
+    <uuid>.parquet``), so a batch's files are found by name even after a
+    driver restart changed the job id. Exactly-once: a batch is visible
+    only once its manifest exists; a batch replayed after a crash writes
+    fresh files, and its commit keeps an existing manifest (and the
+    files it names) when the content fingerprints match. The commit, a
+    replay and :meth:`abort` all end the same way: they delete the
+    batch's tagged files its manifest does not name.
+
+    Spark builds a fresh writer in a fresh Python worker for every
+    commit, so the writer holds no state across batches, and a commit
+    reads no manifest but its own batch's. A query whose schema or
+    weight column differs from the root's plan, or a dst that another
+    writer made, is refused here, before any task runs."""
+
+    def __init__(self, path: str, schema: StructType, max_chunk_values):
+        super().__init__(path, schema, max_chunk_values)
+        self.plan = {"schema": schema.jsonValue(), "weight_col": self.wcol,
+                     # the marker that refuses encode(resume=True)
+                     "writer": "stream"}
+        try:
+            root_plan = _load_plan(self.pfs)
+        except FileNotFoundError:
+            root_plan = None
+        if root_plan not in (None, self.plan):
+            raise ValueError(
+                f"plc stream sink: {path} holds a store whose plan "
+                f"(writer {root_plan.get('writer', 'encode')!r}, schema, "
+                f"weight column) differs from this query's; a stream "
+                f"root takes one schema from one stream — write to a "
+                f"fresh dst")
+        self.has_plan = root_plan is not None
 
     def write(self, iterator):
         from pyspark import TaskContext
@@ -1316,94 +1331,80 @@ class PLCStreamWriter(_StoreWriter, DataSourceStreamArrowWriter):
             raise RuntimeError(
                 "plc stream sink: task has no streaming.sql.batchId "
                 "local property — not running under MicroBatchExecution?")
-        return _encode_task_partition(self.pfs, f"batch={int(bid)}",
-                                      tc.partitionId(), self.jobid,
-                                      self.wcol, self.max_vals, iterator)
+        return _encode_task_partition(self.pfs, tc.partitionId(),
+                                      f"b{int(bid)}-{self.jobid}", self.wcol,
+                                      self.max_vals, iterator)
 
     def commit(self, messages, batchId: int) -> None:
         msgs = [m for m in messages if m is not None]
-        rel = f"batch={batchId}"
-        marker = posixpath.join(rel, _MARKER_REL)
-        if self.pfs.exists(marker):
+        committed = _batch_manifest(self.pfs, batchId)
+        if committed is None:
+            if not self.has_plan:
+                self.pfs.write_atomic(_PLAN_REL, lambda f: f.write(
+                    json.dumps(self.plan).encode("utf-8")))
+            committed = _manifest_table(msgs)
+            self.pfs.write_atomic(_batch_rel(batchId),
+                                  lambda f: pq.write_table(committed, f))
+        else:
             # a COMMITTED batch is immutable — readers may already have
             # consumed it. Two ways to get here: (a) Spark replays batch
             # N after a crash between sink commit and its checkpoint
             # write — same offsets, same rows, so keeping the original
-            # files IS exactly-once; sweep only this attempt's fresh
-            # orphans. (b) a NEW stream (fresh checkpoint) pointed at a
-            # dst holding an older stream's batches — overwriting would
-            # silently destroy committed data, so refuse loudly unless
-            # the content FINGERPRINT matches a genuine replay: per-part
-            # (rows, tokens, chunk count, doc_id min/max) — total_rows
-            # alone is not enough, rate-limited sources produce
-            # constant-size batches routinely (review finding r5).
-            old_tbl = _read_manifest(self.pfs, rel)
-            old_fp = sorted(zip(*(old_tbl.column(c).to_pylist() for c in
-                                  ("part_id", "n_chunks", "n_rows",
-                                   "n_tokens", "min_doc_id",
-                                   "max_doc_id"))))
-            new_fp = sorted((m.part_id, m.n_chunks, m.n_rows, m.n_tokens,
-                             m.min_doc_id, m.max_doc_id) for m in msgs)
+            # files IS exactly-once. (b) a NEW stream (fresh checkpoint)
+            # pointed at a dst holding an older stream's batches —
+            # overwriting would silently destroy committed data, so
+            # refuse loudly unless the content FINGERPRINT matches a
+            # genuine replay: per-part (rows, tokens, chunk count, doc_id
+            # min/max) — total_rows alone is not enough, rate-limited
+            # sources produce constant-size batches routinely (review
+            # finding r5).
+            cols = ("part_id", "n_chunks", "n_rows", "n_tokens",
+                    "min_doc_id", "max_doc_id")
+            old_fp = sorted(zip(*(committed.column(c).to_pylist()
+                                  for c in cols)))
+            new_fp = sorted(tuple(getattr(m, c) for c in cols)
+                            for m in msgs)
             if old_fp != new_fp:
                 raise RuntimeError(
-                    f"plc stream sink: {self.path}/{rel} is already "
-                    f"committed with different content (per-part "
-                    f"rows/tokens/doc_id-range fingerprint mismatch) — "
-                    f"{rel} belongs to a different stream (dst reuse "
-                    f"with a fresh checkpoint?). Committed batches are "
-                    f"immutable; use a fresh dst or remove the old "
-                    f"batch dirs explicitly.")
-            for m in msgs:  # drop the replay attempt's duplicate files
-                if m.file:
-                    try:
-                        self.pfs.fs.delete_file(self.pfs.join(
-                            rel, "data", f"part_id={m.part_id}", m.file))
-                    except OSError:
-                        pass
-            return
-        _commit_store(self.pfs, rel, msgs, self.wcol, self.schema)
-        # the atomic full-batch signal every reader gates on
-        self.pfs.write_atomic(marker, lambda f: f.write(b"1"))
+                    f"plc stream sink: batch {batchId} of {self.path} is "
+                    f"already committed with different content (per-part "
+                    f"rows/tokens/doc_id-range fingerprint mismatch) — it "
+                    f"belongs to a different stream (dst reuse with a "
+                    f"fresh checkpoint?). Committed batches are "
+                    f"immutable; use a fresh dst.")
+        self._drop_unnamed(batchId, committed)
 
     def abort(self, messages, batchId: int) -> None:
-        rel = f"batch={batchId}"
-        if self.pfs.exists(posixpath.join(rel, _MARKER_REL)):
-            # replay attempt of an already-committed (reader-visible)
-            # batch failed: the committed data must survive untouched —
-            # but the failed attempt's own files are invisible orphans
-            # that would otherwise leak on every failed replay; drop the
-            # ones its successful tasks named
-            for m in messages:
-                if m is not None and m.file:
-                    try:
-                        self.pfs.fs.delete_file(self.pfs.join(
-                            rel, "data", f"part_id={m.part_id}", m.file))
-                    except OSError:
-                        pass
-            return
-        # no marker: the batch dir is invisible; drop it for a clean
-        # replay
-        try:
-            self.pfs.fs.delete_dir(self.pfs.join(rel))
-        except OSError:
-            pass
+        # a batch that committed before (a failed replay) keeps its
+        # named files; everything else this batch wrote is invisible
+        self._drop_unnamed(batchId, _batch_manifest(self.pfs, batchId))
+
+    def _drop_unnamed(self, batch_id: int, man: "pa.Table | None") -> None:
+        """Delete every file tagged with batch ``batch_id`` that its
+        manifest ``man`` (None: not committed) does not name."""
+        keep = set() if man is None else set(man.column("file").to_pylist())
+        _delete_job_files(self.pfs, f"-b{int(batch_id)}-", keep)
 
 
-def _sweep_unnamed(pfs: _PlanFS, rel: str,
-                   grace_sec: float = 0.0) -> "tuple[list[str], int]":
-    """The one orphan sweep over ``<rel>/data/part_id=*``, run by every
-    commit (grace 0) and by :func:`gc`: a file the manifest names is
-    live, and so is its Hadoop checksum sidecar ``.<name>.crc`` (stores
-    encoded through Spark's parquet sink have them); any other file goes
-    once older than ``grace_sec``, and so does an uncommitted part dir
-    left empty. Returns (removed paths, files kept as too young)."""
+def _sweep_unnamed(pfs: _PlanFS, grace_sec: float = 0.0,
+                   committed: "dict[int, set[str]] | None" = None
+                   ) -> "tuple[list[str], int]":
+    """The one orphan sweep over ``data/part_id=*``, run by the batch
+    writers' commits (grace 0) and by :func:`gc`: a file the manifest
+    names (``committed``, the live ``{part_id: names}`` map, when the
+    caller has it; else read from the manifest) is live, and so is its
+    Hadoop checksum sidecar ``.<name>.crc`` (stores encoded through
+    Spark's parquet sink have them); any other file goes once older than
+    ``grace_sec``, and so does an uncommitted part dir left empty.
+    Returns (removed paths, files kept as too young)."""
     import time
 
     now = time.time()
     removed: list[str] = []
     young = 0
-    committed = _committed_entries(pfs, rel)
-    for pid, prel in _part_dirs(pfs, rel):
+    if committed is None:
+        committed = _named_entries(_read_manifest(pfs, ["part_id", "file"]))
+    for pid, prel in _part_dirs(pfs):
         names = committed.get(pid, set())
         live_names = names | {f".{n}.crc" for n in names}
         live = 0
@@ -1429,77 +1430,24 @@ def _sweep_unnamed(pfs: _PlanFS, rel: str,
 
 
 def gc(dst: str, *, grace_sec: float = 86400.0) -> dict:
-    """Reclaim invisible orphan bytes under a store or stream root:
-    data-dir files that no committed manifest names (zombie/speculative
-    attempts that finished AFTER commit's best-effort sweep, stray
-    copies — correctness is unaffected, readers never open them, but
-    their bytes were previously permanent: VERDICT r5 missing #4), plus
-    uncommitted ``batch=<id>`` dirs of a stream root (crashed batches a
-    replay never resumed). Every named file stays, and so does its
-    Hadoop checksum sidecar (``.<name>.crc``: stores that ``encode``
-    wrote through Spark's parquet sink have one per file). Pure
-    ``pyarrow.fs`` — works on any URI the readers accept, no Spark
-    session needed (:func:`_sweep_unnamed` is the rule for one store).
+    """Reclaim invisible orphan bytes under a store, a stream root
+    included: data-dir files that no committed manifest names
+    (zombie/speculative attempts that finished AFTER commit's
+    best-effort sweep, the files of a stream batch whose commit never
+    ran, stray copies — correctness is unaffected, readers never open
+    them, but their bytes were previously permanent: VERDICT r5 missing
+    #4). Every named file stays, and so does its Hadoop checksum sidecar
+    (``.<name>.crc``: stores that ``encode`` wrote through Spark's
+    parquet sink have one per file). Pure ``pyarrow.fs`` — works on any
+    URI the readers accept, no Spark session needed
+    (:func:`_sweep_unnamed` is the rule).
 
     ``grace_sec`` protects in-flight work: only files older than the
     grace period go (a write job in progress has young files; default
     24 h). Returns ``{"removed": [paths], "kept_young": n}``."""
-    import time
-
     pfs = _PlanFS(dst)
-    now = time.time()
-    removed: list[str] = []
-    kept_young = 0
-
-    def _old(info) -> bool:
-        mt = info.mtime_ns
-        return mt is not None and (now - mt / 1e9) > grace_sec
-
-    if pfs.exists(posixpath.join("_manifest", "plan.json")):
-        removed, kept_young = _sweep_unnamed(pfs, "", grace_sec)
-        return {"removed": removed, "kept_young": kept_young}
-    # stream root: committed batches sweep like stores; an UNcommitted
-    # batch dir (no marker — crashed before commit, invisible to every
-    # reader) goes entirely once all its files age past the grace
-    def _all_old(rel: str) -> bool:
-        # recursive age check: a dir is deletable only when every file
-        # under it is old (a crashed batch stops changing; an in-flight
-        # one has young files)
-        import pyarrow.fs as pafs
-
-        entries = pfs.listdir(rel)
-        if not entries:
-            return True
-        for fi in entries:
-            if fi.type == pafs.FileType.Directory:
-                if not _all_old(posixpath.join(
-                        rel, posixpath.basename(fi.path))):
-                    return False
-            elif not _old(fi):
-                return False
-        return True
-
-    committed_ids = set(_committed_batch_ids(pfs))
-    for st in pfs.listdir():
-        name = posixpath.basename(st.path)
-        if not name.startswith("batch="):
-            continue
-        try:
-            bid = int(name.split("=", 1)[1])
-        except ValueError:
-            continue  # foreign dir: not a batch, never touch it
-        if bid in committed_ids:
-            gone, young = _sweep_unnamed(pfs, name, grace_sec)
-            removed += gone
-            kept_young += young
-        elif _all_old(name):
-            try:
-                pfs.fs.delete_dir(st.path)
-                removed.append(st.path)
-            except OSError:
-                pass
-        else:
-            kept_young += 1
+    _refuse_batch_dirs(pfs)
+    removed, kept_young = _sweep_unnamed(pfs, grace_sec)
     return {"removed": removed, "kept_young": kept_young}
 
 

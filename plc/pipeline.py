@@ -50,10 +50,11 @@ from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import StructType
 
 from plc.chunk import _ENC_ARROW_SCHEMA, EncodeConfig, enc_row
-from plc.datasource import (_MANIFEST_SCHEMA, _PLAN_THREADS, _SUM_COLS,
-                            ChunkPlanner, PLCChunkPartition, PLCCommit,
-                            _PlanFS, _committed_data_files,
-                            _delete_job_files, _load_plan, _manifest_table,
+from plc.datasource import (_MANIFEST_SCHEMA, _PARTS_REL, _PLAN_REL,
+                            _PLAN_THREADS, _SUM_COLS, ChunkPlanner,
+                            PLCChunkPartition, PLCCommit, _PlanFS,
+                            _committed_data_files, _delete_job_files,
+                            _load_plan, _manifest_table, _named_entries,
                             _normalize_ranges, _read_chunk_partition,
                             _read_manifest, _sweep_unnamed, _unpack_rows,
                             _write_part_files)
@@ -96,9 +97,6 @@ class PipelineConfig:
 # --------------------------------------------------------------------------
 # plan: stats pre-pass → persisted, deterministic partition plan
 # --------------------------------------------------------------------------
-
-
-_PLAN_REL = posixpath.join("_manifest", "plan.json")
 
 
 def _manifest_path(dst: str) -> str:
@@ -348,16 +346,16 @@ def _pending_predicate(plan: dict, committed: set[int]):
 
 def _prepare_state(spark: SparkSession, df: DataFrame, dst: str,
                    cfg: PipelineConfig, resume: bool, mode: str
-                   ) -> tuple[dict, set[int]]:
+                   ) -> "tuple[dict, pa.Table | None]":
     """Head of :func:`encode`: fresh-run guard (refuses ANY prior encode
     state — a crash between data write and manifest commit leaves part
-    dirs/plan with no manifest), plan load-or-build, committed set."""
+    dirs/plan with no manifest), plan load-or-build, and on resume the
+    committed manifest rows (part_id, file and the counters), read once."""
     pfs = _PlanFS(dst)
     # only a resume reads the manifest: overwriting must work on a store
     # whose manifest no longer reads
-    has_manifest = any(
-        st.path.endswith(".parquet")
-        for st in pfs.listdir(posixpath.join("_manifest", "parts")))
+    has_manifest = any(st.path.endswith(".parquet")
+                       for st in pfs.listdir(_PARTS_REL))
     prior_state = (has_manifest or pfs.exists(_PLAN_REL)
                    or bool(pfs.listdir("data")))
     if prior_state and not resume:
@@ -372,29 +370,28 @@ def _prepare_state(spark: SparkSession, df: DataFrame, dst: str,
 
     if resume and pfs.exists(_PLAN_REL):
         plan = _load_plan(pfs)
-        if plan.get("writer") == "format":
-            # a format-written store commits every part in one job, so
-            # resume's pending-predicate reduces to lit(False): it would
-            # "succeed" while encoding zero new rows. Fail loudly
-            # instead (ADVICE r5).
+        if plan.get("writer"):
+            # a format-written store commits every part in one job and a
+            # stream root has no encode plan, so resume's pending
+            # predicate would "succeed" while encoding zero new rows (or
+            # garbage). Fail loudly instead (ADVICE r5).
             raise ValueError(
-                f"{dst} was written by df.write.format('plc') — every "
-                f"part is already committed, so resume=True has nothing "
-                f"to resume and would silently encode no rows. For "
-                f"incremental ingestion use the stream sink "
-                f"(df.writeStream.format('plc')) or encode to a fresh "
-                f"dst; to replace the store, re-write with "
+                f"{dst} was written by the {plan['writer']} writer "
+                f"(df.write/writeStream.format('plc')), not by encode, "
+                f"so resume=True has nothing to resume and would silently "
+                f"encode no rows. For incremental ingestion use the "
+                f"stream sink (df.writeStream.format('plc')) or encode to "
+                f"a fresh dst; to replace the store, re-write with "
                 f"mode('overwrite')")
     else:
         plan = build_plan(spark, df, cfg)
         pfs.write_atomic(_PLAN_REL,
                          lambda f: f.write(json.dumps(plan).encode("utf-8")))
 
-    committed: set[int] = set()
+    prior = None
     if resume and has_manifest:
-        committed = set(_read_manifest(pfs, columns=["part_id"])
-                        .column("part_id").to_pylist())
-    return plan, committed
+        prior = _read_manifest(pfs, ["part_id", "file", *_SUM_COLS])
+    return plan, prior
 
 
 def encode(spark: SparkSession, df: DataFrame, dst: str,
@@ -423,18 +420,20 @@ def encode(spark: SparkSession, df: DataFrame, dst: str,
             # chunk cap then counts rows and skew salting is a no-op
             df = df.withColumn("_w", F.lit(1))
 
-    plan, committed = _prepare_state(spark, df, dst, cfg, resume, mode)
+    plan, prior = _prepare_state(spark, df, dst, cfg, resume, mode)
+    committed = (set() if prior is None
+                 else set(prior.column("part_id").to_pylist()))
     if committed:
         df = df.filter(_pending_predicate(plan, committed))
 
     total_parts = plan["n_parts"] + plan["straggler_parts"]
     pending_parts = total_parts - len(committed)
     if pending_parts <= 0:
-        return _report(dst, plan, newly_encoded=0)
+        return _report(plan, prior, newly_encoded=0)
 
     job = _file_job(_encoder_input(df, plan, cfg), _make_encoder(plan, cfg),
                     dst)
-    return _write_and_commit(job, dst, plan, committed, total_parts,
+    return _write_and_commit(job, dst, plan, prior, committed, total_parts,
                              pending_parts)
 
 
@@ -452,7 +451,7 @@ def _file_job(placed: DataFrame, encoder, dst: str):
 
     def job(jobid: str) -> DataFrame:
         def write(batches):
-            for m in _write_part_files(pfs, "", jobid, encoder(batches)):
+            for m in _write_part_files(pfs, jobid, encoder(batches)):
                 yield _manifest_table([m]).to_batches()[0]
 
         return placed.mapInArrow(write, _MANIFEST_STRUCT)
@@ -460,14 +459,18 @@ def _file_job(placed: DataFrame, encoder, dst: str):
     return job
 
 
-def _write_and_commit(job, dst: str, plan: dict, committed: set[int],
-                      total_parts: int, pending_parts: int) -> dict:
+def _write_and_commit(job, dst: str, plan: dict, prior: "pa.Table | None",
+                      committed: set[int], total_parts: int,
+                      pending_parts: int) -> dict:
     """Tail of :func:`encode`, the format writer's commit protocol: run
     ``job`` (:func:`_file_job`) under a fresh job id, append exactly the
     manifest rows its tasks return plus a zero-row marker per planned
     part that got none (the commit point), sweep every data file the
-    manifest does not name, and report. A failed job deletes its own
-    files and re-raises, leaving the committed state as it was."""
+    manifest does not name, and report. The sweep's live set and the
+    report come from the appended rows plus ``prior`` (the manifest rows
+    a resume read), so the commit reads no manifest. A failed job
+    deletes its own files and re-raises, leaving the committed state as
+    it was."""
     import time
     import uuid
 
@@ -477,7 +480,7 @@ def _write_and_commit(job, dst: str, plan: dict, committed: set[int],
     try:
         rows = job(jobid).collect()
     except BaseException:
-        _delete_job_files(pfs, "", jobid)
+        _delete_job_files(pfs, jobid)
         raise
     data_path_sec = time.perf_counter() - t0  # scan+shuffle+encode+write
 
@@ -490,17 +493,21 @@ def _write_and_commit(job, dst: str, plan: dict, committed: set[int],
     man += [PLCCommit(i, None, 0, 0, 0, 0, 0, None, None)
             for i in range(total_parts)
             if i not in present and i not in committed]
-    _write_manifest_driver(pfs, man)
+    tbl = _manifest_table(man)
+    _write_manifest_driver(pfs, tbl)
+    if prior is not None:
+        new = tbl.select(prior.column_names)
+        tbl = pa.concat_tables([prior.cast(new.schema), new])
     try:
-        _sweep_unnamed(pfs, "")
+        _sweep_unnamed(pfs, committed=_named_entries(tbl))
     except OSError:
         pass  # best-effort: readers ignore unnamed files regardless
-    rep = _report(dst, plan, newly_encoded=pending_parts)
+    rep = _report(plan, tbl, newly_encoded=pending_parts)
     rep["data_path_sec"] = round(data_path_sec, 3)
     return rep
 
 
-def _write_manifest_driver(pfs: _PlanFS, man: list) -> None:
+def _write_manifest_driver(pfs: _PlanFS, tbl: pa.Table) -> None:
     """Append one manifest parquet file driver-side with pyarrow (no
     Spark job) under a unique name, so append semantics hold. It is
     written under a temp name and moved into place, so a failed write
@@ -509,29 +516,27 @@ def _write_manifest_driver(pfs: _PlanFS, man: list) -> None:
 
     import pyarrow.parquet as _pq
 
-    tbl = _manifest_table(man)
     pfs.write_atomic(
-        posixpath.join("_manifest", "parts",
+        posixpath.join(_PARTS_REL,
                        f"manifest-{uuid.uuid4().hex[:12]}.parquet"),
         lambda f: _pq.write_table(tbl, f))
 
 
-def _manifest_totals(dst: str) -> dict:
+def _manifest_totals(man: "pa.Table | None") -> dict:
     """Committed part count (``parts``: distinct part ids — a part can
-    have several data files) and column sums, read driver-side with
-    pyarrow — the manifest is O(files) rows; no Spark job."""
+    have several data files) and column sums of the manifest rows
+    ``man`` (part_id and the counters) — O(files) rows; no Spark job."""
     import pyarrow.compute as pc
 
-    man = _read_manifest(_PlanFS(dst), columns=["part_id", *_SUM_COLS])
     if man is None:
-        raise FileNotFoundError(f"{dst} has no committed manifest")
+        raise FileNotFoundError("the store has no committed manifest")
     return {"parts": pc.count_distinct(man.column("part_id")).as_py(),
             **{c: int(pc.sum(man.column(c)).as_py() or 0)
                for c in _SUM_COLS}}
 
 
-def _report(dst: str, plan: dict, newly_encoded: int) -> dict:
-    tot = _manifest_totals(dst)
+def _report(plan: dict, man: "pa.Table | None", newly_encoded: int) -> dict:
+    tot = _manifest_totals(man)
     raw, enc_b = tot["raw_bytes"], tot["enc_bytes"]
     return {
         "n_parts": plan["n_parts"] + plan["straggler_parts"],
@@ -600,8 +605,7 @@ def _plan_chunks(dst: str, filters: dict,
     if doc_ids is not None:
         planner.probe(doc_ids)
     with ThreadPoolExecutor(max_workers=_PLAN_THREADS) as pool:
-        kept = planner.plan(pfs, _committed_data_files(pfs, [""], pool),
-                            pool)
+        kept = planner.plan(pfs, _committed_data_files(pfs), pool)
     return pfs, plan, kept
 
 
@@ -916,7 +920,8 @@ def verify(spark: SparkSession, src: DataFrame, dst: str,
         pred = F.crc32(F.col("doc_id").cast("binary")) < thresh
         src, dec = src.filter(pred), dec.filter(pred)
     cols = [c for c in src.columns if c in dec.columns]
-    tot = _manifest_totals(dst)
+    tot = _manifest_totals(_read_manifest(_PlanFS(dst),
+                                          ["part_id", *_SUM_COLS]))
     base = {c: tot[c] for c in ("raw_bytes", "enc_bytes")}
     if method == "checksum":
         def _sig(df):

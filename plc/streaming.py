@@ -2,62 +2,51 @@
 windowed stats and cross-microbatch dedup.
 
 Stream ingest is ``df.writeStream.format("plc")`` (the sink in
-:mod:`plc.datasource`): every microbatch lands as a batch-scoped store
-``dst/batch=<id>/`` with its own plan, file-naming manifest and an atomic
-``_STREAM_COMMITTED`` marker written last. This module reads and
-maintains such stream roots:
+:mod:`plc.datasource`). A stream root is a plain store: one
+``_manifest/plan.json``, one ``data/part_id=<pid>/`` tree, and one
+manifest file ``_manifest/parts/batch-<id>.parquet`` per committed
+microbatch, written atomically as the batch's commit point and naming
+its data files. Every store reader (``format("plc")``, ``decode``,
+``verify``, ``store_agg``, :func:`plc.gc`) reads a stream root as it
+is; this module adds the per-batch view:
 
-- :func:`committed_batches` — the marker-gated ``batch=<id>`` stores.
-- :func:`decode_stream` — one ``plc``-format scan over the committed
-  batch directories.
+- :func:`committed_batches` — the committed batch ids.
+- :func:`decode_stream` — one ``plc``-format scan of the root.
 - :func:`compact_stream` / :func:`expire_stream_batches` — re-encode
-  several batch dirs into one store, then drop exactly those batches.
+  several batches into one store, then drop exactly those batches.
 - :func:`windowed_token_stats` — watermarked tumbling-window aggregation
   over a streaming source (late rows beyond the watermark are dropped by
   Spark's state store; the query is a plain groupBy(window) so the same
   code runs batch or streaming).
 
-Scale notes: the number of batch directories is bounded by trigger
-cadence, and compaction is a batch re-encode of several batch dirs into
-one (the manifests make that resumable too).
+Scale notes: a batch costs a reader one small manifest read; the
+number of manifests is bounded by trigger cadence, and compaction is a
+batch re-encode of several batches into one store (the manifests make
+that resumable too).
 """
 
 from __future__ import annotations
 
-import posixpath
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from plc.datasource import _MARKER_REL, _PlanFS, _committed_batch_ids
+from plc.datasource import _PlanFS, _batch_ids, _batch_manifest, _batch_rel
 from plc.pipeline import PipelineConfig, encode
 
 
-def committed_batches(spark: SparkSession, dst: str) -> list[tuple[int, str]]:
-    """(batch_id, path) of every COMMITTED ``batch=<id>`` sub-store under
-    a stream root, sorted by id. Gates on the atomic batch marker, not
-    "some manifest file exists": the sink writes the marker after the
-    batch's manifest, and a batch whose commit failed before its marker
-    is committed again by the query's replay (fresh file names, the
-    failed attempt's files swept) — consuming it early could open files
-    that replay deletes."""
-    root = dst.rstrip("/")
-    return [(bid, f"{root}/batch={bid}")
-            for bid in _committed_batch_ids(_PlanFS(dst))]
+def committed_batches(spark: SparkSession, dst: str) -> list[int]:
+    """The ids of every COMMITTED batch under a stream root, sorted: one
+    ``_manifest/parts/batch-<id>.parquet`` each. The sink writes that
+    file atomically as the batch's commit point, so a batch whose commit
+    failed is not listed until the query's replay commits it."""
+    return _batch_ids(_PlanFS(dst))
 
 
 def decode_stream(spark: SparkSession, dst: str) -> DataFrame:
     """Read everything the ``writeStream.format("plc")`` sink committed
-    under ``dst``. ONE format-reader scan — the reader folds the
-    committed-batch union into its partition list, so the plan is O(1)
-    analyzer work instead of the previous N-way ``unionByName`` of
-    per-batch decodes (O(N) per downstream query at thousands of
-    microbatches; same fix as :func:`compact_stream`). The reader also
-    refuses schema/weight divergence across batches, which the by-name
-    union would have papered over. No emptiness pre-check: it would
-    re-list every batch dir the reader is about to list again (doubling
-    planning I/O at thousands of microbatches — ADVICE r6), and the
-    reader's own planner already raises a descriptive FileNotFoundError
-    for a root with no committed batches."""
+    under ``dst``: the root is a plain store, so this is ONE format-reader
+    scan over every committed batch's files (the schema check across
+    batches happens in the sink, which refuses a query whose schema
+    differs from the root's plan)."""
     from plc.datasource import register
 
     register(spark)
@@ -190,27 +179,22 @@ def stateful_dedup_stream(stream_df: DataFrame, *, n_buckets: int = 64,
 def compact_stream(spark: SparkSession, dst: str, out_dst: str,
                    cfg: PipelineConfig | None = None, *,
                    mode: str = "error") -> dict:
-    """Compact the per-microbatch stores under ``dst`` into ONE encode at
-    ``out_dst`` (decode → re-encode; resumable like any encode). Run it
-    periodically so reader-side batch-dir counts stay bounded.
+    """Compact the microbatches committed under ``dst`` into ONE encode
+    at ``out_dst`` (decode → re-encode; resumable like any encode). Run
+    it periodically so reader-side manifest counts stay bounded.
 
     The returned report carries ``batch_ids`` — the EXACT set of batches
     the compaction consumed, pinned BEFORE the encode starts. Pass it to
-    :func:`expire_stream_batches` to reclaim those dirs: a batch
-    committed while the compaction ran is in neither the output nor the
-    expiry set, so the compact→expire cycle is race-free against a live
+    :func:`expire_stream_batches` to reclaim them: a batch committed
+    while the compaction ran is in neither the output nor the expiry
+    set, so the compact→expire cycle is race-free against a live
     stream."""
-    batches = committed_batches(spark, dst)
-    if not batches:
+    ids = committed_batches(spark, dst)
+    if not ids:
         raise FileNotFoundError(f"no committed stream batches under {dst}")
-    ids = [bid for bid, _ in batches]
     # ONE format-reader scan pinned to the consumed ids (batch_ids
-    # option) instead of an N-way unionByName of per-batch decodes: at
-    # thousands of microbatches the union's plan alone is O(N) analyzer
-    # work per query, while the format reader folds the batch union into
-    # its partition list — and the pin keeps the cycle race-free (a
-    # batch committing mid-compaction is in neither the scan nor the
-    # expiry set)
+    # option): a batch committing mid-compaction is in neither the scan
+    # nor the expiry set
     from plc.datasource import register
 
     register(spark)
@@ -225,26 +209,28 @@ def compact_stream(spark: SparkSession, dst: str, out_dst: str,
 
 def expire_stream_batches(spark: SparkSession, dst: str,
                           batch_ids: "list[int]") -> list[int]:
-    """Retention: drop the given COMMITTED ``batch=<id>`` sub-stores
+    """Retention: drop the given COMMITTED batches of a stream root
     (normally ``compact_stream(...)["batch_ids"]`` after the compacted
     store is in place). Delete order makes the removal atomic for
-    readers: the ``_STREAM_COMMITTED`` marker goes FIRST — every reader
-    gates on it, so the batch flips to invisible in one delete — then
-    the rest of the dir is reclaimed; a crash mid-way leaves an
-    invisible remnant that a re-run finishes. Batches without a marker
-    (in-flight / already expired) are skipped. A running
-    ``readStream.format("plc")`` whose offset has passed these ids never
-    re-lists them; expiring ids at or beyond a live stream's offset
-    would lose data — expire only what was compacted. Returns the ids
-    actually removed."""
+    readers: the batch's manifest goes FIRST — every reader resolves
+    files from the manifests, so the batch flips to invisible in one
+    delete — then the data files it named are reclaimed; a crash
+    mid-way leaves invisible orphans that :func:`plc.gc` reclaims.
+    Batches without a manifest (in-flight / already expired) are
+    skipped. A running ``readStream.format("plc")`` whose offset has
+    passed these ids never reads them again; expiring ids at or beyond a
+    live stream's offset would lose data — expire only what was
+    compacted. Returns the ids actually removed."""
     pfs = _PlanFS(dst)
     removed = []
     for bid in batch_ids:
-        rel = f"batch={int(bid)}"
-        marker = posixpath.join(rel, _MARKER_REL)
-        if not pfs.exists(marker):
+        man = _batch_manifest(pfs, bid)
+        if man is None:
             continue
-        pfs.fs.delete_file(pfs.join(marker))  # the atomic visibility flip
-        pfs.fs.delete_dir(pfs.join(rel))
+        pfs.fs.delete_file(pfs.join(_batch_rel(bid)))  # the visibility flip
+        for pid, name in zip(man.column("part_id").to_pylist(),
+                             man.column("file").to_pylist()):
+            if name is not None:
+                pfs.fs.delete_file(pfs.join("data", f"part_id={pid}", name))
         removed.append(int(bid))
     return removed

@@ -13,9 +13,11 @@ re-reading every zip on its ``sys.path`` before each task.
 
 from __future__ import annotations
 
+import atexit
 import functools
 import hashlib
 import os
+import shutil
 import sys
 import tempfile
 import zipfile
@@ -39,21 +41,29 @@ def ensure_shipped(spark) -> None:
     _shipped.add(app_id)
 
 
+@functools.cache
+def _zip_dir() -> str:
+    """This process's own temp dir for shipped zips, removed at exit."""
+    path = tempfile.mkdtemp(prefix="plc-pyfiles-")
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
+
+
 def _pyfiles_zip(pkg_dir: str) -> str:
-    """Zip the package's ``.py`` files into the temp dir, named by a hash
-    of their names and bytes, so a zip left by another build (or by an
-    earlier process with the same pid) is never shipped. Written under a
-    temp name and moved into place, so a reader never sees half a zip."""
+    """Zip the package's ``.py`` files into this process's zip dir
+    (:func:`_zip_dir`), named by a hash of their names and bytes, so a
+    zip of another build is never shipped. Written under a temp name and
+    moved into place, so a reader never sees half a zip."""
     srcs = sorted(fn for fn in os.listdir(pkg_dir) if fn.endswith(".py"))
     h = hashlib.sha256()
     for fn in srcs:
         with open(os.path.join(pkg_dir, fn), "rb") as f:
             data = f.read()
         h.update(b"%s\0%d\0%s" % (fn.encode(), len(data), data))
-    zpath = os.path.join(tempfile.gettempdir(),
-                         f"plc-pyfiles-{h.hexdigest()[:16]}.zip")
+    zpath = os.path.join(_zip_dir(), f"plc-pyfiles-{h.hexdigest()[:16]}.zip")
     if not os.path.exists(zpath):
-        fd, tmp = tempfile.mkstemp(suffix=".zip", prefix=".plc-pyfiles-")
+        fd, tmp = tempfile.mkstemp(suffix=".zip", prefix=".plc-pyfiles-",
+                                   dir=_zip_dir())
         try:
             with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w") as z:
                 for fn in srcs:

@@ -1,12 +1,13 @@
 """Commit-protocol and metadata-path tests: manifests become visible
 atomically and a failed write leaves the committed state as it was
 (fault injection into the manifest write, the encoder, the part-file
-writer after a file is closed, and gc's sweep; a zombie file landing
-after the commit), every reader resolves committed files the same way — from the
-manifest's named files alone, with no part-dir listing — also for stores
-with empty parts, multi-file parts and stray files, a manifest that
-names no files is refused, read errors surface instead of being
-swallowed, and unsupported URIs fail with a clear error."""
+writer after a file is closed, gc's sweep, and every step of a stream
+sink batch; a zombie file landing after the commit), every reader
+resolves committed files the same way — from the manifest's named
+files alone, with no part-dir listing — also for stores with empty
+parts, multi-file parts and stray files, a manifest that names no
+files is refused, read errors surface instead of being swallowed, and
+unsupported URIs fail with a clear error."""
 
 import glob
 import os
@@ -164,14 +165,14 @@ def test_format_commit_fault_keeps_old_store(spark, src_df, monkeypatch):
         with monkeypatch.context() as m:
             _inject_manifest_fault(m)
             with pytest.raises(OSError, match="injected"):
-                _commit_store(_PlanFS(dst), "", msgs, plan["weight_col"],
+                _commit_store(_PlanFS(dst), msgs, plan["weight_col"],
                               schema)
         assert [os.path.basename(f) for f in _visible_manifests(dst)] == \
             ["manifest-0.parquet"]
         assert _rows(spark, dst) == old
         assert spark.read.format("plc").load(dst).count() == len(old)
 
-        _commit_store(_PlanFS(dst), "", msgs, plan["weight_col"], schema)
+        _commit_store(_PlanFS(dst), msgs, plan["weight_col"], schema)
         assert _rows(spark, dst) == new
         assert spark.read.format("plc").load(dst).count() == len(new)
     finally:
@@ -212,29 +213,77 @@ def test_unsupported_uri_scheme_raises_value_error(spark):
         decode(spark, "nosuchfs://bucket/store")
 
 
-@pytest.mark.parametrize("abort_runs", [True, False],
-                         ids=["abort", "crash"])
-def test_stream_marker_fault_hides_batch_and_replay_commits_once(
-        spark, tmp_path, abort_runs):
-    """The stream sink's last commit step under a fault: the batch's
-    manifest is committed, then its ``_STREAM_COMMITTED`` marker write
-    fails — with Spark's abort() running afterwards, or skipped as in a
-    driver crash. The batch stays invisible to ``committed_batches``,
-    the batch reader and ``readStream``; re-running the query on the same
-    checkpoint commits it exactly once; ``gc`` then removes no file that
-    a committed manifest names."""
-    from plc.datasource import (_MARKER_REL, PLCDataSource, PLCStreamWriter,
-                                gc)
+_STREAM_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
+
+
+def _run_stream(spark, fmt, src, dst, ckpt):
+    """Sink every file landed in ``src`` into ``dst``, one per batch."""
+    q = (spark.readStream.schema(_STREAM_SCHEMA)
+         .option("maxFilesPerTrigger", "1").parquet(src)
+         .writeStream.format(fmt).option("checkpointLocation", ckpt)
+         .trigger(availableNow=True).start(dst))
+    try:
+        q.awaitTermination(300)
+    finally:
+        q.stop()
+
+
+@pytest.fixture(scope="module")
+def stream_inputs(spark, tmp_path_factory):
+    """Two input files, and a clean stream root of them (one batch each,
+    landed one at a time)."""
+    work = tmp_path_factory.mktemp("stream_clean")
+    files = [str(work / f"f{i}.parquet") for i in (0, 1)]
+    D.synth_tokens_parquet(files[0], 200, seed=1)
+    D.synth_tokens_parquet(files[1], 150, seed=2)
+    register(spark)
+    src, clean = work / "in", str(work / "clean")
+    src.mkdir()
+    for f in files:
+        shutil.copy(f, src)
+        _run_stream(spark, "plc", str(src), clean, str(work / "ckpt"))
+    return files, clean
+
+
+@pytest.mark.parametrize("case", ["task", "commit-abort", "commit-crash",
+                                  "manifest-abort", "manifest-crash"])
+def test_stream_sink_crash_matrix(spark, tmp_path, stream_inputs, case):
+    """The stream sink's batch 1 fails at each step: a task raises after
+    writing its file; the commit raises before writing
+    ``batch-1.parquet``; the manifest write itself fails part-way. A
+    commit fault runs with Spark's abort() afterwards and with abort()
+    skipped, as in a driver crash. Readers (format("plc"), readStream,
+    decode) see batch 0 only; gc(grace_sec=0) removes exactly the failed
+    attempt's files; re-running the query on the same checkpoint then
+    commits batch 1 once, chunk for chunk equal to a clean run."""
+    import posixpath
+
+    import plc
+    from plc.datasource import PLCDataSource, PLCStreamWriter
     from plc.streaming import committed_batches
 
-    class MarkerFaultWriter(PLCStreamWriter):
+    fault, _, mode = case.partition("-")
+    abort_runs = mode != "crash"
+
+    class FaultWriter(PLCStreamWriter):
+        def write(self, iterator):
+            msg = super().write(iterator)
+            if fault == "task":
+                raise RuntimeError("injected fault after the task's file")
+            return msg
+
         def commit(self, messages, batchId):
+            if fault == "commit":
+                raise OSError("injected fault before the batch manifest")
             write_atomic = self.pfs.write_atomic
 
             def broken(rel, write):
-                if rel.endswith(_MARKER_REL):
-                    raise OSError("injected fault at the commit marker")
-                write_atomic(rel, write)
+                def partial(f):
+                    f.write(b"PAR1 truncated")
+                    raise OSError("injected fault mid-manifest")
+
+                batch = posixpath.basename(rel).startswith("batch-")
+                write_atomic(rel, partial if batch else write)
 
             self.pfs.write_atomic = broken
             super().commit(messages, batchId)
@@ -243,84 +292,57 @@ def test_stream_marker_fault_hides_batch_and_replay_commits_once(
             if abort_runs:
                 super().abort(messages, batchId)
 
-    class MarkerFaultSource(PLCDataSource):
+    class FaultSource(PLCDataSource):
         @classmethod
         def name(cls):
-            return "plc_marker_fault"
+            return "plc_sink_fault"
 
         def streamWriter(self, schema, overwrite):
-            return MarkerFaultWriter(self._path(), schema,
-                                     self.options.get("max_chunk_values"))
+            return FaultWriter(self._path(), schema,
+                               self.options.get("max_chunk_values"))
 
     register(spark)
-    spark.dataSource.register(MarkerFaultSource)
+    spark.dataSource.register(FaultSource)
+    files, clean = stream_inputs
     src, dst, ckpt = (str(tmp_path / d) for d in ("in", "store", "ckpt"))
     os.makedirs(src)
-    schema = "doc_id string, tokens array<int>, n_tok int, source string"
+    shutil.copy(files[0], src)
+    _run_stream(spark, "plc", src, dst, ckpt)
+    old = _rows(spark, dst)
+    before = _data_files(dst)
+    assert before == _named_files(dst) and len(old) == 200
 
-    def run(fmt):
-        q = (spark.readStream.schema(schema).parquet(src)
-             .writeStream.format(fmt).option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start(dst))
-        try:
-            q.awaitTermination(300)
-        finally:
-            q.stop()
+    shutil.copy(files[1], src)
+    with pytest.raises(Exception, match="injected fault"):
+        _run_stream(spark, "plc_sink_fault", src, dst, ckpt)
+    assert committed_batches(spark, dst) == [0]
+    assert os.listdir(os.path.join(dst, "_manifest", "parts")) == \
+        ["batch-0.parquet"]
+    assert _rows(spark, dst) == old
+    assert sorted(tuple(r) for r in spark.read.format("plc").load(dst)
+                  .select("doc_id", "n_tok").collect()) == old
+    name = "plc_sink_fault_" + case.replace("-", "_")
+    q = (spark.readStream.format("plc").load(dst).groupBy().count()
+         .writeStream.outputMode("complete").format("memory")
+         .queryName(name).trigger(availableNow=True).start())
+    q.awaitTermination(300)
+    q.stop()
+    assert spark.sql(f"select * from {name}").collect()[0]["count"] == 200
+    # the failed attempt's files: gone after abort(), left by a crash
+    leftover = _data_files(dst) - before
+    assert bool(leftover) == (not abort_runs)
+    rep = plc.gc(dst, grace_sec=0)
+    assert sorted(rep["removed"]) == sorted(leftover)
+    assert _data_files(dst) == before == _named_files(dst)
 
-    def stream_count():
-        q = (spark.readStream.format("plc").load(dst).groupBy().count()
-             .writeStream.outputMode("complete").format("memory")
-             .queryName("plc_marker_fault_rs").trigger(availableNow=True)
-             .start())
-        q.awaitTermination(300)
-        return spark.sql("select * from plc_marker_fault_rs") \
-            .collect()[0]["count"]
-
-    D.synth_tokens_parquet(os.path.join(src, "f0.parquet"), 200, seed=1)
-    run("plc")
-    first = spark.read.parquet(src).count()
-    assert committed_batches(spark, dst) == [(0, f"{dst}/batch=0")]
-
-    D.synth_tokens_parquet(os.path.join(src, "f1.parquet"), 150, seed=2)
-    with pytest.raises(Exception, match="injected fault at the commit"):
-        run("plc_marker_fault")
-    manifest = os.path.join(dst, "batch=1", "_manifest", "parts",
-                            "manifest-0.parquet")
-    # abort() drops the unmarked batch dir; after a crash the committed
-    # manifest is still there, without its marker
-    assert os.path.exists(manifest) is not abort_runs
-    assert not os.path.exists(os.path.join(dst, "batch=1", _MARKER_REL))
-    assert committed_batches(spark, dst) == [(0, f"{dst}/batch=0")]
-    assert spark.read.format("plc").load(dst).count() == first
-    assert stream_count() == first
-
-    run("plc")
-    src_rows = sorted(tuple(r) for r in spark.read.parquet(src)
-                      .select("doc_id", "n_tok").collect())
-    got = sorted(tuple(r) for r in spark.read.format("plc").load(dst)
-                 .select("doc_id", "n_tok").collect())
-    assert got == src_rows and len(got) == 350
-    assert [b for b, _ in committed_batches(spark, dst)] == [0, 1]
-
-    def named_files():
-        out = set()
-        for bid in (0, 1):
-            rel = f"batch={bid}"
-            man = _read_manifest(_PlanFS(dst), rel)
-            for pid, f in zip(man.column("part_id").to_pylist(),
-                              man.column("file").to_pylist()):
-                if f:
-                    out.add(os.path.join(dst, rel, "data",
-                                         f"part_id={pid}", f))
-        return out
-
-    named = named_files()
-    assert named and all(os.path.exists(f) for f in named)
-    rep = gc(dst, grace_sec=0)
-    assert not named & set(rep["removed"])
-    assert all(os.path.exists(f) for f in named)
-    assert named_files() == named
-    assert spark.read.format("plc").load(dst).count() == 350
+    _run_stream(spark, "plc", src, dst, ckpt)
+    assert committed_batches(spark, dst) == [0, 1]
+    want = sorted(tuple(r) for f in files for r in spark.read.parquet(f)
+                  .select("doc_id", "n_tok").collect())
+    assert _rows(spark, dst) == want and len(want) == 350
+    assert _chunk_digests(dst) == _chunk_digests(clean)
+    assert _data_files(dst) == _named_files(dst)
+    assert plc.gc(dst, grace_sec=0)["removed"] == []
 
 
 def _part_ids_on_disk(dst):
@@ -620,8 +642,8 @@ def test_part_writer_crash_after_file_keeps_old_state_and_resume_converges(
 
         real = pipeline._write_part_files
 
-        def failing(pfs, rel, jobid, rows):
-            for m in real(pfs, rel, jobid, rows):
+        def failing(pfs, jobid, rows):
+            for m in real(pfs, jobid, rows):
                 yield m
                 if m.part_id == 3:
                     raise RuntimeError("injected part-writer fault")
@@ -771,3 +793,57 @@ def test_format_overwrite_sweeps_sidecars_and_unused_part_dirs(spark,
             tuple(r) for r in src_df.select("doc_id", "n_tok").collect())
     finally:
         shutil.rmtree(dst, ignore_errors=True)
+
+
+def test_encode_commit_reads_the_manifest_at_most_once(spark, src_df,
+                                                       monkeypatch):
+    """A fresh encode reads no manifest and a resume reads it once, in
+    its head: the commit's sweep and report come from the appended rows
+    plus the rows the resume read. Both reports equal the totals of the
+    manifest on disk, and the resumed store equals a fresh one."""
+    from plc import datasource, pipeline
+    from plc.datasource import _SUM_COLS
+
+    calls = []
+    real = datasource._read_manifest
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    def on_disk(dst, newly_encoded):
+        man = real(_PlanFS(dst), ["part_id", *_SUM_COLS])
+        raw, enc = (pc.sum(man[c]).as_py() for c in ("raw_bytes",
+                                                      "enc_bytes"))
+        return {"n_parts": 4,
+                "committed_parts": pc.count_distinct(man["part_id"]).as_py(),
+                "newly_encoded": newly_encoded,
+                "rows": pc.sum(man["n_rows"]).as_py(),
+                "tokens": pc.sum(man["n_tokens"]).as_py(),
+                "raw_bytes": raw, "enc_bytes": enc, "ratio": raw / enc}
+
+    cfg = PipelineConfig(num_partitions=4, straggler_parts=0)
+    work = tempfile.mkdtemp(prefix="plc_commitreads_")
+    clean, dst = work + "/clean", work + "/store"
+    try:
+        for mod in (datasource, pipeline):
+            monkeypatch.setattr(mod, "_read_manifest", spy)
+        rep = encode(spark, src_df, clean, cfg)
+        assert calls == []
+        rep.pop("data_path_sec")
+        assert rep == on_disk(clean, 4)
+
+        monkeypatch.undo()
+        encode(spark, src_df, dst, cfg)
+        _commit_only_parts_below(dst, 2)
+        for mod in (datasource, pipeline):
+            monkeypatch.setattr(mod, "_read_manifest", spy)
+        rep = encode(spark, src_df, dst, cfg, resume=True)
+        assert len(calls) == 1
+        rep.pop("data_path_sec")
+        assert rep == on_disk(dst, 2)
+        assert (rep["rows"], rep["enc_bytes"]) == (300, on_disk(
+            clean, 4)["enc_bytes"])
+        assert _data_files(dst) == _named_files(dst)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)

@@ -4,10 +4,12 @@ filter pushdown → chunk pruning, zero-column count(*), typed columns."""
 
 import glob
 import os
+import re
 import shutil
 import tempfile
 import time
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 
 import pytest
@@ -356,7 +358,7 @@ def test_format_write_requires_doc_id(spark, store):
 
 def test_format_stream_read(spark):
     """spark.readStream.format('plc') tails a writeStream.format('plc')
-    root: committed batch stores feed micro-batches (executor-side
+    root: committed batches feed micro-batches (executor-side
     decode), and the aggregate matches the batch ground truth."""
     import __spark_entry__ as E
     from plc.datasource import register
@@ -443,14 +445,10 @@ def prune_stores(spark):
 def _store_chunks(dst: str) -> dict:
     """(part_id, file name, chunk_idx) → the chunk's doc_ids, for every
     committed chunk of a store, decoded with pyarrow."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from plc.chunk import unpack_chunk
     from plc.datasource import _PlanFS, _committed_data_files
 
-    pfs = _PlanFS(dst)
-    with ThreadPoolExecutor(4) as pool:
-        files = _committed_data_files(pfs, [""], pool)
+    files = _committed_data_files(_PlanFS(dst))
     out = {}
     for f in files:
         pid = int(os.path.basename(os.path.dirname(f)).split("=")[1])
@@ -733,7 +731,7 @@ def test_planner_probe_scale_matches_brute_force(prune_stores):
     planner = ChunkPlanner(_load_plan(pfs))
     planner.probe(keys)
     with ThreadPoolExecutor(4) as pool:
-        files = _committed_data_files(pfs, [""], pool)
+        files = _committed_data_files(pfs)
         got = {(fc.file, r) for fc in planner.plan(pfs, files, pool)
                for r in fc.rows}
     want, n_chunks = set(), 0
@@ -753,8 +751,9 @@ def test_planner_probe_scale_matches_brute_force(prune_stores):
 
 def test_stream_root_batch_read_and_marker_gating(spark):
     """Review fixes: (a) a stream root reads as a BATCH union of committed
-    batches; (b) a batch with manifest files but NO atomic commit marker
-    (crash mid-commit) is invisible to both readers."""
+    batches; (b) a batch whose data files are written but whose manifest
+    write stopped at its temp file (crash mid-commit) is invisible to
+    both readers."""
     import __spark_entry__ as E
     from plc.datasource import register
     from plc.streaming import decode_stream
@@ -776,12 +775,21 @@ def test_stream_root_batch_read_and_marker_gating(spark):
         # batch read over the root
         df = spark.read.format("plc").load(dst)
         assert df.count() == 150
-        # simulate a partially-committed batch: manifest parquet present,
-        # marker absent → invisible everywhere
-        committed = sorted(glob.glob(os.path.join(dst, "batch=*")))[0]
-        partial = os.path.join(dst, "batch=999")
-        shutil.copytree(committed, partial)
-        os.unlink(os.path.join(partial, "_manifest", "_STREAM_COMMITTED"))
+        # simulate a partially-committed batch 999: its data files and a
+        # manifest naming them under write_atomic's temp name, never moved
+        # into place → invisible everywhere
+        parts = os.path.join(dst, "_manifest", "parts")
+        man = pq.read_table(os.path.join(parts, "batch-0.parquet"))
+        names = [None if f is None else f.replace("-b0-", "-b999-")
+                 for f in man.column("file").to_pylist()]
+        for pid, old, new in zip(man.column("part_id").to_pylist(),
+                                 man.column("file").to_pylist(), names):
+            if old is not None:
+                pdir = os.path.join(dst, "data", f"part_id={pid}")
+                shutil.copy(os.path.join(pdir, old), os.path.join(pdir, new))
+        pq.write_table(man.set_column(man.column_names.index("file"), "file",
+                                      pa.array(names, pa.string())),
+                       os.path.join(parts, ".batch-999.parquet.0123.tmp"))
         assert spark.read.format("plc").load(dst).count() == 150
         assert decode_stream(spark, dst).count() == 150
     finally:
@@ -1309,49 +1317,54 @@ def test_gc_reclaims_post_sweep_zombies(spark, store):
 
 
 def test_gc_stream_root_drops_aged_uncommitted_batch(spark):
-    """On a stream root, gc sweeps committed batches like stores and
-    removes an UNcommitted batch dir (crashed before its marker) only
-    once every file in it is older than the grace period."""
+    """On a stream root, gc keeps every committed batch's files and
+    removes the files of an UNcommitted batch (its data written, its
+    manifest never) only once they are older than the grace period."""
     import time as _time
 
     import plc
     from plc import data as D
-    from plc.pipeline import PipelineConfig, encode
+    from plc.datasource import register
 
-    root = tempfile.mkdtemp(prefix="plc_ds_gcs_") + "/stream"
+    register(spark)
+    work = tempfile.mkdtemp(prefix="plc_ds_gcs_")
+    root, src = work + "/stream", work + "/in"
+    os.makedirs(src)
     try:
-        srcp = os.path.join(os.path.dirname(root), "in.parquet")
-        D.synth_tokens_parquet(srcp, 300, regime="zipf", seed=3)
-        df = spark.read.parquet(srcp)
-        for bid in (0, 1):
-            bdst = f"{root}/batch={bid}"
-            encode(spark, df, bdst,
-                   PipelineConfig(num_partitions=2, straggler_parts=0),
-                   mode="overwrite")
-            with open(f"{bdst}/_manifest/_STREAM_COMMITTED", "w") as f:
-                f.write("1")
-        # crashed batch: data but no marker
-        crashed = f"{root}/batch=2"
-        encode(spark, df, crashed,
-               PipelineConfig(num_partitions=2, straggler_parts=0),
-               mode="overwrite")
-        os.remove(os.path.join(crashed, "_manifest", "plan.json"))
-        shutil.rmtree(os.path.join(crashed, "_manifest"))
+        for i in (0, 1):
+            D.synth_tokens_parquet(os.path.join(src, f"f{i}.parquet"), 300,
+                                   regime="zipf", seed=3 + i)
+        q = (spark.readStream.schema(spark.read.parquet(src).schema)
+             .option("maxFilesPerTrigger", "1").parquet(src)
+             .writeStream.format("plc")
+             .option("checkpointLocation", work + "/ckpt")
+             .trigger(availableNow=True).start(root))
+        q.awaitTermination(300)
+        q.stop()
+        named = set(glob.glob(os.path.join(root, "data", "*", "*.parquet")))
+        # crashed batch 2: data files written, no manifest
+        crashed = set()
+        for f in named:
+            d, name = os.path.split(f)
+            c = os.path.join(d, re.sub("-b[01]-", "-b2-", name))
+            shutil.copy(f, c)
+            crashed.add(c)
+        assert len(named) == len(crashed) == 2
 
         rep = plc.gc(root, grace_sec=3600)
-        assert os.path.isdir(crashed)  # young: protected
+        assert rep["removed"] == [] and rep["kept_young"] == 2  # young
         past = _time.time() - 7200
-        for dirpath, _dirs, files in os.walk(crashed):
-            for f in files:
-                os.utime(os.path.join(dirpath, f), (past, past))
+        for f in named | crashed:
+            os.utime(f, (past, past))
         rep2 = plc.gc(root, grace_sec=3600)
-        assert not os.path.exists(crashed)
-        assert rep2["removed"] and rep2["removed"][0].endswith("batch=2")
+        assert sorted(rep2["removed"]) == sorted(crashed)
+        assert set(glob.glob(os.path.join(root, "data", "*",
+                                          "*.parquet"))) == named
         from plc.streaming import decode_stream
 
         assert decode_stream(spark, root).count() == 600
     finally:
-        shutil.rmtree(os.path.dirname(root), ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
 
 
 def test_gc_skips_foreign_batch_dir_names(spark):

@@ -771,7 +771,7 @@ def test_batch_lookup_scan_pinned_to_planner_files(spark):
         planner = ChunkPlanner(_load_plan(pfs))
         planner.probe(keys)
         with ThreadPoolExecutor(4) as pool:
-            committed = set(_committed_data_files(pfs, [""], pool))
+            committed = set(_committed_data_files(pfs))
             kept = {fc.file for fc in planner.plan(pfs, sorted(committed),
                                                    pool)}
         pruned, _ = select_chunks(spark, d, doc_ids=keys)

@@ -1,11 +1,14 @@
 """Structured Streaming tests: the ``writeStream.format("plc")`` sink
-(exactly-once via per-batch manifests and commit markers), stream-root
-reads and lifecycle, and watermarked window aggs."""
+(exactly-once via one atomically written manifest per batch in a plain
+store), stream-root reads and lifecycle, and watermarked window aggs."""
 
+import glob
 import os
+import re
 import shutil
 import tempfile
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -102,8 +105,13 @@ def test_decode_stream_ignores_uncommitted_batch(spark):
         _sink(spark, stream, dst, ckpt)
         n = decode_stream(spark, dst).count()
         assert n == 400
-        # fake an in-flight batch dir (data written, manifest not committed)
-        os.makedirs(os.path.join(dst, "batch=999", "data", "part_id=0"))
+        # fake an in-flight batch: its data file is written, its manifest
+        # not committed
+        real = glob.glob(os.path.join(dst, "data", "part_id=*",
+                                      "*.parquet"))[0]
+        shutil.copy(real, os.path.join(
+            os.path.dirname(real),
+            "part-00000-b999-0123456789ab-ba9876543210.parquet"))
         assert decode_stream(spark, dst).count() == n
     finally:
         for d in (src, dst, ckpt):
@@ -223,9 +231,10 @@ def test_bloom_state_is_fixed_size():
 
 
 def test_format_stream_sink_writes_committed_batch_stores(spark):
-    """df.writeStream.format("plc") — the declarative stream sink: each
-    microbatch lands as a batch=<id>/ sub-store with a file-naming
-    manifest and the atomic _STREAM_COMMITTED marker, written straight through pyarrow.fs via the
+    """df.writeStream.format("plc") — the declarative stream sink: the
+    root is one store (one plan, one data tree) and each microbatch
+    commits one file-naming manifest ``batch-<id>.parquet``; the tasks
+    write batch-tagged files straight through pyarrow.fs via the
     streaming.sql.batchId task property (no renames). The batch reader,
     decode_stream and readStream all consume it unchanged."""
     import glob as g
@@ -245,12 +254,15 @@ def test_format_stream_sink_writes_committed_batch_stores(spark):
              .trigger(availableNow=True).start(dst))
         q.awaitTermination(300)
         assert not q.isActive
-        batches = sorted(g.glob(dst + "/batch=*"))
-        assert len(batches) >= 2  # maxFilesPerTrigger split the input
-        for b in batches:
-            assert os.path.exists(b + "/_manifest/_STREAM_COMMITTED")
-            man = g.glob(b + "/_manifest/parts/*.parquet")
-            assert man
+        mans = sorted(os.listdir(dst + "/_manifest/parts"))
+        assert len(mans) >= 2  # maxFilesPerTrigger split the input
+        assert all(re.fullmatch(r"batch-[0-9]+\.parquet", m) for m in mans)
+        assert sorted(os.listdir(dst)) == ["_manifest", "data"]
+        assert sorted(os.listdir(dst + "/_manifest")) == ["parts",
+                                                          "plan.json"]
+        files = g.glob(dst + "/data/part_id=*/*.parquet")
+        assert files and all(re.match(r"part-[0-9]{5}-b[0-9]+-",
+                                      os.path.basename(f)) for f in files)
         total = 4 * 200
         # batch read over the stream root (manifest-named files only)
         assert spark.read.format("plc").load(dst).count() == total
@@ -265,8 +277,8 @@ def test_format_stream_sink_writes_committed_batch_stores(spark):
         out.awaitTermination(300)
         got = spark.sql("select * from plc_sink_rt").collect()
         assert got and got[0]["count"] == total
-        # an orphan planted in a committed batch's part dir is invisible
-        pdir = sorted(g.glob(batches[0] + "/data/part_id=*"))[0]
+        # an orphan planted in a committed part dir is invisible
+        pdir = sorted(g.glob(dst + "/data/part_id=*"))[0]
         realf = g.glob(pdir + "/*.parquet")[0]
         shutil.copy(realf, pdir + "/part-zombie.parquet")
         assert spark.read.format("plc").load(dst).count() == total
@@ -277,47 +289,56 @@ def test_format_stream_sink_writes_committed_batch_stores(spark):
 
 
 def test_format_stream_sink_committed_batch_is_immutable(spark):
-    """Review findings r5: a committed (marker-visible) batch must
+    """Review findings r5: a committed batch (its manifest present) must
     survive abort() of a failed replay attempt; a genuine replay commit
-    (same totals) is an idempotent no-op that drops only the replay's
-    duplicate files; a commit with DIFFERENT totals (a new stream reusing
+    (same fingerprint) is an idempotent no-op that drops only the
+    replay's files; a commit with DIFFERENT content (a new stream reusing
     the dst with a fresh checkpoint) is refused instead of silently
-    destroying committed data."""
+    destroying committed data. Every sweep touches only the batch's own
+    tagged files."""
     from plc.datasource import PLCCommit, PLCStreamWriter
 
     dst = tempfile.mkdtemp(prefix="plc_fsim_") + "/store"
     schema = spark.createDataFrame([], SCHEMA).schema
     w = PLCStreamWriter(dst, schema, None)
-    pdir = dst + "/batch=0/data/part_id=0"
+    pdir = dst + "/data/part_id=0"
     os.makedirs(pdir)
-    with open(pdir + "/f1.parquet", "wb") as f:
-        f.write(b"x")
-    msg = PLCCommit(0, "f1.parquet", 1, 10, 40, 160, 80, "a", "b")
+
+    def put(tag, data=b"x"):
+        name = f"part-00000-{tag}-0123456789ab-{os.urandom(6).hex()}.parquet"
+        with open(f"{pdir}/{name}", "wb") as f:
+            f.write(data)
+        return name
+
+    def there(name):
+        return os.path.exists(f"{pdir}/{name}")
+
+    crashed = put("b0")  # an earlier attempt of batch 0 that never committed
+    f1 = put("b0")
+    msg = PLCCommit(0, f1, 1, 10, 40, 160, 80, "a", "b")
     w.commit([msg], 0)
-    marker = dst + "/batch=0/_manifest/_STREAM_COMMITTED"
-    assert os.path.exists(marker)
+    manifest = dst + "/_manifest/parts/batch-0.parquet"
+    assert os.path.exists(manifest)
+    assert there(f1) and not there(crashed)
     # a FAILED replay attempt aborts after the original commit: the
     # committed data survives, the replay's own files (always fresh
     # uuid names — never the committed winner) are swept
-    with open(pdir + "/f1b.parquet", "wb") as f:
-        f.write(b"r")
-    w.abort([PLCCommit(0, "f1b.parquet", 1, 10, 40, 160, 80, "a", "b"),
-             None], 0)
-    assert os.path.exists(marker) and os.path.exists(pdir + "/f1.parquet")
-    assert not os.path.exists(pdir + "/f1b.parquet")
-    # genuine replay (same totals): idempotent, replay's file dropped
-    with open(pdir + "/f2.parquet", "wb") as f:
-        f.write(b"y")
-    w.commit([PLCCommit(0, "f2.parquet", 1, 10, 40, 160, 80, "a", "b")], 0)
-    assert os.path.exists(pdir + "/f1.parquet")
-    assert not os.path.exists(pdir + "/f2.parquet")
-    # dst reuse by a different stream (different totals): refused
+    f1b = put("b0", b"r")
+    w.abort([PLCCommit(0, f1b, 1, 10, 40, 160, 80, "a", "b"), None], 0)
+    assert os.path.exists(manifest) and there(f1) and not there(f1b)
+    # genuine replay (same fingerprint): idempotent, replay's file dropped
+    f2 = put("b0", b"y")
+    w.commit([PLCCommit(0, f2, 1, 10, 40, 160, 80, "a", "b")], 0)
+    assert there(f1) and not there(f2)
+    # dst reuse by a different stream (different content): refused
     with pytest.raises(RuntimeError, match="immutable"):
         w.commit([PLCCommit(0, "f3.parquet", 1, 999, 0, 0, 0, "a", "b")], 0)
-    # an UNcommitted batch still aborts clean
-    os.makedirs(dst + "/batch=1/data/part_id=0")
+    # an UNcommitted batch aborts clean: its tagged files go, and
+    # nothing of batch 0 does
+    f4 = put("b1")
     w.abort([msg], 1)
-    assert not os.path.exists(dst + "/batch=1")
+    assert not there(f4) and there(f1)
+    assert os.listdir(dst + "/_manifest/parts") == ["batch-0.parquet"]
 
 
 def test_format_stream_sink_on_file_uri(spark):
@@ -341,7 +362,7 @@ def test_format_stream_sink_on_file_uri(spark):
              .trigger(availableNow=True).start(dst))
         q.awaitTermination(300)
         local = base + "/store"
-        assert g.glob(local + "/batch=*/_manifest/_STREAM_COMMITTED")
+        assert g.glob(local + "/_manifest/parts/batch-*.parquet")
         assert spark.read.format("plc").load(dst).count() == 300
         assert decode_stream(spark, local).count() == 300
     finally:
@@ -354,7 +375,7 @@ def test_stream_lifecycle_compact_then_expire(spark):
     """VERDICT r5 #3 — stream-root lifecycle: sink 5 microbatches through
     the FORMAT stream sink, compact them into one store, check all three
     readers agree on the compacted output, then expire exactly the
-    compacted batch dirs (marker-first delete) and check the compacted
+    compacted batches (manifest-first delete) and check the compacted
     store still reads green while the stream root is empty of them."""
     import glob as g
 
@@ -377,14 +398,14 @@ def test_stream_lifecycle_compact_then_expire(spark):
              .trigger(availableNow=True).start(root))
         q.awaitTermination(300)
         batches = committed_batches(spark, root)
-        assert len(batches) == 5
+        assert batches == [0, 1, 2, 3, 4]
         srcdf = spark.read.parquet(src)
         total = srcdf.count()
 
         rep = compact_stream(spark, root, out,
                              PipelineConfig(num_partitions=3,
                                             straggler_parts=0))
-        assert sorted(rep["batch_ids"]) == [b for b, _ in batches]
+        assert sorted(rep["batch_ids"]) == batches
         # three readers on the compacted store: decode(), the format
         # reader, and verify() against the original source rows
         from plc.pipeline import decode
@@ -396,7 +417,8 @@ def test_stream_lifecycle_compact_then_expire(spark):
         removed = expire_stream_batches(spark, root, rep["batch_ids"])
         assert removed == rep["batch_ids"]
         assert committed_batches(spark, root) == []
-        assert not g.glob(root + "/batch=*")
+        assert not g.glob(root + "/_manifest/parts/*.parquet")
+        assert not g.glob(root + "/data/part_id=*/*.parquet")
         # expiry is idempotent and skips non-existent ids
         assert expire_stream_batches(spark, root, rep["batch_ids"]) == []
         # compacted store unaffected by the expiry
@@ -411,35 +433,128 @@ def test_stream_lifecycle_compact_then_expire(spark):
 
 def test_format_reader_batch_ids_option(spark):
     """The batch_ids option pins a stream-root scan to exactly the named
-    committed batches (the race-free compact cycle's read path); missing
-    ids and plain stores are rejected."""
-    import tempfile as tf
-
-    from plc import data as D
-    from plc.datasource import register
+    committed batches (the race-free compact cycle's read path); ids
+    that are not committed are rejected, on a stream root and on a store
+    that has no stream batches."""
     from plc.pipeline import PipelineConfig, encode
 
-    register(spark)
-    work = tf.mkdtemp(prefix="plc_bids_")
-    root = work + "/stream"
-    srcp = work + "/in.parquet"
-    D.synth_tokens_parquet(srcp, 300, regime="zipf", seed=5)
-    df = spark.read.parquet(srcp)
-    for bid in (0, 1, 2):
-        bdst = f"{root}/batch={bid}"
-        encode(spark, df, bdst,
-               PipelineConfig(num_partitions=2, straggler_parts=0),
-               mode="overwrite")
-        with open(f"{bdst}/_manifest/_STREAM_COMMITTED", "w") as f:
-            f.write("1")
-    all_rows = spark.read.format("plc").load(root).count()
-    assert all_rows == 900
-    sub = (spark.read.format("plc").option("batch_ids", "0,2").load(root))
-    assert sub.count() == 600
-    with pytest.raises(Exception, match="not committed"):
-        (spark.read.format("plc").option("batch_ids", "0,7")
-         .load(root).count())
-    store = f"{root}/batch=1"  # a plain store path
-    with pytest.raises(Exception, match="plain plc store"):
-        (spark.read.format("plc").option("batch_ids", "1")
-         .load(store).count())
+    work = tempfile.mkdtemp(prefix="plc_bids_")
+    root, src = work + "/stream", work + "/in"
+    os.makedirs(src)
+    try:
+        _mkfiles(src, n_files=3, rows=300)
+        stream = (spark.readStream.schema(SCHEMA)
+                  .option("maxFilesPerTrigger", "1").parquet(src))
+        _sink(spark, stream, root, work + "/ckpt")
+        all_rows = spark.read.format("plc").load(root).count()
+        assert all_rows == 900
+        sub = (spark.read.format("plc").option("batch_ids", "0,2")
+               .load(root))
+        assert sub.count() == 600
+        with pytest.raises(Exception, match="not committed"):
+            (spark.read.format("plc").option("batch_ids", "0,7")
+             .load(root).count())
+        store = work + "/store"  # written by encode: no stream batches
+        encode(spark, spark.read.parquet(src), store,
+               PipelineConfig(num_partitions=2, straggler_parts=0))
+        with pytest.raises(Exception, match="not committed"):
+            (spark.read.format("plc").option("batch_ids", "1")
+             .load(store).count())
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def test_stream_root_reads_as_a_plain_store(spark, monkeypatch):
+    """A 3-batch stream root is one store: format("plc") (data and
+    chunks views), store_agg, decode and verify all read it. Planning a
+    read makes one listdir of the manifests and one read per batch
+    manifest, and no per-batch exists/plan read; a sink commit reads no
+    manifest but its own batch's. A query with another schema and
+    encode(resume=True) are refused."""
+    import plc
+    from plc.datasource import PLCCommit, PLCReader, PLCStreamWriter, _PlanFS
+
+    work = tempfile.mkdtemp(prefix="plc_plainroot_")
+    root, src = work + "/stream", work + "/in"
+    os.makedirs(src)
+    try:
+        _mkfiles(src, n_files=3, rows=300)
+        stream = (spark.readStream.schema(SCHEMA)
+                  .option("maxFilesPerTrigger", "1").parquet(src))
+        _sink(spark, stream, root, work + "/ckpt")
+        srcdf = spark.read.parquet(src)
+        want = sorted(tuple(r) for r in srcdf.select("doc_id", "n_tok")
+                      .collect())
+        df = spark.read.format("plc").load(root)
+        assert sorted(tuple(r) for r in df.select("doc_id", "n_tok")
+                      .collect()) == want
+        assert sorted(tuple(r) for r in plc.decode(spark, root)
+                      .select("doc_id", "n_tok").collect()) == want
+        assert plc.verify(spark, srcdf, root)["mismatches"] == 0
+        chunks = spark.read.format("plc").option("view", "chunks").load(root)
+        assert chunks.agg(F.sum("n_rows")).collect()[0][0] == 900
+        agg = plc.store_agg(spark, root).collect()[0]
+        assert (agg["n_rows"], agg["sum_w"]) == (
+            900, srcdf.agg(F.sum("n_tok")).collect()[0][0])
+
+        calls = []
+        for meth in ("exists", "listdir", "read_json", "read_parquet"):
+            orig = getattr(_PlanFS, meth)
+
+            def spy(self, *a, _m=meth, _o=orig):
+                calls.append((_m, a[0] if a else ""))
+                return _o(self, *a)
+
+            monkeypatch.setattr(_PlanFS, meth, spy)
+        PLCReader(root, df.schema).partitions()
+        parts = os.path.join("_manifest", "parts")
+        assert [c for c in calls if c[0] == "listdir"] == [("listdir", parts)]
+        assert [c for c in calls if c[0] == "read_json"] == [
+            ("read_json", os.path.join("_manifest", "plan.json"))]
+        assert not [c for c in calls if c[0] == "exists"]
+        assert sorted(os.path.basename(p) for m, p in calls
+                      if m == "read_parquet") == [
+            f"batch-{b}.parquet" for b in range(3)]
+
+        # a replayed commit of batch 1 reads batch 1's manifest only
+        man = pq.read_table(os.path.join(root, parts, "batch-1.parquet"))
+        w = PLCStreamWriter(root, df.schema, None)
+        calls.clear()
+        w.commit([PLCCommit(**r) for r in man.to_pylist()], 1)
+        assert [os.path.basename(p) for m, p in calls
+                if m == "read_parquet"] == ["batch-1.parquet"]
+        assert ("listdir", parts) not in calls
+        monkeypatch.undo()
+        assert df.count() == 900
+
+        with pytest.raises(ValueError, match="differs"):
+            PLCStreamWriter(root, srcdf.drop("source").schema, None)
+        with pytest.raises(ValueError, match="stream writer"):
+            plc.encode(spark, srcdf, root, resume=True)
+        assert df.count() == 900
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def test_old_stream_root_layout_is_refused(spark):
+    """A stream root of the old layout (``batch=<id>/`` sub-stores, no
+    root plan) raises a ValueError that says to re-run the stream into
+    a fresh dst, from format("plc"), decode, gc and the sink."""
+    import plc
+    from plc.datasource import PLCStreamWriter, register
+
+    root = tempfile.mkdtemp(prefix="plc_oldroot_")
+    try:
+        os.makedirs(os.path.join(root, "batch=0", "_manifest", "parts"))
+        register(spark)
+        with pytest.raises(Exception, match="re-run the stream"):
+            spark.read.format("plc").load(root).count()
+        with pytest.raises(ValueError, match="re-run the stream"):
+            plc.decode(spark, root)
+        with pytest.raises(ValueError, match="re-run the stream"):
+            plc.gc(root, grace_sec=0)
+        with pytest.raises(ValueError, match="re-run the stream"):
+            PLCStreamWriter(root, spark.createDataFrame([], SCHEMA).schema,
+                            None)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)

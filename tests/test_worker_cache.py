@@ -260,6 +260,23 @@ def test_shipped_zip_path_follows_sources(tmp_path, monkeypatch):
     assert edited != first
     assert _zip_sources(edited) == _pkg_sources(str(pkg))
     assert _zip_sources(edited)["plc/util.py"].endswith(b"# edited\n")
-    # written under a temp name and moved into place: no leftovers
-    assert sorted(os.listdir(tmp)) == sorted(
-        os.path.basename(p) for p in (first, edited))
+    # written under a temp name and moved into place: no leftovers in
+    # the process's zip dir (which other zips of this process share)
+    left = os.listdir(os.path.dirname(first))
+    assert {os.path.basename(p) for p in (first, edited)} <= set(left)
+    assert [n for n in left if not n.endswith(".zip")
+            or not n.startswith("plc-pyfiles-")] == []
+
+
+def test_shipped_zips_are_removed_at_process_exit(tmp_path):
+    """A process that built a shipped zip leaves nothing behind in the
+    temp dir once it exits."""
+    code = ("import os, sys; from plc import util; "
+            "p = util._pyfiles_zip(os.path.dirname(util.__file__)); "
+            "assert os.path.isfile(p); print(p)")
+    out = subprocess.run([sys.executable, "-c", code], cwd=REPO,
+                         env={**os.environ, "TMPDIR": str(tmp_path)},
+                         capture_output=True, text=True, timeout=120,
+                         check=True).stdout
+    assert out.startswith(str(tmp_path))
+    assert os.listdir(tmp_path) == []
