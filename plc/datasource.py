@@ -46,6 +46,7 @@ Arrow RecordBatches — the whole path is vectorized end to end.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import posixpath
@@ -157,14 +158,27 @@ class _PlanFS:
         with self.fs.open_input_stream(self.join(rel)) as f:
             return json.loads(f.read().decode("utf-8"))
 
-    def read_parquet(self, full_path: str, columns: list[str]):
-        return pq.read_table(full_path, columns=columns,
-                             filesystem=self.fs)
+    def read_parquet(self, source: "str | pq.ParquetFile",
+                     columns: "list[str] | None"):
+        """``columns`` (all when None) of a parquet file: a full path, or
+        a file :meth:`open_parquet` has open (read without a new open
+        or a second footer parse)."""
+        if isinstance(source, pq.ParquetFile):
+            return source.read(columns)
+        return pq.read_table(source, columns=columns, filesystem=self.fs)
+
+    @contextlib.contextmanager
+    def open_parquet(self, full_path: str):
+        """One open of a data file: its footer is parsed once, and the
+        yielded ``pq.ParquetFile`` serves its schema and every column
+        read (:meth:`read_parquet`)."""
+        with self.fs.open_input_file(full_path) as f:
+            yield pq.ParquetFile(f)
 
     def num_rows(self, full_path: str) -> int:
         """Row count of a parquet file, from its footer alone."""
-        with self.fs.open_input_file(full_path) as f:
-            return pq.ParquetFile(f).metadata.num_rows
+        with self.open_parquet(full_path) as pf:
+            return pf.metadata.num_rows
 
     def write_atomic(self, rel: str, write) -> None:
         """Write ``rel`` through ``write(stream)`` under a dot-prefixed
@@ -355,16 +369,27 @@ def _part_dirs(pfs: _PlanFS) -> list[tuple[int, str]]:
 
 
 def _committed_data_files(pfs: _PlanFS,
-                          batch_ids: "list[int] | None" = None) -> list[str]:
-    """Full paths of every COMMITTED encoded parquet file (of the stream
-    batches ``batch_ids`` only, when given): exactly the files the
-    manifests name, with no dir listing (an orphan from a zombie or
-    losing speculative attempt in the same dir is invisible, and planning
-    costs no listdir round-trip per part)."""
-    entries = _named_entries(_read_manifest(pfs, ["part_id", "file"],
-                                            batch_ids))
-    return [pfs.join("data", f"part_id={pid}", f)
-            for pid, names in entries.items() for f in sorted(names)]
+                          batch_ids: "list[int] | None" = None
+                          ) -> "dict[str, tuple]":
+    """Full path → manifest (min_doc_id, max_doc_id) of every COMMITTED
+    encoded parquet file (of the stream batches ``batch_ids`` only, when
+    given): exactly the files the manifests name, with no dir listing (an
+    orphan from a zombie or losing speculative attempt in the same dir is
+    invisible, and planning costs no listdir round-trip per part). The
+    doc_id range comes from the same manifest read and lets
+    :meth:`ChunkPlanner.plan` drop a file before opening it."""
+    tbl = _read_manifest(pfs, ["part_id", "file", "min_doc_id",
+                               "max_doc_id"], batch_ids)
+    if tbl is None:
+        return {}
+    parts: dict[int, dict[str, tuple]] = {}
+    for pid, fn, lo, hi in zip(*(tbl.column(c).to_pylist()
+                                 for c in tbl.column_names)):
+        names = parts.setdefault(pid, {})
+        if fn is not None:
+            names[fn] = (lo, hi)
+    return {pfs.join("data", f"part_id={pid}", fn): names[fn]
+            for pid, names in parts.items() for fn in sorted(names)}
 
 
 # temporal chunk-stat pruning: values are "multiply a raw stat in this
@@ -459,15 +484,18 @@ class ChunkPlanner:
       tightened to one point probes that key;
     - ``notnull_cols`` / ``isnull_cols``: per-column null-count pruning.
 
-    doc_id and the weight column prune on the typed min/max columns;
-    every other column on the per-chunk stats JSON (temporal columns in
-    epoch µs, padded by :data:`TEMPORAL_TZ_SLACK_US`). The stats JSON and
+    The manifest prunes first: :meth:`plan` drops a committed file whose
+    manifest doc_id range misses every doc_id range and every probe key
+    without opening it. In a kept file, doc_id and the weight column
+    prune on the typed per-chunk min/max columns; every other column on
+    the per-chunk stats JSON (temporal columns in epoch µs, padded by
+    :data:`TEMPORAL_TZ_SLACK_US`). The stats JSON and
     the bloom column are read only for files with a chunk that survives
     the typed test, and only when a predicate needs them. Probe keys are
     sorted and hashed once; each chunk bisects to the keys inside its
     doc_id range and bloom-tests only those, so planning costs
-    O(chunks·log k + overlapping pairs). With no predicate no data file
-    is opened."""
+    O(chunks·log k + overlapping pairs) over the admitted files, each
+    opened once. With no predicate no data file is opened."""
 
     def __init__(self, plan: dict):
         full = StructType.fromJson(plan["schema"])
@@ -532,31 +560,38 @@ class ChunkPlanner:
                                  or self._keys is not None)
         return bool(cons or self._needs_stats)
 
-    def _key_span(self, m: dict) -> tuple[int, int]:
-        """[a, b): the sorted probe keys inside the chunk's doc_id range."""
+    def _key_span(self, mn, mx) -> tuple[int, int]:
+        """[a, b): the sorted probe keys inside the doc_id range [mn, mx]."""
         import bisect
 
-        mn, mx = m["min_doc_id"], m["max_doc_id"]
         a = 0 if mn is None else bisect.bisect_left(self._keys, mn)
         b = len(self._keys) if mx is None else \
             bisect.bisect_right(self._keys, mx)
         return a, b
 
-    def _survives_typed(self, m: dict) -> bool:
-        if not all(_meets(m[cmin], m[cmax], r)
-                   for (cmin, cmax), r in self._typed_cons):
+    def _admits_doc_ids(self, mn, mx) -> bool:
+        """The doc_id range [mn, mx] of a chunk, or of a whole file from
+        its manifest row, meets every doc_id range and some probe key."""
+        if not all(_meets(mn, mx, r) for (cmin, _), r in self._typed_cons
+                   if cmin == "min_doc_id"):
             return False
-        if self._keys is not None:
-            a, b = self._key_span(m)
-            return a < b
-        return True
+        if self._keys is None:
+            return True
+        a, b = self._key_span(mn, mx)
+        return a < b
+
+    def _survives_typed(self, m: dict) -> bool:
+        return self._admits_doc_ids(m["min_doc_id"], m["max_doc_id"]) \
+            and all(_meets(m[cmin], m[cmax], r)
+                    for (cmin, cmax), r in self._typed_cons
+                    if cmin != "min_doc_id")
 
     def _survives_stats(self, stats: dict, m: dict,
                         bloom_bits: "bytes | None") -> bool:
         if self._keys is not None:
             from plc.chunk import bloom_probe
 
-            a, b = self._key_span(m)
+            a, b = self._key_span(m["min_doc_id"], m["max_doc_id"])
             if not bloom_probe(stats.get("doc_id", {}), self._h1[a:b],
                                self._h2[a:b], bloom_bits).any():
                 return False
@@ -580,35 +615,42 @@ class ChunkPlanner:
         return True
 
     def _plan_file(self, pfs: _PlanFS, fpath: str) -> FileChunks:
-        meta = pfs.read_parquet(fpath, _RANGE_COLS).to_pylist()
-        keep = [i for i, m in enumerate(meta) if self._survives_typed(m)]
-        if keep and self._needs_stats:
-            # the bloom bits live in their own column, fetched only when
-            # a doc_id probe needs them; a store without that column is
-            # not bloom-pruned
-            cols = ["stats"]
-            if self._keys and "bloom" in pq.read_schema(
-                    fpath, filesystem=pfs.fs).names:
-                cols.append("bloom")
-            tbl = pfs.read_parquet(fpath, cols)
-            stats = tbl.column("stats")
-            blooms = tbl.column("bloom") if "bloom" in cols else None
-            keep = [i for i in keep
-                    if self._survives_stats(
-                        json.loads(stats[i].as_py()), meta[i],
-                        blooms[i].as_py() if blooms is not None else None)]
+        with pfs.open_parquet(fpath) as pf:
+            meta = pfs.read_parquet(pf, _RANGE_COLS).to_pylist()
+            keep = [i for i, m in enumerate(meta) if self._survives_typed(m)]
+            if keep and self._needs_stats:
+                # the bloom bits live in their own column, fetched only
+                # when a doc_id probe needs them; a store without that
+                # column is not bloom-pruned
+                cols = ["stats"]
+                if self._keys and "bloom" in pf.schema_arrow.names:
+                    cols.append("bloom")
+                tbl = pfs.read_parquet(pf, cols)
+                stats = tbl.column("stats")
+                blooms = tbl.column("bloom") if "bloom" in cols else None
+                keep = [i for i in keep
+                        if self._survives_stats(
+                            json.loads(stats[i].as_py()), meta[i],
+                            blooms[i].as_py() if blooms is not None
+                            else None)]
         return FileChunks(fpath, keep, [meta[i]["chunk_idx"] for i in keep],
                           [meta[i]["enc_bytes"] for i in keep], len(meta))
 
-    def plan(self, pfs: _PlanFS, files: list[str],
+    def plan(self, pfs: _PlanFS, files: "dict[str, tuple]",
              pool) -> list[FileChunks]:
-        """The committed ``files`` that keep at least one chunk, with
-        their surviving chunks; per-file metadata reads fan out on
-        ``pool`` (pyarrow releases the GIL on I/O)."""
+        """The committed ``files`` (full path → manifest doc_id range, as
+        :func:`_committed_data_files` returns them) that keep at least
+        one chunk, with their surviving chunks. The manifest range
+        prunes first: a file whose range misses every doc_id range and
+        every probe key is dropped unopened (a null bound keeps it). The
+        remaining files' metadata reads fan out on ``pool`` (pyarrow
+        releases the GIL on I/O)."""
         if not self._prepare():
             return [FileChunks(f) for f in files]
+        admitted = [f for f, (mn, mx) in files.items()
+                    if self._admits_doc_ids(mn, mx)]
         return [fc for fc in pool.map(lambda f: self._plan_file(pfs, f),
-                                      files) if fc.rows]
+                                      admitted) if fc.rows]
 
 
 class PLCDataSource(DataSource):
@@ -887,8 +929,7 @@ def _read_selected(pfs: _PlanFS, file: str, columns: list[str],
     (older stores / small stores) degrade to the previous full read."""
     import bisect
 
-    with pfs.fs.open_input_file(file) as f:
-        pf = pq.ParquetFile(f)
+    with pfs.open_parquet(file) as pf:
         md = pf.metadata
         if rows is None or md.num_row_groups <= 1:
             tbl = pf.read(columns=columns)

@@ -76,7 +76,8 @@ def _sections(spark, src_dir: str, dst: str) -> list[tuple[str, str]]:
 
     probe = "doc-000000000123"
     sections.append((
-        "Point lookup chunk selection (driver-side ChunkPlanner: min/max "
+        "Point lookup chunk selection (driver-side ChunkPlanner: files "
+        "pruned by their manifest doc_id range unopened, then chunk min/max "
         "range + bloom probe in pyarrow; the scan lists only the files "
         "that keep a chunk, with a file-exact chunk_idx residual when a "
         "file keeps only some of its chunks)",

@@ -649,14 +649,15 @@ def select_chunks(spark: SparkSession, dst: str, *,
     touch.
 
     Pruning runs on the driver in :class:`plc.datasource.ChunkPlanner`
-    (the ``plc`` format reader's planner): doc_id bounds, per-chunk
-    stats for ``filters`` and the doc_id bloom for point and batch
-    lookups. The Spark scan is then pinned to the committed files that
-    keep a chunk, read with the explicit enc schema (no inference); a
-    file that keeps only some of its chunks gets a file-exact residual
-    filter on (part_id, file name, chunk_idx). With no predicate no data
-    file is opened: the scan is the committed file list. When no chunk
-    survives the result is an empty local frame (no Spark job).
+    (the ``plc`` format reader's planner): each file's manifest doc_id
+    range first, then per-chunk doc_id bounds, stats for ``filters`` and
+    the doc_id bloom for point and batch lookups. The Spark scan is then
+    pinned to the committed files that keep a chunk, read with the
+    explicit enc schema (no inference); a file that keeps only some of
+    its chunks gets a file-exact residual filter on (part_id, file name,
+    chunk_idx). With no predicate no data file is opened: the scan is
+    the committed file list. When no chunk survives the result is an
+    empty local frame (no Spark job).
 
     ``filters`` values are inclusive ``(lo, hi)`` tuples or LISTS of them
     (multi-range: a chunk survives if ANY range intersects its stats).
@@ -711,8 +712,10 @@ def decode(spark: SparkSession, dst: str, *, doc_id_min: str | None = None,
            filters: dict | None = None,
            doc_ids: list[str] | None = None) -> DataFrame:
     """Read encoded chunks back as the original table. Only committed parts
-    are read, and the chunk planner (:func:`select_chunks`) prunes chunks
-    on the driver before anything is decoded. ``columns`` prunes at the
+    are read, and the chunk planner (:func:`select_chunks`) prunes on the
+    driver before anything is decoded: first whole files by their
+    manifest doc_id range (a file it rules out is never opened), then the
+    kept files' chunks by their metadata. ``columns`` prunes at the
     storage level — unrequested column frames are skipped by length
     inside the chunk, never decoded.
 

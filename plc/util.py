@@ -37,7 +37,18 @@ def ensure_shipped(spark) -> None:
         # to re-zip from inside the archive would raise NotADirectoryError
         _shipped.add(app_id)
         return
-    sc.addPyFile(_pyfiles_zip(pkg_dir))
+    zpath = _pyfiles_zip(pkg_dir)
+    sc.addPyFile(zpath)
+    # Spark's streaming source runner (``spark.readStream.format("plc")``,
+    # run on the driver) resolves the includes under the
+    # ``streaming_job`` dir of the driver's SparkFiles root, where
+    # addPyFile puts nothing; without a copy there the source cannot
+    # unpickle unless the driver's PYTHONPATH already holds plc
+    from pyspark import SparkFiles
+
+    job_dir = os.path.join(SparkFiles.getRootDirectory(), "streaming_job")
+    os.makedirs(job_dir, exist_ok=True)
+    shutil.copy(zpath, job_dir)
     _shipped.add(app_id)
 
 

@@ -442,6 +442,72 @@ def prune_stores(spark):
     shutil.rmtree(work, ignore_errors=True)
 
 
+@pytest.fixture(scope="module")
+def prune_more_stores(spark, prune_stores):
+    """``prune_stores``' table in two more shapes: a format store of two
+    files whose doc_id ranges overlap plus zero-row marker rows (empty
+    writer tasks), and a stream root of three sink batches, one per
+    contiguous third of the doc_ids."""
+    from plc.datasource import _PlanFS, _read_manifest
+
+    tbl, stores = prune_stores
+    work = os.path.dirname(stores["pipeline"])
+    df = spark.read.parquet(work + "/src.parquet")
+    more = {"markers": work + "/markers", "stream": work + "/stream"}
+    (df.repartition(6, F.col("n_tok") % 2).write.format("plc")
+     .option("max_chunk_values", "2000").mode("overwrite")
+     .save(more["markers"]))
+    man = _read_manifest(_PlanFS(more["markers"])).to_pylist()
+    files = [m for m in man if m["file"] is not None]
+    assert len(files) == 2 and len(man) > 2, man
+    assert files[0]["min_doc_id"] <= files[1]["max_doc_id"] \
+        and files[1]["min_doc_id"] <= files[0]["max_doc_id"], files
+    src = work + "/stream_in"
+    os.makedirs(src)
+    for i in range(3):
+        pq.write_table(tbl.slice(1000 * i, 1000),
+                       f"{src}/part-{i}.parquet")
+    q = (spark.readStream.schema(df.schema)
+         .option("maxFilesPerTrigger", "1").parquet(src)
+         .writeStream.format("plc").option("max_chunk_values", "2000")
+         .option("checkpointLocation", work + "/stream_ckpt")
+         .trigger(availableNow=True).start(more["stream"]))
+    q.awaitTermination(300)
+    q.stop()
+    assert len(glob.glob(more["stream"] + "/_manifest/parts/batch-*")) == 3
+    return more
+
+
+def _format_rows(spark, dst, kw, batch_ids=None) -> list:
+    """(doc_id, n_tok) rows of ``decode(**kw)`` read through
+    ``format("plc")`` (pinned to ``batch_ids`` when given): single
+    ranges and ``doc_ids`` as DataFrame filters the reader's
+    ``pushFilters`` gets, multi-ranges as the ``filters`` option."""
+    import json
+
+    reader = spark.read.format("plc")
+    if batch_ids is not None:
+        reader = reader.option("batch_ids", ",".join(map(str, batch_ids)))
+    filters = dict(kw.get("filters", {}))
+    if "doc_id_min" in kw:
+        filters["doc_id"] = (kw["doc_id_min"], kw["doc_id_max"])
+    multi = {c: v for c, v in filters.items() if isinstance(v, list)}
+    if multi:
+        reader = reader.option("filters", json.dumps(multi))
+    df = reader.load(dst)
+    for col, spec in filters.items():
+        if col not in multi:
+            lo, hi = spec
+            if lo is not None:
+                df = df.filter(F.col(col) >= F.lit(lo))
+            if hi is not None:
+                df = df.filter(F.col(col) <= F.lit(hi))
+    if "doc_ids" in kw:
+        df = df.filter(F.col("doc_id").isin(kw["doc_ids"]))
+    return sorted((r["doc_id"], r["n_tok"]) for r in
+                  df.select("doc_id", "n_tok").collect())
+
+
 def _store_chunks(dst: str) -> dict:
     """(part_id, file name, chunk_idx) → the chunk's doc_ids, for every
     committed chunk of a store, decoded with pyarrow."""
@@ -515,17 +581,21 @@ def _prune_preds(tbl) -> tuple[list, list]:
     ]
 
 
-def test_planner_no_false_negatives(spark, prune_stores):
+def test_planner_no_false_negatives(spark, prune_stores,
+                                    prune_more_stores):
     """Every chunk holding a matching row survives select_chunks, and
     decode returns exactly the pyarrow-filtered rows — for point, range,
     IN-list (with absent keys), weight, string, temporal and multi-range
-    predicates on a pipeline store, a format store and a shuffle="none"
-    store whose part dirs hold files with overlapping chunk_idx."""
+    predicates on a pipeline store, a format store, a shuffle="none"
+    store whose part dirs hold files with overlapping chunk_idx, a
+    format store with overlapping file doc_id ranges and zero-row marker
+    rows, and a stream root of several batch manifests, which format
+    ("plc") also reads pinned to some of its batches."""
     from plc.pipeline import decode, select_chunks
 
     tbl, stores = prune_stores
     absent, preds = _prune_preds(tbl)
-    for name, dst in stores.items():
+    for name, dst in {**stores, **prune_more_stores}.items():
         chunks = _store_chunks(dst)
         if name == "none":
             by_file = {}
@@ -556,6 +626,74 @@ def test_planner_no_false_negatives(spark, prune_stores):
         # the predicates prune: a point lookup keeps one chunk
         one = select_chunks(spark, dst, **preds[0])[0].count()
         assert one == 1 < len(chunks), (name, one, len(chunks))
+    stream = prune_more_stores["stream"]
+    for pin in (None, [1], [0, 2]):
+        held = {d for d, _ in _format_rows(spark, stream, {}, pin)}
+        assert len(held) == 1000 * (3 if pin is None else len(pin))
+        for kw in preds:
+            want = tbl.filter(_expected_mask(tbl, **kw))
+            assert _format_rows(spark, stream, kw, pin) == sorted(
+                (d, n) for d, n in zip(want["doc_id"].to_pylist(),
+                                       want["n_tok"].to_pylist())
+                if d in held), (pin, kw)
+
+
+def test_point_lookup_opens_only_admitted_files(spark, prune_stores,
+                                                prune_more_stores,
+                                                monkeypatch):
+    """A point lookup opens only the data files whose manifest doc_id
+    range holds the key — in planning and in the payload read — through
+    decode, select_chunks and the format reader's planning, on stores
+    with disjoint file ranges (pipeline, stream root) and overlapping
+    ones. A spy counts every data-file open through ``_PlanFS``."""
+    import threading
+
+    from pyspark.sql.datasource import EqualTo
+
+    from plc import pipeline as P
+    from plc.datasource import PLCDataSource, _PlanFS, _read_manifest
+
+    tbl, stores = prune_stores
+    key = tbl["doc_id"].to_pylist()[1234]
+    opened, lock = [], threading.Lock()
+
+    def spy(method):
+        def wrapper(self, source, *args, **kwargs):
+            if isinstance(source, str) and "/data/part_id=" in source:
+                with lock:
+                    opened.append(source)
+            return method(self, source, *args, **kwargs)
+        return wrapper
+
+    for name in ("read_parquet", "open_parquet"):
+        monkeypatch.setattr(_PlanFS, name, spy(getattr(_PlanFS, name)))
+    monkeypatch.setattr(P, "_DRIVER_DECODE_MAX_BYTES", float("inf"))
+    for name, dst in {**stores, **prune_more_stores}.items():
+        pfs = _PlanFS(dst)
+        man = [m for m in _read_manifest(pfs).to_pylist()
+               if m["file"] is not None]
+        admitted = {pfs.join("data", f"part_id={m['part_id']}", m["file"])
+                    for m in man if m["min_doc_id"] <= key <= m["max_doc_id"]}
+        if name in ("pipeline", "stream"):
+            assert len(admitted) == 1 < len(man), (name, len(man))
+        opened.clear()
+        rows = P.decode(spark, dst, filters={"doc_id": (key, key)}).collect()
+        assert [r["doc_id"] for r in rows] == [key], name
+        assert opened and set(opened) <= admitted, (name, opened)
+        opened.clear()
+        enc, _ = P.select_chunks(spark, dst, doc_ids=[key])
+        assert set(opened) <= admitted, (name, opened)
+        assert enc.count() >= 1
+        opened.clear()
+        source = PLCDataSource({"path": dst})
+        reader = source.reader(source.schema())
+        list(reader.pushFilters([EqualTo(("doc_id",), key)]))
+        parts = reader.partitions()
+        assert set(opened) <= admitted and parts, (name, opened)
+        assert {p.file for p in parts} <= admitted, name
+        got = (spark.read.format("plc").load(dst)
+               .filter(F.col("doc_id") == key).select("doc_id").collect())
+        assert [r["doc_id"] for r in got] == [key], name
 
 
 def _both_paths(spark, monkeypatch, dst: str, **kw) -> list:

@@ -43,6 +43,65 @@ def test_bitpack_parquet_bit_order():
     assert K.bitpack(arr, 3) == bytes([0b10001000, 0b11000110, 0b11111010])
 
 
+def _unpackbits_reference(buf, w: int, n: int) -> np.ndarray:
+    """Bit-at-a-time reference decoder: parquet bit-packed order through
+    ``np.unpackbits``, one pass per bit of width."""
+    out = np.zeros(n, dtype=np.uint64)
+    if w == 0 or n == 0:
+        return out
+    bits = np.unpackbits(np.frombuffer(buf, dtype=np.uint8),
+                         bitorder="little", count=n * w).reshape(n, w)
+    for j in range(w):
+        out |= bits[:, j].astype(np.uint64) << np.uint64(j)
+    return out
+
+
+@pytest.mark.parametrize("w", range(65))
+def test_bitunpack_matches_unpackbits_reference(w):
+    """The word-gather bitunpack equals the bit-at-a-time reference for
+    every width, on random packed bytes with trailing bytes, from bytes,
+    from a read-only memoryview slice at an odd offset (as FOR frames
+    pass their payload) and from a read-only numpy array; the result is
+    uint64 and bitpack's inverse."""
+    rng = np.random.default_rng(w)
+    for n in (0, 1, 7, 8, 9, 1000, 2**18 + 3):
+        nbytes = (n * w + 7) // 8
+        packed = rng.integers(0, 256, nbytes + 5, dtype=np.uint8).tobytes()
+        want = _unpackbits_reference(packed, w, n)
+        head = 3 + 2 * (w % 4)  # odd offsets 3, 5, 7, 9
+        view = memoryview(b"\x5a" * head + packed)[head:]
+        ro = np.frombuffer(packed, dtype=np.uint8)
+        assert not ro.flags.writeable
+        for buf in (packed, view, ro):
+            got = K.bitunpack(buf, w, n)
+            assert got.dtype == np.uint64 and got.shape == (n,), (w, n)
+            np.testing.assert_array_equal(got, want, err_msg=f"w={w} n={n}")
+        np.testing.assert_array_equal(
+            K.bitunpack(K.bitpack(want, w), w, n), want)
+
+
+@pytest.mark.parametrize("dtype", ["int8", "int16", "int32", "int64",
+                                   "uint8", "uint16", "uint32", "uint64"])
+def test_for_and_rle_for_roundtrip_keep_dtype(dtype):
+    """FOR and RLE-over-FOR decode to the stored dtype and values: full
+    type range, a narrow range with runs, and a constant column."""
+    info = np.iinfo(dtype)
+    rng = np.random.default_rng(7)
+    full = rng.integers(info.min, info.max, 3001, dtype=dtype, endpoint=True)
+    full[:2] = info.min, info.max
+    runs = np.repeat(rng.integers(info.min // 2, info.max // 2 + 1, 40,
+                                  dtype=dtype, endpoint=True),
+                     rng.integers(1, 30, 40))
+    for arr in (full, runs, np.full(17, info.max, dtype=dtype)):
+        for enc, dec in ((K.for_encode, K.for_decode),
+                         (K.rle_for_encode, K.rle_for_decode)):
+            ref, w, buf = enc(arr)
+            out = dec(ref, w, buf, arr.size, np.dtype(dtype))
+            assert out.dtype == np.dtype(dtype), (dtype, enc.__name__)
+            np.testing.assert_array_equal(out, arr,
+                                          err_msg=f"{dtype} {enc.__name__}")
+
+
 # ---------------------------------------------------------------- varint
 def test_varint_roundtrip():
     vals = [0, 1, 127, 128, 300, 2**20, 2**35]

@@ -771,9 +771,9 @@ def test_batch_lookup_scan_pinned_to_planner_files(spark):
         planner = ChunkPlanner(_load_plan(pfs))
         planner.probe(keys)
         with ThreadPoolExecutor(4) as pool:
-            committed = set(_committed_data_files(pfs))
-            kept = {fc.file for fc in planner.plan(pfs, sorted(committed),
-                                                   pool)}
+            files = _committed_data_files(pfs)
+            committed = set(files)
+            kept = {fc.file for fc in planner.plan(pfs, files, pool)}
         pruned, _ = select_chunks(spark, d, doc_ids=keys)
         p = pruned._jdf.queryExecution().executedPlan().toString()
         assert "Join" not in p, p

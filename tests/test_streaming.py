@@ -558,3 +558,66 @@ def test_old_stream_root_layout_is_refused(spark):
                             None)
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+_READSTREAM_CHILD = """
+import os, sys
+sys.path.insert(0, sys.argv[1])  # the driver imports plc; no PYTHONPATH
+import pyarrow as pa, pyarrow.parquet as pq
+from pyspark.sql import SparkSession
+from plc.datasource import register
+
+work = sys.argv[2]
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.sql.shuffle.partitions", "1")
+         .config("spark.ui.enabled", "false").getOrCreate())
+register(spark)
+src, root = os.path.join(work, "in"), os.path.join(work, "root")
+os.makedirs(src)
+pq.write_table(pa.table({"doc_id": [f"d{i:04d}" for i in range(100)],
+                         "n_tok": pa.array(range(100), pa.int32())}),
+               os.path.join(src, "a.parquet"))
+q = (spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+     .writeStream.format("plc")
+     .option("checkpointLocation", os.path.join(work, "ck_sink"))
+     .trigger(availableNow=True).start(root))
+q.awaitTermination(240)
+q.stop()
+print("format", spark.read.format("plc").load(root).count())
+q = (spark.readStream.format("plc").load(root).writeStream.format("memory")
+     .queryName("plc_child_t")
+     .option("checkpointLocation", os.path.join(work, "ck_src"))
+     .trigger(availableNow=True).start())
+q.awaitTermination(240)
+err = q.exception()
+print("error", err)
+print("stream", spark.sql("select count(*) from plc_child_t").first()[0])
+spark.stop()
+"""
+
+
+def test_read_stream_without_repo_on_pythonpath():
+    """``spark.readStream.format("plc")`` works in a driver whose
+    PYTHONPATH lacks plc and whose cwd is outside the repo: Spark's
+    streaming source runner unpickles the data source from the zip
+    ``register`` ships, as batch reads and the sink do."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    work = tempfile.mkdtemp(prefix="plc_rs_child_")
+    try:
+        script = os.path.join(work, "child.py")
+        with open(script, "w") as f:
+            f.write(_READSTREAM_CHILD)
+        env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+        proc = subprocess.run(
+            [sys.executable, script, repo, work], cwd=work, env=env,
+            capture_output=True, text=True, timeout=600)
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        out = proc.stdout.splitlines()
+        assert "format 100" in out, proc.stdout
+        assert "error None" in out, proc.stdout[-3000:]
+        assert "stream 100" in out, proc.stdout
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
