@@ -68,27 +68,29 @@ _DTYPE_CODE = {dt: i for i, dt in enumerate(_DTYPES)}
  _K_DECIMAL128, _K_MAP) = range(8)
 
 
+# Codec-selection constants (K11), tuned on the FIXTURES.md regimes.
+# Large planes use level 1: measured on those regimes it stays 1-2% below
+# parquet-cpp's zstd+dict bytes while encoding ~3x faster than level 9
+_ZSTD_LEVEL_LARGE = 1
+_ZSTD_LARGE_THRESHOLD = 2 << 20
+_ZSTD_MIN_GAIN = 0.96       # keep the zstd wrap only if < 96% of inner size
+_ZSTD_PROBE_BYTES = 1 << 16  # sample-compress gate for large planes
+_RLE_MIN_AVG_RUN = 2.5      # avg run length above which RLE beats FOR
+_DICT_MAX_CARD_FRAC = 0.5
+_SAMPLE_VALUES = 4096       # try-top-2-keep-smallest sample size
+_FSST_MAX_AVG_LEN = 512     # FSST targets short strings; long docs → zstd
+
+MAX_CHUNK_VALUES = 1 << 22  # every writer's default weight cap per chunk
+
+
 @dataclass
 class EncodeConfig:
-    """Codec-selection knobs (K11). Defaults tuned on FIXTURES.md regimes."""
+    """The settable codec knobs. One instance lives for one writer task:
+    it carries the per-column FSST table cache, so a column's later
+    chunks reuse the table its first chunk trained."""
 
     zstd_level: int = 3
-    # large planes: level 1 — measured on the FIXTURES regimes it stays
-    # 1-2% below parquet-cpp's zstd+dict bytes while encoding ~3x faster
-    # than level 9 (the size/speed criterion weighs both; raise for
-    # cold-archive use)
-    zstd_level_large: int = 1
-    zstd_large_threshold: int = 2 << 20
-    zstd_min_gain: float = 0.96   # keep zstd wrap only if < 96% of inner size
-    zstd_probe_bytes: int = 1 << 16  # sample-compress gate for large planes
     use_zstd: bool = True
-    use_fsst: bool = True
-    use_dict: bool = True
-    rle_min_avg_run: float = 2.5  # avg run length above which RLE beats FOR
-    dict_max_card_frac: float = 0.5
-    sample_values: int = 4096     # try-top-2-keep-smallest sample size
-    fsst_cache: bool = True       # reuse trained tables across a column's chunks
-    fsst_max_avg_len: int = 512   # FSST targets short strings; long docs → zstd
     _fsst_cache: dict = field(default_factory=dict, repr=False)
 
 
@@ -191,24 +193,24 @@ def _dict_int_frame(arr: np.ndarray, cfg: EncodeConfig) -> bytes:
 
 
 def _zstd_wrap(inner: bytes, cfg: EncodeConfig) -> bytes:
-    large = len(inner) >= cfg.zstd_large_threshold
-    level = cfg.zstd_level_large if large else cfg.zstd_level
+    large = len(inner) >= _ZSTD_LARGE_THRESHOLD
+    level = _ZSTD_LEVEL_LARGE if large else cfg.zstd_level
     codec = pa.Codec("zstd", compression_level=level)
-    if large and len(inner) > 4 * cfg.zstd_probe_bytes:
+    if large and len(inner) > 4 * _ZSTD_PROBE_BYTES:
         # incompressible-plane gate: sample-compress a slice first; a plane
         # whose sample barely shrinks (high-entropy bit-packed data) skips
         # the full compression instead of doing it and discarding it
-        probe = codec.compress(inner[: cfg.zstd_probe_bytes], asbytes=True)
-        if len(probe) >= cfg.zstd_probe_bytes * 0.98:
+        probe = codec.compress(inner[: _ZSTD_PROBE_BYTES], asbytes=True)
+        if len(probe) >= _ZSTD_PROBE_BYTES * 0.98:
             return inner
     comp = codec.compress(inner, asbytes=True)
-    if len(comp) >= len(inner) * cfg.zstd_min_gain:
+    if len(comp) >= len(inner) * _ZSTD_MIN_GAIN:
         return inner
     _, n, _, _ = _frame_header(memoryview(inner), 0)
     return _frame(ZSTD, n, struct.pack("<Q", len(inner)), comp)
 
 
-def _int_stats(arr: np.ndarray, cfg: EncodeConfig):
+def _int_stats(arr: np.ndarray):
     """K10: sampled cardinality / run-length / value-range statistics.
 
     Cardinality uses a strided sample (spread across the chunk); run length
@@ -216,10 +218,10 @@ def _int_stats(arr: np.ndarray, cfg: EncodeConfig):
     (single vectorized pass — also needed for the FOR reference).
     """
     n = arr.size
-    step = -(-n // cfg.sample_values)  # ceil: stride spans the whole chunk
-    sample = arr[:: max(1, step)][: cfg.sample_values]
+    step = -(-n // _SAMPLE_VALUES)  # ceil: stride spans the whole chunk
+    sample = arr[:: max(1, step)][: _SAMPLE_VALUES]
     card = np.unique(sample).size
-    win = arr[: cfg.sample_values * 4]
+    win = arr[: _SAMPLE_VALUES * 4]
     runs = K.run_count(win)
     lo, hi = int(arr.min()), int(arr.max())
     return card, sample.size, win.size / max(runs, 1), lo, hi
@@ -244,41 +246,41 @@ def encode_int_plane(arr: np.ndarray, cfg: EncodeConfig, *, allow_dict: bool = T
     if arr.dtype == np.uint64:  # FOR's int64 shift can wrap; store raw
         frame = _plain_frame(arr)
         return _zstd_wrap(frame, cfg) if (cfg.use_zstd and allow_zstd) else frame
-    card, ssize, avg_run, lo, hi = _int_stats(arr, cfg)
+    card, ssize, avg_run, lo, hi = _int_stats(arr)
     w = K.bits_needed(hi - lo)
     candidates = []
-    if avg_run >= cfg.rle_min_avg_run:
+    if avg_run >= _RLE_MIN_AVG_RUN:
         candidates.append(_rle_frame)
     candidates.append(_for_frame)
     if (w > 8 and allow_zstd and cfg.use_zstd
-            and avg_run < cfg.rle_min_avg_run):
+            and avg_run < _RLE_MIN_AVG_RUN):
         # byte-split pays on skewed-but-unordered data; on runny data the
         # transpose destroys the run structure RLE/zstd exploit, and small
         # samples misrank it (zstd overhead hides the full-plane cost)
         candidates.append(_forbp_frame)
-    if (cfg.use_dict and allow_dict and card <= ssize * cfg.dict_max_card_frac
+    if (allow_dict and card <= ssize * _DICT_MAX_CARD_FRAC
             and card < (1 << max(w - 1, 1))):
         candidates.append(lambda a: _dict_int_frame(a, cfg))
     if allow_delta and arr.size >= 3:
         # near-monotonic columns (timestamps, ids, offsets): the sampled
         # delta range must beat the value range by a full packing width
         # before the delta transform earns a trial slot
-        win = arr[: cfg.sample_values * 4].astype(np.int64, copy=False)
+        win = arr[: _SAMPLE_VALUES * 4].astype(np.int64, copy=False)
         dw = np.diff(win)
         if dw.size and K.bits_needed(int(dw.max()) - int(dw.min())) < w:
             candidates.append(lambda a: _delta_frame(a, cfg))
 
     wrap = (lambda f: _zstd_wrap(f, cfg)) if (cfg.use_zstd and allow_zstd) \
         else (lambda f: f)
-    if len(candidates) > 1 and arr.size > cfg.sample_values:
+    if len(candidates) > 1 and arr.size > _SAMPLE_VALUES:
         # try-all-keep-smallest on contiguous samples, *including* the zstd
         # wrap (GP compression changes the ranking). Large planes use a
         # TWO-POINT trial: the marginal bytes/value between two sample
         # sizes cancels zstd's fixed overhead, which otherwise misranks
         # candidates whose ratio improves with stream size (byte-plane
         # split wins at MBs but loses at 64 KB).
-        n1 = cfg.sample_values * 4
-        n2 = cfg.sample_values * 32
+        n1 = _SAMPLE_VALUES * 4
+        n2 = _SAMPLE_VALUES * 32
         if arr.size > 2 * n2:
             s1_arr, s2_arr = arr[:n1], arr[:n2]
             est = []
@@ -323,8 +325,8 @@ def encode_float_plane(arr: np.ndarray, cfg: EncodeConfig, *,
     wrap = (lambda f: _zstd_wrap(f, cfg)) if (cfg.use_zstd and allow_zstd) \
         else (lambda f: f)
     candidates = [_plain_frame, _byteplane_frame]
-    if arr.size > cfg.sample_values:
-        sample = arr[: cfg.sample_values * 16]
+    if arr.size > _SAMPLE_VALUES:
+        sample = arr[: _SAMPLE_VALUES * 16]
         sizes = [len(wrap(c(sample))) for c in candidates]
         best = candidates[int(np.argmin(sizes))]
     else:
@@ -373,14 +375,12 @@ def _fsst_frame(data: np.ndarray, lengths: np.ndarray, cfg: EncodeConfig) -> byt
     # worker: training is the expensive step and the value distribution is
     # stable across a column's chunks (escape bytes absorb drift). The
     # table blob is stored per chunk, so decode never needs the cache.
-    tbl = None
     key = getattr(cfg, "_current_col", None)
-    if cfg.fsst_cache and key is not None:
-        tbl = cfg._fsst_cache.get(key)
+    tbl = cfg._fsst_cache.get(key) if key is not None else None
     if tbl is None:
         tbl = fsst.train(np.asarray(data, np.uint8),
                          np.asarray(lengths, np.int64))
-        if cfg.fsst_cache and key is not None:
+        if key is not None:
             cfg._fsst_cache[key] = tbl
     table, codes, code_lens = fsst.fsst_encode(data, lengths, table=tbl)
     lens_frame = encode_int_plane(code_lens.astype(np.int64), cfg, allow_zstd=False)
@@ -397,7 +397,7 @@ def _string_frame(lengths: np.ndarray, data: np.ndarray, cfg: EncodeConfig,
     avg_len = data.size / max(lengths.size, 1)
     wrap = cfg.use_zstd and allow_zstd
     best_wrapped = _zstd_wrap(data_frame, cfg) if wrap else data_frame
-    if cfg.use_fsst and data.size >= 64 and avg_len <= cfg.fsst_max_avg_len:
+    if data.size >= 64 and avg_len <= _FSST_MAX_AVG_LEN:
         try:
             fs = _fsst_frame(data, lengths, cfg)
             # compare *after* the zstd wrap: zstd on raw bytes often beats
@@ -418,22 +418,21 @@ def encode_string_plane(arr: pa.Array, cfg: EncodeConfig) -> bytes:
     if n == 0:
         return _frame(STRING, 0, encode_int_plane(np.empty(0, np.int64), cfg),
                       _bytes_frame(np.empty(0, np.uint8)))
-    if cfg.use_dict:
-        sample = arr.slice(0, min(n, cfg.sample_values))
-        import pyarrow.compute as pc
+    import pyarrow.compute as pc
 
-        card = pc.count_distinct(sample).as_py()
-        if card <= len(sample) * cfg.dict_max_card_frac:
-            enc = arr.combine_chunks().dictionary_encode() if isinstance(
-                arr, pa.ChunkedArray) else arr.dictionary_encode()
-            dict_vals = enc.dictionary
-            idx = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-            dlens, ddata = _string_planes(dict_vals)
-            vals_frame = _string_frame(dlens, ddata, cfg, allow_zstd=False)
-            idx_frame = encode_int_plane(idx, cfg, allow_dict=False,
-                                         allow_zstd=False)
-            frame = _frame(DICT, n, vals_frame, idx_frame)
-            return _zstd_wrap(frame, cfg) if cfg.use_zstd else frame
+    sample = arr.slice(0, min(n, _SAMPLE_VALUES))
+    card = pc.count_distinct(sample).as_py()
+    if card <= len(sample) * _DICT_MAX_CARD_FRAC:
+        enc = arr.combine_chunks().dictionary_encode() if isinstance(
+            arr, pa.ChunkedArray) else arr.dictionary_encode()
+        dict_vals = enc.dictionary
+        idx = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+        dlens, ddata = _string_planes(dict_vals)
+        vals_frame = _string_frame(dlens, ddata, cfg, allow_zstd=False)
+        idx_frame = encode_int_plane(idx, cfg, allow_dict=False,
+                                     allow_zstd=False)
+        frame = _frame(DICT, n, vals_frame, idx_frame)
+        return _zstd_wrap(frame, cfg) if cfg.use_zstd else frame
     lengths, data = _string_planes(arr)
     return _string_frame(lengths, data, cfg)
 
@@ -1177,6 +1176,65 @@ def enc_row(buf: list, cfg: EncodeConfig, part_id: int, chunk_idx: int,
         pa.array([bloom], pa.binary()),
         pa.array([blob], pa.binary()),
     ], schema=_ENC_ARROW_SCHEMA)
+
+
+def weight_col(names) -> str:
+    """``n_tok`` for token tables, else ``_w`` (1 per row, never stored)."""
+    return "n_tok" if "n_tok" in names else "_w"
+
+
+def row_weights(batch: pa.RecordBatch, wcol: str) -> np.ndarray:
+    """The one row-weight rule, as int64: ``n_tok`` with a null counted
+    as 0 (the stored value stays null), or 1 per row for ``_w``.
+    ``plc.pipeline._weight`` is the same rule as a Spark Column."""
+    if wcol != "n_tok":
+        return np.ones(batch.num_rows, np.int64)
+    import pyarrow.compute as pc
+
+    return (pc.fill_null(batch.column("n_tok"), 0)
+            .to_numpy(zero_copy_only=False).astype(np.int64))
+
+
+def cut_chunks(runs, cfg: EncodeConfig, wcol: str, max_vals: int):
+    """The one chunk cutter, run by every writer's tasks: ``runs`` of
+    ``(part_id, batch, weights)`` (consecutive rows of one part, their
+    :func:`row_weights`) in, one :func:`enc_row` per chunk out. A chunk
+    holds at most ``max_vals`` of weight unless one row alone weighs
+    more; it is cut inside a batch where needed, so the Arrow batch size
+    never shows in what is stored, and closes when the part changes.
+    ``chunk_idx`` counts this task's chunks."""
+    buf: list[pa.RecordBatch] = []
+    buf_part = -1
+    buf_w = chunk_idx = 0
+
+    def flush() -> pa.RecordBatch:
+        nonlocal buf, buf_w, chunk_idx
+        row = enc_row(buf, cfg, buf_part, chunk_idx, buf_w, wcol)
+        buf, buf_w, chunk_idx = [], 0, chunk_idx + 1
+        return row
+
+    for pid, batch, w in runs:
+        if buf and pid != buf_part:
+            yield flush()
+        buf_part = pid
+        cum = np.cumsum(w)
+        s = base = 0  # base: weight of the batch's rows before s
+        while s < len(w):
+            # rows s..hi-1 are the most that fit in the chunk's room
+            hi = max(s, int(np.searchsorted(cum, base + max_vals - buf_w,
+                                            side="right")))
+            if hi == s:
+                if buf:
+                    yield flush()
+                    continue
+                hi = s + 1
+            buf.append(batch.slice(s, hi - s))
+            buf_w += int(cum[hi - 1]) - base
+            s, base = hi, int(cum[hi - 1])
+            if buf_w >= max_vals:
+                yield flush()
+    if buf:
+        yield flush()
 
 
 def _encode_with_nulls(col: pa.Array, cfg: EncodeConfig) -> bytes:

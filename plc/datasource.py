@@ -1085,6 +1085,8 @@ class _StoreWriter:
     def __init__(self, path: str, schema: StructType, max_chunk_values):
         import uuid
 
+        from plc.chunk import MAX_CHUNK_VALUES, weight_col
+
         if "doc_id" not in schema.fieldNames():
             raise ValueError("plc stores require a doc_id column "
                              "(chunk pruning + lineage identity)")
@@ -1100,8 +1102,8 @@ class _StoreWriter:
         self.path = path
         self.pfs = _PlanFS(path)
         self.schema = schema
-        self.max_vals = int(max_chunk_values or (1 << 22))
-        self.wcol = "n_tok" if "n_tok" in schema.fieldNames() else "_w"
+        self.max_vals = int(max_chunk_values or MAX_CHUNK_VALUES)
+        self.wcol = weight_col(schema.fieldNames())
         # job id baked into every task file name: abort() can then sweep
         # exactly this job's files, and a name can never collide with a
         # previous write's leftovers
@@ -1111,7 +1113,9 @@ class _StoreWriter:
 class PLCWriter(_StoreWriter, DataSourceArrowWriter):
     """``df.write.format("plc").mode("overwrite").save(dst)`` — the fully
     declarative encode: each Spark task packs its partition into codec
-    chunks (one logical part per task partition) and the driver commits
+    chunks of at most the ``max_chunk_values`` option's weight, cut by
+    the rule ``encode`` uses (:func:`plc.chunk.cut_chunks`; one logical
+    part per task partition) and the driver commits
     plan + lineage manifest from the task messages, so the layout users
     choose upstream IS the storage layout::
 
@@ -1180,33 +1184,18 @@ class PLCWriter(_StoreWriter, DataSourceArrowWriter):
 
 def _encode_task_partition(pfs: _PlanFS, pid: int, jobid: str, wcol: str,
                            max_vals: int, iterator) -> "PLCCommit":
-    """Executor side of a format write (batch AND streaming): pack the
-    task's Arrow batches into codec chunks of about ``max_vals`` weight
-    (one logical part per task) and write them through
-    :func:`_write_part_files` into ONE file of ``data/part_id=<pid>/``;
-    its manifest row, or a zero-row marker when the task got no rows."""
-    import pyarrow.compute as pc
+    """Executor side of a format write (batch AND streaming): cut the
+    task's Arrow batches into chunks of at most ``max_vals`` weight with
+    :func:`plc.chunk.cut_chunks` (one logical part per task) and write
+    them through :func:`_write_part_files` into ONE file of
+    ``data/part_id=<pid>/``; its manifest row, or a zero-row marker when
+    the task got no rows."""
+    from plc.chunk import EncodeConfig, cut_chunks, row_weights
 
-    from plc.chunk import EncodeConfig, enc_row
-
-    def chunks():
-        cfg = EncodeConfig()
-        buf: list[pa.RecordBatch] = []
-        wsum = chunk_idx = 0
-        for batch in iterator:
-            if batch.num_rows == 0:
-                continue
-            buf.append(batch)
-            wsum += (int(pc.sum(batch.column("n_tok")).as_py() or 0)
-                     if wcol == "n_tok" else batch.num_rows)
-            if wsum >= max_vals:
-                yield enc_row(buf, cfg, pid, chunk_idx, wsum, wcol)
-                buf, wsum, chunk_idx = [], 0, chunk_idx + 1
-        if buf:
-            yield enc_row(buf, cfg, pid, chunk_idx, wsum, wcol)
-
-    return next(_write_part_files(pfs, jobid, chunks()),
-                PLCCommit(pid, None, 0, 0, 0, 0, 0, None, None))
+    runs = ((pid, b, row_weights(b, wcol)) for b in iterator)
+    return next(_write_part_files(
+        pfs, jobid, cut_chunks(runs, EncodeConfig(), wcol, max_vals)),
+        PLCCommit(pid, None, 0, 0, 0, 0, 0, None, None))
 
 
 def _write_part_files(pfs: _PlanFS, jobid: str, rows):
@@ -1287,17 +1276,10 @@ def _commit_store(pfs: _PlanFS, msgs: list, wcol: str,
        attempts) best-effort — readers ignore unnamed files regardless,
        this only reclaims bytes, and a crash mid-sweep leaves a valid
        store + orphans for :func:`gc`."""
-    plan = {
-        "n_parts": (max((m.part_id for m in msgs), default=0) + 1),
-        "bounds": [], "tau": 2**31 - 1, "weight_col": wcol,
-        "straggler_parts": 0,
-        "total_rows": sum(m.n_rows for m in msgs),
-        "schema": schema.jsonValue(),
-        # format-written stores commit every part in one job; there is
-        # nothing for encode(resume=True) to resume — the marker lets it
-        # fail loudly instead of silently encoding zero rows (ADVICE r5)
-        "writer": "format",
-    }
+    # a format store commits every part in one job: the writer tag
+    # makes encode(resume=True) refuse it instead of encoding zero rows
+    plan = {"schema": schema.jsonValue(), "weight_col": wcol,
+            "writer": "format"}
     # the commit point: readers open exactly the named files and
     # nothing else in the part dirs
     man = _manifest_table(msgs)

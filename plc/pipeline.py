@@ -49,7 +49,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import StructType
 
-from plc.chunk import _ENC_ARROW_SCHEMA, EncodeConfig, enc_row
+from plc.chunk import (_ENC_ARROW_SCHEMA, MAX_CHUNK_VALUES, EncodeConfig,
+                       cut_chunks, row_weights, weight_col)
 from plc.datasource import (_MANIFEST_SCHEMA, _PARTS_REL, _PLAN_REL,
                             _PLAN_THREADS, _SUM_COLS, ChunkPlanner,
                             PLCChunkPartition, PLCCommit, _PlanFS,
@@ -85,9 +86,7 @@ class PipelineConfig:
     num_partitions: int | None = None     # logical range parts (None → auto)
     straggler_parts: int = 4              # k salted parts for skewed rows
     skew_quantile: float = 0.999          # τ = q(n_tok, this)
-    max_chunk_values: int = 1 << 22       # split chunks above ~4M tokens
-    bounds_sample: int = 100_000          # doc_ids sampled for range bounds
-    sort_within: bool = True              # sortWithinPartitions for run wins
+    max_chunk_values: int = MAX_CHUNK_VALUES  # weight cap per chunk
     shuffle: str = "range"                # "range" | "none" (input already
     #   clustered by doc_id, e.g. a sorted Iceberg table: skips the only
     #   exchange in the pipeline; logical part ids and resume semantics are
@@ -103,10 +102,13 @@ def _manifest_path(dst: str) -> str:
     return os.path.join(dst, "_manifest", "parts")
 
 
-def _weight_col(df: DataFrame) -> str:
-    """Row-weight column for chunk caps and skew: n_tok for token tables,
-    the synthetic _w=1 column for any other table shape."""
-    return "n_tok" if "n_tok" in df.columns else "_w"
+_BOUNDS_SAMPLE = 100_000  # most doc_ids sampled for the range bounds
+
+
+def _weight(wcol: str) -> Column:
+    """:func:`plc.chunk.row_weights` as a Column, for τ, skew routing and
+    resume: a null ``n_tok`` counts as 0, a table without it weighs 1."""
+    return F.lit(1) if wcol == "_w" else F.coalesce(F.col(wcol), F.lit(0))
 
 
 def build_plan(spark: SparkSession, df: DataFrame, cfg: PipelineConfig) -> dict:
@@ -120,15 +122,15 @@ def build_plan(spark: SparkSession, df: DataFrame, cfg: PipelineConfig) -> dict:
     state is O(num_partitions + target)."""
     from pyspark.sql import Observation
 
-    wcol = _weight_col(df)
+    wcol = weight_col(df.columns)
     # sample size scales with the part count (~200 ids per boundary is
-    # plenty for even range bounds); cfg.bounds_sample stays the ceiling.
+    # plenty for even range bounds); _BOUNDS_SAMPLE stays the ceiling.
     # When num_partitions is auto (None) the part count depends on the
     # not-yet-known total, so the ceiling itself is the target.
-    target = (min(cfg.bounds_sample, 10_000 + 200 * cfg.num_partitions)
-              if cfg.num_partitions else cfg.bounds_sample)
+    target = (min(_BOUNDS_SAMPLE, 10_000 + 200 * cfg.num_partitions)
+              if cfg.num_partitions else _BOUNDS_SAMPLE)
     obs = Observation()
-    rows = (df.select("doc_id", wcol)
+    rows = (df.select("doc_id", _weight(wcol))
             .observe(obs, F.count(F.lit(1)).alias("n"))
             .orderBy(F.xxhash64("doc_id", F.lit(42)))
             .limit(target).collect())
@@ -143,7 +145,6 @@ def build_plan(spark: SparkSession, df: DataFrame, cfg: PipelineConfig) -> dict:
     if cfg.straggler_parts > 0 and rows:
         tau = int(np.quantile(np.array([r[1] for r in rows], dtype=np.int64),
                               cfg.skew_quantile, method="lower"))
-    stored = df.drop("_w") if wcol == "_w" else df
     return {
         "n_parts": len(bounds) + 1,
         "bounds": bounds,
@@ -151,7 +152,7 @@ def build_plan(spark: SparkSession, df: DataFrame, cfg: PipelineConfig) -> dict:
         "weight_col": wcol,
         "straggler_parts": cfg.straggler_parts,
         "total_rows": total,
-        "schema": stored.schema.jsonValue(),
+        "schema": df.schema.jsonValue(),
     }
 
 
@@ -161,35 +162,15 @@ def build_plan(spark: SparkSession, df: DataFrame, cfg: PipelineConfig) -> dict:
 
 
 def _make_encoder(plan: dict, cfg: PipelineConfig):
+    """The encode task body: label each row with its part id and feed
+    the runs of one part to :func:`plc.chunk.cut_chunks`."""
     bounds = np.array(plan["bounds"], dtype=str)
     n_parts = plan["n_parts"]
-    codec_cfg = cfg.codec
-    max_vals = cfg.max_chunk_values
+    wcol = plan.get("weight_col", "n_tok")
 
-    def encode_batches(batches):
-        # Accumulate incoming Arrow batches per logical part until the token
-        # cap is reached, so chunk size (and codec-table amortization) is
-        # independent of spark.sql.execution.arrow.maxRecordsPerBatch.
-        chunk_idx = 0
-        buf: list[pa.RecordBatch] = []
-        buf_part = -1
-        buf_tokens = 0
-
-        def flush() -> list:
-            nonlocal buf, buf_tokens, chunk_idx
-            out = [enc_row(buf, codec_cfg, buf_part, chunk_idx, buf_tokens,
-                           wcol)] if buf else []
-            chunk_idx += len(out)
-            buf, buf_tokens = [], 0
-            return out
-
-        wcol = plan.get("weight_col", "n_tok")
+    def runs(batches):
         for batch in batches:
             docs = batch.column("doc_id").to_numpy(zero_copy_only=False)
-            n_tok = batch.column(wcol).to_numpy(zero_copy_only=False) \
-                .astype(np.int64)
-            if wcol == "_w":
-                batch = batch.drop_columns(["_w"])
             part = (np.searchsorted(bounds, docs.astype(str), side="right")
                     if bounds.size else np.zeros(len(docs), np.int64))
             # straggler routing comes in as the JVM-computed _sbucket column
@@ -203,32 +184,14 @@ def _make_encoder(plan: dict, cfg: PipelineConfig):
             order = np.argsort(part, kind="stable")
             if not np.array_equal(order, np.arange(order.size)):
                 batch = batch.take(pa.array(order))
-                n_tok, part = n_tok[order], part[order]
+                part = part[order]
+            w = row_weights(batch, wcol)
             cuts = np.flatnonzero(np.diff(part)) + 1
             for lo, hi in zip(np.r_[0, cuts], np.r_[cuts, len(part)]):
-                lo, hi = int(lo), int(hi)
-                pid = int(part[lo])
-                if buf and pid != buf_part:
-                    yield from flush()
-                buf_part = pid
-                # split the group so no chunk exceeds the token cap
-                s = lo
-                while s < hi:
-                    room = max_vals - buf_tokens
-                    cum = np.cumsum(n_tok[s:hi])
-                    take = int(np.searchsorted(cum, room, side="right"))
-                    take = max(take, 1 if buf_tokens == 0 else 0)
-                    if take == 0:
-                        yield from flush()
-                        continue
-                    buf.append(batch.slice(s, take))
-                    buf_tokens += int(cum[take - 1])
-                    s += take
-                    if buf_tokens >= max_vals:
-                        yield from flush()
-        yield from flush()
+                yield int(part[lo]), batch.slice(lo, hi - lo), w[lo:hi]
 
-    return encode_batches
+    return lambda batches: cut_chunks(runs(batches), cfg.codec, wcol,
+                                      cfg.max_chunk_values)
 
 
 # --------------------------------------------------------------------------
@@ -245,9 +208,9 @@ def _sbucket_col(plan: dict):
     tau, k = plan["tau"], plan["straggler_parts"]
     if k <= 0:
         return F.lit(0).cast("int")
-    wcol = plan.get("weight_col", "n_tok")
     salt = F.pmod(F.crc32(F.col("doc_id").cast("binary")), F.lit(k))
-    return (F.when(F.col(wcol) > tau, salt + 1).otherwise(F.lit(0))
+    w = _weight(plan.get("weight_col", "n_tok"))
+    return (F.when(w > tau, salt + 1).otherwise(F.lit(0))
             .cast("int"))
 
 
@@ -306,9 +269,7 @@ def _encoder_input(df: DataFrame, plan: dict,
     pid = _pid_expr(plan)
     placed = (df.repartitionById(total_parts, pid) if pid is not None
               else df.repartitionByRange(total_parts, "_sbucket", "doc_id"))
-    if cfg.sort_within:
-        placed = placed.sortWithinPartitions("_sbucket", "doc_id")
-    return placed
+    return placed.sortWithinPartitions("_sbucket", "doc_id")
 
 
 def _pending_predicate(plan: dict, committed: set[int]):
@@ -317,10 +278,10 @@ def _pending_predicate(plan: dict, committed: set[int]):
     straggler parts become (n_tok > τ AND crc32 salt ∈ pending)."""
     bounds, tau = plan["bounds"], plan["tau"]
     n_parts, k = plan["n_parts"], plan["straggler_parts"]
-    wcol = plan.get("weight_col", "n_tok")
+    w = _weight(plan.get("weight_col", "n_tok"))
     preds = []
     pending_normal = [i for i in range(n_parts) if i not in committed]
-    not_straggler = (F.col(wcol) <= tau) if k > 0 else F.lit(True)
+    not_straggler = (w <= tau) if k > 0 else F.lit(True)
     # merge consecutive part ids into single range predicates
     runs: list[list[int]] = []
     for i in pending_normal:
@@ -338,7 +299,7 @@ def _pending_predicate(plan: dict, committed: set[int]):
     pending_stragglers = [j for j in range(k) if n_parts + j not in committed]
     if pending_stragglers and k > 0:
         salt = F.pmod(F.crc32(F.col("doc_id").cast("binary")), F.lit(k))
-        preds.append((F.col(wcol) > tau) & salt.isin(pending_stragglers))
+        preds.append((w > tau) & salt.isin(pending_stragglers))
     if not preds:
         return F.lit(False)
     return reduce(lambda a, b: a | b, preds)
@@ -411,14 +372,11 @@ def encode(spark: SparkSession, df: DataFrame, dst: str,
     from plc.util import ensure_shipped
 
     ensure_shipped(spark)
-    if "n_tok" not in df.columns:
-        if "tokens" in df.columns:
-            df = df.withColumn("n_tok", F.when(F.col("tokens").isNull(), 0)
-                               .otherwise(F.size("tokens")).cast("int"))
-        else:
-            # generic (non-token) table: unit row weight, not stored — the
-            # chunk cap then counts rows and skew salting is a no-op
-            df = df.withColumn("_w", F.lit(1))
+    # a generic table (no n_tok, no tokens) weighs 1 per row: the chunk
+    # cap then counts rows and skew salting is a no-op
+    if "n_tok" not in df.columns and "tokens" in df.columns:
+        df = df.withColumn("n_tok", F.when(F.col("tokens").isNull(), 0)
+                           .otherwise(F.size("tokens")).cast("int"))
 
     plan, prior = _prepare_state(spark, df, dst, cfg, resume, mode)
     committed = (set() if prior is None

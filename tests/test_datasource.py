@@ -257,9 +257,10 @@ def test_read_selected_touches_only_needed_row_groups():
 
 
 def test_format_written_store_supports_sampled_verify(spark):
-    """Regression: the format writer commits bounds=[], so sampled
-    verify must derive part ranges from the MANIFEST, not plan bounds
-    (it crashed with IndexError before)."""
+    """Regression: a format store's plan holds no part bounds (only the
+    schema, weight column and writer), so sampled verify must derive
+    part ranges from the MANIFEST, not the plan (it crashed with
+    IndexError when it read plan bounds)."""
     from plc.datasource import register
     from plc.pipeline import verify
 
@@ -274,6 +275,40 @@ def test_format_written_store_supports_sampled_verify(spark):
         res = verify(spark, df, dst, sample_parts=0.5)
         assert res["mismatches"] == 0 and res["rows_source"] > 0
         assert verify(spark, df, dst)["mismatches"] == 0
+    finally:
+        shutil.rmtree(os.path.dirname(dst), ignore_errors=True)
+
+
+def test_format_plan_holds_schema_weight_and_writer(spark):
+    """A format store's plan.json is the stream plan's shape; a store
+    whose plan still carries the encode-only fields an older format
+    writer wrote (n_parts, bounds, tau, straggler_parts, total_rows)
+    reads the same."""
+    import json
+
+    from plc.datasource import register
+    from plc.pipeline import decode
+
+    register(spark)
+    df = spark.range(50).select(
+        F.format_string("d%04d", "id").alias("doc_id"),
+        F.col("id").cast("int").alias("n_tok"))
+    dst = tempfile.mkdtemp(prefix="plc_ds_plan_") + "/store"
+    try:
+        df.repartition(2).write.format("plc").mode("overwrite").save(dst)
+        path = os.path.join(dst, "_manifest", "plan.json")
+        with open(path) as f:
+            plan = json.load(f)
+        assert plan == {"schema": df.schema.jsonValue(),
+                        "weight_col": "n_tok", "writer": "format"}
+        with open(path, "w") as f:
+            json.dump({**plan, "n_parts": 2, "bounds": [],
+                       "tau": 2**31 - 1, "straggler_parts": 0,
+                       "total_rows": 50}, f)
+        want = sorted(tuple(r) for r in df.collect())
+        assert sorted(tuple(r) for r in
+                      spark.read.format("plc").load(dst).collect()) == want
+        assert sorted(tuple(r) for r in decode(spark, dst).collect()) == want
     finally:
         shutil.rmtree(os.path.dirname(dst), ignore_errors=True)
 
